@@ -30,7 +30,7 @@ from ..operators import joins as J
 from ..sources.catalog import load_table
 
 
-def patient_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+def patient_rows(c: DataFrame) -> DataFrame:
     """customer → patient-shaped rows with natural key and normalized
     email (map_patient_to_contact core, main.py:555-611).
 
@@ -47,7 +47,6 @@ def patient_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     every ``col_or_null`` compiles to the bare column reference — the
     plan is bit-identical to the pre-r12 one
     (tests/test_schema_drift.py pins this)."""
-    c = load_table(spark, sf_dir, "customer")
     name = SC.col_or_null(c, "c_name", "name", "patient_name")
     acctbal = SC.col_or_null(
         c, "c_acctbal", "acctbal", "account_balance", null_type="double"
@@ -69,8 +68,7 @@ def patient_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def synthetic_idmap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = load_table(spark, sf_dir, "customer")
+def synthetic_idmap(c: DataFrame) -> DataFrame:
     return c.filter(F.col("c_custkey") % 5 == 0).select(
         F.lit("contact").alias("hubspot_object_type"),
         SC.identifier_canon(F.col("c_custkey")).alias("natural_key"),
@@ -78,14 +76,13 @@ def synthetic_idmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def synthetic_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
+def synthetic_snapshot(c: DataFrame) -> DataFrame:
     """Remote-store snapshot keyed by email; % 21 keys duplicated.
 
     Reads the name through the same alias chain as ``patient_rows``:
     the snapshot MODELS an independent remote system, but it derives
     from the same table here, so a strict read would mask the sync
     plan's drift tolerance (r12 schema-drift probe)."""
-    c = load_table(spark, sf_dir, "customer")
     name = SC.col_or_null(c, "c_name", "name", "patient_name")
     base = c.filter(F.col("c_custkey") % 3 == 0).select(
         F.concat(F.lower(name), F.lit("@example.com")).alias("email"),
@@ -109,8 +106,11 @@ def patient_sync_plan(
     (sinks/control.py): ids created by previous runs resolve as
     updates, which is what makes re-runs converge instead of
     re-creating (README.md:113-115)."""
-    rows = patient_rows(spark, sf_dir)
-    idmap = synthetic_idmap(spark, sf_dir)
+    # one scan of customer feeds the rows, the synthetic ID map and the
+    # snapshot: each load reads the parquet footer with a Spark job
+    c = load_table(spark, sf_dir, "customer")
+    rows = patient_rows(c)
+    idmap = synthetic_idmap(c)
     if extra_idmap is not None:
         prior = extra_idmap.filter(F.col("hubspot_object_type") == "contact").select(
             "hubspot_object_type", "natural_key", "hubspot_id"
@@ -120,7 +120,7 @@ def patient_sync_plan(
         prior = prior.join(idmap.select("natural_key"), ["natural_key"], "left_anti")
         idmap = idmap.unionByName(prior)
     mapped = J.idmap_join(rows, idmap, "contact")
-    matched = J.email_match_join(mapped, synthetic_snapshot(spark, sf_dir))
+    matched = J.email_match_join(mapped, synthetic_snapshot(c))
     outcome = (
         F.when(F.col("mapped_hubspot_id").isNotNull(), "update")
         .when(F.col("email").isNull(), "dlq_no_email")

@@ -27,14 +27,13 @@ from ..operators import joins as J
 from ..sources.catalog import load_table
 
 
-def roi_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+def roi_rows(o: DataFrame) -> DataFrame:
     """orders → ROI-shaped rows. Synthetic processed/override markers
     are deterministic functions of the key so every branch populates:
     - o_orderkey % 11 == 0 → processing_status='Processed' with a
       completion stamp (skip branch);
     - o_orderkey % 13 == 0 → remote override flag (skip branch);
     """
-    o = load_table(spark, sf_dir, "orders")
     # Schema-drift tolerance (r12, the reference's row.get chains —
     # see patient_rows): descriptor/FK columns read through alias
     # chains. A dropped patient-FK column sends every ROI to the
@@ -67,7 +66,7 @@ def roi_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def synthetic_roi_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
+def synthetic_roi_snapshot(o: DataFrame) -> DataFrame:
     """Remote ROI store: every % 7 key exists remotely (update path),
     and % 13 keys carry the manual-override lock.
 
@@ -77,7 +76,6 @@ def synthetic_roi_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     un-deduped snapshot fans every matching ROI out 2× through the
     left join — silently double-counting outcomes. All columns are
     functions of the key, so distinct() is deterministic."""
-    o = load_table(spark, sf_dir, "orders")
     return (
         o.filter((F.col("o_orderkey") % 7 == 0) | (F.col("o_orderkey") % 13 == 0))
         .select(
@@ -102,7 +100,10 @@ def roi_sync_plan(
     ``extra_idmap``: engine ID map — ROIs created by previous runs
     resolve to their remote ids and become updates (idempotent
     re-runs, README.md:113-115)."""
-    rois = roi_rows(spark, sf_dir)
+    # one load per table: each load reads the parquet footer with a
+    # Spark job
+    orders = load_table(spark, sf_dir, "orders")
+    rois = roi_rows(orders)
     patients = load_table(spark, sf_dir, "customer")
 
     # tiered patient resolution: tier-0 high-balance, tier-1 any
@@ -129,7 +130,7 @@ def roi_sync_plan(
     ]
     resolved = J.tiered_match_join(rois, tiers, out_col="patient_id")
 
-    snapshot = synthetic_roi_snapshot(spark, sf_dir)
+    snapshot = synthetic_roi_snapshot(orders)
     if extra_idmap is not None:
         prior = extra_idmap.filter(F.col("hubspot_object_type") == "roi").select(
             "natural_key",

@@ -359,7 +359,7 @@ def q_ambiguity_multi(spark, sf_dir):
     (main.py:702-706), as a per-key aggregate."""
     from .plans.patients import synthetic_snapshot
 
-    snap = synthetic_snapshot(spark, sf_dir)
+    snap = synthetic_snapshot(load_table(spark, sf_dir, "customer"))
     return (
         snap.groupBy("email")
         .agg(F.count(F.lit(1)).alias("match_count"))

@@ -175,8 +175,12 @@ def read_results(spark, results_dir: str) -> DataFrame:
             T.StructField("ok", T.BooleanType()),
         ]
     )
-    raw = spark.read.schema(schema).json(
-        os.path.join(results_dir, "results-*.jsonl")
+    # a filter, not a glob path: the streaming-sink metadata probe takes
+    # a glob path literally and logs a FileNotFoundException per read
+    raw = (
+        spark.read.schema(schema)
+        .option("pathGlobFilter", "results-*.jsonl")
+        .json(results_dir)
     )
     w = W.partitionBy("natural_key").orderBy(
         F.desc("ok"), F.desc("status"), F.desc_nulls_last("hubspot_id"), F.desc("op")

@@ -23,7 +23,9 @@ import os
 import uuid
 from typing import Optional
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..operators.merge import upsert_merge
 
@@ -154,9 +156,7 @@ class ControlTables:
         ):
             path = self.paths[name]
             if not os.path.exists(path):
-                self.spark.createDataFrame([], schema).write.mode("overwrite").parquet(
-                    path
-                )
+                self._local_frame([], schema).write.mode("overwrite").parquet(path)
 
     def _recover_idmap(self) -> None:
         final = self.paths["id_map"]
@@ -173,6 +173,14 @@ class ControlTables:
         shutil.rmtree(staging, ignore_errors=True)
         if os.path.exists(final):
             shutil.rmtree(bak, ignore_errors=True)
+
+    def _local_frame(self, rows: list, schema: T.StructType) -> DataFrame:
+        """Driver-side rows as a one-partition ``LocalTableScan``. A
+        row list would become a Python RDD whose every task starts a
+        Python worker; an empty pandas frame silently takes that same
+        path, a pyarrow Table never does."""
+        table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+        return self.spark.createDataFrame(table, schema)
 
     def _read(self, name: str, schema: T.StructType) -> DataFrame:
         return self.spark.read.schema(schema).parquet(self.paths[name])
@@ -233,7 +241,7 @@ class ControlTables:
             "error_count": int(counts.get("errors", 0)),
             "status": status,
         }
-        self.spark.createDataFrame([row], LEDGER_SCHEMA).write.mode("append").parquet(
+        self._local_frame([row], LEDGER_SCHEMA).write.mode("append").parquet(
             self.paths["run_ledger"]
         )
         return run_id

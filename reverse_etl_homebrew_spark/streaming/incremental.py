@@ -14,6 +14,22 @@ Side-effect ordering: the write plan is fully materialized as
 DataFrame state BEFORE the foreachPartition action fires, and writer
 outcomes come back through a results spool — retries can't double-fire
 inside the lazy plan (SURVEY.md §7 hard-part (e)).
+
+Spark actions per call, each for an answer the run does not hold yet:
+1. ``ensure``: an empty table per missing control table (first run);
+2. the watermark read, which the delta filter needs;
+3. one parquet-footer read per source table the plan loads;
+4. the pin: adaptive execution runs the plan's shuffle and broadcast
+   stages when ``localCheckpoint`` is defined;
+5. the outcome count, which fills the pin and is the only pass over
+   the plan: ``read``, ``skipped`` and the write and DLQ sizes;
+6. the API writes, skipped when no row is a write;
+7. one aggregate over the pinned spool: ``created``, ``updated`` and
+   the failed writes;
+8. the ID-map merge, only after a successful write;
+9. the DLQ append, only when 5 or 7 counted a failure (the attempt
+   join keeps one row per failure, so ``errors`` needs no count);
+10. the ledger row, always.
 """
 
 from __future__ import annotations
@@ -26,6 +42,8 @@ from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..observability import collect_alerts
+from ..operators.joins import dlq_attempt_join
 from ..plans.patients import patient_sync_plan
 from ..plans.rois import roi_sync_plan
 from ..sinks.api_writer import read_results, write_plan
@@ -65,6 +83,7 @@ def run_sync(
 
     counts = {"read": 0, "created": 0, "updated": 0, "skipped": 0, "errors": 0}
     status = "failed"
+    object_type = "contact" if job_type == "patients" else "roi"
     results_dir = os.path.join(workdir, f"results-{job_type}-{started.timestamp()}")
     try:
         # feed the accumulated ID map back into the plan: previously
@@ -76,52 +95,47 @@ def run_sync(
         if fail_injector is not None:
             plan = fail_injector(plan)
 
-        # materialize the outcome labels once; everything below reuses it
-        plan = plan.localCheckpoint(eager=True)
-        counts["read"] = plan.count()
-
+        # pin the outcome labels; the outcome count fills the pin
+        plan = plan.localCheckpoint(eager=False)
         by_outcome = {
             r["outcome"]: r["n"]
             for r in plan.groupBy("outcome").agg(F.count(F.lit(1)).alias("n")).collect()
         }
+        counts["read"] = sum(by_outcome.values())
         counts["skipped"] = sum(v for k, v in by_outcome.items() if k in SKIP_OUTCOMES)
+        has_payload = "properties_json" in plan.columns
 
         # ---- external writes (create/update/adopt branches) -------------
-        writes = plan.filter(F.col("outcome").isin(*WRITE_OUTCOMES)).select(
-            "natural_key",
-            F.col("hubspot_id"),
-            F.col("properties_json")
-            if "properties_json" in plan.columns
-            else F.to_json(F.struct("natural_key")).alias("properties_json"),
-        )
-        write_plan(
-            writes,
-            object_type="contact" if job_type == "patients" else "roi",
-            transport_factory=transport_factory,
-            results_dir=results_dir,
-            sleeper=sleeper,
-        )
-        import glob as _glob
-
-        has_results = bool(_glob.glob(os.path.join(results_dir, "results-*.jsonl")))
-        results = read_results(spark, results_dir) if has_results else None
-        created = updated = failed_writes = 0
-        if results is not None and results.head(1):
+        failed_writes = 0
+        if any(by_outcome.get(k) for k in WRITE_OUTCOMES):
+            writes = plan.filter(F.col("outcome").isin(*WRITE_OUTCOMES)).select(
+                "natural_key",
+                F.col("hubspot_id"),
+                F.col("properties_json")
+                if has_payload
+                else F.to_json(F.struct("natural_key")).alias("properties_json"),
+            )
+            write_plan(
+                writes,
+                object_type=object_type,
+                transport_factory=transport_factory,
+                results_dir=results_dir,
+                sleeper=sleeper,
+            )
+            # one row per written key, pinned like the plan: the spool
+            # is parsed once for the summary, the merge and the DLQ
+            results = read_results(spark, results_dir).localCheckpoint(eager=False)
             agg = results.agg(
                 F.sum(F.when(F.col("ok") & (F.col("op") == "create"), 1).otherwise(0)),
                 F.sum(F.when(F.col("ok") & (F.col("op") == "update"), 1).otherwise(0)),
                 F.sum(F.when(~F.col("ok"), 1).otherwise(0)),
             ).first()
-            created, updated, failed_writes = (int(x or 0) for x in agg)
-        counts["created"] = created
-        counts["updated"] = updated
+            counts["created"], counts["updated"], failed_writes = (int(x or 0) for x in agg)
 
-        # ---- idmap merge for successful creates (main.py:710/788) -------
-        if results is not None and results.head(1):
+        # ---- idmap merge for successful writes (main.py:710/788) --------
+        if counts["created"] + counts["updated"]:
             new_ids = results.filter(F.col("ok") & F.col("hubspot_id").isNotNull()).select(
-                F.lit("contact" if job_type == "patients" else "roi").alias(
-                    "hubspot_object_type"
-                ),
+                F.lit(object_type).alias("hubspot_object_type"),
                 "natural_key",
                 "hubspot_id",
                 F.lit(started).alias("updated_at"),
@@ -129,45 +143,39 @@ def run_sync(
             ctl.merge_idmap(new_ids)
 
         # ---- DLQ: plan-quarantined rows + exhausted writes --------------
-        dlq_plan = plan.filter(F.col("outcome").isin(*DLQ_OUTCOMES)).select(
-            F.lit(started).alias("ts"),
-            F.lit(job_type).alias("job_type"),
-            "natural_key",
-            F.lit("contact" if job_type == "patients" else "roi").alias(
-                "hubspot_object_type"
-            ),
-            F.col("properties_json").alias("payload")
-            if "properties_json" in plan.columns
-            else F.lit("{}").alias("payload"),
-            F.col("outcome").alias("error"),
-        )
-        if results is not None and results.head(1):
-            failed = results.filter(~F.col("ok")).select(
+        # the attempt join keeps one row per failure, so the DLQ row
+        # count is known without asking Spark
+        n_dlq = sum(v for k, v in by_outcome.items() if k in DLQ_OUTCOMES) + failed_writes
+        if n_dlq:
+            failures = plan.filter(F.col("outcome").isin(*DLQ_OUTCOMES)).select(
+                "natural_key",
+                (F.col("properties_json") if has_payload else F.lit("{}")).alias("payload"),
+                F.col("outcome").alias("error"),
+            )
+            if failed_writes:
+                failures = failures.unionByName(
+                    results.filter(~F.col("ok")).select(
+                        "natural_key",
+                        F.lit("{}").alias("payload"),
+                        F.concat(
+                            F.lit("write_failed_status_"), F.col("status").cast("string")
+                        ).alias("error"),
+                    )
+                )
+            failures = failures.select(
                 F.lit(started).alias("ts"),
                 F.lit(job_type).alias("job_type"),
                 "natural_key",
-                F.lit("contact" if job_type == "patients" else "roi").alias(
-                    "hubspot_object_type"
-                ),
-                F.lit("{}").alias("payload"),
-                F.concat(F.lit("write_failed_status_"), F.col("status").cast("string")).alias(
-                    "error"
-                ),
+                F.lit(object_type).alias("hubspot_object_type"),
+                "payload",
+                "error",
             )
-            dlq_plan = dlq_plan.unionByName(failed)
-
-        # attempt numbering against prior DLQ state (main.py:404-420)
-        from ..operators.joins import dlq_attempt_join
-
-        dlq_rows = dlq_attempt_join(dlq_plan, ctl.dlq())
-        n_dlq = dlq_rows.count()
-        if n_dlq:
+            # attempt numbering against prior DLQ state (main.py:404-420)
+            dlq_rows = dlq_attempt_join(failures, ctl.dlq())
             ctl.append_dlq(dlq_rows)
             if alert_sink is not None:
                 # records crossing 5 attempts alert (main.py:714-727,
                 # 748-773; README.md:78)
-                from ..observability import collect_alerts
-
                 collect_alerts(dlq_rows, alert_sink, threshold=5)
         counts["errors"] = n_dlq
         status = "success" if failed_writes == 0 else "partial"

@@ -233,7 +233,10 @@ def test_sync_plans_have_no_coalesce_on_canonical_source(spark):
     from reverse_etl_homebrew_spark.plans.patients import patient_rows
     from reverse_etl_homebrew_spark.plans.rois import roi_rows
 
-    for df in (patient_rows(spark, SF_DIR), roi_rows(spark, SF_DIR)):
+    for df in (
+        patient_rows(load_table(spark, SF_DIR, "customer")),
+        roi_rows(load_table(spark, SF_DIR, "orders")),
+    ):
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         assert "coalesce(c_name" not in plan
         assert "coalesce(o_custkey" not in plan
