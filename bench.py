@@ -223,7 +223,7 @@ def main() -> None:
     for name in names:
         # gc + cache-clear between samples (not inside the timed
         # window): queries that pin state (fuzzy-dedup's
-        # localCheckpoint blocks) must not accumulate across reps and
+        # session.pin blocks) must not accumulate across reps and
         # bill later queries' medians
         per_key_load[name] = round(os.getloadavg()[0], 2)
         samples = []
@@ -234,7 +234,7 @@ def main() -> None:
         timings[name] = round(statistics.median(samples), 4)
 
     # heavy additions: warm-then-measure each in isolation, gc between
-    # so localCheckpoint/persist blocks from one never bill the next.
+    # so pinned blocks from one never bill the next.
     # THREE untimed warm passes, not one: the r7 isolated A/B showed
     # this VM class runs the first 3-4 executions of a heavy iterative
     # plan 2-8x slow (JIT tiering + page cache) — a single warmup
@@ -253,56 +253,6 @@ def main() -> None:
             gc.collect()
             spark.catalog.clearCache()
         timings[name] = round(statistics.median(samples), 4)
-
-    # cluster-substitution datapoint: the two heavy iterative operators
-    # under persist(MEMORY_AND_DISK) — the mode a real cluster would
-    # run — vs their localCheckpoint default above, so SCALE.md's
-    # substitution claim carries a measured local number.
-    def _fuzzy_storage(spark, sf, storage):
-        from reverse_etl_homebrew_spark.operators import dedup as DD
-        from reverse_etl_homebrew_spark.queries_text import _corpus
-
-        return DD.minhash_verified_pairs(
-            _corpus(spark, sf), num_hashes=32, bands=4, storage=storage
-        )
-
-    def _clusters_storage(spark, sf, storage):
-        from reverse_etl_homebrew_spark.operators import dedup as DD
-        from reverse_etl_homebrew_spark.operators.components import dedup_survivors
-        from reverse_etl_homebrew_spark.queries_text import _corpus
-
-        d = _corpus(spark, sf).select("doc_id", "text")
-        pairs = DD.minhash_verified_pairs(
-            d, num_hashes=32, bands=4, storage=storage
-        )
-        return dedup_survivors(d, pairs, storage=storage).select("doc_id")
-
-    variants = {
-        "fuzzy-dedup[MEMORY_AND_DISK]": _fuzzy_storage,
-        "fuzzy-dedup-clusters[MEMORY_AND_DISK]": _clusters_storage,
-    }
-    import tempfile
-
-    # storage-mode components checkpoints rounds reliably (lineage cut)
-    spark.sparkContext.setCheckpointDir(tempfile.mkdtemp(prefix="sg-ckpt-"))
-    variant_timings: dict[str, float] = {}
-    for label, fn in variants.items():
-        gc.collect()
-        fn(spark, sf_dir, "MEMORY_AND_DISK").write.format("noop").mode(
-            "overwrite"
-        ).save()
-        gc.collect()
-        spark.catalog.clearCache()
-        samples = []
-        for _ in range(REPS):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir, "MEMORY_AND_DISK").write.format("noop").mode(
-                "overwrite"
-            ).save()
-            samples.append(time.perf_counter() - t0)
-            gc.collect()
-            spark.catalog.clearCache()
-        variant_timings[label] = round(statistics.median(samples), 4)
 
     # plan-variant datapoint: the near-dup pair join with an
     # auto-sized bucket space (the production default at scale) vs the
@@ -327,9 +277,9 @@ def main() -> None:
         samples.append(time.perf_counter() - t0)
         gc.collect()
         spark.catalog.clearCache()
-    variant_timings["similarity-join[auto-planes]"] = round(
-        statistics.median(samples), 4
-    )
+    plan_variants = {
+        "similarity-join[auto-planes]": round(statistics.median(samples), 4)
+    }
 
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     try:
@@ -353,9 +303,9 @@ def main() -> None:
         # here, so a slow round can be told apart from a regression
         "loadavg_start": loadavg_start,
         "loadavg": [round(x, 2) for x in os.getloadavg()],
-        # labeled persist-mode rows, kept OUT of "queries"/"value" so
+        # labeled plan-variant rows, kept OUT of "queries"/"value" so
         # round-over-round totals stay comparable
-        "storage_variants": variant_timings,
+        "plan_variants": plan_variants,
         # 1-min load at each key's first timed sample — the
         # self-adjudication channel for contention-vs-regression
         "load1": per_key_load,

@@ -72,25 +72,11 @@ def punct_ratio(col: ColumnOrName) -> Column:
     return F.when(n > 0, p.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
 
 
-def uppercase_ratio(col: ColumnOrName) -> Column:
-    c = _c(col)
-    n = F.length(c)
-    u = F.length(F.regexp_replace(c, r"[^A-Z]", ""))
-    return F.when(n > 0, u.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
-
-
 def stopword_hits(col: ColumnOrName, lang: str = "en") -> Column:
     """Count of stopword-marker tokens for ``lang`` in the text."""
     markers = LANG_MARKERS[lang]
     toks = F.transform(tokens(col), lambda t: F.lower(t))
     return F.size(F.filter(toks, lambda t: t.isin(*markers)))
-
-
-def stopword_ratio(col: ColumnOrName, lang: str = "en") -> Column:
-    n = token_count(col)
-    return F.when(n > 0, stopword_hits(col, lang).cast("double") / n.cast("double")).otherwise(
-        F.lit(0.0)
-    )
 
 
 def lang_id(col: ColumnOrName) -> Column:
@@ -173,15 +159,6 @@ def char_ngrams_from(chars_col: ColumnOrName, n: int = 5) -> Column:
     )
 
 
-def char_ngrams(col: ColumnOrName, n: int = 5) -> Column:
-    """Shingle array over normalized text — the input to MinHash /
-    Jaccard dedup. HOT-PATH CALLERS: project ``normalized_text`` and
-    ``char_array`` into columns first and call ``char_ngrams_from``
-    (see note there); this convenience form is only safe on small
-    frames because the inline split re-evaluates per element."""
-    return char_ngrams_from(char_array(normalized_text(col)), n)
-
-
 def word_ngrams_from(toks_col: ColumnOrName, n: int = 3) -> Column:
     """Word n-gram array over an already-materialized token-array
     column (same per-element re-evaluation caveat as
@@ -191,22 +168,4 @@ def word_ngrams_from(toks_col: ColumnOrName, n: int = 3) -> Column:
     return F.transform(
         F.sequence(F.lit(0), count - F.lit(1)),
         lambda i: F.concat_ws(" ", F.slice(toks, i + F.lit(1), n)),
-    )
-
-
-def word_ngrams(col: ColumnOrName, n: int = 3) -> Column:
-    """Word n-gram array ('a b c' strings) over normalized tokens."""
-    return word_ngrams_from(F.split(normalized_text(col), " "), n)
-
-
-def dup_ngram_fraction(toks_col: ColumnOrName, n: int = 2) -> Column:
-    """Fraction of a document's word-n-grams that are repeats of an
-    earlier n-gram (1 - distinct/total) — the repetition-quality signal
-    used by web-corpus filtering recipes (high values mark boilerplate
-    / degenerate generation loops). Pure map-side column math over an
-    already-materialized token array: no shuffle, no Python."""
-    arr = word_ngrams_from(toks_col, n)
-    total = F.size(arr)
-    return F.lit(1.0) - F.size(F.array_distinct(arr)).cast("double") / total.cast(
-        "double"
     )

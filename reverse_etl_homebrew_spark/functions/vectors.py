@@ -99,19 +99,6 @@ def finite_geometry(col: ColumnOrName, dim: int) -> Column:
     return ~F.isnan(d) & (F.abs(d) < F.lit(float("inf")))
 
 
-def finite_norm(norm_col: ColumnOrName) -> Column:
-    """The zero-cost form of the finite-geometry scope for operators
-    that ALREADY project a per-vector norm column: a corrupt component
-    makes the norm NaN (NaN fold), ±Inf (overflow), or NULL (NULL
-    component propagates the left fold) — one scalar comparison on the
-    computed column, placed ABOVE the projection so CollapseProject
-    cannot duplicate a 64-term fold into the filter (measured: an
-    input-side finite_geometry filter re-inlined the fold and ran the
-    bucketed knn paths 1.8-2.3× slower; this form is free)."""
-    c = _c(norm_col)
-    return ~F.isnan(c) & (c < F.lit(float("inf")))
-
-
 # The DuckDB twin of ``finite_vector`` lives in sqlfrags (the leaf
 # oracle-fragment module); re-exported here so engine-side callers
 # find scope + twin in one place.

@@ -11,8 +11,6 @@ engine).
 
 from __future__ import annotations
 
-from typing import Sequence
-
 from pyspark.sql import Column, DataFrame, functions as F
 
 
@@ -79,26 +77,6 @@ def dec_avg(col: Column, alias: str, scale: int = 6) -> Column:
         F.sum(finite_dec(col, scale)).cast("double")
         / F.count(col)
     ).alias(alias)
-
-
-def max_ifnull(df: DataFrame, keys: Sequence[str], col: str, alias: str) -> DataFrame:
-    """IFNULL(MAX(col), 0) per key (read_failure_attempts SQL,
-    main.py:405-411)."""
-    return df.groupBy(*keys).agg(
-        F.coalesce(F.max(col), F.lit(0)).alias(alias)
-    )
-
-
-def run_counters(df: DataFrame, outcome_col: str, outcomes: Sequence[str]) -> DataFrame:
-    """Run-summary tallies (main.py:846-856): one row with a count per
-    outcome label, computed as conditional sums in a single pass over
-    the outcome-labeled plan DataFrame."""
-    aggs = [
-        F.sum(F.when(F.col(outcome_col) == o, 1).otherwise(0)).alias(f"{o}_count")
-        for o in outcomes
-    ]
-    aggs.append(F.count(F.lit(1)).alias("read_count"))
-    return df.agg(*aggs)
 
 
 def ambiguity_count(df: DataFrame, key: str) -> DataFrame:

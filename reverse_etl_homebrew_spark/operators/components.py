@@ -3,25 +3,26 @@ step that turns pairwise similarity (MinHash/SimHash/Jaccard/cosine)
 into dedup decisions: each duplicate CLUSTER keeps exactly one
 survivor.
 
-Algorithm: alternating min-label propagation (large-star/small-star
-style) to a fixpoint — each node repeatedly adopts the smallest label
-in its neighborhood. Iterative, converges in O(log n) rounds on
-real near-dup graphs (components are small and dense); each round is
-one groupBy shuffle. This is the canonical Spark shape for iterative
-graph algorithms without GraphX/graphframes dependencies.
+Algorithm: min-label propagation to a fixpoint — each node
+repeatedly adopts the smallest label in its neighborhood. It needs
+O(diameter) rounds, not O(log n): a path graph of n nodes takes n-1.
+Real near-dup clusters are clique-like from LSH banding, so the
+diameter is small (2 rounds at sf0.01 and sf0.1); each round is one
+groupBy shuffle plus a convergence count. This is the canonical Spark
+shape for iterative graph algorithms without GraphX/graphframes
+dependencies.
 
-Scale notes: label state is (node, label) — linear in nodes; rounds
-localCheckpoint to cut lineage (otherwise plan depth grows per
-iteration and planning dominates). Max-iteration cap + convergence
-count guard against pathological chains (a path graph needs O(n)
-rounds — real near-dup clusters are cliques-ish from LSH banding, so
-this does not occur in practice; the cap fails loudly rather than
-looping).
+Scale notes: label state is (node, label) — linear in nodes; every
+round is pinned (``session.pin``) to cut lineage, otherwise plan depth
+grows per iteration and planning dominates. The max-iteration cap
+fails loudly on a pathological long chain rather than looping.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from ..session import pin
 
 
 def connected_components(
@@ -29,68 +30,19 @@ def connected_components(
     a_col: str = "a_id",
     b_col: str = "b_id",
     max_iter: int = 20,
-    storage: "str | None" = None,
 ) -> DataFrame:
     """(a_id, b_id) undirected edges → (id, component) with component
     = min node id in the component. Deterministic.
 
-    ``storage`` picks how per-round state is pinned: ``None``
-    (default) uses ``localCheckpoint`` — right for single-node /
-    local[*]; blocks are not fault-tolerant but the lineage cut keeps
-    plan size O(1) per round. On a real cluster pass a
-    ``pyspark.StorageLevel`` name (e.g. ``"DISK_ONLY"``,
-    ``"MEMORY_AND_DISK"``): each round is then RELIABLY CHECKPOINTED
-    (``df.checkpoint(eager=True)`` — requires
-    ``sparkContext.setCheckpointDir`` on shared storage, enforced
-    loudly) and the checkpointed scan is cached at the given level.
-
-    Why checkpoint and not persist alone: persist does NOT truncate
-    the logical plan, and each label round references the previous
-    round twice (neighbor join + carry-through), so persist-only plan
-    size grows EXPONENTIALLY in rounds — measured 7x wall-clock blowup
-    at sf0.01 (21.5 s vs 3.1 s) before any cluster even gets involved.
-    The checkpoint is also what survives executor loss; lineage
-    recompute through an iterative chain would be quadratic anyway.
-    Checkpoint files are garbage-collected by Spark's ContextCleaner
-    when ``spark.cleaner.referenceTracking.cleanCheckpoints=true``;
-    otherwise they live until the checkpoint dir is cleaned.
-
-    In both modes each round's pinned/cached state is released as the
-    next round materializes, so pinned state stays O(nodes); every
-    intermediate block is released on ANY exit path (success,
-    non-convergence, mid-round failure).
-
-    Storage-mode contract for the RETURNED DataFrame: it is a cached
-    checkpoint scan — call ``.unpersist()`` once downstream results
-    are written (the data remains available from the checkpoint
-    files).
+    Each round's labels are pinned eagerly: each label round references
+    the previous round twice (neighbor join + carry-through), so
+    without the lineage cut plan size grows EXPONENTIALLY in rounds —
+    persist alone measured a 7x wall-clock blowup at sf0.01 (21.5 s vs
+    3.1 s). On a cluster ``pin`` checkpoints reliably, which is also
+    what survives executor loss; lineage recompute through an
+    iterative chain would be quadratic anyway.
     """
-    if storage is None:
-        pin_lazy = lambda df: df.localCheckpoint(eager=False)  # noqa: E731
-        pin_round = lambda df: df.localCheckpoint(eager=True)  # noqa: E731
-        unpin = lambda df: None  # noqa: E731
-    else:
-        from pyspark import StorageLevel
-
-        level = getattr(StorageLevel, storage)
-        sc = pairs.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
-            raise ValueError(
-                "connected_components(storage=...) needs a reliable "
-                "checkpoint dir: call "
-                "spark.sparkContext.setCheckpointDir('<shared path>') "
-                "first (persist alone cannot cut iterative lineage)"
-            )
-
-        def pin_lazy(df):  # checkpoint runs a job, so 'lazy' = eager here
-            ck = df.checkpoint(eager=True)
-            ck.persist(level)
-            return ck
-
-        pin_round = pin_lazy
-        unpin = lambda df: df.unpersist()  # noqa: E731
-
-    edges = pin_lazy(
+    edges = pin(
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .unionByName(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
         .distinct()
@@ -101,74 +53,49 @@ def connected_components(
     labels = edges.select(F.col("src").alias("id")).distinct().withColumn(
         "component", F.col("id")
     )
-    prev = None
-    converged = False
-    try:
-        for _ in range(max_iter):
-            # each node adopts min(own label, neighbors' labels)
-            neighbor_labels = (
-                edges.join(labels.withColumnRenamed("id", "dst"), ["dst"])
-                .groupBy("src")
-                .agg(F.min("component").alias("nbr_min"))
-                .withColumnRenamed("src", "id")
-            )
-            new_labels = pin_round(
-                labels.join(neighbor_labels, ["id"], "left")
-                .select(
-                    "id",
-                    F.least(
-                        F.col("component"),
-                        F.coalesce(F.col("nbr_min"), F.col("component")),
-                    ).alias("component"),
-                )
-            )
-            try:
-                changed = (
-                    new_labels.alias("n")
-                    .join(labels.alias("o"), ["id"])
-                    .filter(F.col("n.component") != F.col("o.component"))
-                    .count()
-                )
-            except Exception:
-                unpin(new_labels)
-                raise
-            if prev is not None:
-                unpin(prev)
-            prev, labels = labels, new_labels
-            if changed == 0:
-                converged = True
-                return labels
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds"
+    for _ in range(max_iter):
+        # each node adopts min(own label, neighbors' labels)
+        neighbor_labels = (
+            edges.join(labels.withColumnRenamed("id", "dst"), ["dst"])
+            .groupBy("src")
+            .agg(F.min("component").alias("nbr_min"))
+            .withColumnRenamed("src", "id")
         )
-    finally:
-        # release every pinned block except (on success) the returned
-        # labels frame — see the persist-mode contract above.
-        unpin(edges)
-        if prev is not None and prev is not labels:
-            unpin(prev)
-        if not converged:
-            unpin(labels)
+        new_labels = pin(
+            labels.join(neighbor_labels, ["id"], "left")
+            .select(
+                "id",
+                F.least(
+                    F.col("component"),
+                    F.coalesce(F.col("nbr_min"), F.col("component")),
+                ).alias("component"),
+            ),
+            eager=True,
+        )
+        changed = (
+            new_labels.alias("n")
+            .join(labels.alias("o"), ["id"])
+            .filter(F.col("n.component") != F.col("o.component"))
+            .count()
+        )
+        labels = new_labels
+        if changed == 0:
+            return labels
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iter} rounds"
+    )
 
 
 def dedup_survivors(
     df: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    storage: "str | None" = None,
 ) -> DataFrame:
     """Keep one survivor (min id) per duplicate cluster; rows not in
     any pair survive untouched. The standard last stage of a corpus
-    near-dedup pipeline. ``storage`` is forwarded to
-    ``connected_components`` (set a StorageLevel name on a cluster)."""
-    comps = connected_components(pairs, storage=storage)
+    near-dedup pipeline."""
+    comps = connected_components(pairs)
     losers = comps.filter(F.col("id") != F.col("component")).select(
         F.col("id").alias(id_col)
     )
-    out = df.join(losers, [id_col], "left_anti")
-    if storage is not None:
-        # safe before materialization: the labels frame is a cached
-        # checkpoint scan, so dropping the cache just means the join
-        # reads the checkpoint files
-        comps.unpersist()
-    return out
+    return df.join(losers, [id_col], "left_anti")

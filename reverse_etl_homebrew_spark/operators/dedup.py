@@ -17,18 +17,12 @@ from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
 from ..functions import text as TX
 from ..functions import vectors as VEC
+from ..session import pin
 
 
 # ---------------------------------------------------------------------------
 # exact dedup
 # ---------------------------------------------------------------------------
-
-def exact_dedup(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """Exact duplicate removal on key columns — hash-shuffle dedup
-    (dropDuplicates). Which survivor is kept is partition-order
-    dependent; use ``lastwin_dedup`` when the survivor matters."""
-    return df.dropDuplicates(list(keys))
-
 
 def content_dedup(
     df: DataFrame, text_col: str = "text", id_col: str | None = None
@@ -175,22 +169,6 @@ def minhash_sig_array(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 32,
-    shingle_n: int = 5,
-) -> DataFrame:
-    """Column-per-slot view of ``minhash_sig_array`` (m0..m{k-1}) for
-    callers that want flat slots; the hot paths stay on the array
-    form."""
-    sig = minhash_sig_array(df, id_col, text_col, num_hashes, shingle_n)
-    return sig.select(
-        "id", *[F.get("sig", i).alias(f"m{i}") for i in range(num_hashes)]
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -199,19 +177,10 @@ def minhash_lsh_pairs(
     bands: int = 8,
     shingle_n: int = 5,
     min_est: float | None = None,
-    storage: "str | None" = None,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via MinHash banding:
     OPH signature → ``bands`` band-hashes → self-join within band
     buckets.
-
-    ``storage`` picks how the signature table is pinned for the band
-    self-join's two legs: ``None`` (default) uses a lazy
-    ``localCheckpoint`` — right for single-node / local[*] where
-    executor-local blocks survive the job; on a real cluster pass a
-    ``pyspark.StorageLevel`` name (e.g. ``"DISK_ONLY"``,
-    ``"MEMORY_AND_DISK"``) to ``persist`` instead, which tolerates
-    executor loss via lineage (SCALE.md note, now code).
 
     Shuffle profile: shingle-hash groupBy, explode to (bands × rows)
     bucket rows, shuffle on (band, bucket); pairs enumerated only
@@ -228,15 +197,8 @@ def minhash_lsh_pairs(
     # signature pipeline from both legs with different projections, so
     # exchange reuse cannot deduplicate them and the whole
     # explode→hash→agg pipeline would run twice. Signatures are
-    # docs × (k+1) × 8 B — the standard LSH persist point (cluster
-    # substitution: persist(DISK_ONLY), SCALE.md).
-    sig = minhash_sig_array(df, id_col, text_col, num_hashes, shingle_n)
-    if storage is None:
-        sig = sig.localCheckpoint(eager=False)
-    else:
-        from pyspark import StorageLevel
-
-        sig = sig.persist(getattr(StorageLevel, storage))
+    # docs × (k+1) × 8 B — the standard LSH persist point.
+    sig = pin(minhash_sig_array(df, id_col, text_col, num_hashes, shingle_n))
     # band rows carry the signature array alongside (band, bucket): at
     # bands≈4 that is ~1 KB/doc of shuffle — the same order as joining
     # the candidate set back to the signature table, with two fewer
@@ -504,9 +466,7 @@ def incremental_dedup(
     stand-in, not an extra cost."""
     return incremental_dedup_against_index(
         new_batch,
-        build_fingerprint_index(seen, text_col, fp_col="__fp").localCheckpoint(
-            eager=False
-        ),
+        pin(build_fingerprint_index(seen, text_col, fp_col="__fp")),
         text_col,
         id_col,
         fp_col="__fp",
@@ -1222,11 +1182,8 @@ def ngram_jaccard_pairs(
     # Pin the pruned gram set: it feeds THREE plan legs (sizes + both
     # join sides), and without the lineage cut each leg re-runs the
     # full shingle/normalize/df-cap pipeline — measured 2× the query's
-    # real work at sf0.1. Same device as minhash signature pinning;
-    # cluster substitution is persist(StorageLevel) per SCALE.md.
-    pruned = _pruned_grams(df, id_col, text_col, n, df_cap).localCheckpoint(
-        eager=False
-    )
+    # real work at sf0.1. Same device as minhash signature pinning.
+    pruned = pin(_pruned_grams(df, id_col, text_col, n, df_cap))
     # sizes from the SAME pruned set the intersections are counted on,
     # so numerator and denominator are consistent
     sizes = pruned.groupBy("id").agg(F.count(F.lit(1)).alias("set_size"))
@@ -1260,7 +1217,6 @@ def minhash_verified_pairs(
     n: int = 3,
     threshold: float = 0.5,
     df_cap: int = 100,
-    storage: "str | None" = None,
 ) -> DataFrame:
     """Near-duplicate pairs: MinHash-LSH candidates VERIFIED by exact
     word-``n``-gram Jaccard ≥ ``threshold`` — the production dedup
@@ -1285,7 +1241,6 @@ def minhash_verified_pairs(
         num_hashes=num_hashes,
         bands=bands,
         shingle_n=shingle_n,
-        storage=storage,
     ).select("a_id", "b_id")
     # Gram sets only for docs that appear in a candidate pair: the
     # document-frequency prune must see the FULL corpus (global dfs),
@@ -1297,22 +1252,16 @@ def minhash_verified_pairs(
         .unionByName(cand.select(F.col("b_id").alias("id")))
         .distinct()
     )
-    gs = (
+    # Pin the per-doc gram sets: both verify-join legs reference this
+    # pipeline (shingle → df-cap → semi → collect_set) and exchange
+    # reuse cannot deduplicate the differently-projected legs — same
+    # device as the signature pin above.
+    gs = pin(
         _pruned_grams(df, id_col, text_col, n, df_cap)
         .join(cand_ids, ["id"], "semi")
         .groupBy("id")
         .agg(F.collect_set("g").alias("gset"))
     )
-    # Pin the per-doc gram sets: both verify-join legs reference this
-    # pipeline (shingle → df-cap → semi → collect_set) and exchange
-    # reuse cannot deduplicate the differently-projected legs — same
-    # device and storage contract as the signature pin above.
-    if storage is None:
-        gs = gs.localCheckpoint(eager=False)
-    else:
-        from pyspark import StorageLevel
-
-        gs = gs.persist(getattr(StorageLevel, storage))
     return (
         cand.join(
             gs.select(F.col("id").alias("a_id"), F.col("gset").alias("a_set")),
@@ -1395,7 +1344,16 @@ def embedding_near_dup_pairs(
     # finite-geometry scope (r13 non-finite components class): the
     # masking kernel emits a NULL base bucket for corrupt vectors —
     # dropped here, before probes or anchors shuffle
-    base = (
+    # r15: pin — base feeds TWO consumers (probe explode + anchor
+    # side) and the bucket+norm kernel otherwise runs twice over
+    # the corpus (the kernel-once discipline; ArrowEvalPython
+    # 4 → 3 in the pair plans). Local A/B reads 1.01-1.05×
+    # (within noise — the sf0.1 kernel pass is cheap), the saved
+    # term is a full corpus-side Arrow pass; in production this
+    # frame IS the persisted bucketed index (build_ann_index's
+    # layout), so the pin is the local stand-in, same as
+    # incremental_dedup's fingerprint pin.
+    base = pin(
         df.where(F.col(vec_col).isNotNull())
         .select(
             F.col(id_col).alias("id"),
@@ -1409,16 +1367,6 @@ def embedding_near_dup_pairs(
             F.element_at(F.col("__bn").getField("bs"), 1).alias("b0"),
         )
         .where(F.col("b0").isNotNull())
-        # r15: pin — base feeds TWO consumers (probe explode + anchor
-        # side) and the bucket+norm kernel otherwise runs twice over
-        # the corpus (the kernel-once discipline; ArrowEvalPython
-        # 4 → 3 in the pair plans). Local A/B reads 1.01-1.05×
-        # (within noise — the sf0.1 kernel pass is cheap), the saved
-        # term is a full corpus-side Arrow pass; in production this
-        # frame IS the persisted bucketed index (build_ann_index's
-        # layout), so the pin is the local stand-in, same as
-        # incremental_dedup's fingerprint pin.
-        .localCheckpoint(eager=False)
     )
     probes = [F.col("b0")] + [
         F.col("b0").bitwiseXOR(F.lit(1 << i)) for i in range(planes)

@@ -45,20 +45,6 @@ def maybe_broadcast(df: DataFrame, broadcast: Optional[bool]) -> DataFrame:
     return df
 
 
-def equi_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: Sequence[str],
-    how: str = "inner",
-    broadcast_right: bool = False,
-) -> DataFrame:
-    """Plain equi join; ``broadcast_right`` pins a broadcast hash join
-    for dimension-sized right sides instead of trusting the 10 MB
-    autoBroadcast threshold."""
-    r = F.broadcast(right) if broadcast_right else right
-    return left.join(r, list(on), how)
-
-
 def idmap_join(
     rows: DataFrame,
     idmap: DataFrame,

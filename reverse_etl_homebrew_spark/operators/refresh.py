@@ -61,6 +61,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import text as TX
+from ..session import pin
 from .dedup import (
     build_fingerprint_index,
     build_span_index,
@@ -87,20 +88,6 @@ def _negated(partial: DataFrame, key: str) -> DataFrame:
     )
 
 
-def _pin(df: DataFrame, storage: str | None) -> DataFrame:
-    """Materialization point (the minhash_lsh_pairs idiom): lazy
-    localCheckpoint for single-node / local[*], or a named
-    StorageLevel persist on a real cluster. In production these
-    points are durable staging tables (the refresh's admission
-    decisions are its AUDIT LOG, written regardless), so pinning adds
-    no cost the real pipeline doesn't already pay."""
-    if storage is None:
-        return df.localCheckpoint(eager=False)
-    from pyspark import StorageLevel
-
-    return df.persist(getattr(StorageLevel, storage))
-
-
 def corpus_refresh_report(
     old: DataFrame,
     new: DataFrame,
@@ -108,7 +95,6 @@ def corpus_refresh_report(
     span_n: int = 8,
     planes: int = 6,
     k: int = 3,
-    storage: str | None = None,
 ) -> DataFrame:
     """Run the full refresh over an (old, new) snapshot pair plus the
     embedding table and report per-lang: what the diff nominated, what
@@ -135,15 +121,15 @@ def corpus_refresh_report(
     # out to six consumers (cand, surviving×4, retired partial) and
     # its two key-grouped digests + full-outer join would otherwise
     # recompute per consumer — in production the diff IS a persisted
-    # decision table.
-    diff = _pin(
+    # decision table, so pinning adds no cost the real pipeline does
+    # not already pay.
+    diff = pin(
         snapshot_diff(
             old.select("doc_id", "text"),
             new.select("doc_id", "text"),
             "doc_id",
             F.md5("text"),
-        ),
-        storage,
+        )
     )
     retired = diff.where(F.col("status").isin("removed", "changed")).select(
         "doc_id"
@@ -184,7 +170,6 @@ def corpus_refresh_report(
         span_n=span_n,
         planes=planes,
         k=k,
-        storage=storage,
         diff=diff,
     )
 
@@ -220,7 +205,6 @@ def corpus_refresh_probe(
     span_n: int = 8,
     planes: int = 6,
     k: int = 3,
-    storage: str | None = None,
     diff: DataFrame | None = None,
     doc_stats: DataFrame | None = None,
 ) -> DataFrame:
@@ -266,14 +250,13 @@ def corpus_refresh_probe(
     new = new.select("doc_id", "text", "lang")
 
     if diff is None:
-        diff = _pin(
+        diff = pin(
             snapshot_diff(
                 old.select("doc_id", "text"),
                 new.select("doc_id", "text"),
                 "doc_id",
                 F.md5("text"),
-            ),
-            storage,
+            )
         )
     reprocess = diff.where(F.col("status").isin("added", "changed")).select(
         "doc_id"
@@ -290,11 +273,10 @@ def corpus_refresh_probe(
     # span attribution, vector semi-join, stats partial, per-lang
     # report) — the anti-join + survivor election would recompute per
     # consumer, and in production admission IS a durable staging write.
-    admitted = _pin(
+    admitted = pin(
         incremental_dedup_against_index(
             cand, fingerprints, "text", "doc_id", fp_col=fingerprints.columns[0]
-        ),
-        storage,
+        )
     )
 
     # 4. span-tier signal on the admitted batch. The artifact contract

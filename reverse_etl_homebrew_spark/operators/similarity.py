@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions import vectors as VEC
 from ..functions.exactmath import guard_dec_units, round6_dec6_over_int
+from ..session import pin
 from .dedup import _deterministic_planes
 
 
@@ -694,30 +695,6 @@ def incremental_knn(
     )
 
 
-def knn_join_brute(
-    left: DataFrame,
-    right: DataFrame,
-    k: int = 3,
-    left_id: str = "vec_id",
-    right_id: str = "vec_id",
-    vec_col: str = "embedding",
-    broadcast: "bool | None" = None,
-) -> DataFrame:
-    """Exhaustive k-NN join (cross score). Kept as the explicit
-    bounded-side spelling of ``knn_join(exact=True)`` — use only when
-    one side is a bounded query batch."""
-    return knn_join(
-        left,
-        right,
-        k,
-        left_id,
-        right_id,
-        vec_col,
-        exact=True,
-        broadcast=broadcast,
-    )
-
-
 def bm25_topk(
     docs: DataFrame,
     query_terms: list,
@@ -766,10 +743,8 @@ def bm25_topk(
     # (≤ (|query|+1) × docs rows — a staging table in production
     # terms). Counts are integers, identical by construction.
     mterm = F.when(F.col("term").isin(terms), F.col("term"))
-    grouped = (
-        toks.groupBy("id", mterm.alias("term"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=False)
+    grouped = pin(
+        toks.groupBy("id", mterm.alias("term")).agg(F.count(F.lit(1)).alias("cnt"))
     )
     doclen = grouped.groupBy("id").agg(F.sum("cnt").cast("long").alias("dl"))
     stats = doclen.agg(
@@ -910,15 +885,11 @@ def trigram_lm_score(
     # whole normalize→char-split→explode corpus scan — the before
     # plan held FOUR Generate passes over documents for one query.
     # c3 is vocabulary-bounded (≤ V³ rows — ~32k at sf0.1), so the
-    # pin is a tiny staging table in production terms (the _pin
-    # discipline), and the corpus is now scanned exactly twice:
-    # once to count, once to score — the two-scan floor this
-    # operator shares with heavy-hitters.
-    c3 = (
-        grams.groupBy("g")
-        .agg(F.count(F.lit(1)).alias("c3"))
-        .localCheckpoint(eager=False)
-    )
+    # pin is a tiny staging table in production terms, and the
+    # corpus is now scanned exactly twice: once to count, once to
+    # score — the two-scan floor this operator shares with
+    # heavy-hitters.
+    c3 = pin(grams.groupBy("g").agg(F.count(F.lit(1)).alias("c3")))
     ctx = c3.groupBy(F.substring("g", 1, 2).alias("pfx")).agg(
         F.sum("c3").alias("c2")
     )

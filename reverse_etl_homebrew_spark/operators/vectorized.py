@@ -19,7 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 
-def _vector_matrix(vecs: "pd.Series", kernel: str):
+def _vector_matrix(vecs: "pd.Series", kernel: str, dim: "int | None" = None):
     """``np.asarray(series.tolist())`` with the ANN-tier population
     contract made LOUD (r12 review): a NULL embedding row reaching an
     Arrow kernel used to die batch-wide inside numpy with an opaque
@@ -28,7 +28,9 @@ def _vector_matrix(vecs: "pd.Series", kernel: str):
     that they are filtered or repaired UPSTREAM (seed readers degrade,
     fixtures/null_robustness_probe.py documents the population side) —
     so the violation is reported as the schema-contract breach it is,
-    naming the kernel, instead of a numpy traceback."""
+    naming the kernel, instead of a numpy traceback. With ``dim``, a
+    batch whose vectors are not ``dim`` long (length-0 vectors
+    included) is refused the same way."""
     import numpy as np
 
     if vecs.isna().any():
@@ -51,7 +53,7 @@ def _vector_matrix(vecs: "pd.Series", kernel: str):
     # garbage-in boundary; the NULL guard above stays because a ragged
     # batch CRASHES numpy rather than degrading.
     try:
-        return np.asarray(vecs.tolist(), dtype=np.float64)
+        m = np.asarray(vecs.tolist(), dtype=np.float64)
     except ValueError as exc:
         # ragged batch (mixed vector lengths): numpy's raw error names
         # neither the kernel nor the contract — re-raise as the same
@@ -63,6 +65,15 @@ def _vector_matrix(vecs: "pd.Series", kernel: str):
             f"vector dimensionality is a table property (the ingress "
             f"dimension rule); fix the producer"
         ) from exc
+    if dim is not None and m.shape[1:] != (dim,):
+        from ..sources.catalog import SchemaContractError
+
+        raise SchemaContractError(
+            f"embedding batch of shape {m.shape} reached the {kernel} "
+            f"kernel, which expects {dim}-dimensional vectors; fix the "
+            f"producer"
+        )
+    return m
 
 
 def cosine_scores_pandas(
@@ -572,15 +583,23 @@ def bucket_norm_pandas(planes_flat, planes_per_table: int, tables: int):
     def bucket_norm(vecs: pd.Series) -> pd.DataFrame:
         import numpy as np
 
+        dim = P.shape[1]
+        if vecs.empty:
+            return pd.DataFrame(
+                {
+                    "bs": pd.Series([], dtype=object),
+                    "nrm": pd.Series([], dtype=np.float64),
+                }
+            )
         isnull = vecs.isna().to_numpy()
         if isnull.any():
-            dim = P.shape[1]
-            safe = vecs.copy()
-            safe[isnull] = pd.Series([[float("nan")] * dim] * int(isnull.sum()),
-                                     index=safe.index[isnull])
-            m = np.asarray(safe.tolist(), dtype=np.float64)
-        else:
-            m = np.asarray(vecs.tolist(), dtype=np.float64)
+            # masked rows: NaN components, emitted as NULL below
+            vecs = vecs.copy()
+            vecs[isnull] = pd.Series([[float("nan")] * dim] * int(isnull.sum()),
+                                     index=vecs.index[isnull])
+        # ragged batches and length-0 / wrong-length vectors are refused
+        # as SchemaContractError (the scoring kernels' contract)
+        m = _vector_matrix(vecs, "bucket_norm", dim=dim)
         finite = np.isfinite(m).all(axis=1)
         if not finite.all():
             m = np.where(finite[:, None], m, 0.0)

@@ -163,12 +163,3 @@ def roi_sync_plan(
     return with_remote.withColumn("outcome", outcome).withColumn(
         "properties_json", props
     )
-
-
-def roi_sync_outcomes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        roi_sync_plan(spark, sf_dir)
-        .groupBy("outcome")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("outcome")
-    )

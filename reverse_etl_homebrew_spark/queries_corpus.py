@@ -35,6 +35,7 @@ from .functions.exactmath import (
 )
 from .operators import aggregates as AG
 from .queries import register
+from .session import pin
 from .sqlfrags import FINITE_VEC_SQL, word_ngram_rows
 from .sources.catalog import load_table
 
@@ -893,11 +894,10 @@ def q_bigram_lift_topk(spark, sf_dir):
     # c3-pin lesson). The table is vocabulary-bounded, so the pin is
     # a tiny staging table in production terms; the corpus is now
     # scanned exactly twice (unigram pass + bigram pass — the floor).
-    uni = (
+    uni = pin(
         toks.select(F.explode("t").alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("c1"))
-        .localCheckpoint(eager=False)
     )
     tot = uni.agg(F.sum("c1").cast("long").alias("n"))
     t = F.col("t")

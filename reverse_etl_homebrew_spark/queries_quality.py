@@ -23,6 +23,7 @@ from .functions.exactmath import (
 )
 from .operators import aggregates as AGX
 from .queries import register
+from .session import pin
 from .sources.catalog import load_table
 from .sqlfrags import FINITE_VEC_SQL, word_ngram_rows
 
@@ -150,9 +151,8 @@ def q_containment_dedup(spark, sf_dir):
     1.0). Standard contamination-audit companion to `ngram-jaccard`.
 
     Plan: distinct (id, gram) exploded once and lineage-cut
-    (localCheckpoint — it feeds three legs: sizes + both join sides;
-    measured 3.78 → 2.80 s at sf0.1; cluster substitution is
-    persist(StorageLevel) per SCALE.md); candidate pairs come from
+    (``session.pin`` — it feeds three legs: sizes + both join sides;
+    measured 3.78 → 2.80 s at sf0.1); candidate pairs come from
     a gram-keyed equi-join (shuffle ∝ gram postings, never all-pairs);
     one pair-keyed aggregation counts the intersection; set sizes
     broadcast back. At 100 TB the gram-join is the cost center — hot
@@ -175,9 +175,11 @@ def q_containment_dedup(spark, sf_dir):
         F.col("doc_id").alias("id"),
         F.split(TX.normalized_text(F.col("text")), " ").alias("w"),
     )
-    grams = toks.select(
-        "id", F.explode(F.array_distinct(TX.word_ngrams_from(F.col("w"), 3))).alias("g")
-    ).localCheckpoint(eager=False)
+    grams = pin(
+        toks.select(
+            "id", F.explode(F.array_distinct(TX.word_ngrams_from(F.col("w"), 3))).alias("g")
+        )
+    )
     return _directed_containment(grams, threshold=0.8)
 
 
@@ -275,7 +277,7 @@ def q_containment_dedup_capped(spark, sf_dir, df_cap: "int | None" = None):
     Zipf head (boilerplate) is bounded; pass ``df_cap`` to override
     with an absolute bound (what a real 100 TB run would pin).
 
-    Plan: the pruned gram set is lineage-cut (localCheckpoint) because
+    Plan: the pruned gram set is lineage-cut (``session.pin``) because
     it feeds three legs (sizes + both join sides) — same device as
     `ngram-jaccard` (operators/dedup.py); without it each leg re-runs
     normalize/shingle/df-cap."""
@@ -284,9 +286,7 @@ def q_containment_dedup_capped(spark, sf_dir, df_cap: "int | None" = None):
     d = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     if df_cap is None:
         df_cap = max(5, int(0.002 * _corpus_doc_count(spark, sf_dir)))
-    pruned = _pruned_grams(d, "doc_id", "text", 3, df_cap).localCheckpoint(
-        eager=False
-    )
+    pruned = pin(_pruned_grams(d, "doc_id", "text", 3, df_cap))
     return _directed_containment(pruned, threshold=0.8)
 
 

@@ -12,13 +12,17 @@ Pandas-UDF extension operators.
 pins the session timezone to UTC so naive-timestamp semantics are
 deterministic, and enables the legacy nanos-as-long parquet read that
 the ``events`` table (timestamp[ns]) requires.
+
+``pin`` is the engine's one materialization policy: every operator that
+reuses an intermediate frame cuts its lineage through it, so where and
+how state is pinned is decided here, from the live session.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: Runtime confs every engine query depends on. Safe to set on a live
 #: session (all are runtime-mutable SQL confs).
@@ -114,6 +118,35 @@ def _ship_package(spark: SparkSession) -> None:
     sc._reverse_etl_pkg_shipped = True
 
 
+def _pin_target(spark: SparkSession) -> tuple[str, str | None]:
+    """The two facts ``pin`` decides on: the session's master and its
+    reliable checkpoint directory (``setCheckpointDir`` or
+    ``spark.checkpoint.dir``), None when unset."""
+    sc = spark.sparkContext
+    return sc.master, sc.getCheckpointDir()
+
+
+def pin(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Materialize ``df`` once and cut its lineage, for frames that
+    several plan legs (or iterative rounds) read.
+
+    On a local master (``local``, ``local[N]``) executor blocks live in
+    the driver's JVM, so ``localCheckpoint`` is enough. On any other
+    master the blocks die with their executor and cannot be recomputed,
+    so the frame is reliably checkpointed into the session's checkpoint
+    directory instead; both cut lineage, so plan shapes match."""
+    master, checkpoint_dir = _pin_target(df.sparkSession)
+    if master == "local" or master.startswith("local["):
+        return df.localCheckpoint(eager=eager)
+    if checkpoint_dir is None:
+        raise ValueError(
+            f"pin() on master {master!r} needs a reliable checkpoint dir: "
+            "call spark.sparkContext.setCheckpointDir('<shared path>') or "
+            "set spark.checkpoint.dir"
+        )
+    return df.checkpoint(eager=eager)
+
+
 def cluster_conf(
     executors: int = 1000, cores_per_executor: int = 4
 ) -> dict:
@@ -131,7 +164,7 @@ def cluster_conf(
         # the giant-rows byte bound rides in from _RUNTIME_CONFS
         # (measured: tests/test_giant_rows.py::test_arrow_batches_byte_bounded)
         "spark.sql.parquet.compression.codec": "zstd",
-        # checkpoint-file GC for the iterative storage-mode operators
+        # checkpoint-file GC for pin()'s reliable checkpoints
         "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
     }
 
@@ -154,10 +187,9 @@ def get_spark(app_name: str = "reverse-etl-homebrew-spark") -> SparkSession:
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
-        # storage-mode iterative operators reliably checkpoint each
-        # round (operators/components.py); let the ContextCleaner
-        # delete checkpoint files once their RDDs are GC'd so a
-        # long-running job doesn't accumulate them
+        # pin() reliably checkpoints on a non-local master; let the
+        # ContextCleaner delete checkpoint files once their RDDs are
+        # GC'd so a long-running job doesn't accumulate them
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
     for k, v in _RUNTIME_CONFS.items():

@@ -20,7 +20,7 @@ Spark actions per call, each for an answer the run does not hold yet:
 2. the watermark read, which the delta filter needs;
 3. one parquet-footer read per source table the plan loads;
 4. the pin: adaptive execution runs the plan's shuffle and broadcast
-   stages when ``localCheckpoint`` is defined;
+   stages when the lazy ``session.pin`` is defined;
 5. the outcome count, which fills the pin and is the only pass over
    the plan: ``read``, ``skipped`` and the write and DLQ sizes;
 6. the API writes, skipped when no row is a write;
@@ -46,6 +46,7 @@ from ..observability import collect_alerts
 from ..operators.joins import dlq_attempt_join
 from ..plans.patients import patient_sync_plan
 from ..plans.rois import roi_sync_plan
+from ..session import pin
 from ..sinks.api_writer import read_results, write_plan
 from ..sinks.control import ControlTables
 from ..sinks.transport import Transport
@@ -96,7 +97,7 @@ def run_sync(
             plan = fail_injector(plan)
 
         # pin the outcome labels; the outcome count fills the pin
-        plan = plan.localCheckpoint(eager=False)
+        plan = pin(plan)
         by_outcome = {
             r["outcome"]: r["n"]
             for r in plan.groupBy("outcome").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -124,7 +125,7 @@ def run_sync(
             )
             # one row per written key, pinned like the plan: the spool
             # is parsed once for the summary, the merge and the DLQ
-            results = read_results(spark, results_dir).localCheckpoint(eager=False)
+            results = pin(read_results(spark, results_dir))
             agg = results.agg(
                 F.sum(F.when(F.col("ok") & (F.col("op") == "create"), 1).otherwise(0)),
                 F.sum(F.when(F.col("ok") & (F.col("op") == "update"), 1).otherwise(0)),

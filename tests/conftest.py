@@ -23,3 +23,20 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def cluster_pin(spark, tmp_path, monkeypatch):
+    """Route ``session.pin`` through its non-local branch: the master it
+    observes is a cluster's, and reliable checkpoints land under the
+    returned directory."""
+    from reverse_etl_homebrew_spark import session
+
+    sc = spark.sparkContext
+    ckpt = tmp_path / "ckpt"
+    sc.setCheckpointDir(str(ckpt))
+    monkeypatch.setattr(
+        session, "_pin_target", lambda s: ("local-cluster[2,1,1024]", sc.getCheckpointDir())
+    )
+    return ckpt
+

@@ -16,49 +16,34 @@ from reverse_etl_homebrew_spark.sources.catalog import load_table
 SF = "/root/testdata/sf0.001"
 
 
-def test_storage_mode_requires_checkpoint_dir(spark):
-    """Persist alone cannot cut iterative lineage (measured 7x blowup)
-    — storage mode must refuse to run without a reliable checkpoint
-    dir rather than silently exploding plan size."""
-    if spark.sparkContext.getCheckpointDir() is not None:
-        pytest.skip("checkpoint dir already set in this session")
-    pairs = spark.createDataFrame([(1, 2)], "a_id long, b_id long")
-    with pytest.raises(ValueError, match="checkpoint dir"):
-        connected_components(pairs, storage="DISK_ONLY")
-
-
-@pytest.mark.parametrize("storage", [None, "MEMORY_AND_DISK", "DISK_ONLY"])
-def test_chain_and_triangle_merge(spark, storage, tmp_path):
-    """Same answers under the localCheckpoint default AND both real
-    checkpoint+cache levels — the cluster path must not be dead code."""
-    if storage is not None:
-        spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+@pytest.mark.parametrize("master", [None, "local-cluster"])
+def test_chain_and_triangle_merge(spark, master, request):
+    """Same answers under the live session's pin (localCheckpoint) AND
+    under the cluster branch's reliable checkpoints — the cluster path
+    must not be dead code."""
+    if master is not None:
+        ckpt = request.getfixturevalue("cluster_pin")
     # chain 1-2-3 plus triangle 10-11-12 plus isolated pair 20-21
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (11, 12), (10, 12), (20, 21)],
         "a_id long, b_id long",
     )
-    labels = connected_components(pairs, storage=storage)
+    labels = connected_components(pairs)
     comps = {r["id"]: r["component"] for r in labels.collect()}
-    if storage is not None:
-        labels.unpersist()  # storage-mode contract: caller releases
     assert comps[1] == comps[2] == comps[3] == 1
     assert comps[10] == comps[11] == comps[12] == 10
     assert comps[20] == comps[21] == 20
+    if master is not None:
+        assert list(ckpt.rglob("part-*"))
 
 
-def test_storage_mode_releases_blocks_on_non_convergence(spark, tmp_path):
-    """A path graph that cannot converge in max_iter must raise AND
-    leave no pinned blocks behind (try/finally on the error path)."""
-    sc = spark.sparkContext
-    sc.setCheckpointDir(str(tmp_path / "ckpt"))
+def test_non_convergence_raises(spark):
+    """A path graph that cannot converge in max_iter fails loudly
+    instead of returning partial labels."""
     chain = [(i, i + 1) for i in range(12)]
     pairs = spark.createDataFrame(chain, "a_id long, b_id long")
-    before = len([r for r in sc._jsc.sc().getRDDStorageInfo()])
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, max_iter=2, storage="MEMORY_AND_DISK")
-    after = len([r for r in sc._jsc.sc().getRDDStorageInfo()])
-    assert after <= before
+        connected_components(pairs, max_iter=2)
 
 
 def test_dedup_survivors_keeps_one_per_cluster(spark):

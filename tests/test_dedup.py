@@ -84,19 +84,21 @@ def test_simhash_md5_identical_docs_zero_hamming(spark, docs):
     assert len({(p["a_id"], p["b_id"]) for p in pairs}) == len(pairs)
 
 
-def test_minhash_storage_modes_agree(spark, docs):
-    """storage="DISK_ONLY" (cluster persist path) must produce the same
-    candidate pairs as the default localCheckpoint path."""
-    corpus = docs.select("doc_id", "text").limit(300)
-    default = sorted(
-        map(tuple, DD.minhash_lsh_pairs(corpus, num_hashes=16, bands=4).collect())
-    )
-    persisted_df = DD.minhash_lsh_pairs(
-        corpus, num_hashes=16, bands=4, storage="DISK_ONLY"
-    )
-    persisted = sorted(map(tuple, persisted_df.collect()))
-    assert default == persisted
-    spark.catalog.clearCache()
+def test_minhash_pin_policies_agree(spark, docs, request):
+    """The cluster branch of ``session.pin`` (reliable checkpoints of
+    the signature table) produces the same candidate pairs as the
+    local localCheckpoint branch."""
+    corpus = docs.select("doc_id", "text").filter(F.col("doc_id") < 300)
+
+    def pairs():
+        return sorted(
+            map(tuple, DD.minhash_lsh_pairs(corpus, num_hashes=16, bands=4).collect())
+        )
+
+    local = pairs()
+    ckpt = request.getfixturevalue("cluster_pin")
+    assert pairs() == local
+    assert local and list(ckpt.rglob("part-*"))
 
 
 def test_minhash_deterministic_across_fresh_plans(spark, sf_dir):

@@ -240,6 +240,52 @@ def test_bucketer_masks_poison_to_null_bucket(spark):
     assert got[5] is None
 
 
+_NAN, _INF = float("nan"), float("inf")
+
+
+@pytest.mark.parametrize(
+    "batch, masked",
+    [
+        ([[1.0, 2.0, 3.0], [1.0, 2.0]], "ragged"),
+        ([[]], "length-0"),
+        ([None, None], [True, True]),
+        ([[_NAN, 1.0, 1.0], [1.0, 2.0, 3.0], [_INF, 1.0, 1.0]], [True, False, True]),
+        ([[1.0, 2.0, 3.0]], [False]),
+        ([], []),
+    ],
+    ids=["ragged", "length-0", "all-null", "nan-inf", "single-row", "empty"],
+)
+def test_bucket_norm_kernel_batch_contract(batch, masked):
+    """The fused bucket+norm kernel, called on one Arrow batch: a
+    ragged batch or a length-0 vector is the SchemaContractError the
+    scoring kernels raise; NULL and NaN/Inf rows are masked to a NULL
+    bucket list and NULL norm; clean rows bucket and carry the norm."""
+    import numpy as np
+    import pandas as pd
+
+    from reverse_etl_homebrew_spark.operators.dedup import _deterministic_planes
+    from reverse_etl_homebrew_spark.operators.vectorized import bucket_norm_pandas
+    from reverse_etl_homebrew_spark.sources.catalog import SchemaContractError
+
+    kernel = bucket_norm_pandas(_deterministic_planes(4, 3), 4, tables=1).func
+    vecs = pd.Series(
+        [None if v is None else np.asarray(v, dtype=np.float64) for v in batch],
+        dtype=object,
+    )
+    if isinstance(masked, str):
+        with pytest.raises(SchemaContractError, match="bucket_norm"):
+            kernel(vecs)
+        return
+    out = kernel(vecs)
+    assert len(out) == len(batch)
+    for v, dropped, bs, nrm in zip(batch, masked, out["bs"], out["nrm"]):
+        if dropped:
+            assert bs is None and (nrm is None or math.isnan(nrm))
+        else:
+            assert len(bs) == 1 and 0 <= bs[0] < 16
+            assert nrm == math.sqrt(sum(x * x for x in v))
+
+
 def test_exact_branch_norm_kernel_distinguishes_poison_from_zero(spark):
     """The exact knn branch's fold-exact norm kernel: poisoned
     vectors → NULL norm (excluded), zero vectors → 0.0 (kept — their
