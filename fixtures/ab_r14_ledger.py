@@ -35,8 +35,8 @@ from pyspark.sql import Window as W, functions as F, types as T
 
 
 def r12_bucketer(planes_flat, planes_per_table: int, tables: int = 1):
-    """The r12-end-state table_buckets_pandas (commit 7757dcf),
-    verbatim: no NULL masking, no isfinite pass — `_vector_matrix`
+    """The r12-end-state single-table bucketer kernel (commit
+    7757dcf): no NULL masking, no isfinite pass — `_vector_matrix`
     straight into the hybrid sign fold."""
     import numpy as np
 
@@ -55,7 +55,7 @@ def r12_bucketer(planes_flat, planes_per_table: int, tables: int = 1):
     def buckets(vecs: pd.Series) -> pd.Series:
         import numpy as np
 
-        m = _vector_matrix(vecs, "table_buckets")
+        m, _ = _vector_matrix(vecs, "table_buckets", dim=P.shape[1])
         signs = hybrid_fold_signs(m, P)
         bs = (
             signs.reshape(len(m), tables, planes_per_table).astype(np.int64)

@@ -83,7 +83,7 @@ def topk_brute(
         # janino's 64 KB method limit at dim 64 (the stage ran
         # interpreted, measured 8.8 s → 3.9 s once fixed); the r14 fix
         # kept ONE codegen fold (the query dot) next to a
-        # norm_fold_pandas kernel + scalar filter. r15 fuses the
+        # norm kernel + scalar filter. r15 fuses the
         # remaining fold INTO the kernel (query_cosine_flags_pandas):
         # same kernel count, one fewer per-element JVM pass, and the
         # dim-unrolled tree leaves the plan entirely. Scores are
@@ -135,7 +135,7 @@ def topk_lsh(
     1-bit-flip probes.
 
     The data-side bucket is computed by the Arrow matmul bucketer
-    (operators/vectorized.table_buckets_pandas), not the flat codegen
+    (operators/vectorized.bucket_norm_pandas), not the flat codegen
     sign fold: Catalyst pushes the probe filter through the bucket
     projection, and an IN-filter carrying two inlined copies of a
     planes×dim fold (the In check + the pushed isnotnull) overflows
@@ -275,7 +275,7 @@ def knn_join(
 
     if exact:
         # r15: ONE fused Arrow kernel instead of three (two per-side
-        # norm_fold_pandas kernels + the pair cosine). The kernel
+        # norm kernels + the pair cosine). The kernel
         # computes both norms next to the dot — bit-identical folds —
         # and its ``ok`` flag reproduces the old per-side
         # ``nrm IS NOT NULL AND nrm < inf`` finite-geometry exclusion
@@ -297,9 +297,9 @@ def knn_join(
             .withColumn("score", F.round(F.col("__cf").getField("score"), 6))
         )
     elif tables == 1:
-        # single-table: Arrow matmul bucket (same bit order and — in
-        # practice — same signs as the SQL oracle's fold; see
-        # table_buckets_pandas) + multi-probe XOR flips on the
+        # single-table: Arrow matmul bucket (same bit order and the
+        # same signs as the SQL oracle's fold; see hybrid_fold_signs)
+        # + multi-probe XOR flips on the
         # materialized base bucket column. NOT the codegen sign fold:
         # CollapseProject inlines a projected fold into every probe
         # expression — planes×dim×(1+p+p(p-1)/2) expression nodes ran

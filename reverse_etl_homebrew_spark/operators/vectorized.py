@@ -8,6 +8,22 @@ oracle). Past that, expression size grows linearly and JVM codegen
 falls back to interpretation — so the engine provides numpy-backed
 Pandas UDFs: one Arrow batch in, one matrix multiply out. ~10-100×
 over row-at-a-time Python, and dimension-independent plan size.
+
+Every vector kernel reads its batch through ``_vector_matrix`` (one
+batch contract), and every oracle-exact sum is the one left fold,
+``_fold``.
+
+A kernel whose output a consumer filters on (a bucket ``IS NOT NULL``
+/ probe ``isin``, an ``ok`` flag, ``dists IS NOT NULL``, an IVF cell)
+is marked ``asNondeterministic()``. The kernels are deterministic in
+FACT; without the mark PushDownPredicate substitutes the projected
+alias into the consumer's filter and plans a SECOND ArrowEvalPython
+below it, silently doubling every kernel evaluation (r14,
+fixtures/ab_r14_ledger.py: measured 1.34× on incremental-knn — a
+pandas-UDF output column is not a plan barrier for filter pushdown).
+The mark's only effect is disabling those moves: the filter stays
+ABOVE the projection and the kernel runs once
+(tests/test_incremental_knn.py pins the node counts).
 """
 
 from __future__ import annotations
@@ -19,61 +35,131 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 
-def _vector_matrix(vecs: "pd.Series", kernel: str, dim: "int | None" = None):
-    """``np.asarray(series.tolist())`` with the ANN-tier population
-    contract made LOUD (r12 review): a NULL embedding row reaching an
-    Arrow kernel used to die batch-wide inside numpy with an opaque
-    ``setting an array element with a sequence`` / ragged-array error.
-    NULL vectors carry no geometry — the tier's declared contract is
-    that they are filtered or repaired UPSTREAM (seed readers degrade,
-    fixtures/null_robustness_probe.py documents the population side) —
-    so the violation is reported as the schema-contract breach it is,
-    naming the kernel, instead of a numpy traceback. With ``dim``, a
-    batch whose vectors are not ``dim`` long (length-0 vectors
-    included) is refused the same way."""
+def _vector_matrix(
+    vecs: "pd.Series", kernel: str, dim: "int | None" = None, masked: bool = False
+):
+    """Read one Arrow batch of vectors as an ``(n, width)`` float64
+    matrix → ``(m, ok)`` — the batch contract of every vector kernel,
+    so each kernel fails, masks and returns empty the same way:
+
+    - an empty batch reads as a ``(0, width)`` matrix (width 1 when
+      the kernel knows none), so the kernel's own arithmetic yields
+      its empty result;
+    - a ragged batch, a length-0 vector, or a width other than ``dim``
+      (the planes', centroids', query's or other side's width) raises
+      ``SchemaContractError`` naming the kernel — vector
+      dimensionality is a table property (the ingress dimension
+      rule), and numpy's raw errors name neither;
+    - a NULL vector: a scoring kernel raises ``SchemaContractError``
+      (the ANN tier's population contract — NULL vectors are filtered
+      or repaired UPSTREAM, fixtures/null_robustness_probe.py); a
+      ``masked`` kernel instead masks the row, as it does a row with
+      a NULL/NaN/Inf component. Masked rows read as zeros and ``ok``
+      is the boolean row mask the kernel emits NULL cells by (r13:
+      the masking kernel's NULL output is the finite-geometry scope
+      its consumers' ``IS NOT NULL`` / ``isin`` filters apply — an
+      input-side fold filter measured 1.2-2.3× on the bucketed keys).
+      ``ok`` is None when every row is usable: the fast path, with no
+      copy beyond the read.
+
+    Scoring kernels do NOT re-scan for non-finite components: the
+    finite scope is enforced at the OPERATOR boundaries (the masking
+    kernels' NULL outputs; the exact/topk paths' norm and fold
+    filters), and a first-draft isfinite() backstop here ran on every
+    pair batch and cost 10-20% on the heavy similarity keys for rows
+    that provably cannot be poisoned. Direct kernel use with
+    non-finite components yields NaN scores (numpy semantics), the
+    documented garbage-in boundary."""
     import numpy as np
 
-    if vecs.isna().any():
-        from ..sources.catalog import SchemaContractError
+    from ..sources.catalog import SchemaContractError
 
+    isnull = vecs.isna().to_numpy()
+    nulls = bool(isnull.any())
+    if nulls and not masked:
         raise SchemaContractError(
             f"NULL embedding reached the {kernel} kernel — the ANN "
             f"tier's population contract (non-NULL vectors) is "
             f"violated; filter or repair the batch upstream"
         )
-    # r13 non-finite components class: the finite scope is enforced at
-    # the OPERATOR boundaries (the masking bucketer's NULL-bucket
-    # exclusion; the exact/topk paths' norm and fold filters), so the
-    # scoring kernels do NOT re-scan every candidate batch for
-    # non-finite values — a first-draft isfinite().all() backstop here
-    # ran on every pair batch (candidates × dim × 2 sides) and cost
-    # 10-20% on the heavy similarity keys for rows that provably
-    # cannot be poisoned. Direct kernel API use with non-finite
-    # components yields NaN scores (numpy semantics), the documented
-    # garbage-in boundary; the NULL guard above stays because a ragged
-    # batch CRASHES numpy rather than degrading.
     try:
-        m = np.asarray(vecs.tolist(), dtype=np.float64)
+        m = np.asarray((vecs[~isnull] if nulls else vecs).tolist(), dtype=np.float64)
     except ValueError as exc:
-        # ragged batch (mixed vector lengths): numpy's raw error names
-        # neither the kernel nor the contract — re-raise as the same
-        # SchemaContractError the NULL guard uses (r14 advisor)
-        from ..sources.catalog import SchemaContractError
-
         raise SchemaContractError(
             f"ragged embedding batch reached the {kernel} kernel — "
             f"vector dimensionality is a table property (the ingress "
             f"dimension rule); fix the producer"
         ) from exc
-    if dim is not None and m.shape[1:] != (dim,):
-        from ..sources.catalog import SchemaContractError
-
+    width = dim if dim is not None else (m.shape[1] if m.ndim == 2 else 1)
+    if not len(m):
+        m = m.reshape(0, width)
+    if m.shape[1:] != (width,) or not width:
+        want = f"{width}-dimensional" if width else "non-empty"
         raise SchemaContractError(
             f"embedding batch of shape {m.shape} reached the {kernel} "
-            f"kernel, which expects {dim}-dimensional vectors; fix the "
-            f"producer"
+            f"kernel, which expects {want} vectors; fix the producer"
         )
-    return m
+    if nulls:
+        full = np.zeros((len(vecs), width))
+        full[~isnull] = m
+        m = full
+    if not masked:
+        return m, None
+    ok = ~isnull & np.isfinite(m).all(axis=1)
+    if ok.all():
+        return m, None
+    m[~ok] = 0.0
+    return m, ok
+
+
+def _fold(a, b):
+    """Σᵢ ``a[..., i] * b[..., i]`` over the last axis as the
+    SEQUENTIAL left fold (vectorized across rows, sequential across
+    dims), so every double is bit-identical to the codegen flat fold
+    in functions/vectors.dot and to DuckDB's list_sum — the Arrow
+    speed path keeps the oracle exact. The fold starts from the first
+    product, not from zeros: ``0.0 + -0.0`` is ``+0.0``."""
+    acc = a[..., 0] * b[..., 0]
+    for i in range(1, a.shape[-1]):
+        acc = acc + a[..., i] * b[..., i]
+    return acc
+
+
+def _cosine(dot, den) -> "pd.Series":
+    """``dot / den`` as a double Series, NULL where ``den`` is not
+    > 0 — the oracle's ``CASE WHEN na * nq > 0``."""
+    import numpy as np
+
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return pd.Series(np.where(den > 0, dot / den, np.nan))
+
+
+def _cells(values, ok) -> "pd.Series":
+    """One output cell per row of ``values``; rows ``ok`` masks out
+    are NULL, built as an explicit object Series (r14, advisor:
+    assigning None into a typed Series relies on a silent dtype
+    upcast — a FutureWarning in pandas 2.x, a TypeError in 3.0)."""
+    if ok is None:
+        return pd.Series(list(values) if values.ndim > 1 else values)
+    return pd.Series([v if k else None for v, k in zip(values, ok)], dtype=object)
+
+
+def query_cosine_pandas(query: Sequence[float]):
+    """Scalar Pandas UDF: cosine of each row vector against ``query``
+    as one BLAS ``m @ q`` per batch. Its scores are NOT
+    fold-reproducible (pairwise/SIMD summation), so its oracle is
+    rows-only by design; a zero-norm row gets no score (``_cosine``)."""
+    import numpy as np
+
+    q = np.asarray(list(query), dtype=np.float64)
+    qn = float(np.sqrt((q * q).sum()))
+
+    @F.pandas_udf(T.DoubleType())
+    def score(vecs: pd.Series) -> pd.Series:
+        m, _ = _vector_matrix(vecs, "cosine_scores", dim=len(q))
+        return _cosine(m @ q, np.sqrt((m * m).sum(axis=1)) * qn)
+
+    return score
 
 
 def cosine_scores_pandas(
@@ -84,23 +170,10 @@ def cosine_scores_pandas(
 ) -> DataFrame:
     """Cosine similarity of every row vector against ``query`` via a
     scalar Pandas UDF (Arrow-batched numpy matmul)."""
-    import numpy as np
-
-    q = np.asarray(list(query), dtype=np.float64)
-    qn = float(np.sqrt((q * q).sum()))
-
-    @F.pandas_udf(T.DoubleType())
-    def score(vecs: pd.Series) -> pd.Series:
-        m = _vector_matrix(vecs, "cosine_scores")
-        dots = m @ q
-        norms = np.sqrt((m * m).sum(axis=1)) * qn
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out = np.where(norms > 0, dots / norms, np.nan)
-        return pd.Series(out)
-
     from ..functions import vectors as _VEC
 
-    return df.where(_VEC.finite_geometry(F.col(vec_col), len(q))).select(
+    score = query_cosine_pandas(query)
+    return df.where(_VEC.finite_geometry(F.col(vec_col), len(query))).select(
         F.col(id_col), score(F.col(vec_col)).alias("score")
     )
 
@@ -127,6 +200,22 @@ def topk_pandas(
     )
 
 
+def ivf_cell_pandas(centroids: Sequence[Sequence[float]]):
+    """Scalar Pandas UDF: the nearest centroid (dot-product argmax, a
+    BLAS ``m @ C.T``) of each vector; masked rows (NULL vector,
+    NULL/NaN/Inf component) get a NULL cell."""
+    import numpy as np
+
+    C = np.asarray([list(c) for c in centroids], dtype=np.float64)  # (k, d)
+
+    @F.pandas_udf(T.IntegerType())
+    def assign(vecs: pd.Series) -> pd.Series:
+        m, ok = _vector_matrix(vecs, "ivf_assign", dim=C.shape[1], masked=True)
+        return _cells((m @ C.T).argmax(axis=1).astype(np.int32), ok)
+
+    return assign.asNondeterministic()
+
+
 def ivf_assign_pandas(
     df: DataFrame,
     centroids: Sequence[Sequence[float]],
@@ -140,47 +229,13 @@ def ivf_assign_pandas(
 
     At query time, scoring is restricted to the probe centroids'
     inverted lists — the scan-reduction analog of LSH bucketing with
-    better geometry for clustered data."""
-    import numpy as np
-
-    C = np.asarray([list(c) for c in centroids], dtype=np.float64)  # (k, d)
-
-    @F.pandas_udf(T.IntegerType())
-    def assign(vecs: pd.Series) -> pd.Series:
-        # r13: mask corrupt rows to a NULL cell (the bucketer idiom);
-        # callers' downstream cell filters exclude them for free
-        isnull = vecs.isna().to_numpy()
-        if isnull.any():
-            safe = vecs.copy()
-            safe[isnull] = pd.Series(
-                [[float("nan")] * C.shape[1]] * int(isnull.sum()),
-                index=safe.index[isnull],
-            )
-            m = np.asarray(safe.tolist(), dtype=np.float64)
-        else:
-            m = np.asarray(vecs.tolist(), dtype=np.float64)
-        finite = np.isfinite(m).all(axis=1)
-        if not finite.all():
-            m = np.where(finite[:, None], m, 0.0)
-        sims = m @ C.T  # (n, k)
-        argmax = sims.argmax(axis=1)
-        if finite.all():
-            return pd.Series(argmax.astype("int32"))
-        # nullable masking built explicitly (r14, advisor): assigning
-        # None into an int32 Series relies on a silent dtype upcast —
-        # a FutureWarning in pandas 2.x and a TypeError in 3.0
-        return pd.Series(
-            [int(c) if ok else None for c, ok in zip(argmax, finite)],
-            dtype="object",
-        )
-
-    # nondeterministic mark: see table_buckets_pandas — the cell
-    # filter below (and topk_ivf's probe isin) would otherwise re-plan
-    # the kernel a second time under the pushed-down predicate
+    better geometry for clustered data. Corrupt rows get a NULL cell,
+    which the cell filter below excludes."""
+    assign = ivf_cell_pandas(centroids)
     return df.select(
         F.col(id_col),
         F.col(vec_col),
-        assign.asNondeterministic()(F.col(vec_col)).alias("ivf_cell"),
+        assign(F.col(vec_col)).alias("ivf_cell"),
     ).where(F.col("ivf_cell").isNotNull())
 
 
@@ -207,37 +262,31 @@ def topk_ivf(
 
 def pair_cosine_pandas():
     """Scalar Pandas UDF scoring CANDIDATE PAIRS: cosine of two vector
-    columns given their precomputed norms.
-
-    Accumulation is an explicit per-dimension left fold (vectorized
-    ACROSS pairs, sequential across dims), so every result is
-    bit-identical to the codegen flat fold in functions/vectors.dot
-    and to DuckDB's list_sum — the Arrow speed path keeps the oracle
-    exact. Exists because a filter over a projected dim-unrolled dot
-    re-evaluates the fold per reference (predicate + output) and blows
-    the JIT method budget — the candidate-scoring stage of the
-    LSH pair joins ran un-JIT'd (measured ~2 s per run on an 87k-pair
-    stage that numpy does in milliseconds). Zero/invalid norms yield
-    NULL, matching ``F.when(den > 0, ...)``."""
+    columns given their precomputed norms, the dot as the exact left
+    fold (``_fold``). Exists because a filter over a projected
+    dim-unrolled dot re-evaluates the fold per reference (predicate +
+    output) and blows the JIT method budget — the candidate-scoring
+    stage of the LSH pair joins ran un-JIT'd (measured ~2 s per run
+    on an 87k-pair stage that numpy does in milliseconds). Zero or
+    invalid norms yield NULL, matching ``F.when(den > 0, ...)``."""
     import numpy as np
 
     @F.pandas_udf(T.DoubleType())
     def cos(v: pd.Series, bv: pd.Series, n: pd.Series, bn: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype="float64")
-        A = _vector_matrix(v, "pair_cosine")
-        B = _vector_matrix(bv, "pair_cosine")
-        acc = A[:, 0] * B[:, 0]
-        for i in range(1, A.shape[1]):
-            acc = acc + A[:, i] * B[:, i]
+        A, _ = _vector_matrix(v, "pair_cosine")
+        B, _ = _vector_matrix(bv, "pair_cosine", dim=A.shape[1])
         den = n.to_numpy(dtype=np.float64) * bn.to_numpy(dtype=np.float64)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out = acc / den
-        res = pd.Series(out)
-        res[den <= 0] = None
-        return res
+        return _cosine(_fold(A, B), den)
 
     return cos
+
+
+_SCORE_OK = T.StructType(
+    [
+        T.StructField("score", T.DoubleType()),
+        T.StructField("ok", T.BooleanType()),
+    ]
+)
 
 
 def pair_cosine_flags_pandas():
@@ -245,146 +294,62 @@ def pair_cosine_flags_pandas():
     (r15 optimization round): computes BOTH vector norms inside the
     kernel and emits ``struct<score: double, ok: boolean>`` — ``ok``
     is the finite-geometry scope (both norms finite), evaluated where
-    the vectors already are instead of as two per-side
-    ``norm_fold_pandas`` kernels plus scalar filters.
+    the vectors already are instead of as two per-side norm kernels
+    plus scalar filters: one ArrowEvalPython node instead of three
+    (guide §4.1: you control how many times you cross, cross once).
 
-    Why: the exact branch paid THREE Python round-trips per query
-    (left norm, right norm, pair cosine), each a fixed worker/Arrow
-    cost that dominates at low row counts and adds three
-    serialization passes at any size; the vectors cross the boundary
-    for the cosine anyway, so the norms are two extra vectorized
-    folds over bytes already in cache — one ArrowEvalPython node
-    instead of three (guide §4.1: you control how many times you
-    cross, cross once).
-
-    Bit-identical to the unfused spelling: the norm is the same
-    sequential left fold as ``norm_fold_pandas`` / the codegen
-    ``l2_norm`` (float32→float64 widening is exact, IEEE sqrt is
-    correctly rounded), the score is the same ``acc / (l_nrm*r_nrm)``
-    with NULL when the denominator is not > 0, and ``ok`` reproduces
-    the old per-side ``nrm IS NOT NULL AND nrm < inf`` filter: a
-    NaN-component fold is NaN, an Inf-component fold overflows to
-    +Inf — both legs non-finite, both excluded (the r14 advisor
-    contract), while legitimate zero-norm vectors stay (ok=true,
-    score NULL — the oracle's CASE)."""
+    Bit-identical to the unfused spelling: each norm is the codegen
+    ``l2_norm`` left fold (float32→float64 widening is exact, IEEE
+    sqrt is correctly rounded), the score is ``acc / (l_nrm*r_nrm)``
+    with NULL when the denominator is not > 0, and ``ok`` is the
+    per-side ``nrm IS NOT NULL AND nrm < inf`` filter: a NaN-component
+    fold is NaN, an Inf-component fold overflows to +Inf — both legs
+    non-finite, both excluded (the r14 advisor contract), while
+    legitimate zero-norm vectors stay (ok=true, score NULL — the
+    oracle's CASE)."""
     import numpy as np
 
-    ret = T.StructType(
-        [
-            T.StructField("score", T.DoubleType()),
-            T.StructField("ok", T.BooleanType()),
-        ]
-    )
-
-    @F.pandas_udf(ret)
+    @F.pandas_udf(_SCORE_OK)
     def cosf(v: pd.Series, bv: pd.Series) -> pd.DataFrame:
-        if len(v) == 0:
-            return pd.DataFrame({"score": pd.Series([], dtype="float64"),
-                                 "ok": pd.Series([], dtype="bool")})
-        A = _vector_matrix(v, "pair_cosine_flags")
-        B = _vector_matrix(bv, "pair_cosine_flags")
-        la = A[:, 0] * A[:, 0]
-        lb = B[:, 0] * B[:, 0]
-        acc = A[:, 0] * B[:, 0]
-        for i in range(1, A.shape[1]):
-            la = la + A[:, i] * A[:, i]
-            lb = lb + B[:, i] * B[:, i]
-            acc = acc + A[:, i] * B[:, i]
-        ln = np.sqrt(la)
-        rn = np.sqrt(lb)
-        ok = np.isfinite(ln) & np.isfinite(rn)
-        den = ln * rn
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out = acc / den
-        score = pd.Series(out)
-        score[~(den > 0)] = None
-        return pd.DataFrame({"score": score, "ok": pd.Series(ok)})
+        A, _ = _vector_matrix(v, "pair_cosine_flags")
+        B, _ = _vector_matrix(bv, "pair_cosine_flags", dim=A.shape[1])
+        ln = np.sqrt(_fold(A, A))
+        rn = np.sqrt(_fold(B, B))
+        return pd.DataFrame(
+            {
+                "score": _cosine(_fold(A, B), ln * rn),
+                "ok": pd.Series(np.isfinite(ln) & np.isfinite(rn)),
+            }
+        )
 
-    # nondeterministic mark: see table_buckets_pandas — the exact knn
-    # branch filters on the ``ok`` field of this output, and predicate
-    # pushdown would otherwise re-plan the kernel below the filter
     return cosf.asNondeterministic()
 
 
 def query_cosine_flags_pandas(query):
     """Fused literal-query cosine for the UN-scoped brute branch (r15):
     one Arrow pass emitting ``struct<score: double, ok: boolean>`` —
-    the dot against the fixed query vector AND the row norm computed
-    as the same sequential left folds as ``dot_literal`` /
-    ``l2_norm`` (bit-identical doubles), with ``ok`` the
-    finite-geometry scope on the norm (NaN fold → NaN, Inf fold →
-    +Inf, both excluded; finite zero-norm rows stay and score NULL —
-    the oracle's CASE). Replaces norm_fold_pandas + a 64-term codegen
-    dot in topk_brute's cosine path: same kernel count, one fewer
-    per-element JVM pass, and the dim-unrolled expression tree leaves
-    the plan."""
-    import math
-
+    the dot against the fixed query vector AND the row norm as the
+    same left folds as ``dot_literal`` / ``l2_norm`` (bit-identical
+    doubles), with ``ok`` the finite-geometry scope on the norm (NaN
+    fold → NaN, Inf fold → +Inf, both excluded; finite zero-norm rows
+    stay and score NULL — the oracle's CASE). Replaced a norm kernel
+    plus a 64-term codegen dot in topk_brute's cosine path: same
+    kernel count, one fewer per-element JVM pass, and the
+    dim-unrolled expression tree leaves the plan."""
     import numpy as np
 
     q = np.asarray([float(x) for x in query], dtype=np.float64)
-    # qn as the strict left fold (matches VEC._py_dot + math.sqrt)
-    acc = 0.0
-    for x in query:
-        acc += float(x) * float(x)
-    qn = math.sqrt(acc)
-    ret = T.StructType(
-        [
-            T.StructField("score", T.DoubleType()),
-            T.StructField("ok", T.BooleanType()),
-        ]
-    )
+    qn = float(np.sqrt(_fold(q, q)))
 
-    @F.pandas_udf(ret)
+    @F.pandas_udf(_SCORE_OK)
     def qcos(v: pd.Series) -> pd.DataFrame:
-        if len(v) == 0:
-            return pd.DataFrame({"score": pd.Series([], dtype="float64"),
-                                 "ok": pd.Series([], dtype="bool")})
-        A = _vector_matrix(v, "query_cosine_flags")
-        nrm_acc = A[:, 0] * A[:, 0]
-        dot = A[:, 0] * q[0]
-        for i in range(1, A.shape[1]):
-            nrm_acc = nrm_acc + A[:, i] * A[:, i]
-            dot = dot + A[:, i] * q[i]
-        nrm = np.sqrt(nrm_acc)
-        ok = np.isfinite(nrm)
-        den = nrm * qn
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out = dot / den
-        score = pd.Series(out)
-        score[~(den > 0)] = None
-        return pd.DataFrame({"score": score, "ok": pd.Series(ok)})
+        A, _ = _vector_matrix(v, "query_cosine_flags", dim=len(q))
+        nrm = np.sqrt(_fold(A, A))
+        return pd.DataFrame(
+            {"score": _cosine(_fold(A, q), nrm * qn), "ok": pd.Series(np.isfinite(nrm))}
+        )
 
-    # nondeterministic mark: the caller filters on ``ok`` — see
-    # table_buckets_pandas
     return qcos.asNondeterministic()
-
-
-def norm_fold_pandas():
-    """Scalar Pandas UDF: per-row L2 norm as the SAME sequential
-    left fold as functions/vectors.l2_norm (bit-identical doubles —
-    the pair_cosine precedent). Exists for the exact knn branch's
-    finite-geometry scope: a poisoned vector's fold is NaN, and the
-    Arrow boundary maps NaN → NULL, so `norm IS NOT NULL` on this
-    kernel's output is a pushdown-proof exclusion that still keeps
-    legitimate zero-norm vectors (norm 0.0, finite — their pairs
-    score NULL downstream exactly like the oracle's CASE)."""
-    import numpy as np
-
-    @F.pandas_udf(T.DoubleType())
-    def nrm(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype="float64")
-        A = _vector_matrix(v, "norm_fold")
-        acc = A[:, 0] * A[:, 0]
-        for i in range(1, A.shape[1]):
-            acc = acc + A[:, i] * A[:, i]
-        return pd.Series(np.sqrt(acc))
-
-    # nondeterministic mark: see table_buckets_pandas — the exact knn
-    # branch filters `nrm IS NOT NULL AND < inf` on this output, and
-    # predicate pushdown would otherwise run the fold twice per side
-    return nrm.asNondeterministic()
 
 
 def centroid_dists_pandas(centroid_vectors):
@@ -392,177 +357,61 @@ def centroid_dists_pandas(centroid_vectors):
     vector to each of K centroids as ``array<double>`` (centroid
     order = input order).
 
-    Accumulation is an explicit per-dimension left fold (vectorized
-    across rows), so each distance is bit-identical to the flat
-    codegen ``(a_i - c_i)²`` fold and to DuckDB's list_sum — rounding
-    and argmin stay JVM-side on the tiny output array, keeping the
-    oracle arithmetic entirely out of numpy's rounding semantics.
-    Exists because K unrolled distance expressions in one projection
-    (K·dim·2 terms) cost tens of seconds of janino compile per query
-    (measured 28 s for K=8, dim=64 — plan-size disease, not data
-    cost)."""
+    Each distance is the ``(a_i - c_i)²`` left fold (``_fold``), so it
+    is bit-identical to the flat codegen fold and to DuckDB's
+    list_sum — rounding and argmin stay JVM-side on the tiny output
+    array, keeping the oracle arithmetic entirely out of numpy's
+    rounding semantics. Exists because K unrolled distance
+    expressions in one projection (K·dim·2 terms) cost tens of
+    seconds of janino compile per query (measured 28 s for K=8,
+    dim=64 — plan-size disease, not data cost).
+
+    Masked rows (NULL vector, NULL/NaN/Inf component) get a NULL
+    distance list. The kmeans callers filter ``dists IS NOT NULL`` on
+    this output; an input-side fold filter referenced across the
+    iterate plan's three consumers re-inlined the 64-term fold
+    everywhere and measured 7× (the janino/pushdown class)."""
     import numpy as np
 
     C = np.asarray([list(v) for v in centroid_vectors], dtype=np.float64)
 
     @F.pandas_udf(T.ArrayType(T.DoubleType()))
     def dists(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype="object")
-        # r13 vector-component poison: MASK corrupt rows (NULL vector,
-        # NULL/NaN/Inf component) to a NULL distance list — the same
-        # attribute-barrier exclusion as the bucketer. The kmeans
-        # callers filter `dists IS NOT NULL` on this output; an
-        # input-side fold filter referenced across the iterate plan's
-        # three consumers re-inlined the 64-term fold everywhere and
-        # measured 7× (the janino/pushdown class).
-        isnull = vecs.isna().to_numpy()
-        if isnull.any():
-            safe = vecs.copy()
-            dim = C.shape[1]
-            safe[isnull] = pd.Series(
-                [[float("nan")] * dim] * int(isnull.sum()),
-                index=safe.index[isnull],
-            )
-            A = np.asarray(safe.tolist(), dtype=np.float64)
-        else:
-            A = np.asarray(vecs.tolist(), dtype=np.float64)
-        finite = np.isfinite(A).all(axis=1)
-        if not finite.all():
-            A = np.where(finite[:, None], A, 0.0)
-        cols = []
-        for j in range(C.shape[0]):
-            d0 = A[:, 0] - C[j, 0]
-            acc = d0 * d0
-            for i in range(1, A.shape[1]):
-                di = A[:, i] - C[j, i]
-                acc = acc + di * di
-            cols.append(acc)
-        M = np.stack(cols, axis=1)
-        if finite.all():
-            return pd.Series(list(M))
-        return pd.Series([row if ok else None for row, ok in zip(M, finite)])
+        A, ok = _vector_matrix(vecs, "centroid_dists", dim=C.shape[1], masked=True)
+        M = np.stack([_fold(d, d) for d in (A - c for c in C)], axis=1)
+        return _cells(M, ok)
 
-    # nondeterministic mark: see table_buckets_pandas — the kmeans
-    # assigners filter `dists IS NOT NULL` on this output, and
-    # predicate pushdown would otherwise run the K-centroid kernel
-    # twice per assignment pass
     return dists.asNondeterministic()
 
 
-def table_buckets_pandas(planes_flat, planes_per_table: int, tables: int):
-    """Pandas UDF computing all L hash-table bucket ids of a vector in
-    ONE Arrow-batched matmul — returns array<long> of length
-    ``tables``, each entry tagged with ``t * 2**planes_per_table``.
+def bucket_norm_pandas(planes_flat, planes_per_table: int, tables: int):
+    """Fused LSH bucketer + per-vector L2 norm (r15 optimization
+    round): one Arrow pass emitting ``struct<bs: array<long>, nrm:
+    double>`` — all ``tables`` hash-table bucket ids of a vector, each
+    tagged with ``t * 2**planes_per_table``, plus the norm double of
+    the codegen ``l2_norm`` fold (``_fold``, IEEE sqrt).
 
-    Bit order matches functions/vectors.random_hyperplane_signs (first
-    plane = MSB). This is the multi-table scale path: L×p flat
-    sign-fold expressions in one projection blow past the JVM's
+    Bucket bit order matches functions/vectors.random_hyperplane_signs
+    (first plane = MSB), and the SIGNS are bit-identical to the
+    oracle's left-to-right sign fold at matmul speed
+    (``hybrid_fold_signs``). This is the multi-table scale path: L×p
+    flat sign-fold expressions in one projection blow past the JVM's
     generated-method JIT budget and run interpreted (measured 6×
     slower than the numpy kernel over the same planes), while the
     Arrow batch keeps plan size independent of L and p.
 
-    Bucket SIGNS are guaranteed bit-identical to the oracle's
-    left-to-right sign fold by construction, at matmul speed: BLAS
-    reassociates the summation, so a projection within accumulation
-    error of zero could flip a sign versus the fold (a pure-fold
-    kernel is 70-130x slower per batch — measured). The hybrid
-    computes the BLAS projection PLUS a rigorous summation-order error
-    bound (any two orders of summing d products differ by at most
-    ~2·d·u·Σ|vᵢpᵢ|; 8·d·u used for margin), and recomputes the exact
-    scalar left fold ONLY for entries whose |projection| falls inside
-    the bound — everywhere else sign(matmul) == sign(fold) is
-    mathematically guaranteed, and inside the bound the fold's own
-    value decides. Equality to the codegen fold is also pinned
-    empirically (test_arrow_bucketer_matches_codegen_sign_fold, plus a
-    forced-cancellation unit test)."""
-    import numpy as np
+    Why the norm rides along: every bucketed vector path (knn_join,
+    build_ann_index, incremental_knn, embedding_near_dup_pairs)
+    projected the norm as a dim-unrolled codegen fold NEXT TO the
+    bucketer kernel — the vectors cross the Python boundary for the
+    buckets anyway, so the norm there is one extra vectorized fold
+    over bytes already in cache, while the codegen spelling re-built
+    a 64-term expression tree per side per query.
 
-    P = np.asarray([list(p) for p in planes_flat], dtype=np.float64)  # (L*p, d)
-    weights = (
-        np.left_shift(
-            np.int64(1), np.arange(planes_per_table - 1, -1, -1, dtype=np.int64)
-        )
-    )
-    tags = np.arange(tables, dtype=np.int64) << planes_per_table
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def buckets(vecs: pd.Series) -> pd.Series:
-        import numpy as np
-
-        # r13 vector-component poison: the bucketer MASKS corrupt rows
-        # (NULL vector, NULL/NaN/Inf component) to a NULL bucket list
-        # instead of raising — its output is a Python-eval attribute
-        # barrier, so the operators' `bucket IS NOT NULL` filter is
-        # the finite-geometry scope in a form Catalyst can never push
-        # back into a duplicated 64-term fold (an input-side fold
-        # filter measured 1.2-2.3× on the bucketed keys; this is
-        # free). None components arrive as NaN via asarray; whole-NULL
-        # vectors are masked before tolist so numpy never sees a
-        # ragged object row. Scoring kernels (_vector_matrix callers)
-        # keep the LOUD contract — by the time pairs are scored the
-        # bucket filter has already excluded every poisoned row.
-        isnull = vecs.isna().to_numpy()
-        if isnull.any():
-            dim = P.shape[1]
-            safe = vecs.copy()
-            safe[isnull] = pd.Series([[float("nan")] * dim] * int(isnull.sum()),
-                                     index=safe.index[isnull])
-            m = np.asarray(safe.tolist(), dtype=np.float64)
-        else:
-            m = np.asarray(vecs.tolist(), dtype=np.float64)
-        finite = np.isfinite(m).all(axis=1)
-        if finite.all():
-            # fast path (clean batches — the overwhelmingly common
-            # case): one isfinite pass, no copies, no per-row python
-            signs = hybrid_fold_signs(m, P)
-            bs = signs.reshape(len(m), tables, planes_per_table).astype(np.int64) @ weights
-            return pd.Series(list(bs + tags))
-        # compute buckets on a zeroed copy (values irrelevant — masked
-        # rows emit NULL) to keep BLAS happy
-        m = np.where(finite[:, None], m, 0.0)
-        signs = hybrid_fold_signs(m, P)  # (n, L*p)
-        bs = signs.reshape(len(m), tables, planes_per_table).astype(np.int64) @ weights
-        bs = bs + tags  # (n, L)
-        out = [row if ok else None for row, ok in zip(bs, finite)]
-        return pd.Series(out)
-
-    # r14 (ab_r14_ledger attribution): deterministic in FACT, marked
-    # nondeterministic so the optimizer cannot re-inline the kernel
-    # into its consumers' filters — PushDownPredicate substitutes the
-    # projected alias into a `bucket IS NOT NULL` / probe `isin()`
-    # filter and plans a SECOND ArrowEvalPython, silently doubling
-    # every kernel evaluation (measured 1.34× on incremental-knn; the
-    # r13 "attribute barrier" claim held for Project collapse but not
-    # for filter pushdown). The annotation's only effect is disabling
-    # those moves: the filter stays ABOVE the projection and the
-    # kernel runs once.
-    return buckets.asNondeterministic()
-
-
-def bucket_norm_pandas(planes_flat, planes_per_table: int, tables: int):
-    """Fused bucketer + per-vector L2 norm (r15 optimization round):
-    one Arrow pass emitting ``struct<bs: array<long>, nrm: double>``
-    — the same bucket ids as ``table_buckets_pandas`` (same hybrid
-    sign-fold guarantee, same masking: corrupt rows get NULL fields)
-    plus the same norm double as the codegen ``l2_norm`` fold
-    (sequential left fold, float32→float64 exact, IEEE sqrt).
-
-    Why fused: every bucketed vector path (knn_join, build_ann_index,
-    incremental_knn, embedding_near_dup_pairs) projected the norm as
-    a dim-unrolled codegen fold NEXT TO the bucketer kernel — the
-    vectors cross the Python boundary for the buckets anyway, so the
-    norm there is one extra vectorized fold over bytes already in
-    cache, while the codegen spelling re-built a 64-term expression
-    tree per side per query (driver analysis/optimizer time scales
-    with it — the plan text was dominated by two such folds) and a
-    second full pass over the array elements in the JVM. The fold
-    arithmetic is bit-identical, so scores are unchanged.
-
-    Masking contract is table_buckets_pandas's, verbatim: NULL
-    vector / NULL / NaN / Inf component ⇒ NULL ``bs`` AND NULL
-    ``nrm`` — consumers' bucket filters exclude those rows before
-    anything shuffles, and the NULL nrm can never reach a score."""
+    Masked rows (NULL vector, NULL/NaN/Inf component) get NULL ``bs``
+    AND NULL ``nrm`` — consumers' bucket filters exclude those rows
+    before anything shuffles, and the NULL nrm can never reach a
+    score."""
     import numpy as np
 
     P = np.asarray([list(p) for p in planes_flat], dtype=np.float64)  # (L*p, d)
@@ -581,54 +430,13 @@ def bucket_norm_pandas(planes_flat, planes_per_table: int, tables: int):
 
     @F.pandas_udf(ret)
     def bucket_norm(vecs: pd.Series) -> pd.DataFrame:
-        import numpy as np
-
-        dim = P.shape[1]
-        if vecs.empty:
-            return pd.DataFrame(
-                {
-                    "bs": pd.Series([], dtype=object),
-                    "nrm": pd.Series([], dtype=np.float64),
-                }
-            )
-        isnull = vecs.isna().to_numpy()
-        if isnull.any():
-            # masked rows: NaN components, emitted as NULL below
-            vecs = vecs.copy()
-            vecs[isnull] = pd.Series([[float("nan")] * dim] * int(isnull.sum()),
-                                     index=vecs.index[isnull])
-        # ragged batches and length-0 / wrong-length vectors are refused
-        # as SchemaContractError (the scoring kernels' contract)
-        m = _vector_matrix(vecs, "bucket_norm", dim=dim)
-        finite = np.isfinite(m).all(axis=1)
-        if not finite.all():
-            m = np.where(finite[:, None], m, 0.0)
-        # exact left-fold self-dot (same doubles as l2_norm / the SQL
-        # oracle's list_sum fold), then IEEE sqrt
-        acc = m[:, 0] * m[:, 0]
-        for i in range(1, m.shape[1]):
-            acc = acc + m[:, i] * m[:, i]
-        nrm = np.sqrt(acc)
+        m, ok = _vector_matrix(vecs, "bucket_norm", dim=P.shape[1], masked=True)
         signs = hybrid_fold_signs(m, P)
         bs = signs.reshape(len(m), tables, planes_per_table).astype(np.int64) @ weights
-        bs = bs + tags
-        if finite.all():
-            return pd.DataFrame(
-                {"bs": pd.Series(list(bs)), "nrm": pd.Series(nrm)}
-            )
         return pd.DataFrame(
-            {
-                "bs": pd.Series(
-                    [row if ok else None for row, ok in zip(bs, finite)]
-                ),
-                "nrm": pd.Series(
-                    [float(x) if ok else None for x, ok in zip(nrm, finite)]
-                ),
-            }
+            {"bs": _cells(bs + tags, ok), "nrm": _cells(np.sqrt(_fold(m, m)), ok)}
         )
 
-    # nondeterministic mark: see table_buckets_pandas (filter pushdown
-    # would re-plan the kernel below its consumers' bucket filters)
     return bucket_norm.asNondeterministic()
 
 
@@ -660,11 +468,7 @@ def hybrid_fold_signs(m, P):
         # entries, VECTORIZED across those rows and all planes —
         # degenerate inputs (all-zero/padding embeddings make every
         # entry risky) must not fall onto a per-entry Python loop
-        mr = m[risky_rows]
-        acc = mr[:, 0:1] * P[None, :, 0].reshape(1, -1)
-        for i in range(1, mr.shape[1]):
-            acc = acc + mr[:, i : i + 1] * P[None, :, i].reshape(1, -1)
-        proj[risky_rows] = acc
+        proj[risky_rows] = _fold(m[risky_rows, None, :], P)
     return proj >= 0
 
 

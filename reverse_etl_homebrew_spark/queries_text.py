@@ -220,22 +220,13 @@ def q_topk_similarity(spark, sf_dir):
     """Exact top-k cosine similarity against a query vector (vec_id 0)
     — brute-force baseline: map-side scoring in double precision plus
     TakeOrderedAndProject; zero shuffle (EDBT 2020 / ICDE 2021 anchors,
-    PAPERS.md)."""
+    PAPERS.md). Scored by ``topk_brute``'s fused kernel, whose ``ok``
+    flag is the finite-geometry scope: a NaN/Inf-component vector
+    would otherwise score NaN, which Spark ranks above every number in
+    a descending sort."""
     emb = _t(spark, sf_dir, "embeddings")
     query, found = VEC.query_vector(emb)
-    import math
-
-    qn = math.sqrt(VEC._py_dot(query, query))
-    norm = VEC.l2_norm(F.col("embedding"), len(query))
-    score = F.when(
-        norm * F.lit(qn) > 0,
-        VEC.dot_literal(F.col("embedding"), query) / (norm * F.lit(qn)),
-    )
-    out = (
-        emb.select("vec_id", F.round(score, 6).alias("score"))
-        .orderBy(F.desc("score"), F.col("vec_id"))
-        .limit(10)
-    )
+    out = SIM.topk_brute(emb, query, k=10)
     return out if found else out.where(F.lit(False))
 
 

@@ -384,7 +384,7 @@ def test_mg_summary_retains_every_heavy_item(stream, k, batch):
 
 # ---------------------------------------------------------------------------
 # Hybrid LSH bucketer summation-order error bound (Spark-free: the
-# sign kernel used by operators/vectorized.table_buckets_pandas)
+# sign kernel used by operators/vectorized.bucket_norm_pandas)
 # ---------------------------------------------------------------------------
 
 

@@ -62,8 +62,9 @@ KEYS = [
 ]
 
 
-@pytest.fixture(scope="module")
-def poisoned_dir():
+def _plant_poison(guard: str) -> str:
+    """A copy of the sf0.001 tables with the three poison lanes planted
+    in the embeddings rows that pass ``guard`` (a SQL predicate)."""
     out = tempfile.mkdtemp(prefix="sg-veccomp-")
     con = duckdb.connect()
     for t in TABLES:
@@ -75,6 +76,7 @@ def poisoned_dir():
                 COPY (
                   SELECT vec_id,
                          CASE
+                           WHEN NOT ({guard}) THEN embedding
                            WHEN vec_id % 37 = 0 THEN list_transform(
                              embedding, (x, i) ->
                              CASE WHEN i = 1 THEN 'NaN'::FLOAT ELSE x END)
@@ -98,8 +100,27 @@ def poisoned_dir():
 
 
 @pytest.fixture(scope="module")
+def poisoned_dir():
+    # vec_id 0 is in the NaN lane, so every seed-based key degrades
+    # and is fenced EMPTY on both engines here
+    return _plant_poison("TRUE")
+
+
+@pytest.fixture(scope="module")
 def duck(poisoned_dir):
     return _duck(poisoned_dir)
+
+
+@pytest.fixture(scope="module")
+def clean_seed_dir():
+    # the same lanes with the seed (vec_id 0) left clean, so the
+    # seed-based keys rank the poisoned universe instead of fencing
+    return _plant_poison("vec_id > 0")
+
+
+@pytest.fixture(scope="module")
+def clean_seed_duck(clean_seed_dir):
+    return _duck(clean_seed_dir)
 
 
 @pytest.mark.parametrize("name", KEYS)
@@ -110,6 +131,35 @@ def test_component_poison_parity(spark, name, duck, poisoned_dir):
     cur = duck.execute(Q.ORACLE[name])
     d_cols = [c[0] for c in cur.description]
     d_rows = cur.fetchall()
+    assert sorted(s_cols) == sorted(d_cols)
+    assert _rowset(s_cols, s_rows) == _rowset(d_cols, d_rows)
+
+
+# every registered key that ranks against the vec_id-0 seed
+SEED_KEYS = [
+    "topk-similarity", "topk-similarity-pandas", "topk-similarity-lsh",
+    "topk-similarity-ivf", "hybrid-rrf",
+]
+
+
+@pytest.mark.parametrize("name", SEED_KEYS)
+def test_component_poison_parity_clean_seed(
+    spark, name, clean_seed_dir, clean_seed_duck
+):
+    """The seed-based keys over a poisoned universe with a clean seed:
+    the seed is found, the result is not fenced EMPTY, and it matches
+    the oracle — no NaN-scored poisoned vector ranks into it."""
+    from reverse_etl_homebrew_spark.sources.catalog import load_table
+
+    _, found = VEC.query_vector(load_table(spark, clean_seed_dir, "embeddings"))
+    assert found
+    sdf = Q.QUERIES[name](spark, clean_seed_dir)
+    s_cols = sdf.columns
+    s_rows = [tuple(r) for r in sdf.collect()]
+    cur = clean_seed_duck.execute(Q.ORACLE[name])
+    d_cols = [c[0] for c in cur.description]
+    d_rows = cur.fetchall()
+    assert s_rows
     assert sorted(s_cols) == sorted(d_cols)
     assert _rowset(s_cols, s_rows) == _rowset(d_cols, d_rows)
 
@@ -216,11 +266,11 @@ def test_bucketer_masks_poison_to_null_bucket(spark):
         _deterministic_planes,
     )
     from reverse_etl_homebrew_spark.operators.vectorized import (
-        table_buckets_pandas,
+        bucket_norm_pandas,
     )
 
     hp = _deterministic_planes(4, 3)
-    b = table_buckets_pandas(hp, 4, tables=1)
+    b = bucket_norm_pandas(hp, 4, tables=1)
     rows = [
         (1, [1.0, 2.0, 3.0]),
         (2, [float("nan"), 1.0, 1.0]),
@@ -232,7 +282,7 @@ def test_bucketer_masks_poison_to_null_bucket(spark):
     got = {
         r["id"]: r["bk"]
         for r in df.select(
-            "id", F.element_at(b(F.col("v")), 1).alias("bk")
+            "id", F.element_at(b(F.col("v")).getField("bs"), 1).alias("bk")
         ).collect()
     }
     assert got[1] is not None
@@ -243,58 +293,188 @@ def test_bucketer_masks_poison_to_null_bucket(spark):
 _NAN, _INF = float("nan"), float("inf")
 
 
-@pytest.mark.parametrize(
-    "batch, masked",
-    [
-        ([[1.0, 2.0, 3.0], [1.0, 2.0]], "ragged"),
-        ([[]], "length-0"),
-        ([None, None], [True, True]),
-        ([[_NAN, 1.0, 1.0], [1.0, 2.0, 3.0], [_INF, 1.0, 1.0]], [True, False, True]),
-        ([[1.0, 2.0, 3.0]], [False]),
-        ([], []),
-    ],
-    ids=["ragged", "length-0", "all-null", "nan-inf", "single-row", "empty"],
-)
-def test_bucket_norm_kernel_batch_contract(batch, masked):
-    """The fused bucket+norm kernel, called on one Arrow batch: a
-    ragged batch or a length-0 vector is the SchemaContractError the
-    scoring kernels raise; NULL and NaN/Inf rows are masked to a NULL
-    bucket list and NULL norm; clean rows bucket and carry the norm."""
+def _lfold(a, b):
+    # the oracle's sequential left fold, started from the first product
+    acc = a[0] * b[0]
+    for x, y in zip(a[1:], b[1:]):
+        acc += x * y
+    return acc
+
+
+_Q = [1.0, -2.0, 2.0]
+_C = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0], [0.0, 0.0, 1.0]]
+
+
+def _kernels():
+    """name → (masking?, run(left, right) → one normalized cell per
+    row, the expected cell of a clean row)."""
     import numpy as np
     import pandas as pd
 
+    from reverse_etl_homebrew_spark.operators import vectorized as VZ
     from reverse_etl_homebrew_spark.operators.dedup import _deterministic_planes
-    from reverse_etl_homebrew_spark.operators.vectorized import bucket_norm_pandas
+
+    def cell(x):
+        if x is None or (isinstance(x, float) and math.isnan(x)):
+            return None
+        if isinstance(x, np.ndarray):
+            return [cell(v) for v in x.tolist()]
+        return x.item() if isinstance(x, np.generic) else x
+
+    def rows(out):
+        if isinstance(out, pd.DataFrame):
+            return [tuple(cell(v) for v in r) for r in out.itertuples(index=False)]
+        return [cell(v) for v in out]
+
+    def norm(v):
+        return math.sqrt(_lfold(v, v))
+
+    def norms(vecs):
+        return pd.Series([_NAN if v is None or not len(v) else norm(v) for v in vecs])
+
+    hp = _deterministic_planes(4, 3)
+    qn = norm(_Q)
+    cos = VZ.query_cosine_pandas(_Q).func
+    ivf = VZ.ivf_cell_pandas(_C).func
+    pc = VZ.pair_cosine_pandas().func
+    pcf = VZ.pair_cosine_flags_pandas().func
+    qcf = VZ.query_cosine_flags_pandas(_Q).func
+    cd = VZ.centroid_dists_pandas(_C).func
+    bn = VZ.bucket_norm_pandas(hp, 4, tables=1).func
+    return {
+        "cosine_scores": (
+            False,
+            lambda a, b: rows(cos(a)),
+            lambda v: pytest.approx(_lfold(v, _Q) / (norm(v) * qn), rel=1e-12),
+        ),
+        "ivf_assign": (
+            True,
+            lambda a, b: rows(ivf(a)),
+            lambda v: max(range(len(_C)), key=lambda j: _lfold(v, _C[j])),
+        ),
+        "pair_cosine": (
+            False,
+            lambda a, b: rows(pc(a, b, norms(a), norms(b))),
+            lambda v: _lfold(v, v) / (norm(v) * norm(v)),
+        ),
+        "pair_cosine_flags": (
+            False,
+            lambda a, b: rows(pcf(a, b)),
+            lambda v: (_lfold(v, v) / (norm(v) * norm(v)), True),
+        ),
+        "query_cosine_flags": (
+            False,
+            lambda a, b: rows(qcf(a)),
+            lambda v: (_lfold(v, _Q) / (norm(v) * qn), True),
+        ),
+        "centroid_dists": (
+            True,
+            lambda a, b: rows(cd(a)),
+            lambda v: [
+                _lfold([x - y for x, y in zip(v, c)], [x - y for x, y in zip(v, c)])
+                for c in _C
+            ],
+        ),
+        "bucket_norm": (
+            True,
+            lambda a, b: rows(bn(a)),
+            lambda v: (
+                [
+                    sum(
+                        (1 if _lfold(v, p) >= 0 else 0) << (len(hp) - 1 - i)
+                        for i, p in enumerate(hp)
+                    )
+                ],
+                norm(v),
+            ),
+        ),
+    }
+
+
+_KERNELS = [
+    "cosine_scores", "ivf_assign", "pair_cosine", "pair_cosine_flags",
+    "query_cosine_flags", "centroid_dists", "bucket_norm",
+]
+# case → (left batch, right batch for the pair kernels, per-row state):
+# "raise" = SchemaContractError naming the kernel; per row, True =
+# corrupt (masked to NULL, or for a scoring kernel numpy's NaN
+# garbage-in), False = clean
+_CASES = {
+    "empty": ([], None, []),
+    "all-null": ([None, None], None, [True, True]),
+    "length-0": ([[]], None, "raise"),
+    "ragged": ([[1.0, 2.0, 3.0], [1.0, 2.0]], None, "raise"),
+    "nan-inf": (
+        [[_NAN, 1.0, 1.0], [1.0, 2.0, 3.0], [_INF, 1.0, 1.0]],
+        None,
+        [True, False, True],
+    ),
+    "single-row": ([[1.0, 2.0, 3.0]], None, [False]),
+}
+_PAIR_CASES = {
+    "narrow-left": ([[1.0, 2.0]], [[1.0, 2.0, 3.0]], "raise"),
+    "narrow-right": ([[1.0, 2.0, 3.0]], [[1.0, 2.0]], "raise"),
+}
+
+
+@pytest.mark.parametrize(
+    "kernel, case",
+    [(k, c) for k in _KERNELS for c in _CASES]
+    + [(k, c) for k in ("pair_cosine", "pair_cosine_flags") for c in _PAIR_CASES],
+    ids=lambda x: x,
+)
+def test_kernel_batch_contract(kernel, case):
+    """Every vector kernel on one Arrow batch, through the one batch
+    contract: an empty batch is an empty result; a ragged batch, a
+    length-0 vector, or a pair whose sides differ in width is a
+    SchemaContractError naming the kernel; a NULL vector is that error
+    for a scoring kernel and a masked NULL cell for a masking kernel,
+    as is a NaN/Inf component; clean rows carry the oracle's
+    left-fold doubles."""
+    import numpy as np
+    import pandas as pd
+
     from reverse_etl_homebrew_spark.sources.catalog import SchemaContractError
 
-    kernel = bucket_norm_pandas(_deterministic_planes(4, 3), 4, tables=1).func
-    vecs = pd.Series(
-        [None if v is None else np.asarray(v, dtype=np.float64) for v in batch],
-        dtype=object,
-    )
-    if isinstance(masked, str):
-        with pytest.raises(SchemaContractError, match="bucket_norm"):
-            kernel(vecs)
+    left, right, state = {**_CASES, **_PAIR_CASES}[case]
+    masking, run, want = _kernels()[kernel]
+
+    def series(batch):
+        return pd.Series(
+            [None if v is None else np.asarray(v, dtype=np.float64) for v in batch],
+            dtype=object,
+        )
+
+    a = series(left)
+    b = a if right is None else series(right)
+    if state == "raise" or (not masking and None in left):
+        with pytest.raises(SchemaContractError, match=kernel):
+            run(a, b)
         return
-    out = kernel(vecs)
-    assert len(out) == len(batch)
-    for v, dropped, bs, nrm in zip(batch, masked, out["bs"], out["nrm"]):
-        if dropped:
-            assert bs is None and (nrm is None or math.isnan(nrm))
+    got = run(a, b)
+    assert len(got) == len(left)
+    for v, corrupt, g in zip(left, state, got):
+        if not corrupt:
+            assert g == want(v), (v, g)
+        elif masking:
+            assert g is None or g == (None, None), (v, g)
         else:
-            assert len(bs) == 1 and 0 <= bs[0] < 16
-            assert nrm == math.sqrt(sum(x * x for x in v))
+            # scoring kernels do not rescan for non-finite components:
+            # the score is NaN (NULL), and a flags kernel's ok is False
+            assert g is None or g == (None, False), (v, g)
 
 
 def test_exact_branch_norm_kernel_distinguishes_poison_from_zero(spark):
-    """The exact knn branch's fold-exact norm kernel: poisoned
-    vectors → NULL norm (excluded), zero vectors → 0.0 (kept — their
-    pairs legitimately score NULL like the oracle's CASE)."""
+    """The exact knn branch's fused kernel (pair_cosine_flags_pandas)
+    scores each pair with its fold-exact norms: poisoned vectors →
+    ok=false (excluded), zero vectors → ok=true with a NULL score
+    (kept — their pairs legitimately score NULL like the oracle's
+    CASE)."""
     from reverse_etl_homebrew_spark.operators.vectorized import (
-        norm_fold_pandas,
+        pair_cosine_flags_pandas,
     )
 
-    nrm = norm_fold_pandas()
+    cosf = pair_cosine_flags_pandas()
     rows = [
         (1, [3.0, 4.0]),
         (2, [0.0, 0.0]),
@@ -302,10 +482,13 @@ def test_exact_branch_norm_kernel_distinguishes_poison_from_zero(spark):
         (4, [None, 1.0]),
     ]
     df = spark.createDataFrame(rows, "id int, v array<double>")
-    got = {r["id"]: r["n"] for r in df.select("id", nrm("v").alias("n")).collect()}
-    assert got[1] == 5.0
-    assert got[2] == 0.0
-    assert got[3] is None and got[4] is None
+    got = {
+        r["id"]: (r["f"]["ok"], r["f"]["score"])
+        for r in df.select("id", cosf("v", "v").alias("f")).collect()
+    }
+    assert got[1] == (True, 1.0)
+    assert got[2] == (True, None)
+    assert got[3][0] is False and got[4][0] is False
 
 
 def test_query_vector_degrades_on_nonfinite_seed(spark):

@@ -315,7 +315,7 @@ def test_arrow_bucketer_matches_codegen_sign_fold(spark):
     )
     from reverse_etl_homebrew_spark.operators.dedup import _deterministic_planes
     from reverse_etl_homebrew_spark.operators.vectorized import (
-        table_buckets_pandas,
+        bucket_norm_pandas,
     )
     from reverse_etl_homebrew_spark.sources.catalog import load_table
 
@@ -323,10 +323,12 @@ def test_arrow_bucketer_matches_codegen_sign_fold(spark):
     dim = len(emb.select("embedding").first()["embedding"])
     for planes in (6, 8):
         hp = _deterministic_planes(planes, dim)
-        bucketer = table_buckets_pandas(hp, planes, tables=1)
+        bucketer = bucket_norm_pandas(hp, planes, tables=1)
         diff = (
             emb.select(
-                F.element_at(bucketer(F.col("embedding")), 1).alias("arrow"),
+                F.element_at(
+                    bucketer(F.col("embedding")).getField("bs"), 1
+                ).alias("arrow"),
                 random_hyperplane_signs(F.col("embedding"), hp).alias("fold"),
             )
             .filter(F.col("arrow") != F.col("fold"))
@@ -345,7 +347,7 @@ def test_bucketer_exact_fold_on_forced_cancellation(spark):
     from pyspark.sql import functions as F, types as T
 
     from reverse_etl_homebrew_spark.operators.vectorized import (
-        table_buckets_pandas,
+        bucket_norm_pandas,
     )
 
     rng = np.random.RandomState(42)
@@ -374,11 +376,12 @@ def test_bucketer_exact_fold_on_forced_cancellation(spark):
             ]
         ),
     )
-    bucketer = table_buckets_pandas(hp, planes, tables=1)
+    bucketer = bucket_norm_pandas(hp, planes, tables=1)
     got = [
         r["b"]
         for r in df.select(
-            "rid", F.element_at(bucketer(F.col("embedding")), 1).alias("b")
+            "rid",
+            F.element_at(bucketer(F.col("embedding")).getField("bs"), 1).alias("b"),
         )
         .orderBy("rid")
         .collect()
