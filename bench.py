@@ -45,10 +45,9 @@ HEADLINE = [
     "session-window",
     # training-data extension tier
     "exact-dedup",
-    # NOTE r3: fuzzy-dedup upgraded from raw LSH candidates to
-    # exact-VERIFIED pairs (oracle-backed adversarial recall gate) —
-    # ~+1.5 s of candidate-verification work vs the r2 number is the
-    # price of the stronger operator, not a regression
+    # fuzzy-dedup runs the exact gram-overlap join (the ngram-jaccard
+    # operator), oracle-checked pair-for-pair; earlier readings (r2-r15)
+    # timed MinHash banding with exact verification, which missed pairs
     "fuzzy-dedup",
     "text-analysis",
     "topk-similarity",

@@ -27,10 +27,10 @@ boundaries with working knobs, both MEASURED on this corpus:
   oracle top-50 again.
 - fuzzy-dedup / -clusters / dedup-survivorship failed their oracle
   recall gate because the snippets DEGRADED planted clone pairs into
-  the 0.6-0.8 jaccard gray zone below the 4x8 banding's S-curve
-  midpoint (0.84): bands=4 missed 16 of 27 true pairs, bands=8
-  missed 1, bands=16 is EXACTLY equal — the documented
-  banding-steepness knob, behaving as the S-curve math predicts.
+  the 0.6-0.8 jaccard gray zone below the then-MinHash 4x8 banding's
+  S-curve midpoint (0.84): bands=4 missed 16 of 27 true pairs. The
+  keys now run the exact gram-overlap join (no banding) and match the
+  oracle on this corpus (tests/test_adversarial_knobs.py).
 
 ENCODING arm (r12, the judge's #4 — Unicode-poison hunt over
 ``normalized_text``, trigram extraction, pii-scrub regexes, and
@@ -60,13 +60,12 @@ maps every non-ASCII codepoint to a separator on BOTH dialects, so
 astral/NFD/zalgo/fullwidth text degrades identically, and
 length/token counts agree because BOTH engines count codepoints
 (never UTF-16 units or graphemes — ngram-jaccard, the exact-algebra
-twin, is OK). The 3 non-OK keys are the SAME banding-recall boundary
+twin, is OK). The 3 non-OK keys were the SAME banding-recall boundary
 the dialect arm documented (fuzzy-dedup / -clusters /
 dedup-survivorship): the appended snippets depress planted clone
 pairs below the 4x8 banding's S-curve midpoint; measured bands=4
-missed 9 of 28 true pairs, bands=8 missed 2, bands=16 is EXACTLY
-pair-for-pair equal with zero extras (pinned in
-tests/test_adversarial_knobs.py).
+missed 9 of 28 true pairs. The keys now run the exact gram-overlap
+join and match the oracle here too (tests/test_adversarial_knobs.py).
 
 Usage:
     python fixtures/adversarial_text_probe.py [sf_dir] [--arm dialect|encoding] [key ...]

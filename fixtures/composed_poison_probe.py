@@ -26,11 +26,11 @@ comparison; their composition with the sync pipelines' col_or_null
 tolerance is checked separately by `sync_alias_composed` below.
 
 Expected exceptions (documented boundaries, same as the single-arm
-probes — composition must not ADD any):
-- fuzzy-dedup / fuzzy-dedup-clusters / dedup-survivorship: the
-  banding-recall boundary (encoding snippets depress planted pairs
-  below the 4x8 S-curve midpoint; bands=16 exact —
-  tests/test_adversarial_knobs.py).
+probes — composition must not ADD any): the sketch guards listed in
+KNOWN_BOUNDARIES. The fuzzy-dedup family's banding-recall boundary
+(encoding snippets depressed planted pairs below a 4x8 MinHash
+S-curve midpoint) is gone: those keys now run the exact gram-overlap
+join (tests/test_adversarial_knobs.py).
 
 First-run adjudication (r12, sf0.001): 152 OK + 3 known boundaries +
 **1 MISMATCH the composition alone could reach** — decontaminate's
@@ -73,10 +73,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import duckdb
 
 KNOWN_BOUNDARIES = {
-    # banding-recall boundary (encoding snippets depress planted pairs
-    # below the 4x8 S-curve midpoint; bands=16 exact —
-    # tests/test_adversarial_knobs.py)
-    "fuzzy-dedup", "fuzzy-dedup-clusters", "dedup-survivorship",
     # sketch provable-regime guards: the giant lanes' char-trigram
     # mass flattens the tail below sketch_k=255's pigeonhole bound —
     # LOUD in-plan raise, never silent; sketch_k=4095 restores the

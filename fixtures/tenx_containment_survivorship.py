@@ -73,27 +73,17 @@ def replicate(d, copies: int, disjoint_vocab: bool):
 
 
 def containment_uncapped(spark, d):
-    from reverse_etl_homebrew_spark.functions import text as TX
+    from reverse_etl_homebrew_spark.operators.dedup import _doc_grams
     from reverse_etl_homebrew_spark.queries_quality import _directed_containment
 
-    toks = d.select(
-        F.col("doc_id").alias("id"),
-        F.split(TX.normalized_text(F.col("text")), " ").alias("w"),
-    )
-    grams = toks.select(
-        "id",
-        F.explode(F.array_distinct(TX.word_ngrams_from(F.col("w"), 3))).alias("g"),
-    )
-    return _directed_containment(grams, threshold=0.8)
+    return _directed_containment(_doc_grams(d, "doc_id", "text", 3), threshold=0.8)
 
 
 def containment_capped(spark, d, df_cap: int):
     from reverse_etl_homebrew_spark.operators.dedup import _pruned_grams
     from reverse_etl_homebrew_spark.queries_quality import _directed_containment
 
-    pruned = _pruned_grams(d, "doc_id", "text", 3, df_cap).localCheckpoint(
-        eager=False
-    )
+    pruned = _pruned_grams(d, "doc_id", "text", 3, df_cap)
     return _directed_containment(pruned, threshold=0.8)
 
 
@@ -103,7 +93,7 @@ def survivorship(spark, d):
     from reverse_etl_homebrew_spark.operators.components import connected_components
     from pyspark.sql import Window as W
 
-    pairs = DD.minhash_verified_pairs(d, num_hashes=32, bands=4)
+    pairs = DD.ngram_jaccard_pairs(d, threshold=0.5)
     comps = connected_components(pairs)
     scored = d.select("doc_id", TX.quality_score(F.col("text")).alias("quality"))
     lab = scored.join(comps, scored["doc_id"] == comps["id"], "left").select(

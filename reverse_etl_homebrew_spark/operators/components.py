@@ -1,13 +1,13 @@
-"""Connected components over near-duplicate candidate pairs — the
-step that turns pairwise similarity (MinHash/SimHash/Jaccard/cosine)
+"""Connected components over near-duplicate pairs — the step that
+turns pairwise similarity (SimHash/Jaccard/cosine)
 into dedup decisions: each duplicate CLUSTER keeps exactly one
 survivor.
 
 Algorithm: min-label propagation to a fixpoint — each node
 repeatedly adopts the smallest label in its neighborhood. It needs
 O(diameter) rounds, not O(log n): a path graph of n nodes takes n-1.
-Real near-dup clusters are clique-like from LSH banding, so the
-diameter is small (2 rounds at sf0.01 and sf0.1); each round is one
+Real near-dup clusters are clique-like (copies of one source document
+all pair with each other), so the diameter is small (2 rounds at sf0.01 and sf0.1); each round is one
 groupBy shuffle plus a convergence count. This is the canonical Spark
 shape for iterative graph algorithms without GraphX/graphframes
 dependencies.

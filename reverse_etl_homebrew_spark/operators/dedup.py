@@ -1,12 +1,13 @@
 """Deduplication operator family (SURVEY.md §2.7 `dedup-lastwin`,
-§2.11 extension tier: exact / MinHash-LSH / SimHash / n-gram Jaccard /
-embedding-cosine near-dup).
+§2.11 extension tier: exact / SimHash / n-gram Jaccard / n-gram
+containment / embedding-cosine near-dup).
 
-Scale design: every variant reduces to (a) a map-side fingerprint or
-sketch computed in pure Column expressions, then (b) ONE shuffle on
-the fingerprint/bucket key. Candidate pairs are only materialized
-within buckets (LSH banding), never as a cross join — the property
-that keeps near-dup detection tractable on a 1e10-document corpus.
+Scale design: every variant reduces to (a) a map-side fingerprint,
+sketch or gram explode computed in pure Column expressions, then (b)
+ONE shuffle on the fingerprint/bucket/gram key. Candidate pairs are
+only materialized within buckets or gram posting lists, never as a
+cross join — the property that keeps near-dup detection tractable on
+a 1e10-document corpus.
 """
 
 from __future__ import annotations
@@ -75,185 +76,15 @@ def lastwin_dedup(
 
 
 # ---------------------------------------------------------------------------
-# MinHash + LSH near-dup
+# SimHash near-dup
 # ---------------------------------------------------------------------------
 #
-# Implementation note: the sketch pipelines deliberately avoid stacking
+# Implementation note: the sketch pipeline deliberately avoids stacking
 # multiple higher-order-function lambdas (transform/aggregate/filter)
 # in one projection — observed to produce NONDETERMINISTIC results on
 # Spark 4.1 local[N] (lambda-variable state races across identical
-# lambda names). The explode → flat-hash-columns → groupBy(min) shape
-# below is also the right one at scale: each shingle is normalized and
-# hashed exactly once, instead of num_hashes times.
-
-
-def minhash_sig_array(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 32,
-    shingle_n: int = 5,
-) -> DataFrame:
-    """One row per document as (id, sig: array<long>[k]): a
-    one-permutation MinHash signature (Li/Owen/Zhang OPH) over the
-    distinct character-shingle set.
-
-    Each shingle is hashed ONCE; the hash selects one of k buckets
-    (pmod) and competes for that bucket's minimum — O(len) work per
-    document instead of the classic k-hash O(len·k), and the shuffled
-    row is (id, bucket, h) = 24 bytes instead of k longs. Single
-    shuffle (groupBy id, partial min map-side). Empty buckets (only
-    short documents have any, P(empty) = (1-1/k)^n_shingles) are
-    rotationally densified — filled from the next non-empty bucket to
-    the right, wrapping — which preserves the LSH collision property
-    and keeps signatures a pure function of the shingle set, so
-    identical texts still agree on every component.
-
-    The signature lives in ONE array column: k separate columns each
-    holding a k-term densification window made Catalyst generate k
-    large expressions (expensive to compile and to run); the array
-    form compiles the window once inside a single transform lambda."""
-    # NOTE on parallelism: the map side (normalize/shingle/hash) runs
-    # in the scan stage's tasks. A corpus that arrives as few splits
-    # (small files) serializes it — callers on small corpora should
-    # repartition by id BEFORE this operator (the id partitioning then
-    # also satisfies both groupBys below, leaving one exchange total).
-    # The operator does not force that itself: at corpus scale a raw-
-    # text repartition is a full-corpus shuffle, while the native shape
-    # (map-side partial min, then exchange of (id, bucket, min) rows)
-    # moves only ids × k × 24 B.
-    normalized = df.select(
-        F.col(id_col).alias("id"),
-        TX.char_array(TX.normalized_text(F.col(text_col))).alias("__ch"),
-    )
-    # no array_distinct: duplicate shingles hash identically, and the
-    # (id, bucket) min-aggregation absorbs them — min over the
-    # multiset equals min over the set, so the per-document dedup pass
-    # is pure overhead here (simhash, whose votes weight by distinct
-    # shingle, still needs it)
-    shingled = normalized.select(
-        "id",
-        F.explode(TX.char_ngrams_from(F.col("__ch"), shingle_n)).alias("g"),
-    )
-    hashed = shingled.select(
-        "id",
-        F.xxhash64("g").alias("h"),
-    ).select("id", "h", F.pmod(F.col("h"), F.lit(num_hashes)).cast("int").alias("b"))
-    # two-level min: per (id, bucket) first — the per-shingle update is
-    # a single hash-agg min (O(1)), not k conditional mins (O(k)). The
-    # per-id collapse then aggregates the ≤k bucket rows into ONE map
-    # column: a k-column conditional-min pivot here generates an
-    # aggregate update method past the JVM's 8 KB JIT limit and runs
-    # interpreted (measured 1.5 s of the old 6.5 s sf0.1 wall).
-    bucket_mins = hashed.groupBy("id", "b").agg(F.min("h").alias("mn"))
-    as_map = bucket_mins.groupBy("id").agg(
-        F.map_from_entries(F.collect_list(F.struct("b", "mn"))).alias("__mp")
-    )
-    # densify: per-slot coalesce window over map lookups (missing key →
-    # null, no ANSI error on maps). ONE transform lambda builds all k
-    # slots — a single compiled window body instead of k copies.
-    return as_map.select(
-        "id",
-        F.transform(
-            F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-            lambda i: F.coalesce(
-                *[
-                    F.element_at(
-                        F.col("__mp"),
-                        ((i + F.lit(j)) % F.lit(num_hashes)).cast("int"),
-                    )
-                    for j in range(num_hashes)
-                ]
-            ),
-        ).alias("sig"),
-    )
-
-
-def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 5,
-    min_est: float | None = None,
-) -> DataFrame:
-    """Candidate near-duplicate pairs via MinHash banding:
-    OPH signature → ``bands`` band-hashes → self-join within band
-    buckets.
-
-    Shuffle profile: shingle-hash groupBy, explode to (bands × rows)
-    bucket rows, shuffle on (band, bucket); pairs enumerated only
-    inside buckets — never a cross join. Returns distinct
-    (a_id, b_id, est_jaccard) with a < b, est_jaccard = signature
-    agreement fraction. On a corpus dense in moderate-similarity
-    pairs (templated text), banding alone admits ~j^r candidates per
-    band — pass ``min_est`` (e.g. the (1/bands)^(1/rows_per_band)
-    S-curve midpoint) to keep only candidates whose signature
-    agreement clears the dedup threshold before they fan out to
-    downstream verification/clustering."""
-    rows_per_band = num_hashes // bands
-    # materialize signatures once: the band self-join references the
-    # signature pipeline from both legs with different projections, so
-    # exchange reuse cannot deduplicate them and the whole
-    # explode→hash→agg pipeline would run twice. Signatures are
-    # docs × (k+1) × 8 B — the standard LSH persist point.
-    sig = pin(minhash_sig_array(df, id_col, text_col, num_hashes, shingle_n))
-    # band rows carry the signature array alongside (band, bucket): at
-    # bands≈4 that is ~1 KB/doc of shuffle — the same order as joining
-    # the candidate set back to the signature table, with two fewer
-    # stages (candidates are enumerated and scored in one join)
-    banded = sig.select(
-        "id",
-        "sig",
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.concat_ws(
-                            ",",
-                            F.lit(b),
-                            *[
-                                F.get("sig", b * rows_per_band + r).cast("string")
-                                for r in range(rows_per_band)
-                            ],
-                        )
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band", "bucket"),
-    )
-    # explicit renames instead of DataFrame aliases: self-join alias
-    # resolution is fragile (can silently rebind both legs to one side)
-    left = banded.select(
-        F.col("id").alias("a_id"), F.col("sig").alias("a_sig"), "band", "bucket"
-    )
-    right = banded.select(
-        F.col("id").alias("b_id"), F.col("sig").alias("b_sig"), "band", "bucket"
-    )
-    agree = sum(
-        (F.get("a_sig", i) == F.get("b_sig", i)).cast("int")
-        for i in range(num_hashes)
-    )
-    pairs = (
-        left.join(right, ["band", "bucket"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select(
-            "a_id",
-            "b_id",
-            (agree.cast("double") / F.lit(float(num_hashes))).alias("est_jaccard"),
-        )
-        .dropDuplicates(["a_id", "b_id"])
-    )
-    if min_est is not None:
-        pairs = pairs.filter(F.col("est_jaccard") >= float(min_est))
-    return pairs
-
-
-# ---------------------------------------------------------------------------
-# SimHash near-dup
-# ---------------------------------------------------------------------------
+# lambda names). Explode → one hash per shingle → groupBy is the flat
+# shape, and also the right one at scale.
 
 def simhash_fingerprints(
     df: DataFrame,
@@ -271,7 +102,7 @@ def simhash_fingerprints(
     64-bit vote needs 32 aggregate columns, not 64 — keeping the
     generated hash-agg output method under the JVM's 8 KB JIT limit
     (the 64-column form compiled but ran interpreted). Flat
-    expressions only (see module note), one shuffle, each shingle
+    expressions only (see the section note), one shuffle, each shingle
     hashed once."""
     assert bits % 2 == 0
     hashed = (
@@ -1125,8 +956,8 @@ def _pruned_grams(
     df: DataFrame, id_col: str, text_col: str, n: int, df_cap: int
 ) -> DataFrame:
     """One row per (doc, distinct word-n-gram), with grams whose
-    document frequency exceeds ``df_cap`` pruned (prefix-filter) —
-    the shared gram space for exact Jaccard and LSH verification.
+    document frequency exceeds ``df_cap`` pruned (a document-frequency
+    cap) — the gram space of exact Jaccard and capped containment.
 
     Exact re-deliveries collapse FIRST (r11 re-delivery probe): under
     at-least-once ingest the same (id, text) row arrives twice, and
@@ -1137,25 +968,46 @@ def _pruned_grams(
     shuffle on the doc table — far cheaper than deduping the exploded
     gram stream — and is exact: identical rows only; conflicting
     same-id content is a different corruption owned upstream."""
-    df = df.dropDuplicates([id_col, text_col])
-    grams = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.split(TX.normalized_text(F.col(text_col)), " ").alias("__toks"),
-        )
-        .select(
-            "id",
-            F.explode(F.array_distinct(TX.word_ngrams_from(F.col("__toks"), n))).alias(
-                "g"
-            ),
-        )
-    )
+    grams = _doc_grams(df.dropDuplicates([id_col, text_col]), id_col, text_col, n)
     hot = grams.groupBy("g").agg(F.count(F.lit(1)).alias("df")).filter(
         F.col("df") > df_cap
     )
     # hot-gram list size follows the corpus (Zipf tail over df_cap), so
     # no forced broadcast — AQE broadcasts it only while it is small
     return grams.join(hot.select("g"), ["g"], "left_anti")
+
+
+def _gram_overlap_pairs(grams: DataFrame) -> DataFrame:
+    """Every document pair sharing at least one gram of the distinct
+    (id, g) relation ``grams``, as (a_id, b_id, inter, a_size, b_size)
+    with a_id < b_id: the shared-gram count and both set sizes — the
+    exact inputs of every gram-set similarity (Jaccard, containment).
+
+    The caller decides the gram universe (full vocabulary or df-capped);
+    sizes are counted over the SAME relation as the intersections, so
+    every score built on them is a true measure of well-defined sets.
+    Exact by construction: candidates come from a gram-keyed equi-join
+    (shuffle ∝ gram postings, never all-pairs), so every pair with a
+    non-empty intersection is counted — no sketch, no recall loss.
+    Per-doc sizes join back with no forced broadcast: one row per
+    document is fact-sized (AQE broadcasts it only while small)."""
+    # Pin the gram relation: it feeds THREE plan legs (sizes + both
+    # join sides), and without the lineage cut each leg re-runs the
+    # full normalize/explode(/df-cap) pipeline — measured 2× the
+    # query's real work at sf0.1.
+    grams = pin(grams)
+    sizes = grams.groupBy("id").agg(F.count(F.lit(1)).alias("size"))
+    a, b = grams.alias("a"), grams.alias("b")
+    inter = (
+        a.join(b, (F.col("a.g") == F.col("b.g")) & (F.col("a.id") < F.col("b.id")))
+        .groupBy(F.col("a.id").alias("a_id"), F.col("b.id").alias("b_id"))
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
+    return (
+        inter.join(sizes.withColumnsRenamed({"id": "a_id", "size": "a_size"}), ["a_id"])
+        .join(sizes.withColumnsRenamed({"id": "b_id", "size": "b_size"}), ["b_id"])
+        .select("a_id", "b_id", "inter", "a_size", "b_size")
+    )
 
 
 def ngram_jaccard_pairs(
@@ -1166,116 +1018,24 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     df_cap: int = 100,
 ) -> DataFrame:
-    """Word-n-gram Jaccard similarity for candidate pairs sharing at
-    least one n-gram: explode n-grams → shuffle on n-gram → pairs per
-    posting list → |A∩B| / |A∪B| from per-doc set sizes.
+    """Exact word-n-gram Jaccard ≥ ``threshold`` for every document
+    pair: |A∩B| / |A∪B| over ``_gram_overlap_pairs`` (a pair sharing
+    no gram has Jaccard 0, so no qualifying pair is missed). Returns
+    (a_id, b_id, jaccard) with a_id < b_id.
 
     At corpus scale the posting-list join is bounded by dropping
-    ultra-common n-grams (document frequency cap) — the standard
-    prefix-filter trick; df_cap keeps hot shingles from quadratic
-    blowup. Jaccard is therefore computed over the PRUNED gram sets —
-    a well-defined approximation of full-set Jaccard (both numerator
-    and denominator exclude grams with document frequency > df_cap;
-    pairs sharing only hot grams are not candidates). Per-doc sizes
-    join back via plain shuffle joins: one row per document is
-    fact-sized, never broadcast."""
-    # Pin the pruned gram set: it feeds THREE plan legs (sizes + both
-    # join sides), and without the lineage cut each leg re-runs the
-    # full shingle/normalize/df-cap pipeline — measured 2× the query's
-    # real work at sf0.1. Same device as minhash signature pinning.
-    pruned = pin(_pruned_grams(df, id_col, text_col, n, df_cap))
-    # sizes from the SAME pruned set the intersections are counted on,
-    # so numerator and denominator are consistent
-    sizes = pruned.groupBy("id").agg(F.count(F.lit(1)).alias("set_size"))
-    a, b = pruned.alias("a"), pruned.alias("b")
-    inter = (
-        a.join(b, (F.col("a.g") == F.col("b.g")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("a_id"), F.col("b.id").alias("b_id"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    out = (
-        inter.join(sizes.withColumnsRenamed({"id": "a_id", "set_size": "a_size"}), ["a_id"])
-        .join(sizes.withColumnsRenamed({"id": "b_id", "set_size": "b_size"}), ["b_id"])
-        .withColumn(
+    ultra-common n-grams (a document-frequency cap); df_cap keeps hot
+    shingles from quadratic blowup. Jaccard is therefore computed over
+    the PRUNED gram sets — a well-defined measure of its own (both
+    numerator and denominator exclude grams with document frequency
+    > df_cap; pairs sharing only hot grams are not candidates), and
+    the one the SQL oracle computes."""
+    pairs = _gram_overlap_pairs(_pruned_grams(df, id_col, text_col, n, df_cap))
+    return (
+        pairs.withColumn(
             "jaccard",
             F.col("inter").cast("double")
             / (F.col("a_size") + F.col("b_size") - F.col("inter")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("a_id", "b_id", "jaccard")
-    )
-    return out
-
-
-def minhash_verified_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 32,
-    bands: int = 4,
-    shingle_n: int = 5,
-    n: int = 3,
-    threshold: float = 0.5,
-    df_cap: int = 100,
-) -> DataFrame:
-    """Near-duplicate pairs: MinHash-LSH candidates VERIFIED by exact
-    word-``n``-gram Jaccard ≥ ``threshold`` — the production dedup
-    shape (sketch to bound candidates, exact measure to decide).
-
-    Because verification is exact, the output equals the full exact
-    j ≥ threshold pair set whenever LSH recall is 100% on that set —
-    which makes this operator ORACLE-CHECKABLE against a brute-force
-    SQL Jaccard: any pair the banding misses shows up as a row-count
-    mismatch, so the driver's correctness gate doubles as an
-    adversarial recall check (VERDICT r2 #7). Precision is 1.0 by
-    construction.
-
-    Scale: candidates come from band buckets (never all-pairs); exact
-    verification touches only candidate pairs, joining each side to
-    its pruned-gram set (arrays of distinct grams — document-sized,
-    shuffled not broadcast)."""
-    cand = minhash_lsh_pairs(
-        df,
-        id_col,
-        text_col,
-        num_hashes=num_hashes,
-        bands=bands,
-        shingle_n=shingle_n,
-    ).select("a_id", "b_id")
-    # Gram sets only for docs that appear in a candidate pair: the
-    # document-frequency prune must see the FULL corpus (global dfs),
-    # but the per-doc set aggregation semi-joins down to candidate ids
-    # first — at scale candidates << corpus, so the collect_set state
-    # is O(candidate docs), not O(corpus).
-    cand_ids = (
-        cand.select(F.col("a_id").alias("id"))
-        .unionByName(cand.select(F.col("b_id").alias("id")))
-        .distinct()
-    )
-    # Pin the per-doc gram sets: both verify-join legs reference this
-    # pipeline (shingle → df-cap → semi → collect_set) and exchange
-    # reuse cannot deduplicate the differently-projected legs — same
-    # device as the signature pin above.
-    gs = pin(
-        _pruned_grams(df, id_col, text_col, n, df_cap)
-        .join(cand_ids, ["id"], "semi")
-        .groupBy("id")
-        .agg(F.collect_set("g").alias("gset"))
-    )
-    return (
-        cand.join(
-            gs.select(F.col("id").alias("a_id"), F.col("gset").alias("a_set")),
-            ["a_id"],
-        )
-        .join(
-            gs.select(F.col("id").alias("b_id"), F.col("gset").alias("b_set")),
-            ["b_id"],
-        )
-        .withColumn("inter", F.size(F.array_intersect("a_set", "b_set")))
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.size("a_set") + F.size("b_set") - F.col("inter")).cast("double"),
         )
         .filter(F.col("jaccard") >= threshold)
         .select("a_id", "b_id", "jaccard")

@@ -22,8 +22,8 @@ from .functions.exactmath import (
     sql_round6_int_ratio,
 )
 from .operators import aggregates as AGX
+from .operators.dedup import _doc_grams, _gram_overlap_pairs, _pruned_grams
 from .queries import register
-from .session import pin
 from .sources.catalog import load_table
 from .sqlfrags import FINITE_VEC_SQL, word_ngram_rows
 
@@ -150,12 +150,13 @@ def q_containment_dedup(spark, sf_dir):
     embedded in a 10× larger one has Jaccard ≈ 0.1 but containment
     1.0). Standard contamination-audit companion to `ngram-jaccard`.
 
-    Plan: distinct (id, gram) exploded once and lineage-cut
-    (``session.pin`` — it feeds three legs: sizes + both join sides;
-    measured 3.78 → 2.80 s at sf0.1); candidate pairs come from
-    a gram-keyed equi-join (shuffle ∝ gram postings, never all-pairs);
-    one pair-keyed aggregation counts the intersection; set sizes
-    broadcast back. At 100 TB the gram-join is the cost center — hot
+    Plan: distinct (id, gram) exploded once into the shared
+    gram-overlap join (operators/dedup._gram_overlap_pairs), which
+    lineage-cuts it (``session.pin`` — it feeds three legs: sizes +
+    both join sides; measured 3.78 → 2.80 s at sf0.1); candidate pairs
+    come from a gram-keyed equi-join (shuffle ∝ gram postings, never
+    all-pairs); one pair-keyed aggregation counts the intersection;
+    set sizes join back. At 100 TB the gram-join is the cost center — hot
     boilerplate grams flood it (measured 13.5× superlinear under
     df-inflating 10× growth, SCALE.md); `containment-dedup-capped`
     below APPLIES that df-frequency lever; this key stays uncapped as
@@ -171,48 +172,24 @@ def q_containment_dedup(spark, sf_dir):
         .filter(F.col("text").isNotNull())
         .dropDuplicates(["doc_id", "text"])
     )
-    toks = d.select(
-        F.col("doc_id").alias("id"),
-        F.split(TX.normalized_text(F.col("text")), " ").alias("w"),
-    )
-    grams = pin(
-        toks.select(
-            "id", F.explode(F.array_distinct(TX.word_ngrams_from(F.col("w"), 3))).alias("g")
-        )
-    )
-    return _directed_containment(grams, threshold=0.8)
+    return _directed_containment(_doc_grams(d, "doc_id", "text", 3), threshold=0.8)
 
 
 def _directed_containment(grams, threshold: float):
     """Directed containment over a (id, g) distinct-gram relation:
-    gram-keyed equi-join → per-pair intersection count → divide by the
-    smaller set size → orient (inner = smaller doc). Shared by the
-    uncapped and df-capped containment keys; the caller decides what
-    the gram universe is (full vocabulary vs df-capped), and both
-    numerator and denominator are computed over that SAME universe so
-    the score stays a true containment of well-defined sets."""
-    sizes = grams.groupBy("id").agg(F.count(F.lit(1)).alias("ng"))
-    a = grams.alias("a")
-    b = grams.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.g") == F.col("b.g")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("a_id"), F.col("b.id").alias("b_id"))
-        .agg(F.count(F.lit(1)).alias("inter"))
+    the shared gram-overlap join (``_gram_overlap_pairs``, which pins
+    ``grams``) → divide the intersection by the smaller set size →
+    orient (inner = smaller doc). Shared by the uncapped and df-capped
+    containment keys; the caller decides what the gram universe is
+    (full vocabulary vs df-capped)."""
+    scored = _gram_overlap_pairs(grams).select(
+        "a_id", "b_id", "a_size", "b_size",
+        # exact integer half-away rounding: inter/min-size ratios
+        # of counts can land on .5e-7 cuts where double ROUND
+        # diverges across engines (functions/exactmath.py)
+        round6_int_ratio("inter", "least(a_size, b_size)").alias("containment"),
     )
-    sa = sizes.select(F.col("id").alias("a_id"), F.col("ng").alias("na"))
-    sb = sizes.select(F.col("id").alias("b_id"), F.col("ng").alias("nb"))
-    scored = (
-        pairs.join(sa, "a_id")
-        .join(sb, "b_id")
-        .select(
-            "a_id", "b_id", "na", "nb",
-            # exact integer half-away rounding: inter/min-size ratios
-            # of counts can land on .5e-7 cuts where double ROUND
-            # diverges across engines (functions/exactmath.py)
-            round6_int_ratio("inter", "least(na, nb)").alias("containment"),
-        )
-    )
-    small_first = F.col("na") <= F.col("nb")
+    small_first = F.col("a_size") <= F.col("b_size")
     return scored.filter(F.col("containment") >= threshold).select(
         F.when(small_first, F.col("a_id")).otherwise(F.col("b_id")).alias("inner_id"),
         F.when(small_first, F.col("b_id")).otherwise(F.col("a_id")).alias("outer_id"),
@@ -277,16 +254,13 @@ def q_containment_dedup_capped(spark, sf_dir, df_cap: "int | None" = None):
     Zipf head (boilerplate) is bounded; pass ``df_cap`` to override
     with an absolute bound (what a real 100 TB run would pin).
 
-    Plan: the pruned gram set is lineage-cut (``session.pin``) because
-    it feeds three legs (sizes + both join sides) — same device as
-    `ngram-jaccard` (operators/dedup.py); without it each leg re-runs
-    normalize/shingle/df-cap."""
-    from .operators.dedup import _pruned_grams
-
+    Plan: the pruned gram set goes through the same gram-overlap join
+    as `containment-dedup` and `ngram-jaccard` (operators/dedup.py),
+    which lineage-cuts it once for its three legs."""
     d = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     if df_cap is None:
         df_cap = max(5, int(0.002 * _corpus_doc_count(spark, sf_dir)))
-    pruned = pin(_pruned_grams(d, "doc_id", "text", 3, df_cap))
+    pruned = _pruned_grams(d, "doc_id", "text", 3, df_cap)
     return _directed_containment(pruned, threshold=0.8)
 
 

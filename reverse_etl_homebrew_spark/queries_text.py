@@ -3,7 +3,7 @@
 ``documents`` and ``embeddings`` tables.
 
 Oracle-checkable ops carry exact DuckDB SQL; the sketch-based near-dup
-ops (MinHash banding, SimHash blocks, hyperplane LSH) are registered
+ops (SimHash blocks, hyperplane LSH) are registered
 rows-only — their correctness is asserted structurally in pytest
 (tests/test_dedup.py) instead, since no independent engine reproduces
 the same sketches.
@@ -403,10 +403,10 @@ def q_incremental_knn(spark, sf_dir):
 # Brute-force exact word-3-gram Jaccard ≥ 0.5 over the documents
 # corpus, pruning grams with document frequency > 100 — gram-for-gram
 # the same definition as operators/dedup._pruned_grams, so an engine
-# result must equal it pair-for-pair. Shared by `fuzzy-dedup`
-# (adversarial recall oracle for MinHash banding), `ngram-jaccard`
-# (exact operator parity), and — via a recursive-CTE connected
-# components extension — `fuzzy-dedup-clusters`.
+# result must equal it pair-for-pair. `ngram-jaccard` and `fuzzy-dedup`
+# (both operators/dedup.ngram_jaccard_pairs) answer to it directly;
+# `fuzzy-dedup-clusters` and `dedup-survivorship` extend it with a
+# recursive-CTE connected-components closure.
 _JACCARD_CTES = rf"""norm AS (
   SELECT doc_id AS id,
          trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS t
@@ -437,8 +437,7 @@ _EXACT_JACCARD_SQL = f"WITH {_JACCARD_CTES}\nSELECT a_id, b_id, jaccard FROM jpa
 # Exact pairs → undirected edges → transitive closure (recursive CTE)
 # → min-id component label → survivors = docs that are not a non-min
 # member of any duplicate cluster. SQL-checkable because the engine's
-# cluster input is the exact-VERIFIED pair set, not raw sketch
-# candidates.
+# cluster input is the exact pair set, not sketch candidates.
 _CLUSTER_SURVIVORS_SQL = f"""WITH RECURSIVE {_JACCARD_CTES}, edges AS (
   SELECT a_id AS u, b_id AS v FROM jpairs
   UNION
@@ -463,26 +462,23 @@ WHERE text IS NOT NULL
 
 @register("fuzzy-dedup", sql=_EXACT_JACCARD_SQL)
 def q_fuzzy_dedup(spark, sf_dir):
-    """MinHash+LSH near-duplicate pairs, exact-verified (shingle → OPH
-    minhash signature → band buckets → in-bucket join → exact
-    word-3-gram Jaccard ≥ 0.5 on the candidates). 4 bands × 8 rows
-    puts the S-curve midpoint at (1/4)^(1/8) ≈ 0.84 — on this corpus
-    (dense in true-jaccard≈0.2 templated pairs) that keeps the
-    in-bucket joins to actual near-dups instead of quadratic template
-    herds. The oracle is the BRUTE-FORCE exact Jaccard pair set: the
-    check passes only while LSH recall is 100% on j ≥ 0.5 (an
-    adversarial quality gate, not just a shape check — VERDICT r2 #7);
-    precision is 1.0 by construction."""
-    d = _corpus_nn(spark, sf_dir)
-    return DD.minhash_verified_pairs(d, num_hashes=32, bands=4)
+    """Near-duplicate pairs: exact word-3-gram Jaccard ≥ 0.5 over every
+    pair sharing a gram — the same operator call as `ngram-jaccard`,
+    under the dedup tier's name. The oracle is the BRUTE-FORCE exact
+    Jaccard pair set, and the gram-overlap join finds every pair with
+    a shared gram, so recall and precision are both 1.0 by
+    construction."""
+    return DD.ngram_jaccard_pairs(_corpus_nn(spark, sf_dir), threshold=0.5)
 
 
 def _corpus(spark, sf_dir):
     """documents, spread across the local cores: the test corpus is a
-    single parquet split, which would serialize the shingle/hash map
-    stage (see minhash_sig_array's parallelism note). Text here is
-    tiny, so the spread shuffle is ~free; its id partitioning is then
-    reused by the signature aggregations."""
+    single parquet split, which would serialize the normalize/explode
+    map stage of the gram and fingerprint pipelines into one task.
+    Text here is tiny, so the spread shuffle is ~free. The operators
+    do not force this themselves: at corpus scale a raw-text
+    repartition is a full-corpus shuffle, so only callers on few-split
+    corpora spread first."""
     d = _t(spark, sf_dir, "documents")
     return d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
 
@@ -839,8 +835,8 @@ def q_simhash_dedup(spark, sf_dir):
 
 @register("ngram-jaccard", sql=_EXACT_JACCARD_SQL)
 def q_ngram_jaccard(spark, sf_dir):
-    """Exact word-3-gram Jaccard pairs ≥ 0.5 with hot-shingle
-    prefix-filter pruning — oracle-checked pair-for-pair (and
+    """Exact word-3-gram Jaccard pairs ≥ 0.5 with a hot-shingle
+    document-frequency cap — oracle-checked pair-for-pair (and
     value-for-value: identical integer inter/union sizes divide to
     bit-identical doubles) against the brute-force SQL Jaccard."""
     return DD.ngram_jaccard_pairs(_corpus_nn(spark, sf_dir), threshold=0.5)
@@ -907,9 +903,10 @@ def q_embedding_near_dup(spark, sf_dir):
 
 @register("fuzzy-dedup-clusters", sql=_CLUSTER_SURVIVORS_SQL)
 def q_fuzzy_dedup_clusters(spark, sf_dir):
-    """End-to-end near-dedup: MinHash candidates → exact-Jaccard
-    verification → connected components (iterative min-label
-    propagation) → one survivor (min id) per duplicate cluster.
+    """End-to-end near-dedup: exact word-3-gram Jaccard pairs (the
+    `ngram-jaccard` operator) → connected components (iterative
+    min-label propagation) → one survivor (min id) per duplicate
+    cluster.
     Oracle-backed even though the Spark algorithm is iterative: the
     oracle recomputes the exact pair graph and its transitive closure
     with a recursive CTE, so both the pair recall AND the component
@@ -917,7 +914,7 @@ def q_fuzzy_dedup_clusters(spark, sf_dir):
     from .operators.components import dedup_survivors
 
     d = _corpus_nn(spark, sf_dir).select("doc_id", "text")
-    pairs = DD.minhash_verified_pairs(d, num_hashes=32, bands=4)
+    pairs = DD.ngram_jaccard_pairs(d, threshold=0.5)
     return dedup_survivors(d, pairs).select("doc_id")
 
 
@@ -1978,19 +1975,19 @@ def q_dedup_survivorship(spark, sf_dir):
     (boilerplate-stripped mirror vs raw scrape). Singleton docs are
     their own cluster of size 1.
 
-    Same machinery as `fuzzy-dedup-clusters` (MinHash candidates →
-    exact-Jaccard verify → min-label components) plus one broadcast-
-    size policy stage: a per-cluster ranking window over (quality,
-    id). The components frame is node-cardinality (docs touched by a
-    pair), so the left join back to the corpus adds one id-keyed
-    shuffle; the window partitions by cluster label — skew bounded by
-    the largest duplicate cluster. The oracle re-derives the whole
+    Same machinery as `fuzzy-dedup-clusters` (exact Jaccard pairs →
+    min-label components) plus one broadcast-size policy stage: a
+    per-cluster ranking window over (quality, id). The components
+    frame is node-cardinality (docs touched by a pair), so the left
+    join back to the corpus adds one id-keyed shuffle; the window
+    partitions by cluster label — skew bounded by the largest
+    duplicate cluster. The oracle re-derives the whole
     thing: pair graph, recursive-CTE closure, the same fixed-weight
     quality score, and the same ranking policy."""
     from .operators.components import connected_components
 
     d = _corpus_nn(spark, sf_dir).select("doc_id", "text")
-    pairs = DD.minhash_verified_pairs(d, num_hashes=32, bands=4)
+    pairs = DD.ngram_jaccard_pairs(d, threshold=0.5)
     comps = connected_components(pairs)
     scored = d.select(
         "doc_id", TX.quality_score(F.col("text")).alias("quality")

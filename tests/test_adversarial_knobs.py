@@ -7,28 +7,36 @@ not silent divergences) so the boundaries can't silently widen:
   adversarial grams flatten the trigram distribution past the
   pigeonhole bound), and ``sketch_k=1023`` must return the EXACT
   top-k again — both measured on the probe corpus in r10.
-- The MinHash family's 4x8 banding misses true pairs on the
-  adversarial corpus (snippets degrade planted clones into the
-  0.6-0.8 jaccard gray zone below the S-curve midpoint), and
-  ``bands=16`` restores pair-for-pair equality with the exact
-  brute-force Jaccard set.
 
-All comparisons are Spark-vs-Spark (sketch path vs exact path on the
-SAME session and corpus) — the exactness claim, isolated from any
-oracle dialect concerns.
+The sketch comparisons are Spark-vs-Spark (sketch path vs exact path
+on the SAME session and corpus) — the exactness claim, isolated from
+any oracle dialect concerns.
+
+The fuzzy-dedup keys (``fuzzy-dedup``, ``fuzzy-dedup-clusters``,
+``dedup-survivorship``) once ran a 4x8 MinHash banding that missed
+true pairs on these corpora (snippets degrade planted clones into the
+0.6-0.8 jaccard gray zone below the S-curve midpoint, 0.84) and on a
+short near-duplicate pair at Jaccard 8/9. They now run the exact
+gram-overlap join; the recall test checks each key against its DuckDB
+oracle on all three corpora.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
 import sys
+import tempfile
 from pathlib import Path
 
+import duckdb
 import pytest
 from pyspark.sql import Window as W, functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "fixtures"))
 
-from adversarial_text_probe import build_adversarial_dir
+from adversarial_text_probe import TABLES, build_adversarial_dir
+from test_oracle_parity import _duck, _rowset
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -125,66 +133,82 @@ def test_grouped_sketch_k_1023_restores_exact_topk(spark, adv_dir):
     assert sorted(map(tuple, got)) == sorted(map(tuple, exact))
 
 
-def test_minhash_bands_16_restores_exact_recall(spark, adv_dir):
-    """bands=4 loses gray-zone pairs on this corpus (the S-curve
-    boundary is REAL); bands=16 equals the brute-force exact Jaccard
-    pair set pair-for-pair — both halves pinned."""
-    from reverse_etl_homebrew_spark.operators import dedup as DD
-
-    d = (
-        spark.read.parquet(f"{adv_dir}/documents.parquet")
-        .filter(F.col("text").isNotNull())
-        .select("doc_id", "text")
-    )
-    exact = sorted(
-        (r["a_id"], r["b_id"])
-        for r in DD.ngram_jaccard_pairs(d, threshold=0.5).collect()
-    )
-    b16 = sorted(
-        (r["a_id"], r["b_id"])
-        for r in DD.minhash_verified_pairs(
-            d, num_hashes=32, bands=16
-        ).collect()
-    )
-    assert b16 == exact
-    b4 = sorted(
-        (r["a_id"], r["b_id"])
-        for r in DD.minhash_verified_pairs(d, num_hashes=32, bands=4).collect()
-    )
-    assert len(b4) < len(exact), "bands=4 should miss gray-zone pairs here"
-    assert set(b4) <= set(exact), "precision must stay 1.0 (exact verify)"
+# Seed 11 of perfbench's generated corpus (500 documents): the pair
+# a 4-band x 8-row MinHash banding missed, at Jaccard 8/9 — a short
+# document and its copy plus the corpus's near-duplicate marker.
+_SHORT_PAIR = (
+    "window key data line fast customer line group scan big",
+    "window key data line fast customer line group scan big dup",
+)
 
 
-def test_minhash_bands_16_exact_on_encoding_corpus(spark):
-    """The r12 ENCODING arm (astral/NFD/zalgo/fullwidth/direction-mark
-    snippets) hit the SAME banding boundary and nothing else: the
-    probe's only 3 non-OK keys were the fuzzy-dedup family, and
-    bands=16 is pair-for-pair exact there too (measured: bands=4
-    missed 9/28, bands=8 missed 2, bands=16 missed 0 with 0 extras).
-    Gram-extraction parity on unicode poison is separately proven by
-    ngram-jaccard staying OK — both engines count codepoints."""
-    from reverse_etl_homebrew_spark.operators import dedup as DD
+def _planted_pair_dir(sf_dir: str) -> str:
+    """A copy of ``sf_dir`` with the short pair appended to documents
+    under fresh ids, built the way build_adversarial_dir builds its
+    copies."""
+    out = tempfile.mkdtemp(prefix="sg-shortpair-")
+    for t in TABLES:
+        src = os.path.join(sf_dir, f"{t}.parquet")
+        dst = os.path.join(out, f"{t}.parquet")
+        if t != "documents":
+            shutil.copyfile(src, dst)
+            continue
+        with duckdb.connect() as con:
+            con.execute(
+                f"""COPY (
+                  SELECT doc_id, text, lang, source, n_chars FROM read_parquet('{src}')
+                  UNION ALL
+                  SELECT m.top + p.k, p.text, 'en', 'planted', length(p.text)
+                  FROM (SELECT max(doc_id) AS top FROM read_parquet('{src}')) m,
+                       (VALUES (1, ?), (2, ?)) p(k, text)
+                ) TO '{dst}' (FORMAT PARQUET)""",
+                list(_SHORT_PAIR),
+            )
+    return out
 
-    enc_dir = build_adversarial_dir(SF_DIR, "encoding")
-    d = (
-        spark.read.parquet(f"{enc_dir}/documents.parquet")
-        .filter(F.col("text").isNotNull())
-        .select("doc_id", "text")
+
+@pytest.fixture(scope="module")
+def recall_dirs(adv_dir):
+    built = {"dialect": adv_dir}
+
+    def get(name: str) -> str:
+        if name not in built:
+            built[name] = (
+                _planted_pair_dir(SF_DIR)
+                if name == "short-pair"
+                else build_adversarial_dir(SF_DIR, name)
+            )
+        return built[name]
+
+    return get
+
+
+@pytest.mark.parametrize(
+    "key", ["fuzzy-dedup", "fuzzy-dedup-clusters", "dedup-survivorship"]
+)
+@pytest.mark.parametrize("corpus", ["dialect", "encoding", "short-pair"])
+def test_fuzzy_dedup_keys_exact_recall(spark, recall_dirs, corpus, key):
+    """The fuzzy-dedup keys equal their brute-force exact-Jaccard
+    oracle on corpora dense in short and gray-zone near-duplicates:
+    the planted short pair (J = 8/9), and the adversarial dialect and
+    encoding corpora, whose appended snippets push planted clone pairs
+    into the 0.6-0.8 Jaccard band. A 4x8 MinHash banding lost pairs on
+    all three (measured: the short pair; 16 of 27 and 9 of 28 true
+    pairs on the adversarial corpora)."""
+    from reverse_etl_homebrew_spark import queries as Q
+
+    d = recall_dirs(corpus)
+    sdf = Q.QUERIES[key](spark, d)
+    scols = sdf.columns
+    srows = [tuple(r) for r in sdf.collect()]
+    duck = _duck(d)
+    try:
+        res = duck.execute(Q.ORACLE[key])
+        dcols = [c[0] for c in res.description]
+        drows = res.fetchall()
+    finally:
+        duck.close()
+    assert sorted(scols) == sorted(dcols)
+    assert _rowset(scols, srows) == _rowset(dcols, drows), (
+        f"{key} on {corpus}: {len(srows)} rows vs oracle {len(drows)}"
     )
-    exact = sorted(
-        (r["a_id"], r["b_id"])
-        for r in DD.ngram_jaccard_pairs(d, threshold=0.5).collect()
-    )
-    b16 = sorted(
-        (r["a_id"], r["b_id"])
-        for r in DD.minhash_verified_pairs(
-            d, num_hashes=32, bands=16
-        ).collect()
-    )
-    assert b16 == exact
-    b4 = set(
-        (r["a_id"], r["b_id"])
-        for r in DD.minhash_verified_pairs(d, num_hashes=32, bands=4).collect()
-    )
-    assert len(b4) < len(exact), "the boundary must stay REAL"
-    assert b4 <= set(exact), "precision must stay 1.0 (exact verify)"

@@ -59,17 +59,15 @@ def test_dedup_survivors_keeps_one_per_cluster(spark):
     assert len(out) == 30 - 3
 
 
-def test_end_to_end_minhash_cluster_dedup(spark):
-    """Full pipeline: corpus with planted duplicates → MinHash pairs →
-    clusters → survivors."""
+def test_end_to_end_ngram_cluster_dedup(spark):
+    """Full pipeline: corpus with planted duplicates → exact Jaccard
+    pairs → clusters → survivors."""
     docs = load_table(spark, SF, "documents").select("doc_id", "text").filter(
         F.col("doc_id") < 40
     )
     d0 = docs.filter(F.col("doc_id") == 0).select(F.lit(1000).alias("doc_id"), "text")
     d0b = docs.filter(F.col("doc_id") == 0).select(F.lit(1001).alias("doc_id"), "text")
     corpus = docs.unionByName(d0).unionByName(d0b)
-    pairs = DD.minhash_lsh_pairs(corpus, num_hashes=16, bands=4).filter(
-        F.col("est_jaccard") >= 0.9
-    )
+    pairs = DD.ngram_jaccard_pairs(corpus, threshold=0.9)
     survivors = {r["doc_id"] for r in dedup_survivors(corpus, pairs).collect()}
     assert 0 in survivors and 1000 not in survivors and 1001 not in survivors

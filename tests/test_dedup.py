@@ -21,20 +21,6 @@ def emb(spark, sf_dir):
     return load_table(spark, sf_dir, "embeddings")
 
 
-def test_minhash_identical_docs_pair(spark, docs):
-    # plant an exact duplicate: doc 0's text under a fresh id
-    d0 = docs.filter(F.col("doc_id") == 0).select(
-        F.lit(999999).alias("doc_id"), "text"
-    )
-    corpus = docs.select("doc_id", "text").unionByName(d0)
-    pairs = DD.minhash_lsh_pairs(corpus, num_hashes=16, bands=4).collect()
-    hit = [p for p in pairs if p["a_id"] == 0 and p["b_id"] == 999999]
-    assert hit, "identical documents must collide in every band"
-    assert hit[0]["est_jaccard"] == 1.0
-    # no self-pairs, ordered ids
-    assert all(p["a_id"] < p["b_id"] for p in pairs)
-
-
 def test_incremental_dedup_edges(spark):
     """Empty batch → empty out; empty seen corpus → pure within-batch
     dedup with lowest-id survivor; exact content match required."""
@@ -84,39 +70,21 @@ def test_simhash_md5_identical_docs_zero_hamming(spark, docs):
     assert len({(p["a_id"], p["b_id"]) for p in pairs}) == len(pairs)
 
 
-def test_minhash_pin_policies_agree(spark, docs, request):
-    """The cluster branch of ``session.pin`` (reliable checkpoints of
-    the signature table) produces the same candidate pairs as the
-    local localCheckpoint branch."""
+def test_ngram_jaccard_pin_policies_agree(spark, docs, request):
+    """The cluster branch of ``session.pin`` (a reliable checkpoint of
+    the gram relation the gram-overlap join pins) produces the same
+    pairs as the local localCheckpoint branch."""
     corpus = docs.select("doc_id", "text").filter(F.col("doc_id") < 300)
 
     def pairs():
         return sorted(
-            map(tuple, DD.minhash_lsh_pairs(corpus, num_hashes=16, bands=4).collect())
+            map(tuple, DD.ngram_jaccard_pairs(corpus, threshold=0.5).collect())
         )
 
     local = pairs()
     ckpt = request.getfixturevalue("cluster_pin")
     assert pairs() == local
     assert local and list(ckpt.rglob("part-*"))
-
-
-def test_minhash_deterministic_across_fresh_plans(spark, sf_dir):
-    """Regression: stacked same-named HOF lambdas in one projection
-    were nondeterministic on Spark 4.1 — rebuild the plan from scratch
-    each run and require identical results."""
-    def run():
-        c = (
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id", "text")
-            .filter(F.col("doc_id") < 50)
-        )
-        return sorted(
-            map(tuple, DD.minhash_lsh_pairs(c, num_hashes=16, bands=4).collect())
-        )
-
-    runs = [run() for _ in range(3)]
-    assert runs[0] == runs[1] == runs[2]
 
 
 def test_simhash_deterministic_across_fresh_plans(spark, sf_dir):
@@ -150,6 +118,8 @@ def test_ngram_jaccard_exact_dup_scores_one(spark, docs):
     pairs = DD.ngram_jaccard_pairs(corpus, threshold=0.99).collect()
     hit = [p for p in pairs if p["a_id"] == 0 and p["b_id"] == 999999]
     assert hit and abs(hit[0]["jaccard"] - 1.0) < 1e-12
+    # no self-pairs, ordered ids
+    assert all(p["a_id"] < p["b_id"] for p in pairs)
 
 
 def test_embedding_near_dup_self_duplicate(spark, emb):
