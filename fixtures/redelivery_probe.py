@@ -24,8 +24,10 @@ is retried in production.
 --conflict runs the CONFLICTING-redelivery arm instead (r12): the
 same id re-delivered with DIFFERENT content (documents text twin at
 doc_id % 41; orders o_totalprice ± 0.01 twin at o_orderkey % 61) —
-the corruption class the exact (id, text) collapse deliberately does
-NOT absorb. Adjudication (r12, sf0.001): the divergent set is
+a corruption class the r11 exact (id, text) collapse did NOT absorb.
+The gram-set keys now collapse on the (id, gram) relation and agree;
+tests/test_conflicting_redelivery.py holds the current boundary.
+Adjudication (r12, sf0.001): the divergent set is
 EXACTLY the per-id SET-semantics family (8 keys: fuzzy-dedup,
 ngram-jaccard, fuzzy-dedup-clusters, dedup-survivorship, both
 containment keys, decontaminate, simhash-dedup-md5 — SQL's DISTINCT
@@ -85,10 +87,8 @@ def build_redelivered_dir(sf_dir: str) -> str:
 
 def build_conflicting_dir(sf_dir: str) -> str:
     """CONFLICTING re-delivery (r12 arm): the same doc_id arrives
-    twice with DIFFERENT content — the corruption class the exact
-    (id, text) collapse deliberately does NOT absorb ('conflicting
-    same-id content is a different corruption owned upstream',
-    operators/dedup._pruned_grams). This arm does not require
+    twice with DIFFERENT content — a corruption class the per-row
+    paths do not absorb. This arm does not require
     tolerance; it verifies the two engines stay CONSISTENT with each
     other on the corrupted input, so the upstream-owned corruption
     can never become a silent cross-engine split down here."""

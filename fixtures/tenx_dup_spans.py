@@ -95,14 +95,11 @@ def main() -> None:
         max_spans = det.agg(F.max("n_spans")).first()[0]
         w_det = timed(lambda: duplicate_spans(corpus(d, copies)))
         w_rate = timed(lambda: dup_span_rate(corpus(d, copies)))
-        w_det_h = timed(lambda: duplicate_spans(corpus(d, copies), carry="hash"))
-        w_rate_h = timed(lambda: dup_span_rate(corpus(d, copies), carry="hash"))
         results[copies] = (w_det, w_rate)
         print(
             f"copies={copies} docs={n_docs} windows={n_wins} "
             f"dup_windows={det_rows} max_span_count={max_spans} "
-            f"detect={w_det}s rate={w_rate}s "
-            f"detect[hash]={w_det_h}s rate[hash]={w_rate_h}s"
+            f"detect={w_det}s rate={w_rate}s"
         )
     print("loadavg_end", [round(x, 2) for x in os.getloadavg()])
     print(

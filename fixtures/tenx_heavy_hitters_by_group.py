@@ -24,8 +24,8 @@ grouped twin of fixtures/tenx_heavy_hitters.py):
   not grow.
 
 Method: alone on an idle host, 2 warmups discarded per cell, median
-of 3, loadavg recorded. strict=True (the production default), so the
-run also proves both cells stay inside the per-group provable-exact
+of 3, loadavg recorded. The exactness guard always runs, so the run
+also proves both cells stay inside the per-group provable-exact
 regime. Usage:
     python fixtures/tenx_heavy_hitters_by_group.py [sf_dir]
 """
@@ -112,14 +112,12 @@ def main() -> None:
             .distinct()
             .count()
         )
-        out = topk_frequent_by_group(
-            df, "grp", "item", k=K, sketch_k=SKETCH_K, strict=True
-        )
-        out_rows = out.count()  # strict guard proves the exact regime
+        out = topk_frequent_by_group(df, "grp", "item", k=K, sketch_k=SKETCH_K)
+        out_rows = out.count()  # the guard proves the exact regime
         wall = timed(
             lambda: topk_frequent_by_group(
                 grouped_stream(ev, copies), "grp", "item",
-                k=K, sketch_k=SKETCH_K, strict=True,
+                k=K, sketch_k=SKETCH_K,
             )
         )
         results[copies] = wall

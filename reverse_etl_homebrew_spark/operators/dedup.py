@@ -447,88 +447,6 @@ def _shared_gram_counts(
 _BLOOM_MAX_M = 1 << 24
 
 
-def _conf_bytes(spark, key: str, default: int) -> int:
-    """Parse a Spark byte-size conf value ('10485760', '10485760b',
-    '10m', '10MB') into bytes; fall back to ``default`` on anything
-    unparseable (e.g. '-1' disables broadcast → return that)."""
-    raw = str(spark.conf.get(key, str(default)) or default).strip().lower()
-    mult = 1
-    for suffix, factor in (
-        ("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-        ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("b", 1),
-    ):
-        if raw.endswith(suffix):
-            raw, mult = raw[: -len(suffix)], factor
-            break
-    try:
-        return int(float(raw) * mult)
-    except ValueError:
-        return default
-
-
-def decontaminate_route(
-    spark, benchmark_plan_bytes: int, n: int = 8
-) -> str:
-    """The exact-vs-prefiltered selector, as a PURE decision on an
-    estimated size so the crossover is unit-testable: the exact join's
-    build side is the benchmark's distinct gram STRINGS (each source
-    token appears in ≈``n`` grams, so the gram set weighs ≈``n``× the
-    benchmark's own bytes). While that fits the session's
-    ``autoBroadcastJoinThreshold``, the exact join broadcasts anyway
-    and the Bloom lanes are pure overhead (+~30% measured locally,
-    SCALE.md r12); past it, the exact join degrades to a full shuffle
-    of the train gram stream and the capped-size lanes win (95-99%
-    map-side gram kill). Same routing idiom as
-    ``sinks.control.native_merge_available``: probe the session conf,
-    decide, let both branches share the exact tail."""
-    thresh = _conf_bytes(
-        spark, "spark.sql.autoBroadcastJoinThreshold", 10 * 1024 * 1024
-    )
-    if thresh <= 0:  # broadcast disabled: the exact join always shuffles
-        return "prefiltered"
-    est_gram_bytes = benchmark_plan_bytes * n
-    return "prefiltered" if est_gram_bytes > thresh else "exact"
-
-
-def estimated_plan_bytes(df: DataFrame) -> int:
-    """Catalyst's own size estimate for a plan (the statistic the
-    broadcast planner consults) — no action, no scan."""
-    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-
-
-def contamination_flags_auto(
-    train: DataFrame,
-    benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 8,
-    min_grams: int = 1,
-    m: int = 1 << 20,
-    route: str | None = None,
-) -> DataFrame:
-    """Benchmark decontamination with the size-based branch selector
-    (r12 judge #4): routes to ``contamination_flags`` (exact, build
-    side broadcast by AQE) below the crossover and
-    ``contamination_flags_prefiltered`` (Bloom lanes + exact tail)
-    above it. Output is identical by construction — both branches end
-    in ``_shared_gram_counts`` and the prefilter is exact-safe — so
-    the choice is purely a physical-plan decision, like Spark's own
-    broadcast-vs-shuffle join pick. ``route`` forces a branch
-    ('exact' / 'prefiltered') for tests and for operators that have
-    already measured their corpus."""
-    if route is None:
-        route = decontaminate_route(
-            train.sparkSession, estimated_plan_bytes(benchmark), n
-        )
-    if route == "prefiltered":
-        return contamination_flags_prefiltered(
-            train, benchmark, id_col, text_col, n, min_grams, m
-        )
-    if route != "exact":
-        raise ValueError(f"unknown decontaminate route {route!r}")
-    return contamination_flags(train, benchmark, id_col, text_col, n, min_grams)
-
-
 def contamination_flags_prefiltered(
     train: DataFrame,
     benchmark: DataFrame,
@@ -611,7 +529,6 @@ def token_span_windows(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 8,
-    spread: bool = True,
 ) -> DataFrame:
     """One row per length-``n`` whitespace-token window: ``(id_col,
     win)``, every occurrence kept (overlaps and within-doc repeats
@@ -626,19 +543,13 @@ def token_span_windows(
     lambda).
 
     r15: the window explode fans each doc into ~10² rows, so the
-    narrow doc rows are spread across the session's parallelism first
-    (scans.spread_for_fanout — a no-op once the scan itself exceeds
-    core count). ``spread=False`` opts out for callers whose input is
-    NOT a scan-rooted frame: the guard's partition probe (``df.rdd``)
-    materializes AQE query stages when the plan already holds
-    exchanges or pins, turning a cheap check into a driver-side job —
-    the refresh composite measured 0.88× with the guard on its
-    pinned-batch window streams."""
-    base = df.select(F.col(id_col), F.col(text_col))
-    if spread:
-        from .scans import spread_for_fanout
+    narrow doc rows go through ``scans.spread_for_fanout`` first: a
+    scan-rooted input is spread across the session's parallelism, and
+    a shuffled or pinned one (the refresh composite's anti-join and
+    pinned batch) is left as it is."""
+    from .scans import spread_for_fanout
 
-        base = spread_for_fanout(base)
+    base = spread_for_fanout(df.select(F.col(id_col), F.col(text_col)))
     toks = base.select(
         F.col(id_col), TX.tokens(F.col(text_col)).alias("__tt")
     ).where(F.size("__tt") >= n)
@@ -647,78 +558,26 @@ def token_span_windows(
     )
 
 
-def _with_span_hashes(wins: DataFrame) -> DataFrame:
-    """Two independent 64-bit xxhash64 lanes over the window text —
-    the 16-byte shuffle key of the ``carry="hash"`` paths. Collisions
-    only ever create FALSE candidates (different windows sharing both
-    lanes); the exact recount phase re-groups by the true string, so
-    the hashed paths stay EXACT, never probabilistic."""
-    return wins.select(
-        "*",
-        F.xxhash64("win").alias("__h1"),
-        F.xxhash64("win", F.lit(1)).alias("__h2"),
-    )
-
-
 def duplicate_spans(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 8,
-    carry: str = "win",
 ) -> DataFrame:
     """Cross-document duplicated spans: every length-``n`` token window
     whose exact text occurs in MORE THAN ONE document → ``(win,
     n_docs, n_spans)``.
 
-    ``carry="win"`` (default, the oracle twin): one hash shuffle on
-    the window STRING (the count-distinct plans as a partial-agg
-    expand over the same exchange); shuffle volume is O(total tokens)
-    of window text — the n-gram profiling cost class.
-
-    ``carry="hash"`` (same exact result, different bottleneck): the
-    full-stream shuffle carries two xxhash64 lanes + the doc id
-    (~24 B/row vs the ~50-120 B window text), candidates = hash pairs
-    seen in >1 doc, then an exact string-keyed recount over CANDIDATE
-    OCCURRENCES ONLY — the heavy-hitters two-phase shape. A hash
-    collision can only ADD a false candidate, and the recount's
-    ``n_docs > 1`` filter on the true string erases it, so the hashed
-    path is exact by construction (pinned by equality tests).
-
-    WHEN TO USE WHICH — measured, not assumed
-    (fixtures/tenx_dup_spans.py): on local[32], where shuffles are
-    memory-bandwidth and bytes are nearly free, the hash carry LOSES
-    (1.40 → 2.63 s at 1×; 3.21 → 7.37 s at 10×) because it pays the
-    window explode twice. It pays only where shuffle BYTES are the
-    binding constraint — network-bound clusters with long windows
-    (this corpus' ~45 B windows cut only ~2× for 2× scan cost; a
-    50-token window cuts ~15×). Default stays ``carry="win"``."""
-    wins = token_span_windows(df, text_col, id_col, n)
-    if carry == "win":
-        return (
-            wins.groupBy("win")
-            .agg(
-                F.countDistinct(id_col).alias("n_docs"),
-                F.count(F.lit(1)).alias("n_spans"),
-            )
-            .where(F.col("n_docs") > 1)
-        )
-    if carry != "hash":
-        raise ValueError(f"carry must be 'win' or 'hash', got {carry!r}")
-    hashed = _with_span_hashes(wins)
-    cands = (
-        hashed.groupBy("__h1", "__h2")
-        .agg(F.countDistinct(id_col).alias("__nd"))
-        .where(F.col("__nd") > 1)
-        .select("__h1", "__h2")
-    )
-    # NOT a forced broadcast: the duplicated-hash set is data-
-    # proportional (unlike heavy-hitters' ≤ partitions×k candidates),
-    # so AQE picks broadcast only when it is actually small — the
-    # same gated-broadcast discipline as the dim joins.
+    One hash shuffle on the window STRING (the count-distinct plans as
+    a partial-agg expand over the same exchange); shuffle volume is
+    O(total tokens) of window text — the n-gram profiling cost class.
+    A two-phase form that shuffles a 16-byte double-xxhash64 key and
+    recounts candidates on the string was measured slower on local[32]
+    (1.40 → 2.63 s at 1×; 3.21 → 7.37 s at 10×,
+    fixtures/tenx_dup_spans.py): it pays the window explode twice, and
+    only a network-bound cluster with long windows would repay that."""
     return (
-        _with_span_hashes(wins)
-        .join(cands, ["__h1", "__h2"])
+        token_span_windows(df, text_col, id_col, n)
         .groupBy("win")
         .agg(
             F.countDistinct(id_col).alias("n_docs"),
@@ -733,7 +592,6 @@ def dup_span_rate(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 8,
-    carry: str = "win",
 ) -> DataFrame:
     """Per-document duplicated-span fraction: the share of a doc's
     length-``n`` token windows whose text occurs at least twice
@@ -759,16 +617,8 @@ def dup_span_rate(
     cross ~4.6e12 tokens, but the guard keeps the raise-vs-wrap
     contract uniform).
 
-    ``carry="hash"`` moves the full-stream shuffles onto the 16-byte
-    double-xxhash64 key: candidates = hash pairs occurring ≥2 times,
-    an exact string recount over candidate occurrences erases hash-
-    collision false positives, and only then does the doc-key count
-    run — identical output (pinned by equality tests). Same trade as
-    ``duplicate_spans``: it halves shuffle bytes per window but scans
-    the window stream twice, so it LOSES on memory-bound local
-    shuffles (measured 2.89 → 3.75 s at 1×) and pays only on
-    network-bound clusters with long windows — see the WHEN TO USE
-    WHICH note on ``duplicate_spans``.
+    The hashed two-phase form ``duplicate_spans`` describes was
+    measured slower here too (2.89 → 3.75 s at 1× on local[32]).
 
     NULL-id policy (r11 NULL-key probe): windows of NULL-``id_col``
     docs still count toward the corpus-wide window frequencies (the
@@ -779,34 +629,14 @@ def dup_span_rate(
     reporting 0 dup spans for each of them."""
     from ..functions.exactmath import guard_den, round6_int_ratio
 
-    if carry not in ("win", "hash"):
-        raise ValueError(f"carry must be 'win' or 'hash', got {carry!r}")
     wins = token_span_windows(df, text_col, id_col, n)
-    if carry == "win":
-        dup_wins = (
-            wins.groupBy("win")
-            .agg(F.count(F.lit(1)).alias("__c"))
-            .where(F.col("__c") > 1)
-            .select("win")
-        )
-        dup_occ = wins.join(dup_wins, "win")
-    else:
-        hashed = _with_span_hashes(wins)
-        cand_hashes = (
-            hashed.groupBy("__h1", "__h2")
-            .agg(F.count(F.lit(1)).alias("__c"))
-            .where(F.col("__c") > 1)
-            .select("__h1", "__h2")
-        )
-        cand_occ = _with_span_hashes(wins).join(cand_hashes, ["__h1", "__h2"])
-        # exact recount on the true string, candidate occurrences only
-        true_dups = (
-            cand_occ.groupBy("win")
-            .agg(F.count(F.lit(1)).alias("__c"))
-            .where(F.col("__c") > 1)
-            .select("win")
-        )
-        dup_occ = cand_occ.select(id_col, "win").join(true_dups, "win")
+    dup_wins = (
+        wins.groupBy("win")
+        .agg(F.count(F.lit(1)).alias("__c"))
+        .where(F.col("__c") > 1)
+        .select("win")
+    )
+    dup_occ = wins.join(dup_wins, "win")
     dup_counts = (
         dup_occ.where(F.col(id_col).isNotNull())
         .groupBy(id_col)
@@ -851,7 +681,6 @@ def build_span_index(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 8,
-    spread: bool = True,
 ) -> DataFrame:
     """The accepted-corpus span index: the DISTINCT length-``n`` token
     windows of the corpus, one narrow string column ``win``. In
@@ -860,11 +689,9 @@ def build_span_index(
     ``incremental_dup_spans`` probe then joins batch windows against
     it WITHOUT shuffling the index — only the (small) new batch's
     windows move. Append-only maintenance: union the accepted batch's
-    windows and re-distinct within buckets. ``spread`` passes through
-    to ``token_span_windows`` (False for non-scan-rooted corpora —
-    see its note)."""
+    windows and re-distinct within buckets."""
     return (
-        token_span_windows(corpus, text_col, id_col, n, spread=spread)
+        token_span_windows(corpus, text_col, id_col, n)
         .select("win")
         .distinct()
     )
@@ -898,8 +725,6 @@ def incremental_dup_spans(
     id_col: str = "doc_id",
     n: int = 8,
     index_win_col: str = "win",
-    index_is_set: bool = False,
-    spread: bool = True,
 ) -> DataFrame:
     """Span-level incremental dedup — the nightly-ingest twin of
     ``duplicate_spans``, completing the ``exact-dedup →
@@ -922,21 +747,16 @@ def incremental_dup_spans(
     ``token_span_windows`` semantics), so poisoned batches cannot
     inject degenerate windows.
 
-    ``index_is_set`` (r14, the tenx_refresh decomposition): the
-    defensive ``distinct()`` below protects the left join's row counts
-    from a duplicate-bearing index, but it is a full hash-agg over the
-    ENTIRE index — O(corpus windows) CPU per probe, the single largest
-    corpus-proportional term the 10× fixture measured. When the index
-    comes from ``build_span_index``/``append_to_span_index`` (distinct
-    by construction) or a persisted bucketed index table maintained
-    through them, pass True and the probe skips the re-distinct —
-    the join then reads the index in place, scan-only."""
-    wins = token_span_windows(new_batch, text_col, id_col, n, spread=spread)
+    ``span_index`` must be a distinct window set, as
+    ``build_span_index``/``append_to_span_index`` return it: the left
+    join then reads the index in place, scan-only. Re-distincting it
+    here would be a full hash-agg over the ENTIRE index per probe —
+    O(corpus windows) CPU, the largest corpus-proportional term the
+    10× tenx_refresh fixture measured (r14)."""
+    wins = token_span_windows(new_batch, text_col, id_col, n)
     idx = span_index.select(F.col(index_win_col).alias("win")).where(
         F.col("win").isNotNull()
     )
-    if not index_is_set:
-        idx = idx.distinct()
     counted = wins.groupBy("win").agg(
         F.countDistinct(id_col).alias("n_docs"),
         F.count(F.lit(1)).alias("n_spans"),
@@ -959,16 +779,16 @@ def _pruned_grams(
     document frequency exceeds ``df_cap`` pruned (a document-frequency
     cap) — the gram space of exact Jaccard and capped containment.
 
-    Exact re-deliveries collapse FIRST (r11 re-delivery probe): under
-    at-least-once ingest the same (id, text) row arrives twice, and
-    without this the gram relation carries duplicate (id, g) rows —
-    doubling set sizes and intersection counts, which silently SHIFTS
-    every Jaccard/containment score involving the re-delivered doc
-    (2i/(2a+b−2i) ≠ i/(a+b−i)). The collapse is a narrow (id, text)
-    shuffle on the doc table — far cheaper than deduping the exploded
-    gram stream — and is exact: identical rows only; conflicting
-    same-id content is a different corruption owned upstream."""
-    grams = _doc_grams(df.dropDuplicates([id_col, text_col]), id_col, text_col, n)
+    Re-deliveries collapse on the (id, g) relation: under
+    at-least-once ingest one id can arrive as several rows — identical
+    copies (r11 re-delivery probe) or conflicting versions (r12) — and
+    each row contributes its own grams. Without the DISTINCT, a gram
+    two rows share is counted twice in the doc's set size and in every
+    intersection, so scores shift (2i/(2a+b−2i) ≠ i/(a+b−i)) and
+    Jaccard can exceed 1. After it, each id has ONE gram set, the
+    union of its versions — the oracle's ``SELECT DISTINCT id, g`` and
+    ``decontaminate``'s algebra."""
+    grams = _doc_grams(df, id_col, text_col, n).distinct()
     hot = grams.groupBy("g").agg(F.count(F.lit(1)).alias("df")).filter(
         F.col("df") > df_cap
     )

@@ -5,10 +5,11 @@ The reference performs every "join" as an N+1 sequence of per-row RPCs
 main.py:460-468 at 694-706; DLQ attempt read main.py:404-420 at
 714/748). The Spark engine replaces each with one set-oriented join:
 
-- build-side broadcast is GATED (``maybe_broadcast``): known-bounded
-  dimensions may pin it, but data-proportional sides (ID map, remote
-  snapshot, DLQ) default to AQE's runtime size choice — broadcast at
-  today's size, sort-merge at the 100 TB design point;
+- build sides carry no broadcast hint: the ID map, remote snapshot
+  and DLQ grow with the data, so AQE and autoBroadcastJoinThreshold
+  pick the strategy from the runtime size — broadcast at today's size,
+  sort-merge at the 100 TB design point, where a forced broadcast
+  would OOM;
 - fact-to-fact joins shuffle on their equi keys under AQE (skew-join
   splitting on hot keys);
 - the tiered fallback cascade becomes left joins + priority coalesce,
@@ -17,32 +18,9 @@ main.py:460-468 at 694-706; DLQ attempt read main.py:404-420 at
 
 from __future__ import annotations
 
-from typing import Optional, Sequence, Tuple
+from typing import Sequence, Tuple
 
 from pyspark.sql import DataFrame, functions as F
-
-
-def maybe_broadcast(df: DataFrame, broadcast: Optional[bool]) -> DataFrame:
-    """Three-state broadcast gate for join build sides.
-
-    - ``True``  → pin a broadcast hash join (dimension-sized sides the
-      caller *knows* are bounded: nation/region, config tables).
-    - ``False`` → strip any inherited hint; shuffle join.
-    - ``None``  (default) → no hint; AQE + autoBroadcastJoinThreshold
-      pick broadcast vs shuffled hash vs sort-merge from the *runtime*
-      size estimate. This is the only safe default for build sides that
-      grow with the data (ID map ~ one row per ever-synced record,
-      per-email snapshot aggregate ~ one row per distinct email): at
-      the 100 TB design point those are fact-sized and a forced
-      broadcast would OOM, while at sf0.1 AQE still picks broadcast.
-    """
-    if broadcast is True:
-        return F.broadcast(df)
-    if broadcast is False:
-        # sort-merge: the only strategy with no build-side memory
-        # floor — spills on both sides, survives any size skew
-        return df.hint("merge")
-    return df
 
 
 def idmap_join(
@@ -51,22 +29,20 @@ def idmap_join(
     object_type: str,
     key_col: str = "natural_key",
     id_col: str = "hubspot_id",
-    broadcast: Optional[bool] = None,
 ) -> DataFrame:
     """Left join of fact rows to the idempotency ID map on
     (object_type, natural_key) (get_mapped_hubspot_id, main.py:373-389;
     call sites 673/776).
 
     The ID map grows one row per ever-synced record — fact-sized at the
-    design scale — so broadcast is NOT forced: ``broadcast=None`` lets
-    AQE pick from its runtime size estimate (broadcast while the map is
-    small, sort-merge once it isn't). Pass ``True`` only when the map
-    is known-bounded (e.g. a filtered single-tenant slice)."""
+    design scale — so broadcast is NOT forced: AQE picks from its
+    runtime size estimate (broadcast while the map is small,
+    sort-merge once it isn't)."""
     m = (
         idmap.filter(F.col("hubspot_object_type") == object_type)
         .select(F.col(key_col), F.col(id_col).alias("mapped_hubspot_id"))
     )
-    return rows.join(maybe_broadcast(m, broadcast), [key_col], "left")
+    return rows.join(m, [key_col], "left")
 
 
 def email_match_join(
@@ -74,7 +50,6 @@ def email_match_join(
     snapshot: DataFrame,
     email_col: str = "email",
     id_col: str = "hubspot_id",
-    broadcast: Optional[bool] = None,
 ) -> DataFrame:
     """Ambiguity-aware identity adoption (main.py:694-706): for rows
     still unmapped, join on normalized email against the remote
@@ -85,19 +60,18 @@ def email_match_join(
     Pre-aggregating the snapshot makes the ambiguity decision a per-key
     aggregate instead of a per-row search, and shrinks the join build
     side to one row per distinct email — still O(contacts) at CRM
-    scale, so broadcast defaults to AQE's choice (``maybe_broadcast``)."""
+    scale, so broadcast is AQE's runtime choice."""
     per_email = snapshot.groupBy(F.col(email_col)).agg(
         F.count(F.lit(1)).alias("email_match_count"),
         F.min(F.col(id_col)).alias("email_hubspot_id"),
     )
-    return rows.join(maybe_broadcast(per_email, broadcast), [email_col], "left")
+    return rows.join(per_email, [email_col], "left")
 
 
 def tiered_match_join(
     rows: DataFrame,
     tiers: Sequence[Tuple[DataFrame, str, str, str]],
     out_col: str = "resolved_id",
-    broadcast: Optional[bool] = None,
 ) -> DataFrame:
     """Priority-fallback match cascade (find_patient_contact,
     main.py:613-633): each tier is (candidates, row_key_col,
@@ -107,8 +81,8 @@ def tiered_match_join(
     winner is identical to the reference's sequential first-hit-wins
     loop, but evaluated in one pass with no RPCs. Tier build sides are
     deduped to one candidate per key but still scale with the candidate
-    table (the full CRM at production size), so broadcast is gated:
-    ``None`` lets AQE decide per tier from runtime sizes."""
+    table (the full CRM at production size), so AQE decides broadcast
+    per tier from runtime sizes."""
     out = rows
     tier_cols = []
     for i, (cand, row_key, cand_key, cand_id) in enumerate(tiers):
@@ -121,9 +95,7 @@ def tiered_match_join(
             .agg(F.min(F.col(cand_id)).alias(alias))
         )
         out = out.join(
-            maybe_broadcast(build, broadcast),
-            out[row_key] == build[f"__tier{i}_key"],
-            "left",
+            build, out[row_key] == build[f"__tier{i}_key"], "left"
         ).drop(f"__tier{i}_key")
         tier_cols.append(F.col(alias))
     out = out.withColumn(out_col, F.coalesce(*tier_cols))
@@ -146,17 +118,16 @@ def dlq_attempt_join(
     failures: DataFrame,
     dlq: DataFrame,
     keys: Sequence[str] = ("job_type", "natural_key", "error"),
-    broadcast: Optional[bool] = None,
 ) -> DataFrame:
     """Attach next attempt number to each failure:
     IFNULL(MAX(attempt),0)+1 per (job_type, natural_key, error)
     (read_failure_attempts, main.py:404-420; call sites 714/748).
     The DLQ aggregates to one row per key before the join; distinct
     failing keys are usually few, but a poisoned run can fail
-    everything, so broadcast defaults to AQE's runtime choice."""
+    everything, so broadcast is AQE's runtime choice."""
     prior = dlq.groupBy(*keys).agg(F.max("attempt").alias("__prior_attempt"))
     return (
-        failures.join(maybe_broadcast(prior, broadcast), list(keys), "left")
+        failures.join(prior, list(keys), "left")
         .withColumn("attempt", F.coalesce(F.col("__prior_attempt"), F.lit(0)) + F.lit(1))
         .drop("__prior_attempt")
     )

@@ -144,13 +144,7 @@ def corpus_refresh_report(
     fingerprints = build_fingerprint_index(
         surviving.where(F.col("text").isNotNull()), "text", fp_col="__fp"
     )
-    # spread=False (r15): surviving is an anti-join, not a scan —
-    # the spread guard's partition probe would materialize its AQE
-    # stages as a driver-side job per build (measured 0.88x on the
-    # composite with the guard active on these streams)
-    span_index = build_span_index(
-        surviving, "text", "doc_id", span_n, spread=False
-    )
+    span_index = build_span_index(surviving, "text", "doc_id", span_n)
     acc_vecs = embeddings.join(
         surviving.select(F.col("doc_id").alias("vec_id")), ["vec_id"], "left_semi"
     )
@@ -279,17 +273,10 @@ def corpus_refresh_probe(
         )
     )
 
-    # 4. span-tier signal on the admitted batch. The artifact contract
-    # guarantees a distinct window set, so the probe skips the
-    # defensive index re-distinct (index_is_set — the O(corpus
-    # windows) hash-agg the 10× fixture caught).
-    flagged = incremental_dup_spans(
-        admitted, span_index, "text", "doc_id", span_n,
-        index_is_set=True, spread=False,
-    )
-    adm_wins = token_span_windows(
-        admitted, "text", "doc_id", span_n, spread=False
-    )
+    # 4. span-tier signal on the admitted batch, probed against the
+    # distinct window set build_span_index returned.
+    flagged = incremental_dup_spans(admitted, span_index, "text", "doc_id", span_n)
+    adm_wins = token_span_windows(admitted, "text", "doc_id", span_n)
     span_docs = (
         adm_wins.join(flagged.select("win"), ["win"])
         .select("doc_id")

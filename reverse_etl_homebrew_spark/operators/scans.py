@@ -16,6 +16,18 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
 
+def _scan_rooted(df: DataFrame) -> bool:
+    """True when the analyzed plan is only Project/Filter nodes over a
+    file relation — partitioning that came from input-byte splits."""
+    node = df._jdf.queryExecution().analyzed()
+    while node.nodeName() in ("Project", "Filter"):
+        node = node.child()
+    return (
+        node.nodeName() == "LogicalRelation"
+        and node.relation().getClass().getSimpleName() == "HadoopFsRelation"
+    )
+
+
 def spread_for_fanout(df: DataFrame) -> DataFrame:
     """Pre-explode parallelism guard for heavy row-expansion stages
     (r15 optimization round; guide §2.5 input parallelism / §6 split
@@ -27,18 +39,29 @@ def spread_for_fanout(df: DataFrame) -> DataFrame:
     parquet split and the gram stream ran on ONE core (measured: the
     sf0.1 trigram stream alone 1.16 s serial → 0.45 s spread); at
     cluster scale a 128 MB text split still explodes into ~100 GB of
-    gram work inside a single task. When the input carries fewer
-    partitions than the session's parallelism, round-robin the (still
-    narrow, pre-explode) rows across it; when the scan already
-    exceeds core count — the 100 TB case — this is a NO-OP, so the
-    guard is scale-adaptive, never a local-core constant. The
-    round-robin is deterministic under retries (sort-before-
+    gram work inside a single task.
+
+    The rule, decided from the analyzed plan (built with the frame, so
+    deciding fires no Spark job):
+
+    - a chain of only Project/Filter over a file scan is round-robined
+      across ``defaultParallelism`` when it has fewer partitions than
+      that — its partition count comes from input splits, and probing
+      it plans no exchange, so it starts no job; once the scan itself
+      exceeds core count (the 100 TB case) this is a no-op;
+    - every other frame (a shuffle, a join, a pin's LogicalRDD, a
+      ``createDataFrame`` frame) is returned unchanged: its
+      partitioning came from a shuffle or a pin, and probing it would
+      materialize AQE query stages as a driver-side job.
+
+    The round-robin is deterministic under retries (sort-before-
     repartition is on by default, SPARK-23207) and semantically
     invisible: everything downstream of an explode is keyed
     aggregation/window work, which never depends on input partition
     placement (partition-invariance pinned in tests)."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
+    if not _scan_rooted(df):
+        return df
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

@@ -33,11 +33,10 @@ def topk_brute(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    metric: str = "cosine",
     pre_scoped: bool = False,
     norm_col: "str | None" = None,
 ) -> DataFrame:
-    """Exact top-k by cosine (or dot) against a literal query vector.
+    """Exact top-k by cosine against a literal query vector.
     Scores are rounded to 6 decimals for cross-run determinism, with
     the id as tie-break.
 
@@ -57,13 +56,13 @@ def topk_brute(
     lets NaN/Inf-component vectors reach scoring, where NaN scores
     rank differently cross-engine — the r13 bug class.
 
-    ``norm_col`` (r15 optimization round, cosine + pre_scoped only):
+    ``norm_col`` (r15 optimization round, pre_scoped only):
     the caller already carries a per-row L2 norm computed with the
     bit-identical left fold (the fused ``bucket_norm_pandas``
     kernel), so the scoring stage keeps exactly ONE dim-unrolled fold
     (the query dot) instead of the two ``cosine_literal`` inlines —
     same ``when(norm × qn > 0)`` NULL semantics, same doubles."""
-    if norm_col is not None and pre_scoped and metric == "cosine":
+    if norm_col is not None and pre_scoped:
         import math
 
         qn = F.lit(math.sqrt(VEC._py_dot(query, query)))
@@ -76,7 +75,7 @@ def topk_brute(
             .orderBy(F.desc("score"), F.col(id_col))
             .limit(k)
         )
-    if not pre_scoped and metric == "cosine":
+    if not pre_scoped:
         # Un-scoped cosine spelling: the r9-r14 history of this branch
         # is codegen width — the original finite_geometry +
         # cosine_literal form inlined THREE dim-term folds and crossed
@@ -106,15 +105,7 @@ def topk_brute(
             .orderBy(F.desc("score"), F.col(id_col))
             .limit(k)
         )
-    score = (
-        VEC.cosine_literal(F.col(vec_col), query)
-        if metric == "cosine"
-        else VEC.dot_literal(F.col(vec_col), query)
-    )
-    # finite-geometry scope (r13 non-finite components class): a NaN
-    # score would rank differently under the two engines' NaN orders
-    if not pre_scoped:
-        df = df.where(VEC.finite_geometry(F.col(vec_col), len(query)))
+    score = VEC.cosine_literal(F.col(vec_col), query)
     return (
         df.select(F.col(id_col), F.round(score, 6).alias("score"))
         .orderBy(F.desc("score"), F.col(id_col))
@@ -197,7 +188,6 @@ def knn_join(
     probe_radius: int = 2,
     tables: int = 1,
     exact: bool = False,
-    broadcast: "bool | None" = None,
 ) -> DataFrame:
     """k nearest right-vectors for every left-vector.
 
@@ -226,9 +216,8 @@ def knn_join(
 
     ``exact=True`` opts into the exhaustive cross score + per-left
     window — correct for query-batch-vs-corpus shapes where one side
-    is bounded (the reference's search-then-rank shape). There
-    ``broadcast=None`` lets AQE pick the strategy; pass
-    ``broadcast=True`` only when the right side is known-small.
+    is bounded (the reference's search-then-rank shape); AQE picks the
+    join strategy from runtime sizes.
 
     Approximate recall: a left vector only sees neighbors within its
     probed buckets, so it may return fewer than ``k`` rows — the
@@ -236,8 +225,6 @@ def knn_join(
     import math
 
     from pyspark.sql import Window as W
-
-    from .joins import maybe_broadcast
 
     if planes is None and not exact:
         n_right = right.count()
@@ -291,7 +278,7 @@ def knn_join(
         le = _side(left, left_id, "l_id", "l_v")
         re = _side(right, right_id, "r_id", "r_v")
         scored = (
-            le.join(maybe_broadcast(re, broadcast))
+            le.join(re)
             .withColumn("__cf", _cosf(F.col("l_v"), F.col("r_v")))
             .where(F.col("__cf").getField("ok"))
             .withColumn("score", F.round(F.col("__cf").getField("score"), 6))

@@ -641,7 +641,7 @@ def _mg_merge_batch(counts: dict, items: "pd.Series", k: int) -> None:
 
 
 def topk_frequent_sketch(
-    df: DataFrame, col: str, k: int, sketch_k: int, strict: bool = True
+    df: DataFrame, col: str, k: int, sketch_k: int
 ) -> DataFrame:
     """Top-``k`` most frequent non-null items via the two-phase
     Misra-Gries sketch + exact recount — the vocabulary-too-big path
@@ -658,12 +658,11 @@ def topk_frequent_sketch(
     Exactness regime: any non-candidate item has true count
     <= n/(sketch_k+1) (mergeable-summaries retention bound), so the
     returned set IS the global top-k whenever the k-th returned count
-    exceeds n/(sketch_k+1). ``strict=True`` embeds that check in the
-    plan (CASE + raise_error over the k-row result — lazy, one compare
-    per returned row) and raises when the data leaves the provable
-    regime, including the fewer-than-k-candidates case where a
-    non-candidate could belong to the result; ``strict=False`` returns
-    the best-effort head instead. Sizing rule: pick sketch_k so the
+    exceeds n/(sketch_k+1). That check is embedded in the plan (CASE +
+    raise_error over the k-row result — lazy, one compare per returned
+    row) and raises when the data leaves the provable regime,
+    including the fewer-than-k-candidates case where a non-candidate
+    could belong to the result. Sizing rule: pick sketch_k so the
     expected k-th count clears n/(sketch_k+1) with margin — counts are
     integers, so when the guard passes the result is exact and the
     oracle comparison is bit-for-bit."""
@@ -679,20 +678,13 @@ def topk_frequent_sketch(
     grouped = masked.groupBy("__k").agg(
         F.count(F.lit(1)).cast("long").alias("cnt")
     )
-    if not strict:
-        return (
-            grouped.filter(F.col("__k").isNotNull())
-            .orderBy(F.col("cnt").desc(), F.col("__k").asc())
-            .limit(k)
-            .select(F.col("__k").alias(col), "cnt")
-        )
     from pyspark.sql import Window as W
 
     item_type = df.schema[col].dataType
     msg = (
         "topk_frequent_sketch: data outside the provable regime for "
         f"sketch_k={sketch_k}, k={k} — the k-th count does not clear "
-        "n/(sketch_k+1); enlarge sketch_k or pass strict=False"
+        "n/(sketch_k+1); enlarge sketch_k"
     )
     # ``grouped`` is tiny (at most partitions x sketch_k candidates
     # plus the NULL mask bucket), so the ranking/guard windows below
@@ -890,7 +882,6 @@ def topk_frequent_by_group(
     col: str,
     k: int,
     sketch_k: int,
-    strict: bool = True,
 ) -> DataFrame:
     """Top-``k`` most frequent non-null items PER GROUP via the
     two-phase Misra-Gries sketch + exact recount — the grouped twin
@@ -909,12 +900,10 @@ def topk_frequent_by_group(
 
     Exactness regime per group: any non-candidate has true count
     ≤ n_g/(sketch_k+1), so the group's returned set IS its top-k
-    whenever the k-th returned count clears that ceiling.
-    ``strict=True`` embeds the per-group check in the plan (raises on
-    ANY group outside the regime, including the fewer-than-k-
-    candidates and emptied-summaries cases via the per-group NULL
-    bucket sentinel); ``strict=False`` returns each group's
-    best-effort head."""
+    whenever the k-th returned count clears that ceiling. The
+    per-group check is embedded in the plan: it raises on ANY group
+    outside the regime, including the fewer-than-k-candidates and
+    emptied-summaries cases via the per-group NULL bucket sentinel."""
     from pyspark.sql import Window as W
 
     cands = misra_gries_candidates_by_group(
@@ -936,19 +925,11 @@ def topk_frequent_by_group(
     wrank = W.partitionBy(group_col).orderBy(
         F.col("__k").isNull().asc(), F.col("cnt").desc(), F.col("__k").asc()
     )
-    if not strict:
-        return (
-            grouped.filter(F.col("__k").isNotNull())
-            .withColumn("__rank", F.row_number().over(wrank))
-            .filter(F.col("__rank") <= k)
-            .select(group_col, F.col("__k").alias(col), "cnt")
-        )
     item_type = df.schema[col].dataType
     msg = (
         "topk_frequent_by_group: a group is outside the provable "
         f"regime for sketch_k={sketch_k}, k={k} — its k-th count does "
-        "not clear n_g/(sketch_k+1); enlarge sketch_k or pass "
-        "strict=False"
+        "not clear n_g/(sketch_k+1); enlarge sketch_k"
     )
     w1 = W.partitionBy(group_col)
     ranked = (

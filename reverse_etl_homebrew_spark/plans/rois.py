@@ -141,8 +141,8 @@ def roi_sync_plan(
         # override flags) wins; engine-accumulated ids fill the rest
         prior = prior.join(snapshot.select("natural_key"), ["natural_key"], "left_anti")
         snapshot = snapshot.unionByName(prior)
-    # the remote snapshot grows with the CRM — no pinned broadcast
-    # (maybe_broadcast semantics: AQE picks one while it is small)
+    # the remote snapshot grows with the CRM — no pinned broadcast;
+    # AQE picks one while it is small, as in operators/joins.py
     with_remote = resolved.join(snapshot, ["natural_key"], "left")
 
     processed = (F.lower(F.col("processing_status")) == "processed") & F.col(

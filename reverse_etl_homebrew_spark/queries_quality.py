@@ -163,16 +163,15 @@ def q_containment_dedup(spark, sf_dir):
     the exact-algebra form. NULL-text docs are out of dedup scope on
     both sides (r10 NULL-robustness probe: the gram floor otherwise
     makes every NULL doc a containment-1.0 pair of every other).
-    Exact re-deliveries collapse before gram extraction (r11
-    re-delivery probe: duplicate (id, g) rows double sizes and
-    intersections, shifting every score; the oracle's gram CTE is
-    DISTINCT) — a narrow (id, text) shuffle on the doc table."""
-    d = (
-        _t(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull())
-        .dropDuplicates(["doc_id", "text"])
+    Re-deliveries collapse on the (id, g) relation, as in
+    ``_pruned_grams``: duplicate (id, g) rows from identical copies or
+    conflicting versions of one id would double sizes and
+    intersections; after the DISTINCT each id's set is the union of
+    its versions, as in the oracle's gram CTE."""
+    d = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    return _directed_containment(
+        _doc_grams(d, "doc_id", "text", 3).distinct(), threshold=0.8
     )
-    return _directed_containment(_doc_grams(d, "doc_id", "text", 3), threshold=0.8)
 
 
 def _directed_containment(grams, threshold: float):

@@ -557,13 +557,10 @@ def q_decontaminate_bloom(spark, sf_dir):
 _SPAN_L = 8
 
 # Both ops share the window stream: tokenize once behind a projection
-# boundary, explode every length-L window. The registered queries use
-# the window-STRING shuffle key (oracle-exact and the faster local
-# plan); operators/dedup.py also ships carry="hash" — a 16-byte
-# double-xxhash64 key + exact string recount, identical output — as a
-# measured CONDITIONAL trade for network-bound clusters with long
-# windows (it loses locally; see SCALE.md). Shuffle volume is
-# O(total tokens) either way, the ngram-topk profiling cost class.
+# boundary, explode every length-L window, shuffle on the window
+# STRING (oracle-exact; a hashed two-phase key measured slower, see
+# SCALE.md). Shuffle volume is O(total tokens), the ngram-topk
+# profiling cost class.
 _SPAN_WINS_SQL = rf"""
     toks AS (
       SELECT doc_id, regexp_extract_all(trim(text), '\S+') AS tt

@@ -119,98 +119,3 @@ def test_bloom_m_at_cap_accepted(spark):
     tg, bg = _gram_frames(spark)
     out = DD.bloom_candidate_grams(tg, bg, 1 << 24).collect()
     assert {r["g"] for r in out} >= {"a b c"}
-
-
-# ---------------------------------------------------------------------------
-# r13 judge #4: the exact-vs-prefiltered auto-selector
-# ---------------------------------------------------------------------------
-
-def _corpus(spark):
-    train = spark.createDataFrame(
-        [(i, "alpha beta gamma delta epsilon zeta eta theta iota " + str(i))
-         for i in range(20)],
-        "doc_id long, text string",
-    )
-    bench = spark.createDataFrame(
-        [(100, "alpha beta gamma delta epsilon zeta eta theta iota 3")],
-        "doc_id long, text string",
-    )
-    return train, bench
-
-
-def test_auto_selector_branches_agree(spark):
-    train, bench = _corpus(spark)
-    exact = DD.contamination_flags_auto(train, bench, route="exact")
-    pre = DD.contamination_flags_auto(train, bench, route="prefiltered")
-    assert sorted(map(tuple, exact.collect())) == sorted(
-        map(tuple, pre.collect())
-    )
-    auto = DD.contamination_flags_auto(train, bench)
-    assert sorted(map(tuple, auto.collect())) == sorted(
-        map(tuple, exact.collect())
-    )
-
-
-def test_route_crossover_decision(spark):
-    # below the broadcast threshold the exact join broadcasts anyway →
-    # lanes are overhead; past it the lanes win (SCALE.md r12 pricing)
-    thresh = DD._conf_bytes(
-        spark, "spark.sql.autoBroadcastJoinThreshold", 10 * 1024 * 1024
-    )
-    assert DD.decontaminate_route(spark, 100, n=8) == "exact"
-    assert (
-        DD.decontaminate_route(spark, thresh, n=8) == "prefiltered"
-    )  # 8x expansion pushes it over
-    assert DD.decontaminate_route(spark, thresh * 2, n=8) == "prefiltered"
-
-
-def test_route_broadcast_disabled_prefilters():
-    class _FakeConf:
-        def get(self, key, default=None):
-            return "-1"
-
-    class _FakeSpark:
-        conf = _FakeConf()
-
-    assert DD.decontaminate_route(_FakeSpark(), 1, n=8) == "prefiltered"
-
-
-def test_conf_bytes_parses_units():
-    class _S:
-        class conf:  # noqa: N801
-            @staticmethod
-            def get(key, default=None):
-                return _S.val
-
-    for raw, want in [
-        ("10485760", 10485760),
-        ("10485760b", 10485760),
-        ("10m", 10 << 20),
-        ("10MB", 10 << 20),
-        ("1g", 1 << 30),
-        ("garbage", 77),
-    ]:
-        _S.val = raw
-        assert DD._conf_bytes(_S, "k", 77) == want
-
-
-def test_small_benchmark_routes_exact_on_real_session(spark):
-    # a parquet-backed benchmark carries REAL Catalyst size stats (an
-    # in-memory LocalRelation reports unknown = Long.MaxValue and
-    # routes conservatively to prefiltered — also asserted here); the
-    # sf0.001 eval split is tiny, so the estimate lands under the
-    # default 10 MiB threshold and the selector picks the exact join
-    bench = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .filter(F.col("doc_id") % 10 == 0)
-        .select("doc_id", "text")
-    )
-    est = DD.estimated_plan_bytes(bench)
-    assert 0 < est < (1 << 40)
-    assert DD.decontaminate_route(spark, est, n=8) == "exact"
-    train, mem_bench = _corpus(spark)
-    assert DD.estimated_plan_bytes(mem_bench) == (1 << 63) - 1
-    assert (
-        DD.decontaminate_route(spark, DD.estimated_plan_bytes(mem_bench))
-        == "prefiltered"
-    )

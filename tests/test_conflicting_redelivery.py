@@ -1,34 +1,24 @@
 """CONFLICTING re-delivery (r12 probe arm): the same doc_id arrives
-twice with DIFFERENT content — the corruption the exact (id, text)
-re-delivery collapse deliberately does NOT absorb ('conflicting
-same-id content is a different corruption owned upstream',
-operators/dedup._pruned_grams, r11).
+twice with DIFFERENT content (fixtures/redelivery_probe.py --conflict).
 
-The arm (fixtures/redelivery_probe.py --conflict) adjudicated the
-boundary precisely: every key whose per-ID *set* is built BEFORE its
-defining join (simhash signatures, jaccard/containment gram sets)
-diverges — the oracle's
-``SELECT DISTINCT id, g`` takes the UNION of the conflicting
-versions while the engine's per-row ``array_distinct`` keeps them
-separate — and every per-ROW key (spans, fingerprints, rates,
-tf-idf, repetition) agrees. The divergent set is pinned below so the
-class cannot silently GROW; the documented resolution is UPSTREAM:
-one ``lastwin_dedup`` over the id (the reference's own
-one-row-per-natural-key semantics) before the dedup tier, proven
-here to restore pair-for-pair parity.
+The n-gram set-similarity keys build each id's gram set on the
+DISTINCT (id, g) relation (operators/dedup._pruned_grams and the
+uncapped `containment-dedup`), so a conflicting id's set is the UNION
+of its versions — the oracle's ``SELECT DISTINCT id, g`` and
+``decontaminate``'s algebra. They used to collapse only identical
+(id, text) rows, so a gram both versions share was counted twice:
+`ngram-jaccard` scored (0, 82) at 14.33 where the oracle gives 0.885.
+All six gram-set keys now agree with their oracle here and are pinned
+in MUST_AGREE, with every per-ROW key (spans, fingerprints, rates,
+tf-idf, repetition).
 
-The two cluster keys (`fuzzy-dedup-clusters`, `dedup-survivorship`)
-left the OBSERVED boundary when their pairs moved from MinHash banding
-to the exact gram-overlap join. Their divergence here came from
-banding: signatures over both versions of a conflicting doc missed
-pairs (0, 50) and (50, 82). The exact join finds every pair; the
-per-row gram sets still inflate the conflicting docs' scores (the
-`ngram-jaccard` / `fuzzy-dedup` values diverge, e.g. 14.33 against
-0.885 for (0, 82)), but every such pair is above the 0.5 threshold on
-both engines, so the components and survivors agree on this corpus.
-They consume the same per-row sets, so a corpus where an inflated
-score crosses the threshold would split them again: they are in
-neither pinned set.
+What is left of the boundary is `simhash-dedup-md5`: its token set
+is distinct per ROW, so a token both versions share votes twice in
+the id's signature, where the oracle's DISTINCT (id, t) lets it vote
+once. It is pinned in KNOWN_DIVERGENT so the class cannot silently
+change. The documented resolution is UPSTREAM: one ``lastwin_dedup``
+over the id (the reference's own one-row-per-natural-key semantics)
+before the dedup tier, proven here to restore pair-for-pair parity.
 
 Orders-side conflicting amounts (o_totalprice ± 0.01 twins) diverge
 NOWHERE: the snapshot key-dedup and per-identity aggregations of the
@@ -55,12 +45,9 @@ from redelivery_probe import build_conflicting_dir  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
 
-# The adjudicated boundary: per-id SET semantics (union-of-versions in
-# SQL vs per-row sets in the engine). Membership pinned EXACTLY.
-KNOWN_DIVERGENT = {
-    "fuzzy-dedup", "ngram-jaccard", "containment-dedup",
-    "containment-dedup-capped", "simhash-dedup-md5",
-}
+# The adjudicated boundary: per-id token-set semantics (union of
+# versions in SQL vs per-row token sets in the engine). Pinned EXACTLY.
+KNOWN_DIVERGENT = {"simhash-dedup-md5"}
 
 # Per-row representatives that MUST stay consistent on conflicting
 # input (one from each family the probe cleared).
@@ -84,6 +71,10 @@ MUST_AGREE = [
     # Bloom decontaminate — all per-row/per-version algebra
     "corpus-prep-pipeline", "corpus-diff", "chunk-documents",
     "decontaminate-bloom", "quantiles-twophase",
+    # the gram-set keys: each id's set is the DISTINCT (id, g) union
+    # of its versions, as in the oracle
+    "ngram-jaccard", "fuzzy-dedup", "fuzzy-dedup-clusters",
+    "dedup-survivorship", "containment-dedup", "containment-dedup-capped",
 ]
 
 
@@ -110,7 +101,7 @@ def test_per_row_keys_agree_on_conflicting_input(spark, name, duck, conflict_dir
     assert _verdict(spark, duck, name, conflict_dir), name
 
 
-@pytest.mark.parametrize("name", sorted(KNOWN_DIVERGENT - {"simhash-dedup-md5"}))
+@pytest.mark.parametrize("name", sorted(KNOWN_DIVERGENT))
 def test_boundary_membership_does_not_shrink_silently(
     spark, name, duck, conflict_dir
 ):

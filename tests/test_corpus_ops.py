@@ -252,11 +252,8 @@ def test_topk_frequent_sketch_matches_brute_force_under_compression(spark):
 
 def test_topk_frequent_sketch_strict_guard_raises_outside_regime(spark):
     """On a flat distribution the k-th count cannot clear
-    n/(sketch_k+1): strict mode must raise (never silently truncate
-    the top-k), and strict=False must return a best-effort head
-    without raising — possibly SHORT of k rows, since flat data can
-    empty every partition summary (the equal-counts compression case:
-    the threshold equals every held count and drops them all)."""
+    n/(sketch_k+1): the guard must raise (never silently truncate
+    the top-k)."""
     import pytest
 
     from reverse_etl_homebrew_spark.operators.vectorized import (
@@ -270,9 +267,6 @@ def test_topk_frequent_sketch_strict_guard_raises_outside_regime(spark):
 
     with pytest.raises(Exception, match="provable regime"):
         topk_frequent_sketch(df, "item", 5, 16).collect()
-
-    loose = topk_frequent_sketch(df, "item", 5, 16, strict=False).collect()
-    assert len(loose) <= 5  # best-effort: no raise, never more than k
 
 
 def test_topk_frequent_sketch_fewer_candidates_than_k(spark):
@@ -387,10 +381,9 @@ def test_topk_frequent_by_group_matches_brute_force_under_compression(spark):
 
 
 def test_topk_frequent_by_group_strict_guard_is_per_group(spark):
-    """ONE out-of-regime group poisons strict mode (a silent partial
-    answer would be wrong for that group), while strict=False returns
-    the skewed group's exact head alongside the flat group's
-    best-effort one."""
+    """ONE out-of-regime group makes the whole call raise (a silent
+    partial answer would be wrong for that group), while the skewed
+    group on its own returns its exact head."""
     import pytest
 
     from reverse_etl_homebrew_spark.operators.vectorized import (
@@ -408,10 +401,11 @@ def test_topk_frequent_by_group_strict_guard_is_per_group(spark):
     with pytest.raises(Exception, match="provable regime"):
         topk_frequent_by_group(df, "grp", "item", 5, 16).collect()
 
-    loose = topk_frequent_by_group(df, "grp", "item", 5, 16, strict=False).collect()
-    skew = sorted((r["item"], r["cnt"]) for r in loose if r["grp"] == "skew")
+    alone = topk_frequent_by_group(
+        df.where(F.col("grp") == "skew"), "grp", "item", 5, 16
+    ).collect()
+    skew = sorted((r["item"], r["cnt"]) for r in alone)
     assert skew == [("s_1", 600), ("s_2", 300), ("s_3", 200), ("s_4", 150), ("s_5", 120)]
-    assert sum(1 for r in loose if r["grp"] == "flat") <= 5
 
 
 def test_topk_frequent_by_group_null_policy(spark):
@@ -457,9 +451,7 @@ def test_misra_gries_sketch_narrow_int_item_columns(spark):
     )
     assert got == [(7, 60), (8, 20)]
 
-    by_g = topk_frequent_by_group(
-        df, "grp", "item", k=2, sketch_k=16, strict=False
-    ).collect()
+    by_g = topk_frequent_by_group(df, "grp", "item", k=2, sketch_k=16).collect()
     assert sorted((r["grp"], r["item"], r["cnt"]) for r in by_g) == [
         ("g", 7, 60), ("g", 8, 20)
     ]

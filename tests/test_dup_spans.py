@@ -127,20 +127,6 @@ def test_span_ops_partition_invariant(spark):
         assert a == b
 
 
-def test_hash_carry_equals_string_carry(spark):
-    """carry="hash" (16-byte shuffle key + exact string recount of
-    candidate occurrences) must be bit-identical to the string-keyed
-    default — the collision story is 'false candidates wash out', not
-    'close enough'."""
-    df = _df(spark).repartition(5)
-    for op in (duplicate_spans, dup_span_rate):
-        a = sorted(map(tuple, op(df, "text", "doc_id", L).collect()))
-        b = sorted(
-            map(tuple, op(df, "text", "doc_id", L, carry="hash").collect())
-        )
-        assert a == b
-
-
 # --- incremental span dedup: new batch vs accepted-corpus index ---
 # Accepted corpus: docs 1/2/5 (they share "a b c d e f g h").
 # New batch plants every arm:
@@ -219,15 +205,6 @@ def test_incremental_dup_spans_partition_invariant(spark):
     assert a == b
 
 
-def test_bad_carry_rejected(spark):
-    import pytest
-
-    df = _df(spark)
-    for op in (duplicate_spans, dup_span_rate):
-        with pytest.raises(ValueError):
-            op(df, "text", "doc_id", L, carry="md5")
-
-
 # --- property: random small-alphabet corpora vs the Python model ---
 # A 4-symbol token alphabet at window length 3 makes duplicate windows
 # genuinely common, exercising every arm (cross-doc groups, within-doc
@@ -292,9 +269,3 @@ def test_span_ops_match_model_on_random_corpora(spark, corpora):
     }
     assert got_detect == expected_detect
     assert got_rate == expected_rate
-    # the hashed-shuffle lever must agree on every random corpus too
-    got_rate_hash = {
-        r["doc_id"]: (r["n_spans"], r["n_dup_spans"], r["dup_rate"])
-        for r in dup_span_rate(df, "text", "doc_id", n, carry="hash").collect()
-    }
-    assert got_rate_hash == expected_rate

@@ -69,10 +69,9 @@ def test_email_match_join_broadcasts_per_key_aggregate(spark):
 
 
 def test_broadcast_gate_scales_with_build_side(spark):
-    """maybe_broadcast contract (VERDICT r1 #3): a data-proportional
+    """Join build-side contract (VERDICT r1 #3): a data-proportional
     build side must NOT be pinned to broadcast — small sides broadcast
-    (stats/AQE), fact-sized sides fall back to sort-merge, and the
-    explicit flags override both ways."""
+    (stats/AQE) and fact-sized sides fall back to sort-merge."""
     from pyspark.sql import functions as F
 
     from reverse_etl_homebrew_spark.operators import joins as J
@@ -94,12 +93,6 @@ def test_broadcast_gate_scales_with_build_side(spark):
     # small snapshot → planner may broadcast on its own
     small_plan = explain(spark, J.email_match_join(rows, small_snapshot))
     assert "BroadcastHashJoin" in small_plan
-
-    # explicit overrides win in both directions
-    forced = explain(spark, J.email_match_join(rows, big_snapshot, broadcast=True))
-    assert "BroadcastHashJoin" in forced
-    denied = explain(spark, J.email_match_join(rows, small_snapshot, broadcast=False))
-    assert "BroadcastHashJoin" not in denied
 
     # tiered cascade: every tier's join obeys the same gate
     facts = spark.range(1000).select(F.col("id").alias("k"))

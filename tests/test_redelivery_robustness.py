@@ -8,8 +8,8 @@ diverging:
   duplicate (id, g) gram rows doubled set sizes AND intersections,
   shifting every similarity score involving a re-delivered doc
   (2i/(2a+b−2i) ≠ i/(a+b−i)) while the oracles' DISTINCT gram CTEs
-  stayed put. Fixed by collapsing exact (id, text) re-deliveries
-  before gram extraction (operators/dedup._pruned_grams and the
+  stayed put. Fixed by collapsing re-deliveries (now a DISTINCT on
+  the (id, g) relation in operators/dedup._pruned_grams and the
   uncapped containment query).
 - `dup-span-rate`: per-row totals joined to id-merged dup counts
   emitted two rows per re-delivered doc with dup_rate 2.0 — an
