@@ -25,8 +25,9 @@ is retried in production.
 same id re-delivered with DIFFERENT content (documents text twin at
 doc_id % 41; orders o_totalprice ± 0.01 twin at o_orderkey % 61) —
 a corruption class the r11 exact (id, text) collapse did NOT absorb.
-The gram-set keys now collapse on the (id, gram) relation and agree;
-tests/test_conflicting_redelivery.py holds the current boundary.
+The gram-set keys and both SimHash keys now collapse on the (id, gram)
+or (id, token) relation and agree; no key is left on the boundary
+(tests/test_conflicting_redelivery.py pins them in MUST_AGREE).
 Adjudication (r12, sf0.001): the divergent set is
 EXACTLY the per-id SET-semantics family (8 keys: fuzzy-dedup,
 ngram-jaccard, fuzzy-dedup-clusters, dedup-survivorship, both

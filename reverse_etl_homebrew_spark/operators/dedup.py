@@ -96,26 +96,25 @@ def simhash_fingerprints(
     """One row per document with its SimHash fingerprint (per-bit
     majority vote over shingle hashes), as (id, sh).
 
-    Explode → single xxhash64 → packed vote sums in one groupBy: each
-    aggregate column carries TWO bit-counters in 32-bit lanes of one
-    long (overflow needs 2^32 shingles in one document), so the
-    64-bit vote needs 32 aggregate columns, not 64 — keeping the
-    generated hash-agg output method under the JVM's 8 KB JIT limit
-    (the 64-column form compiled but ran interpreted). Flat
-    expressions only (see the section note), one shuffle, each shingle
-    hashed once."""
+    Explode → DISTINCT (id, shingle) → single xxhash64 → packed vote
+    sums in one groupBy: each aggregate column carries TWO bit-counters
+    in 32-bit lanes of one long (overflow needs 2^32 shingles in one
+    document), so the 64-bit vote needs 32 aggregate columns, not 64 —
+    keeping the generated hash-agg output method under the JVM's 8 KB
+    JIT limit (the 64-column form compiled but ran interpreted). Flat
+    expressions only (see the section note), each shingle hashed once.
+
+    The (id, shingle) relation is DISTINCT, so an id's shingle set is
+    the union of its rows: a doc_id delivered twice with different
+    text votes each shared shingle once."""
     assert bits % 2 == 0
     hashed = (
         df.select(
             F.col(id_col).alias("id"),
             TX.char_array(TX.normalized_text(F.col(text_col))).alias("__ch"),
         )
-        .select(
-            "id",
-            F.explode(
-                F.array_distinct(TX.char_ngrams_from(F.col("__ch"), shingle_n))
-            ).alias("g"),
-        )
+        .select("id", F.explode(TX.char_ngrams_from(F.col("__ch"), shingle_n)).alias("g"))
+        .distinct()
         .select("id", F.xxhash64("g").alias("h"))
     )
     lanes = bits // 2
@@ -200,16 +199,16 @@ def simhash_pairs_md5(
     and the output equals the brute-force Hamming pair set. Pairs
     sharing several blocks dedup before the verify.
 
-    Shape: one explode over tokens, one groupBy for votes (``bits``
-    small sum aggregates — integer, JIT-friendly), block explode +
-    equi-join. No all-pairs."""
+    Shape: one explode over tokens, DISTINCT (id, token) — an id's
+    token set is the union of its rows, as in the oracle's ``SELECT
+    DISTINCT doc_id, t`` — one groupBy for votes (``bits`` small sum
+    aggregates — integer, JIT-friendly), block explode + equi-join. No
+    all-pairs."""
     hexlen = bits // 4
     toks = df.select(
         F.col(id_col).alias("id"),
-        F.explode(
-            F.array_distinct(F.split(TX.normalized_text(F.col(text_col)), " "))
-        ).alias("t"),
-    )
+        F.explode(F.split(TX.normalized_text(F.col(text_col)), " ")).alias("t"),
+    ).distinct()
     h = toks.select(
         "id", F.conv(F.substring(F.md5("t"), 1, hexlen), 16, 10).cast("long").alias("h")
     )

@@ -7,11 +7,26 @@ shuffle partitions sized to the local core count (the cluster profile
 overrides this to ~2-3x total cores), Arrow enabled for the few
 Pandas-UDF extension operators.
 
+Codegen posture: every generated Java class is compiled once per JVM
+and reused by every later query with the same code. Whole-stage code
+generation compiles per plan shape, and the engine runs the same few
+hundred shapes over and over (every registry key, every ``run_sync``
+call), so compilation belongs to warm-up, not to each call. Two confs
+make that hold. Spark's compiled-class cache keeps 100 classes by
+default, far below the engine's working set, so warm calls evicted
+and recompiled nearly everything; ``get_spark`` and ``cluster_conf``
+size it to the working set (``CODEGEN_CACHE_ENTRIES``). And class
+names carry AQE's codegen stage id by default
+(``GeneratedIteratorForCodegenStage38``), so identical code planned
+under another stage id missed the cache; ``_RUNTIME_CONFS`` drops the
+id from the name. On a cluster each executor JVM holds its own cache.
+
 ``normalize_session`` is applied to *any* externally provided session
 (e.g. the verification driver's) before running engine queries: it
 pins the session timezone to UTC so naive-timestamp semantics are
-deterministic, and enables the legacy nanos-as-long parquet read that
-the ``events`` table (timestamp[ns]) requires.
+deterministic, enables the legacy nanos-as-long parquet read that
+the ``events`` table (timestamp[ns]) requires, and names generated
+classes without stage ids.
 
 ``pin`` is the engine's one materialization policy: every operator that
 reuses an intermediate frame cuts its lineage through it, so where and
@@ -58,7 +73,24 @@ _RUNTIME_CONFS = {
     # and rejected (2.4× WORSE on knn-join-lsh — one giant batch per
     # task removes the JVM↔Python pipeline overlap).
     "spark.sql.execution.arrow.maxBytesPerBatch": "268435456",
+    # Generated class names without AQE's codegen stage id, so the same
+    # code compiled under another stage id hits the compiled-class cache
+    # (see the module docstring).
+    "spark.sql.codegen.useIdInClassName": "false",
 }
+
+#: Size of Spark's compiled-class cache (``spark.sql.codegen.cache.maxEntries``,
+#: a static conf: it takes effect only when the JVM's first session is
+#: built). It holds the engine's working set of generated classes, so each
+#: is compiled once per JVM. Measured on ``local[4]`` with stage-id-free
+#: names and an unbounded cache: one pass over the 165-key registry at
+#: sf0.1 compiles 1,399 distinct classes, one perfbench sync-run
+#: iteration (four ``run_sync`` calls) about 125, most of them shared
+#: with the registry. 2,000 holds both with about 30% headroom. Holding
+#: the registry's classes costs heap: after a second registry pass at
+#: sf0.001 the heap after a full GC read 259 MB, against 181 MB with
+#: Spark's 100-entry default.
+CODEGEN_CACHE_ENTRIES = 2000
 
 
 #: process-local path of the executor-shipped package zip (see
@@ -67,7 +99,12 @@ _PKG_ZIP: str | None = None
 
 
 def normalize_session(spark: SparkSession) -> SparkSession:
-    """Apply the engine's required runtime confs to an existing session."""
+    """Apply the engine's required runtime confs to an existing session.
+
+    Only runtime confs can be applied here. The compiled-class cache
+    size is static, so an external session keeps the cache it was built
+    with; it still gets stage-id-free class names, so repeated queries
+    hit whatever cache it has."""
     for k, v in _RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
@@ -166,6 +203,8 @@ def cluster_conf(
         "spark.sql.parquet.compression.codec": "zstd",
         # checkpoint-file GC for pin()'s reliable checkpoints
         "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
+        # static: each executor JVM builds its own compiled-class cache
+        "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
     }
 
 
@@ -191,6 +230,7 @@ def get_spark(app_name: str = "reverse-etl-homebrew-spark") -> SparkSession:
         # ContextCleaner delete checkpoint files once their RDDs are
         # GC'd so a long-running job doesn't accumulate them
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in _RUNTIME_CONFS.items():
         builder = builder.config(k, v)

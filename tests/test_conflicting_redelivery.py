@@ -1,24 +1,23 @@
 """CONFLICTING re-delivery (r12 probe arm): the same doc_id arrives
 twice with DIFFERENT content (fixtures/redelivery_probe.py --conflict).
 
-The n-gram set-similarity keys build each id's gram set on the
-DISTINCT (id, g) relation (operators/dedup._pruned_grams and the
-uncapped `containment-dedup`), so a conflicting id's set is the UNION
-of its versions — the oracle's ``SELECT DISTINCT id, g`` and
-``decontaminate``'s algebra. They used to collapse only identical
-(id, text) rows, so a gram both versions share was counted twice:
-`ngram-jaccard` scored (0, 82) at 14.33 where the oracle gives 0.885.
-All six gram-set keys now agree with their oracle here and are pinned
-in MUST_AGREE, with every per-ROW key (spans, fingerprints, rates,
-tf-idf, repetition).
+The set-similarity keys build each id's gram or token set on the
+DISTINCT (id, g) relation (operators/dedup._pruned_grams, the
+uncapped `containment-dedup` and both SimHash operators), so a
+conflicting id's set is the UNION of its versions — the oracle's
+``SELECT DISTINCT id, g`` and ``decontaminate``'s algebra. They used
+to collapse only identical (id, text) rows or dedup per ROW, so a gram
+both versions share was counted twice: `ngram-jaccard` scored (0, 82)
+at 14.33 where the oracle gives 0.885, and `simhash-dedup-md5` let a
+shared token vote twice in the id's signature. All seven set keys now
+agree with their oracle here and are pinned in MUST_AGREE, with every
+per-ROW key (spans, fingerprints, rates, tf-idf, repetition). No key
+is left on a divergence boundary.
 
-What is left of the boundary is `simhash-dedup-md5`: its token set
-is distinct per ROW, so a token both versions share votes twice in
-the id's signature, where the oracle's DISTINCT (id, t) lets it vote
-once. It is pinned in KNOWN_DIVERGENT so the class cannot silently
-change. The documented resolution is UPSTREAM: one ``lastwin_dedup``
-over the id (the reference's own one-row-per-natural-key semantics)
-before the dedup tier, proven here to restore pair-for-pair parity.
+The reference's own one-row-per-natural-key semantics stay available
+UPSTREAM: one ``lastwin_dedup`` over the id before the dedup tier picks
+a single version, proven here to give pair-for-pair parity with an
+oracle applying the same pick.
 
 Orders-side conflicting amounts (o_totalprice ± 0.01 twins) diverge
 NOWHERE: the snapshot key-dedup and per-identity aggregations of the
@@ -44,10 +43,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "fixtures"))
 from redelivery_probe import build_conflicting_dir  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
-
-# The adjudicated boundary: per-id token-set semantics (union of
-# versions in SQL vs per-row token sets in the engine). Pinned EXACTLY.
-KNOWN_DIVERGENT = {"simhash-dedup-md5"}
 
 # Per-row representatives that MUST stay consistent on conflicting
 # input (one from each family the probe cleared).
@@ -75,6 +70,8 @@ MUST_AGREE = [
     # of its versions, as in the oracle
     "ngram-jaccard", "fuzzy-dedup", "fuzzy-dedup-clusters",
     "dedup-survivorship", "containment-dedup", "containment-dedup-capped",
+    # token set on the DISTINCT (id, t) relation, as in the oracle
+    "simhash-dedup-md5",
 ]
 
 
@@ -99,18 +96,6 @@ def _verdict(spark, duck, name, sf_dir):
 @pytest.mark.parametrize("name", sorted(MUST_AGREE))
 def test_per_row_keys_agree_on_conflicting_input(spark, name, duck, conflict_dir):
     assert _verdict(spark, duck, name, conflict_dir), name
-
-
-@pytest.mark.parametrize("name", sorted(KNOWN_DIVERGENT))
-def test_boundary_membership_does_not_shrink_silently(
-    spark, name, duck, conflict_dir
-):
-    """If a boundary key starts AGREEING on conflicting input, the
-    set-semantics decision changed somewhere — re-open the policy in
-    this module's docstring rather than letting the boundary drift."""
-    assert not _verdict(spark, duck, name, conflict_dir), (
-        f"{name} now agrees on conflicting input — boundary changed"
-    )
 
 
 def test_upstream_recipe_restores_parity(spark, conflict_dir):

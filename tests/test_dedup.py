@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from reverse_etl_homebrew_spark.functions import text as TX
 from reverse_etl_homebrew_spark.operators import dedup as DD, similarity as SIM
 from reverse_etl_homebrew_spark.sources.catalog import load_table
 
@@ -108,6 +109,33 @@ def test_simhash_identical_docs_zero_hamming(spark, docs):
     pairs = DD.simhash_pairs(corpus).collect()
     hit = [p for p in pairs if p["a_id"] == 0 and p["b_id"] == 999999]
     assert hit and hit[0]["hamming"] == 0
+
+
+def test_simhash_fingerprint_votes_union_of_versions(spark):
+    """A doc_id delivered twice with different text votes each shingle
+    of the UNION of its versions once: a shingle both versions share
+    must not vote twice. Reference: the per-bit majority over the
+    distinct union's xxhash64 values, computed here in Python."""
+    a, b = "the quick brown fox jumps over", "the quick brown cat sleeps on"
+    df = spark.createDataFrame([(1, a), (1, b)], "doc_id long, text string")
+    got = DD.simhash_fingerprints(df).collect()[0]["sh"]
+    union = (
+        spark.createDataFrame([(a,), (b,)], "text string")
+        .select(
+            F.explode(
+                TX.char_ngrams_from(TX.char_array(TX.normalized_text(F.col("text"))), 4)
+            ).alias("g")
+        )
+        .distinct()
+        .select(F.xxhash64("g").alias("h"))
+    )
+    hs = [r["h"] for r in union.collect()]
+    want = sum(
+        1 << bit for bit in range(64) if 2 * sum((h >> bit) & 1 for h in hs) >= len(hs)
+    )
+    if want >= 1 << 63:  # as a signed long
+        want -= 1 << 64
+    assert got == want
 
 
 def test_ngram_jaccard_exact_dup_scores_one(spark, docs):

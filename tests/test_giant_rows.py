@@ -196,10 +196,14 @@ def test_arrow_batches_byte_bounded(spark):
 
 
 def test_cluster_conf_ships_byte_bounded_arrow():
-    from reverse_etl_homebrew_spark.session import cluster_conf
+    from reverse_etl_homebrew_spark.session import CODEGEN_CACHE_ENTRIES, cluster_conf
 
     conf = cluster_conf()
     assert "spark.sql.execution.arrow.maxBytesPerBatch" in conf
+    # the codegen posture rides along: each executor JVM sizes its own
+    # compiled-class cache, and class names carry no stage id
+    assert conf["spark.sql.codegen.cache.maxEntries"] == str(CODEGEN_CACHE_ENTRIES)
+    assert conf["spark.sql.codegen.useIdInClassName"] == "false"
 
 
 # ------------------------------------------------ sketch guard under poison
