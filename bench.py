@@ -92,12 +92,11 @@ HEAVY_ADDITIONS = [
     "containment-dedup",
     # r7c: the two end-to-end composites added late in round 7 — the
     # full Lloyd iteration (Arrow distance kernel) and the
-    # quality-policy survivorship dedup (clusters + ranking window) —
-    # plus the exact-Jaccard pair operator after its lineage-cut fix
-    # (13.4 s -> 2.4 s warm; the ledger keeps it honest)
+    # quality-policy survivorship dedup (clusters + ranking window);
+    # the exact-Jaccard pair operator is timed once, as the headline
+    # fuzzy-dedup (ngram-jaccard is the same builder)
     "kmeans-iterate",
     "dedup-survivorship",
-    "ngram-jaccard",
     # r8: the df-capped containment variant (the uncapped key's named
     # 100 TB lever, now an operator) and the two event-tier keys that
     # had correctness rows but no wall-time history

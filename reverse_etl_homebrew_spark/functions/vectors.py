@@ -188,26 +188,6 @@ def l2_norm(a: ColumnOrName, dim: int) -> Column:
     return F.sqrt(dot(a, a, dim))
 
 
-def cosine(a: ColumnOrName, b: ColumnOrName, dim: int) -> Column:
-    """Cosine similarity; NULL when either norm is zero."""
-    num = dot(a, b, dim)
-    den = l2_norm(a, dim) * l2_norm(b, dim)
-    return F.when(den > 0, num / den)
-
-
-def cosine_with_norms(
-    a: ColumnOrName, b: ColumnOrName, na: ColumnOrName, nb: ColumnOrName, dim: int
-) -> Column:
-    """Cosine from PRE-COMPUTED per-vector norms — for candidate-pair
-    scoring after a join, where ``cosine`` would recompute both norms
-    (2·dim multiply-adds + a sqrt) once per pair instead of once per
-    vector. Bit-identical to ``cosine``: the norm of a vector is the
-    same double whether computed before or after the join, and the
-    num/den expression is unchanged."""
-    den = _c(na) * _c(nb)
-    return F.when(den > 0, dot(a, b, dim) / den)
-
-
 def cosine_literal(a: ColumnOrName, q: Sequence[float]) -> Column:
     import math
 

@@ -85,17 +85,6 @@ def ambiguity_count(df: DataFrame, key: str) -> DataFrame:
     return df.groupBy(key).agg(F.count(F.lit(1)).alias("match_count"))
 
 
-def approx_distinct(df: DataFrame, col: str, rsd: float = 0.05) -> DataFrame:
-    """HyperLogLog++ approximate count-distinct (PODS 2021 anchor,
-    PAPERS.md): fixed-size sketch per partition, merged on the driver —
-    constant memory at any scale, vs a full shuffle for exact
-    countDistinct."""
-    return df.agg(
-        F.approx_count_distinct(col, rsd).alias("approx_distinct"),
-        F.countDistinct(col).alias("exact_distinct"),
-    )
-
-
 def exact_quantiles_twophase(
     df: DataFrame,
     group_col: str,

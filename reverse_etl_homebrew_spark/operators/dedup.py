@@ -912,14 +912,9 @@ def embedding_near_dup_pairs(
 
         n = df.count()
         planes = max(4, min(16, math.ceil(math.log2(max(n, 2) / 64))))
-    hyperplanes = _deterministic_planes(planes, dim)
-    from .vectorized import bucket_norm_pandas
+    from .similarity import _bucket_side, _deterministic_planes, _probe_array
 
-    # r15: fused bucket+norm kernel — the per-vector norm rides the
-    # same Arrow pass as the bucket (bit-identical left fold, see
-    # bucket_norm_pandas) instead of a dim-unrolled codegen fold
-    # projected next to the kernel.
-    bn = bucket_norm_pandas(hyperplanes, planes, tables=1)
+    hyperplanes = _deterministic_planes(planes, dim)
     # finite-geometry scope (r13 non-finite components class): the
     # masking kernel emits a NULL base bucket for corrupt vectors —
     # dropped here, before probes or anchors shuffle
@@ -933,31 +928,16 @@ def embedding_near_dup_pairs(
     # layout), so the pin is the local stand-in, same as
     # incremental_dedup's fingerprint pin.
     base = pin(
-        df.where(F.col(vec_col).isNotNull())
-        .select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("v"),
-        )
-        .withColumn("__bn", bn(F.col("v")))
-        .select(
-            "id",
-            "v",
-            F.col("__bn").getField("nrm").alias("nrm"),
-            F.element_at(F.col("__bn").getField("bs"), 1).alias("b0"),
-        )
-        .where(F.col("b0").isNotNull())
+        _bucket_side(
+            df, id_col, vec_col, hyperplanes, planes, 1, ("id", "v", "nrm", "b0")
+        ).where(F.col("b0").isNotNull())
     )
-    probes = [F.col("b0")] + [
-        F.col("b0").bitwiseXOR(F.lit(1 << i)) for i in range(planes)
-    ]
-    if probe_radius >= 2:
-        probes += [
-            F.col("b0").bitwiseXOR(F.lit((1 << i) | (1 << j)))
-            for i in range(planes)
-            for j in range(i)
-        ]
+    # the 1-flip probes are always joined (radius 0 behaves as 1)
     probed = base.select(
-        "id", "v", "nrm", F.explode(F.array(*probes)).alias("bucket")
+        "id",
+        "v",
+        "nrm",
+        F.explode(_probe_array("b0", planes, max(1, probe_radius))).alias("bucket"),
     )
     anchors = base.select(
         F.col("id").alias("b_id"),
@@ -983,20 +963,3 @@ def embedding_near_dup_pairs(
         .select(F.col("id").alias("a_id"), "b_id", F.round("cos", 6).alias("cos"))
     )
     return pairs
-
-
-def _deterministic_planes(k: int, dim: int):
-    """Fixed pseudo-random hyperplanes from a hash recurrence — no RNG
-    state, identical on every run/executor."""
-    planes = []
-    x = 2463534242
-    for _ in range(k):
-        p = []
-        for _ in range(dim):
-            # xorshift64
-            x ^= (x << 13) & 0xFFFFFFFFFFFFFFFF
-            x ^= x >> 7
-            x ^= (x << 17) & 0xFFFFFFFFFFFFFFFF
-            p.append(((x % 2001) - 1000) / 1000.0)
-        planes.append(p)
-    return planes

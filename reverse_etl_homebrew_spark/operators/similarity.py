@@ -2,17 +2,28 @@
 top-k literature anchors in PAPERS.md: EDBT 2020 incremental top-k,
 ICDE 2021 distributed top-k, SIGMOD 2020 adaptive similarity).
 
-Two tiers:
+Operators:
 
 - ``topk_brute``: exact scoring of every vector against the query —
   a map-side projection (no shuffle) + TakeOrderedAndProject. At
   100 TB this is one full scan but zero shuffle; per-partition heaps
   keep driver cost at O(k).
-- ``topk_lsh``: random-hyperplane bucketing bounds the scored
-  candidate set: score only vectors whose bucket matches the query's
-  bucket (multi-probe over 1-bit flips for recall). Trades recall for
-  a ~2^planes scan reduction — the scale path when the query rate is
-  high enough to matter.
+- ``topk_lsh`` / ``topk_ivf``: approximate top-k that bounds the
+  scored candidate set — by random-hyperplane bucket (multi-probe
+  over bit flips) or by IVF cell (the query's nearest centroids) —
+  then scores the survivors with ``topk_brute``.
+- ``knn_join``: k nearest right-vectors per left-vector, as a bucket
+  equi-join (``exact=True``: the bounded cross score).
+- ``build_ann_index`` / ``append_to_ann_index`` / ``incremental_knn``:
+  the persisted bucketed index and the per-batch probe against it.
+- ``bm25_topk``, ``tfidf_topterms``, ``trigram_lm_score``: the
+  lexical side of retrieval.
+
+The LSH spine every vector operator shares (``dedup.
+embedding_near_dup_pairs`` included) is written once, here: the
+plane constants (``_deterministic_planes``), the fused bucket+norm
+side (``_bucket_side``), the Hamming probe set (``_probe_masks`` /
+``_probe_array``) and the per-left top-k cut (``_top_k_per_left``).
 """
 
 from __future__ import annotations
@@ -24,7 +35,93 @@ from pyspark.sql import DataFrame, functions as F
 from ..functions import vectors as VEC
 from ..functions.exactmath import guard_dec_units, round6_dec6_over_int
 from ..session import pin
-from .dedup import _deterministic_planes
+
+
+def _deterministic_planes(k: int, dim: int):
+    """Fixed pseudo-random hyperplanes from a hash recurrence — no RNG
+    state, identical on every run/executor."""
+    planes = []
+    x = 2463534242
+    for _ in range(k):
+        p = []
+        for _ in range(dim):
+            # xorshift64
+            x ^= (x << 13) & 0xFFFFFFFFFFFFFFFF
+            x ^= x >> 7
+            x ^= (x << 17) & 0xFFFFFFFFFFFFFFFF
+            p.append(((x % 2001) - 1000) / 1000.0)
+        planes.append(p)
+    return planes
+
+
+def _probe_masks(planes: int, radius: int) -> list:
+    """XOR masks of the Hamming-``radius`` (≤ 2) multi-probe set over
+    ``planes`` sign bits: ``0``, the 1-bit flips, then the 2-bit
+    flips — (1 + p + p(p-1)/2) of 2^p buckets at radius 2. Flips touch
+    bits < ``planes`` only, so a multi-table tag above them survives."""
+    masks = [0]
+    if radius >= 1:
+        masks += [1 << i for i in range(planes)]
+    if radius >= 2:
+        masks += [(1 << i) | (1 << j) for i in range(planes) for j in range(i)]
+    return masks
+
+
+def _probe_array(bucket_col: str, planes: int, radius: int):
+    """The probe buckets of a materialized base-bucket column, as one
+    array column (XOR on a plain long — the bucket kernel's output is
+    an attribute boundary, so no sign fold is inlined per probe)."""
+    b = F.col(bucket_col)
+    return F.array(
+        *[b.bitwiseXOR(F.lit(m)) if m else b for m in _probe_masks(planes, radius)]
+    )
+
+
+def _bucket_side(
+    df: DataFrame, id_col: str, vec_col: str, hp, planes: int, tables: int, names
+) -> DataFrame:
+    """One LSH side: non-NULL vectors through the fused bucket+norm
+    kernel (operators/vectorized.bucket_norm_pandas) →
+    ``names = (id, v, nrm, bucket)``. One bucket per row at
+    ``tables == 1``; above that one row per table bucket (tagged per
+    table by the kernel). The kernel masks corrupt vectors to a NULL
+    bucket — the finite-geometry scope, filtered where each caller
+    needs it. NULL vectors are dropped first: they carry no geometry
+    and would poison the Arrow batch."""
+    from .vectorized import bucket_norm_pandas
+
+    id_out, v_out, nrm_out, bucket_out = names
+    bn = bucket_norm_pandas(hp, planes, tables)
+    bs = F.col("__bn").getField("bs")
+    return (
+        df.where(F.col(vec_col).isNotNull())
+        .select(F.col(id_col).alias(id_out), F.col(vec_col).alias(v_out))
+        .withColumn("__bn", bn(F.col(v_out)))
+        .select(
+            id_out,
+            v_out,
+            F.col("__bn").getField("nrm").alias(nrm_out),
+            (F.element_at(bs, 1) if tables == 1 else F.explode(bs)).alias(bucket_out),
+        )
+    )
+
+
+def _top_k_per_left(scored: DataFrame, k: int) -> DataFrame:
+    """The ``k`` best ``(l_id, r_id, score)`` per ``l_id`` (score
+    descending, ``r_id`` tie-break). The projection comes before the
+    ranking window: the window shuffles its input, and scored pairs
+    still carry both dim-length vector columns — stating it makes the
+    pairs × 2 × dim × 8 B saving a guarantee rather than an optimizer
+    courtesy."""
+    from pyspark.sql import Window as W
+
+    w = W.partitionBy("l_id").orderBy(F.desc("score"), F.col("r_id"))
+    return (
+        scored.select("l_id", "r_id", "score")
+        .withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= k)
+        .select("l_id", "r_id", "score")
+    )
 
 
 def topk_brute(
@@ -148,11 +245,7 @@ def topk_lsh(
     # multi-probe to Hamming radius 2: recall on near-orthogonal
     # neighbor sets stays useful while still scanning only
     # (1 + p + p(p-1)/2) of 2^p buckets
-    probe_buckets = (
-        [qb]
-        + [qb ^ (1 << i) for i in range(planes)]
-        + [qb ^ (1 << i) ^ (1 << j) for i in range(planes) for j in range(i)]
-    )
+    probe_buckets = [qb ^ m for m in _probe_masks(planes, 2)]
     from .vectorized import bucket_norm_pandas
 
     bn = bucket_norm_pandas(hp, planes, tables=1)
@@ -175,6 +268,38 @@ def topk_lsh(
     return topk_brute(
         cand, query, k, id_col, vec_col, pre_scoped=True, norm_col="__nrm"
     )
+
+
+def topk_ivf(
+    df: DataFrame,
+    query: Sequence[float],
+    centroids: Sequence[Sequence[float]],
+    k: int = 10,
+    n_probe: int = 2,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """IVF-flat approximate top-k: score only vectors whose cell is
+    among the query's ``n_probe`` nearest centroids (dot-product
+    argmax, numpy first-max order).
+
+    pre_scoped: the masking assign kernel gives corrupt vectors a NULL
+    cell, which isin() drops — re-scoping with a second inlined fold
+    pushed the candidate stage past janino's 64 KB method limit and it
+    ran interpreted (r14 optimization round)."""
+    import numpy as np
+
+    from .vectorized import ivf_assign_pandas
+
+    C = np.asarray([list(c) for c in centroids], dtype=np.float64)
+    q = np.asarray(list(query), dtype=np.float64)
+    probe_cells = [int(i) for i in (C @ q).argsort()[::-1][:n_probe]]
+    cand = (
+        ivf_assign_pandas(df, centroids, id_col, vec_col)
+        .filter(F.col("ivf_cell").isin(probe_cells))
+        .select(id_col, vec_col)
+    )
+    return topk_brute(cand, query, k, id_col, vec_col, pre_scoped=True)
 
 
 def knn_join(
@@ -224,42 +349,24 @@ def knn_join(
     standard ANN trade (multi-probe LSH; PAPERS.md anchors)."""
     import math
 
-    from pyspark.sql import Window as W
-
     if planes is None and not exact:
         n_right = right.count()
         planes = min(16, max(6, math.ceil(math.log2(max(n_right, 1) / 64 + 1))))
     # norms computed once per vector, not once per candidate pair —
-    # bit-identical score (see VEC.cosine_with_norms) — and, r15,
-    # computed INSIDE the bucketer kernel (bucket_norm_pandas): the
-    # vectors cross the Arrow boundary for the buckets anyway, so the
-    # norm there is one extra vectorized fold over bytes already in
-    # cache, where the old codegen fold re-built a dim-unrolled
-    # expression tree per side per query (driver plan-size cost) and
-    # paid a second element-wise pass in the JVM. Finite-geometry
-    # scope (r13 non-finite components class) is branch-specific: the
-    # bucketed branches inherit it from the MASKING kernel (corrupt
-    # rows get a NULL bucket, which no equi-join can match — an
-    # attribute-barrier form Catalyst cannot push back into a
-    # duplicated fold; measured free); the exact branch, which has no
-    # bucketer, gets it from the fused pair kernel's ``ok`` flag.
-    # Pair scoring in the Arrow kernel (explicit left fold — the same
-    # doubles as VEC.cosine_with_norms and the SQL oracles): candidate
-    # volume is pairs-per-bucket × probes, and the dim-unrolled codegen
-    # fold on that stage ran un-JIT'd (same finding as
-    # embedding_near_dup_pairs; see pair_cosine_pandas).
-    from .vectorized import pair_cosine_pandas
-
-    _cos = pair_cosine_pandas()
-    score_expr = F.round(
-        _cos(F.col("l_v"), F.col("r_v"), F.col("l_nrm"), F.col("r_nrm")), 6
-    )
-
-    def _side(df_, id_in, id_out, v_out):
-        return df_.where(F.col(vec_col).isNotNull()).select(
-            F.col(id_in).alias(id_out), F.col(vec_col).alias(v_out)
-        )
-
+    # bit-identical score (the norm of a vector is the same double
+    # before or after the join) — and, r15, computed INSIDE the
+    # bucketer kernel (bucket_norm_pandas): the vectors cross the
+    # Arrow boundary for the buckets anyway, so the norm there is one
+    # extra vectorized fold over bytes already in cache, where the old
+    # codegen fold re-built a dim-unrolled expression tree per side per
+    # query (driver plan-size cost) and paid a second element-wise pass
+    # in the JVM. Finite-geometry scope (r13 non-finite components
+    # class) is branch-specific: the bucketed path inherits it from the
+    # MASKING kernel (corrupt rows get a NULL bucket, which no
+    # equi-join can match — an attribute-barrier form Catalyst cannot
+    # push back into a duplicated fold; measured free); the exact
+    # branch, which has no bucketer, gets it from the fused pair
+    # kernel's ``ok`` flag.
     if exact:
         # r15: ONE fused Arrow kernel instead of three (two per-side
         # norm kernels + the pair cosine). The kernel
@@ -274,6 +381,11 @@ def knn_join(
         # per run → one (guide §4.1).
         from .vectorized import pair_cosine_flags_pandas
 
+        def _side(df_, id_in, id_out, v_out):
+            return df_.where(F.col(vec_col).isNotNull()).select(
+                F.col(id_in).alias(id_out), F.col(vec_col).alias(v_out)
+            )
+
         _cosf = pair_cosine_flags_pandas()
         le = _side(left, left_id, "l_id", "l_v")
         re = _side(right, right_id, "r_id", "r_v")
@@ -283,118 +395,50 @@ def knn_join(
             .where(F.col("__cf").getField("ok"))
             .withColumn("score", F.round(F.col("__cf").getField("score"), 6))
         )
-    elif tables == 1:
-        # single-table: Arrow matmul bucket (same bit order and the
-        # same signs as the SQL oracle's fold; see hybrid_fold_signs)
-        # + multi-probe XOR flips on the
-        # materialized base bucket column. NOT the codegen sign fold:
-        # CollapseProject inlines a projected fold into every probe
-        # expression — planes×dim×(1+p+p(p-1)/2) expression nodes ran
-        # un-JIT'd (measured 13.7 s steady-state at sf0.1 for a
-        # 2 000-row corpus; Arrow bucket path: see bench)
-        from .vectorized import bucket_norm_pandas
-
-        dim = VEC.infer_dim(right, vec_col)
-        hp = _deterministic_planes(planes, dim)
-        bn = bucket_norm_pandas(hp, planes, tables=1)
-        r = (
-            _side(right, right_id, "r_id", "r_v")
-            .withColumn("__bn", bn(F.col("r_v")))
-            .select(
-                "r_id",
-                "r_v",
-                F.col("__bn").getField("nrm").alias("r_nrm"),
-                F.element_at(F.col("__bn").getField("bs"), 1).alias("__bucket"),
-            )
-        )
-        l = (
-            _side(left, left_id, "l_id", "l_v")
-            .withColumn("__bn", bn(F.col("l_v")))
-            .select(
-                "l_id",
-                "l_v",
-                F.col("__bn").getField("nrm").alias("l_nrm"),
-                F.element_at(F.col("__bn").getField("bs"), 1).alias("__b0"),
-            )
-        )
-        probes = [F.col("__b0")]
-        if probe_radius >= 1:
-            probes += [
-                F.col("__b0").bitwiseXOR(F.lit(1 << i)) for i in range(planes)
-            ]
-        if probe_radius >= 2:
-            probes += [
-                F.col("__b0").bitwiseXOR(F.lit((1 << i) | (1 << j)))
-                for i in range(planes)
-                for j in range(i)
-            ]
-        l = (
-            l.withColumn("__bucket", F.explode(F.array_distinct(F.array(*probes))))
-            .drop("__b0")
-        )
-        # equi-join on the bucket key: each right row lives in exactly
-        # one bucket and probe buckets are distinct, so a (l, r) pair
-        # matches at most once — no post-join dedup needed
-        scored = l.join(r, "__bucket").withColumn("score", score_expr)
     else:
-        # multi-table: L·p flat sign folds in one projection overflow
-        # the JIT method budget and run interpreted (measured 6×
-        # slower) — compute all table buckets in one Arrow matmul
-        from .vectorized import bucket_norm_pandas
+        # Buckets from the Arrow matmul kernel (same bit order and the
+        # same signs as the SQL oracle's fold; see hybrid_fold_signs),
+        # all L tables in one pass, with the multi-probe XOR flips on
+        # the materialized base bucket column. NOT the codegen sign
+        # fold: CollapseProject inlines a projected fold into every
+        # probe expression — planes×dim×(1+p+p(p-1)/2) expression
+        # nodes ran un-JIT'd (measured 13.7 s steady-state at sf0.1
+        # for a 2 000-row corpus), and L·p flat folds in one projection
+        # overflow the JIT method budget (measured 6× slower).
+        from .vectorized import pair_cosine_pandas
 
         dim = VEC.infer_dim(right, vec_col)
-        hp_all = _deterministic_planes(planes * tables, dim)
-        bn = bucket_norm_pandas(hp_all, planes, tables)
-        r = (
-            _side(right, right_id, "r_id", "r_v")
-            .withColumn("__bn", bn(F.col("r_v")))
-            .select(
-                "r_id",
-                "r_v",
-                F.col("__bn").getField("nrm").alias("r_nrm"),
-                F.explode(F.col("__bn").getField("bs")).alias("__bucket"),
-            )
+        hp = _deterministic_planes(planes * tables, dim)
+        r = _bucket_side(
+            right, right_id, vec_col, hp, planes, tables,
+            ("r_id", "r_v", "r_nrm", "__bucket"),
         )
-        l = (
-            _side(left, left_id, "l_id", "l_v")
-            .withColumn("__bn", bn(F.col("l_v")))
-            .select(
-                "l_id",
-                "l_v",
-                F.col("__bn").getField("nrm").alias("l_nrm"),
-                F.explode(F.col("__bn").getField("bs")).alias("__tb"),
-            )
+        l = _bucket_side(
+            left, left_id, vec_col, hp, planes, tables,
+            ("l_id", "l_v", "l_nrm", "__b0"),
         )
-        probes = [F.col("__tb")]
-        if probe_radius >= 1:
-            # flips touch bits < planes only, so the table tag survives
-            probes += [
-                F.col("__tb").bitwiseXOR(F.lit(1 << i)) for i in range(planes)
-            ]
-        if probe_radius >= 2:
-            probes += [
-                F.col("__tb").bitwiseXOR(F.lit((1 << i) | (1 << j)))
-                for i in range(planes)
-                for j in range(i)
-            ]
         l = l.withColumn(
-            "__bucket", F.explode(F.array_distinct(F.array(*probes)))
-        ).drop("__tb")
-        # a pair can match in several tables → dedup before scoring
-        cand = l.join(r, "__bucket").dropDuplicates(["l_id", "r_id"])
-        scored = cand.withColumn("score", score_expr)
-    w = W.partitionBy("l_id").orderBy(F.desc("score"), F.col("r_id"))
-    return (
-        # Explicit projection before the ranking window: the window
-        # shuffles its input, and scored still carries both dim-length
-        # vector columns. ColumnPruning drops them today; stating the
-        # projection makes the pairs × 2 × dim × 8 B shuffle saving a
-        # guarantee rather than an optimizer courtesy.
-        scored.select("l_id", "r_id", "score")
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("l_id", "r_id", "score")
-    )
+            "__bucket",
+            F.explode(F.array_distinct(_probe_array("__b0", planes, probe_radius))),
+        ).drop("__b0")
+        # each right row lives in one bucket per table and a left row's
+        # probe buckets are distinct, so at L = 1 a (l, r) pair matches
+        # at most once; with L > 1 it can match in several tables →
+        # dedup before scoring
+        cand = l.join(r, "__bucket")
+        if tables > 1:
+            cand = cand.dropDuplicates(["l_id", "r_id"])
+        # Pair scoring in the Arrow kernel (explicit left fold — the
+        # same doubles as the SQL oracles): candidate volume is
+        # pairs-per-bucket × probes, and the dim-unrolled codegen fold
+        # on that stage ran un-JIT'd (same finding as
+        # embedding_near_dup_pairs; see pair_cosine_pandas).
+        _cos = pair_cosine_pandas()
+        scored = cand.withColumn(
+            "score",
+            F.round(_cos(F.col("l_v"), F.col("r_v"), F.col("l_nrm"), F.col("r_nrm")), 6),
+        )
+    return _top_k_per_left(scored, k)
 
 
 def build_ann_index(
@@ -417,27 +461,11 @@ def build_ann_index(
     NULL vectors carry no geometry and are excluded (the r12
     NULL-embedding degrade contract — a NULL row would otherwise
     poison the Arrow bucketer batch-wide)."""
-    from .vectorized import bucket_norm_pandas
-
     dim = VEC.infer_dim(corpus, vec_col)
     hp = _deterministic_planes(planes, dim)
-    # r15: fused bucket+norm kernel — the norm used to be a
-    # dim-unrolled codegen fold projected next to the bucketer; the
-    # fused kernel computes it in the same Arrow pass (bit-identical
-    # left fold, see bucket_norm_pandas)
-    bn = bucket_norm_pandas(hp, planes, tables=1)
     out = (
-        corpus.where(F.col(vec_col).isNotNull())
-        .select(
-            F.col(id_col).alias("r_id"),
-            F.col(vec_col).alias("r_v"),
-        )
-        .withColumn("__bn", bn(F.col("r_v")))
-        .select(
-            "r_id",
-            "r_v",
-            F.col("__bn").getField("nrm").alias("r_nrm"),
-            F.element_at(F.col("__bn").getField("bs"), 1).alias("bucket"),
+        _bucket_side(
+            corpus, id_col, vec_col, hp, planes, 1, ("r_id", "r_v", "r_nrm", "bucket")
         )
         # finite-geometry scope (r13): the masking kernel emits a
         # NULL bucket for corrupt vectors — excluded here so the
@@ -605,9 +633,7 @@ def incremental_knn(
     ranks the index per bucket — the local measurement form. The
     better lever when semantics allow it is collapsing near-dup
     vectors BEFORE indexing (the probe measures both)."""
-    from pyspark.sql import Window as W
-
-    from .vectorized import bucket_norm_pandas, pair_cosine_pandas
+    from .vectorized import pair_cosine_pandas
 
     dim = getattr(ann_index, "_sg_ann_dim", 0) or VEC.infer_dim(
         ann_index, "r_v"
@@ -630,40 +656,20 @@ def incremental_knn(
         # on an already-capped index (the cap is idempotent)
         ann_index = _cap_buckets(ann_index, bucket_cap, k=k)
     hp = _deterministic_planes(planes, dim)
-    # r15: fused bucket+norm kernel (see bucket_norm_pandas) — the
-    # batch norm rides the same Arrow pass as the bucket instead of a
-    # dim-unrolled codegen fold
-    bn = bucket_norm_pandas(hp, planes, tables=1)
     l = (
-        new_batch.where(F.col(vec_col).isNotNull())
-        .select(
-            F.col(id_col).alias("l_id"),
-            F.col(vec_col).alias("l_v"),
-        )
-        .withColumn("__bn", bn(F.col("l_v")))
-        .select(
-            "l_id",
-            "l_v",
-            F.col("__bn").getField("nrm").alias("l_nrm"),
-            F.element_at(F.col("__bn").getField("bs"), 1).alias("__b0"),
+        _bucket_side(
+            new_batch, id_col, vec_col, hp, planes, 1, ("l_id", "l_v", "l_nrm", "__b0")
         )
         # finite-geometry scope (r13): corrupt batch vectors carry a
         # NULL base bucket from the masking kernel — dropped before
         # the probe explode so they never shuffle
         .where(F.col("__b0").isNotNull())
+        .withColumn(
+            "bucket",
+            F.explode(F.array_distinct(_probe_array("__b0", planes, probe_radius))),
+        )
+        .drop("__b0")
     )
-    probes = [F.col("__b0")]
-    if probe_radius >= 1:
-        probes += [F.col("__b0").bitwiseXOR(F.lit(1 << i)) for i in range(planes)]
-    if probe_radius >= 2:
-        probes += [
-            F.col("__b0").bitwiseXOR(F.lit((1 << i) | (1 << j)))
-            for i in range(planes)
-            for j in range(i)
-        ]
-    l = l.withColumn(
-        "bucket", F.explode(F.array_distinct(F.array(*probes)))
-    ).drop("__b0")
     # each index row lives in exactly one bucket and probe buckets are
     # distinct → a (l, r) pair matches at most once, no post-join dedup
     _cos = pair_cosine_pandas()
@@ -671,15 +677,7 @@ def incremental_knn(
         "score",
         F.round(_cos(F.col("l_v"), F.col("r_v"), F.col("l_nrm"), F.col("r_nrm")), 6),
     )
-    w = W.partitionBy("l_id").orderBy(F.desc("score"), F.col("r_id"))
-    return (
-        # project before the ranking window so the shuffle never
-        # carries the two dim-length vector columns (knn_join lesson)
-        scored.select("l_id", "r_id", "score")
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("l_id", "r_id", "score")
-    )
+    return _top_k_per_left(scored, k)
 
 
 def bm25_topk(

@@ -239,27 +239,6 @@ def ivf_assign_pandas(
     ).where(F.col("ivf_cell").isNotNull())
 
 
-def topk_ivf(
-    df: DataFrame,
-    query: Sequence[float],
-    centroids: Sequence[Sequence[float]],
-    k: int = 10,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF-flat approximate top-k: score only vectors whose cell is
-    among the query's ``n_probe`` nearest centroids."""
-    import numpy as np
-
-    C = np.asarray([list(c) for c in centroids], dtype=np.float64)
-    q = np.asarray(list(query), dtype=np.float64)
-    probe_cells = [int(i) for i in (C @ q).argsort()[::-1][:n_probe]]
-    assigned = ivf_assign_pandas(df, centroids, id_col, vec_col)
-    cand = assigned.filter(F.col("ivf_cell").isin(probe_cells)).select(id_col, vec_col)
-    return topk_pandas(cand, query, k, id_col, vec_col)
-
-
 def pair_cosine_pandas():
     """Scalar Pandas UDF scoring CANDIDATE PAIRS: cosine of two vector
     columns given their precomputed norms, the dot as the exact left
@@ -501,7 +480,7 @@ def train_centroids(
     """Offline-trained IVF centroids via MLlib KMeans — the production
     geometry path behind the same return shape as
     ``deterministic_centroids`` (a list of dense float lists, usable
-    directly by ``ivf_assign_pandas`` / ``topk_ivf``).
+    directly by ``ivf_assign_pandas`` / ``similarity.topk_ivf``).
 
     KMeans is a distributed Spark job (k-means|| init, partial
     aggregation per iteration), so training scales with the corpus;

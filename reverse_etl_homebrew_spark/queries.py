@@ -34,10 +34,15 @@ ORACLE: Dict[str, str] = {}
 
 def register(name: str, sql: str | None = None):
     def deco(fn: QueryFn) -> QueryFn:
+        # stacked registrations name ONE builder (the plan is the same
+        # under every name), so unwrap instead of wrapping twice
+        fn = getattr(fn, "__wrapped__", fn)
+
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             normalize_session(spark)
             return fn(spark, sf_dir)
 
+        wrapped.__wrapped__ = fn
         QUERIES[name] = wrapped
         if sql is not None:
             ORACLE[name] = sql
@@ -376,17 +381,20 @@ def q_tiered_match_join(spark, sf_dir):
     return J.tiered_match_join(o, tiers).select("o_orderkey", "resolved_id")
 
 
-@register(
-    "anti-join",
-    sql="""
+_ANTI_JOIN_SQL = """
     SELECT o_orderkey, o_custkey FROM orders o
     WHERE NOT EXISTS (SELECT 1 FROM customer c
                       WHERE c.c_custkey = o.o_custkey AND c.c_acctbal > 9000)
-    """,
-)
+    """
+
+
+@register("roi-patient-anti-join", sql=_ANTI_JOIN_SQL)
+@register("anti-join", sql=_ANTI_JOIN_SQL)
 def q_anti_join(spark, sf_dir):
-    """Unresolved-parent quarantine branch (roi-patient anti-join,
-    main.py:743-774).
+    """Unresolved-parent quarantine branch (main.py:743-774): rows
+    whose parent cannot be resolved → DLQ, as a left-anti against the
+    resolvable-parent set. Registered twice: ``anti-join`` and, under
+    the reference's branch name, ``roi-patient-anti-join``.
 
     Oracle is NOT EXISTS, not NOT IN: Spark's left_anti has NOT
     EXISTS semantics (a NULL-key probe row matches nothing, so it is

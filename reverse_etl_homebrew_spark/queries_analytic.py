@@ -356,12 +356,8 @@ def q_topk_similarity_ivf(spark, sf_dir):
     orders above summation-order noise. The numpy SCORING path stays
     covered by topk-similarity-pandas (rows-only: pairwise-summation
     rounding is genuinely not fold-reproducible)."""
-    from .operators.similarity import topk_brute
-    from .operators.vectorized import ivf_assign_pandas
-
-    import numpy as np
-
     from .functions import vectors as VEC
+    from .operators.similarity import topk_ivf
 
     emb = _t(spark, sf_dir, "embeddings")
     # NULL-embedding cell seeds are skipped on BOTH engines (r12, the
@@ -381,17 +377,7 @@ def q_topk_similarity_ivf(spark, sf_dir):
     if not cents:
         cents = [[0.0] * len(query)]
         found = False
-    C = np.asarray(cents)
-    probe_cells = [int(i) for i in (C @ np.asarray(query)).argsort()[::-1][:3]]
-    assigned = ivf_assign_pandas(emb, cents)
-    cand = assigned.filter(F.col("ivf_cell").isin(probe_cells)).select(
-        "vec_id", "embedding"
-    )
-    # pre_scoped: the masking assign kernel gave corrupt vectors a
-    # NULL cell, which isin() dropped — re-scoping with a second
-    # inlined fold pushed the candidate stage past janino's 64 KB
-    # method limit and it ran interpreted (r14 optimization round)
-    out = topk_brute(cand, query, k=10, pre_scoped=True)
+    out = topk_ivf(emb, query, cents, k=10, n_probe=3)
     return out if found else out.where(F.lit(False))
 
 

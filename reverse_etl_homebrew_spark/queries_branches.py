@@ -368,30 +368,6 @@ def q_ambiguity_multi(spark, sf_dir):
 
 
 @register(
-    "roi-patient-anti-join",
-    sql="""
-    SELECT o_orderkey, o_custkey FROM orders o
-    WHERE NOT EXISTS (SELECT 1 FROM customer c
-                      WHERE c.c_custkey = o.o_custkey AND c.c_acctbal > 9000)
-    """,
-)
-def q_roi_patient_anti_join(spark, sf_dir):
-    """ROIs whose patient cannot be resolved → DLQ branch
-    (main.py:743-774): left-anti against the resolvable-patient set.
-
-    Oracle is NOT EXISTS (= Spark left_anti): a NULL-key ROI cannot
-    resolve and belongs in the DLQ; SQL NOT IN would silently drop it
-    (r11 NULL-key probe)."""
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    resolvable = (
-        _t(spark, sf_dir, "customer")
-        .filter(F.col("c_acctbal") > 9000)
-        .select(F.col("c_custkey").alias("o_custkey"))
-    )
-    return J.anti_join(o, resolvable, ["o_custkey"])
-
-
-@register(
     "threetier-composite",
     sql="""
     SELECT o_orderkey,
@@ -569,7 +545,7 @@ def _similarity_join_sql() -> str:
     cosine ≈ 0.5 sign-LSH recall is genuinely not exhaustive, so a
     brute-force oracle would mismatch by design; this one checks that
     the pruning computes exactly what it claims)."""
-    from .operators.dedup import _deterministic_planes
+    from .operators.similarity import _deterministic_planes
     from .queries_text import _bucket_sql
     from .sqlfrags import _DOT_SQL, FINITE_VEC_SQL
 

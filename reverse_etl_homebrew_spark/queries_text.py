@@ -262,7 +262,7 @@ def q_knn_join(spark, sf_dir):
 
 
 def _knn_join_tables_sql(tables: int = 3, planes: int = 6) -> str:
-    from .operators.dedup import _deterministic_planes
+    from .operators.similarity import _deterministic_planes
 
     hp_all = _deterministic_planes(planes * tables, 64)
     eqs = []
@@ -307,21 +307,29 @@ def q_knn_join_tables(spark, sf_dir):
     return SIM.knn_join(left, emb, k=3, planes=6, tables=3, probe_radius=0)
 
 
-def _knn_join_lsh_sql() -> str:
-    from .operators.dedup import _deterministic_planes
+def _bucketed_knn_sql(l_where: str, r_where: str) -> str:
+    """Oracle of the bucketed 3-NN join (6 planes, Hamming-radius-2
+    probes) from the ``l`` rows of ``l_where`` to the ``r`` rows of
+    ``r_where``: both sides' sign buckets recomputed from the same
+    deterministic planes, the probe set as bit_count(xor(bl, br)) <= 2."""
+    from .operators.similarity import _deterministic_planes
 
     planes = _deterministic_planes(6, 64)
     b = _bucket_sql("embedding", planes)
     dot = _DOT_SQL.format(a="l.l_v", b="r.r_v")
     nl = _DOT_SQL.format(a="l.l_v", b="l.l_v")
     nr = _DOT_SQL.format(a="r.r_v", b="r.r_v")
+
+    def where(pred):
+        return " AND ".join(p for p in (pred, FINITE_VEC_SQL.format(c="embedding")) if p)
+
     return f"""
     WITH l AS (
       SELECT vec_id AS l_id, embedding AS l_v, CAST({b} AS BIGINT) AS bl
-      FROM embeddings WHERE vec_id < 200 AND {FINITE_VEC_SQL.format(c='embedding')}
+      FROM embeddings WHERE {where(l_where)}
     ), r AS (
       SELECT vec_id AS r_id, embedding AS r_v, CAST({b} AS BIGINT) AS br
-      FROM embeddings WHERE {FINITE_VEC_SQL.format(c='embedding')}
+      FROM embeddings WHERE {where(r_where)}
     ), scored AS (
       SELECT l_id, r_id,
              ROUND(CASE WHEN sqrt({nl}) * sqrt({nr}) > 0
@@ -333,7 +341,7 @@ def _knn_join_lsh_sql() -> str:
     """
 
 
-@register("knn-join-lsh", sql=_knn_join_lsh_sql())
+@register("knn-join-lsh", sql=_bucketed_knn_sql("vec_id < 200", ""))
 def q_knn_join_lsh(spark, sf_dir):
     """Scale-safe default k-NN join: both sides hyperplane-bucketed,
     candidates scored only inside matching buckets (equi-join on the
@@ -341,39 +349,18 @@ def q_knn_join_lsh(spark, sf_dir):
     the SQL recomputes both sides' sign buckets from the same
     deterministic planes and expresses the radius-2 probe set as
     bit_count(xor(bl, br)) <= 2, verifying the approximate candidate
-    semantics pair-for-pair, not just row counts."""
+    semantics pair-for-pair, not just row counts. planes=6 is the
+    oracle's plane count: the operator's auto-size would pick 7 from
+    4 033 right rows on and diverge from it."""
     emb = _t(spark, sf_dir, "embeddings")
     left = emb.filter(F.col("vec_id") < 200)
-    return SIM.knn_join(left, emb, k=3)
+    return SIM.knn_join(left, emb, k=3, planes=6)
 
 
-def _incremental_knn_sql() -> str:
-    from .operators.dedup import _deterministic_planes
-
-    planes = _deterministic_planes(6, 64)
-    b = _bucket_sql("embedding", planes)
-    dot = _DOT_SQL.format(a="l.l_v", b="r.r_v")
-    nl = _DOT_SQL.format(a="l.l_v", b="l.l_v")
-    nr = _DOT_SQL.format(a="r.r_v", b="r.r_v")
-    return f"""
-    WITH l AS (
-      SELECT vec_id AS l_id, embedding AS l_v, CAST({b} AS BIGINT) AS bl
-      FROM embeddings WHERE vec_id % 10 = 0 AND {FINITE_VEC_SQL.format(c='embedding')}
-    ), r AS (
-      SELECT vec_id AS r_id, embedding AS r_v, CAST({b} AS BIGINT) AS br
-      FROM embeddings WHERE vec_id % 10 <> 0 AND {FINITE_VEC_SQL.format(c='embedding')}
-    ), scored AS (
-      SELECT l_id, r_id,
-             ROUND(CASE WHEN sqrt({nl}) * sqrt({nr}) > 0
-                        THEN {dot} / (sqrt({nl}) * sqrt({nr})) END, 6) AS score
-      FROM l JOIN r ON bit_count(xor(l.bl, r.br)) <= 2
-    )
-    SELECT l_id, r_id, score FROM scored
-    QUALIFY row_number() OVER (PARTITION BY l_id ORDER BY score DESC, r_id) <= 3
-    """
-
-
-@register("incremental-knn", sql=_incremental_knn_sql())
+@register(
+    "incremental-knn",
+    sql=_bucketed_knn_sql("vec_id % 10 = 0", "vec_id % 10 <> 0"),
+)
 def q_incremental_knn(spark, sf_dir):
     """Vector-tier incremental k-NN (r12, the judge's #5): the
     vec_id % 10 = 0 slice plays the NEW ingest batch, the rest the
@@ -460,14 +447,17 @@ WHERE text IS NOT NULL
 # survive on the engine side). r11 NULL-key probe.
 
 
+@register("ngram-jaccard", sql=_EXACT_JACCARD_SQL)
 @register("fuzzy-dedup", sql=_EXACT_JACCARD_SQL)
 def q_fuzzy_dedup(spark, sf_dir):
     """Near-duplicate pairs: exact word-3-gram Jaccard ≥ 0.5 over every
-    pair sharing a gram — the same operator call as `ngram-jaccard`,
-    under the dedup tier's name. The oracle is the BRUTE-FORCE exact
-    Jaccard pair set, and the gram-overlap join finds every pair with
-    a shared gram, so recall and precision are both 1.0 by
-    construction."""
+    pair sharing a gram, with a hot-shingle document-frequency cap —
+    registered as `fuzzy-dedup` (the dedup tier's name) and as
+    `ngram-jaccard`. The oracle is the BRUTE-FORCE exact Jaccard pair
+    set, and the gram-overlap join finds every pair with a shared
+    gram, so recall and precision are both 1.0 by construction (and
+    value-for-value: identical integer inter/union sizes divide to
+    bit-identical doubles)."""
     return DD.ngram_jaccard_pairs(_corpus_nn(spark, sf_dir), threshold=0.5)
 
 
@@ -830,15 +820,6 @@ def q_simhash_dedup(spark, sf_dir):
     return DD.simhash_pairs(_corpus(spark, sf_dir))
 
 
-@register("ngram-jaccard", sql=_EXACT_JACCARD_SQL)
-def q_ngram_jaccard(spark, sf_dir):
-    """Exact word-3-gram Jaccard pairs ≥ 0.5 with a hot-shingle
-    document-frequency cap — oracle-checked pair-for-pair (and
-    value-for-value: identical integer inter/union sizes divide to
-    bit-identical doubles) against the brute-force SQL Jaccard."""
-    return DD.ngram_jaccard_pairs(_corpus_nn(spark, sf_dir), threshold=0.5)
-
-
 def _planted_embeddings(spark, sf_dir, n=100):
     """embeddings ∪ deterministically perturbed copies of the first
     ``n`` vectors (ids offset by 1e6). Random vectors contain no
@@ -916,7 +897,7 @@ def q_fuzzy_dedup_clusters(spark, sf_dir):
 
 
 def _topk_lsh_sql() -> str:
-    from .operators.dedup import _deterministic_planes
+    from .operators.similarity import _deterministic_planes
 
     planes = _deterministic_planes(6, 64)
     be = _bucket_sql("e.embedding", planes)
@@ -1258,7 +1239,7 @@ def q_corpus_prep_pipeline(spark, sf_dir):
 
 
 def _corpus_refresh_sql(span_n: int = 8, planes: int = 6, k: int = 3) -> str:
-    from .operators.dedup import _deterministic_planes
+    from .operators.similarity import _deterministic_planes
 
     hp = _deterministic_planes(planes, 64)
     b_l = _bucket_sql("e.embedding", hp)

@@ -262,7 +262,7 @@ def test_bucketer_masks_poison_to_null_bucket(spark):
     loud kernel guard + input-side fold filters measured 1.2-2.3× on
     the hot similarity keys; the mask is an attribute barrier
     Catalyst cannot push back into a duplicated fold.)"""
-    from reverse_etl_homebrew_spark.operators.dedup import (
+    from reverse_etl_homebrew_spark.operators.similarity import (
         _deterministic_planes,
     )
     from reverse_etl_homebrew_spark.operators.vectorized import (
@@ -312,7 +312,7 @@ def _kernels():
     import pandas as pd
 
     from reverse_etl_homebrew_spark.operators import vectorized as VZ
-    from reverse_etl_homebrew_spark.operators.dedup import _deterministic_planes
+    from reverse_etl_homebrew_spark.operators.similarity import _deterministic_planes
 
     def cell(x):
         if x is None or (isinstance(x, float) and math.isnan(x)):

@@ -50,7 +50,7 @@ def test_ivf_topk_contains_query_and_overlaps_exact(spark, emb, query_vec):
     exact = [r["vec_id"] for r in SIM.topk_brute(emb, query_vec, k=10).collect()]
     approx = [
         r["vec_id"]
-        for r in VZ.topk_ivf(emb, query_vec, cents, k=10, n_probe=3).collect()
+        for r in SIM.topk_ivf(emb, query_vec, cents, k=10, n_probe=3).collect()
     ]
     assert 0 in approx  # the query vector itself
     assert len(set(exact) & set(approx)) >= 2
@@ -87,7 +87,7 @@ def test_trained_centroids_beat_hash_centroids(spark):
             exact = {r["vec_id"] for r in SIM.topk_brute(df, q, k=10).collect()}
             approx = {
                 r["vec_id"]
-                for r in VZ.topk_ivf(df, q, cents, k=10, n_probe=1).collect()
+                for r in SIM.topk_ivf(df, q, cents, k=10, n_probe=1).collect()
             }
             total += len(exact & approx) / len(exact)
         return total / 4
@@ -105,6 +105,10 @@ def test_knn_join_default_is_not_a_cross_join(spark, emb):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
+    # one bucket kernel per side plus the pair kernel; at L = 1 a pair
+    # matches once, so no dedup aggregate
+    assert plan.count("ArrowEvalPython") == 3, plan
+    assert "Aggregate(" not in plan, plan
     # exact=True keeps the documented cross shape for bounded batches
     bounded = SIM.knn_join(emb.limit(5), emb, k=3, exact=True)
     xplan = bounded._jdf.queryExecution().executedPlan().toString()
@@ -128,6 +132,12 @@ def test_knn_join_multi_table_recall(spark, emb):
     assert recall >= 0.2, f"multi-table recall too low: {recall:.2f}"
     plan = multi._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan
+    # after collect() AQE prints the final plan above the initial one
+    plan = plan.split("== Initial Plan ==")[0]
+    # the same path as L = 1 (all tables' buckets from one kernel pass
+    # per side, plus the pair kernel) and the cross-table dedup aggregate
+    assert plan.count("ArrowEvalPython") == 3, plan
+    assert "Aggregate(key=[l_id" in plan, plan
     assert "CartesianProduct" not in plan
 
 
@@ -313,7 +323,7 @@ def test_arrow_bucketer_matches_codegen_sign_fold(spark):
     from reverse_etl_homebrew_spark.functions.vectors import (
         random_hyperplane_signs,
     )
-    from reverse_etl_homebrew_spark.operators.dedup import _deterministic_planes
+    from reverse_etl_homebrew_spark.operators.similarity import _deterministic_planes
     from reverse_etl_homebrew_spark.operators.vectorized import (
         bucket_norm_pandas,
     )
