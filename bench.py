@@ -257,33 +257,6 @@ def main() -> None:
             spark.catalog.clearCache()
         timings[name] = round(statistics.median(samples), 4)
 
-    # plan-variant datapoint: the near-dup pair join with an
-    # auto-sized bucket space (the production default at scale) vs the
-    # registered query's oracle-pinned 8 planes above — records what
-    # right-sizing the bucket count buys at this SF.
-    def _simjoin_auto(spark, sf):
-        from reverse_etl_homebrew_spark.operators import dedup as DD
-        from reverse_etl_homebrew_spark.queries_text import _planted_embeddings
-
-        return DD.embedding_near_dup_pairs(
-            _planted_embeddings(spark, sf), threshold=0.5, planes=None
-        )
-
-    gc.collect()
-    _simjoin_auto(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    gc.collect()
-    spark.catalog.clearCache()
-    samples = []
-    for _ in range(REPS):
-        t0 = time.perf_counter()
-        _simjoin_auto(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        samples.append(time.perf_counter() - t0)
-        gc.collect()
-        spark.catalog.clearCache()
-    plan_variants = {
-        "similarity-join[auto-planes]": round(statistics.median(samples), 4)
-    }
-
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     try:
         sf_val = float(sf)
@@ -306,9 +279,6 @@ def main() -> None:
         # here, so a slow round can be told apart from a regression
         "loadavg_start": loadavg_start,
         "loadavg": [round(x, 2) for x in os.getloadavg()],
-        # labeled plan-variant rows, kept OUT of "queries"/"value" so
-        # round-over-round totals stay comparable
-        "plan_variants": plan_variants,
         # 1-min load at each key's first timed sample — the
         # self-adjudication channel for contention-vs-regression
         "load1": per_key_load,

@@ -209,7 +209,7 @@ def builders(spark, sf_dir, pin: bool = False):
 
     def knn_lsh():
         left = embs.filter(F.col("vec_id") % 1_000_000 < 200)
-        return knn_join(left, embs, k=3, planes=None)
+        return knn_join(left, embs, k=3, planes=6)
 
     return {
         "hh-by-group-10x": hh_by_group,

@@ -24,9 +24,9 @@ r13 extension (VERDICT r12 #5 — the multiplicative cell): the r12
 cells ran at planes=6, where a radius-2 probe covers 22/64 = 34% of
 the bucket space and the BASELINE candidate load buries the hot
 cell's contribution (7.3x concentration read noise-flat). Production
-widens planes with the corpus (knn_join's auto-sizing: ~64
-rows/bucket), and at production width the hot cell DOMINATES: all
-hot vectors share one bucket regardless of plane count, so clean
+widens planes with the corpus (~64 rows/bucket), and at production
+width the hot cell DOMINATES: all hot vectors share one bucket
+regardless of plane count, so clean
 candidates shrink as 2^-planes while the hot-batch x hot-bucket cell
 stays 0.3M x 0.3N. The `multiplicative` arm plants exactly that —
 planes=10 (the corpus-proportional width here), hot fractions

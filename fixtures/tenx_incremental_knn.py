@@ -13,8 +13,8 @@ derived per probe):
    batch-sized).
 2. INDEX 1x -> 10x with the batch fixed: wall growth must be bounded
    by the index SCAN plus the extra in-bucket candidates (10x corpus
-   at FIXED planes means ~10x rows per bucket — the auto-sizing rule
-   in knn_join would widen planes instead; here planes stay fixed so
+   at FIXED planes means ~10x rows per bucket — a bucket space sized
+   to the corpus would widen planes instead; here planes stay fixed so
    the oracle algebra is unchanged, making this an upper bound on
    the bucketed-layout cost).
 

@@ -118,14 +118,6 @@ def bool_normalize(col: ColumnOrName) -> Column:
     )
 
 
-def bool_normalize_numeric(col: ColumnOrName) -> Column:
-    """Numeric-typed variant: value != 0 → 'true' (main.py:119-120)."""
-    c = _c(col)
-    return F.when(c.isNull(), F.lit(None).cast("string")).when(
-        c != 0, F.lit("true")
-    ).otherwise(F.lit("false"))
-
-
 # ---------------------------------------------------------------------------
 # timestamps
 # ---------------------------------------------------------------------------
@@ -143,20 +135,6 @@ def epoch_millis_eastern(col: ColumnOrName) -> Column:
     the IANA tz database on the JVM side."""
     c = _c(col)
     return F.unix_millis(F.to_utc_timestamp(c.cast("timestamp"), EASTERN))
-
-
-def parse_flexible_timestamp(col: ColumnOrName) -> Column:
-    """String → NTZ timestamp accepting ISO-8601, trailing-Z, and bare
-    ``yyyy-MM-dd`` (to_epoch_millis string branch, main.py:140-151).
-    Unparseable → NULL (main.py:149)."""
-    c = _c(col)
-    # Trailing 'Z' → explicit +00:00 offset (main.py:142-143), then a
-    # try_to_timestamp cascade: ISO first, bare date second.
-    cleaned = F.regexp_replace(c, "Z$", "+00:00")
-    return F.coalesce(
-        F.try_to_timestamp(cleaned),
-        F.try_to_timestamp(c, F.lit("yyyy-MM-dd")),
-    )
 
 
 def eastern_date(col: ColumnOrName) -> Column:

@@ -202,17 +202,3 @@ def _py_dot(x: Sequence[float], y: Sequence[float]) -> float:
     for a, b in zip(x, y):
         acc += float(a) * float(b)
     return acc
-
-
-def random_hyperplane_signs(
-    a: ColumnOrName, planes: Sequence[Sequence[float]]
-) -> Column:
-    """Sign bits of projections onto fixed hyperplanes → an int bucket
-    id (SimHash/LSH family). ``planes`` are deterministic constants
-    chosen by the caller; output is a LongType bucket usable as a
-    shuffle/group key."""
-    bits = [F.when(dot_literal(a, p) >= 0, F.lit(1)).otherwise(F.lit(0)) for p in planes]
-    acc = F.lit(0).cast("long")
-    for b in bits:
-        acc = acc * F.lit(2) + b.cast("long")
-    return acc

@@ -1107,19 +1107,6 @@ def _fake_media_rows(n: int) -> tuple:
     return tuple(rows)
 
 
-def media_metadata(df: DataFrame) -> DataFrame:
-    """Metadata-only projection — never touches payload bytes, so the
-    parquet reader prunes the heavy column entirely (check ReadSchema
-    in .explain)."""
-    return df.select(
-        "media_id",
-        F.col("meta.kind").alias("kind"),
-        F.col("meta.mime").alias("mime"),
-        F.col("meta.n_bytes").alias("n_bytes"),
-        F.col("meta.duration_ms").alias("duration_ms"),
-    )
-
-
 def decode_payload(payload: bytes, mime: Optional[str]):
     """One payload through the mime-routed codecs.
     → (features, width, height, duration_ms, content_source).
@@ -1185,26 +1172,6 @@ def decode_and_featurize(df: DataFrame, batch_hint: int = 64) -> DataFrame:
             yield pd.DataFrame(out)
 
     return df.mapInPandas(decode_batches, FEATURES_SCHEMA)
-
-
-def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling *plan*: one output row per (video, frame
-    timestamp) — pure Column expressions (sequence+explode), so the
-    expansion happens JVM-side; the downstream per-frame decode is the
-    same mapInPandas shape as decode_and_featurize."""
-    videos = df.filter(F.col("meta.kind") == "video").select(
-        "media_id", F.col("meta.duration_ms").alias("duration_ms")
-    )
-    return videos.select(
-        "media_id",
-        F.explode(
-            F.sequence(
-                F.lit(0),
-                F.greatest(F.col("duration_ms") - 1, F.lit(0)),
-                F.lit(every_ms),
-            )
-        ).alias("frame_ts_ms"),
-    )
 
 
 #: one row per demuxed video frame: real container byte range + bytes.

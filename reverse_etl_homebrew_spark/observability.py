@@ -1,67 +1,18 @@
-"""Observability surface: structured logging with PHI redaction,
-alert routing, and config/secret injection (SURVEY.md §2.2
-`structured-log`, `slack-alert`; §2.1 `secret-read`).
+"""Alert routing (SURVEY.md §2.2 `slack-alert`).
 
-The reference logs JSON events where any kwarg whose key contains a
-PHI marker is replaced by an 8-hex hash (main.py:80-91), posts Slack
-alerts fire-and-forget (main.py:258-274), and fetches secrets from
-Secret Manager with caching (main.py:227-256). Engine equivalents:
-
-- ``redact_columns``: the same redaction as a DataFrame transform —
-  set-oriented, applied before any frame is logged/exported;
-- ``log_event``: driver-side JSON log line with dict redaction
-  (1:1 with the reference's log shape);
-- ``collect_alerts``/``AlertSink``: alert rows are a DataFrame
-  branch; posting is a driver-side action behind an injectable sink
-  (tests capture, prod posts to a webhook);
-- ``SecretProvider``: env-backed with per-process cache.
+The reference posts Slack alerts fire-and-forget (main.py:258-274).
+Here alert rows are a DataFrame branch; posting is a driver-side
+action behind an injectable sink (tests capture, prod posts to a
+webhook). Structured logging and secret reads stay outside the engine
+(SURVEY.md §2.2 `structured-log`, §2.1 `secret-read`); the reference's
+PHI redaction is the ``phi-redact`` key (``functions.scalars.phi_redact``).
 """
 
 from __future__ import annotations
 
-import hashlib
-import json
-import os
-import sys
-import time
 from typing import Callable, List, Optional
 
 from pyspark.sql import DataFrame, functions as F
-
-from .functions.scalars import phi_redact
-
-#: PHI marker substrings, reference main.py:86.
-PHI_MARKERS = ("name", "email", "address", "dob", "phone", "gender")
-
-
-def _hash8(value: str) -> str:
-    try:
-        return hashlib.sha256(str(value).encode("utf-8")).hexdigest()[:8]
-    except Exception:
-        return "hash_err"
-
-
-def is_phi_key(key: str) -> bool:
-    k = key.lower()
-    return any(m in k for m in PHI_MARKERS)
-
-
-def redact_columns(df: DataFrame) -> DataFrame:
-    """Replace every PHI-named column's values with their 8-hex sha256
-    prefix — the frame analog of the reference's kwarg redaction."""
-    exprs = []
-    for c in df.columns:
-        exprs.append(phi_redact(F.col(c)).alias(c) if is_phi_key(c) else F.col(c))
-    return df.select(*exprs)
-
-
-def log_event(event: str, stream=None, **fields) -> dict:
-    """Driver-side structured JSON log with PHI redaction."""
-    record = {"ts": time.time(), "event": event}
-    for k, v in fields.items():
-        record[k] = _hash8(v) if is_phi_key(k) and v is not None else v
-    (stream or sys.stderr).write(json.dumps(record, default=str) + "\n")
-    return record
 
 
 class AlertSink:
@@ -101,17 +52,3 @@ def collect_alerts(
         )
     return len(rows)
 
-
-class SecretProvider:
-    """Env-backed secret/config fetch with per-process caching
-    (fetch_secret/fetch_hubspot_api_key, main.py:227-256). Swap the
-    resolver for a real secret manager client in production."""
-
-    def __init__(self, resolver: Optional[Callable[[str], str]] = None):
-        self._cache: dict = {}
-        self._resolver = resolver or (lambda name: os.environ[name])
-
-    def get(self, name: str) -> str:
-        if name not in self._cache:
-            self._cache[name] = self._resolver(name)
-        return self._cache[name]

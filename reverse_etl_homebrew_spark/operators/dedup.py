@@ -311,29 +311,10 @@ def build_fingerprint_index(
     doc-tier sibling of ``build_span_index``/``build_ann_index``
     (r14): in production a persisted table bucketed on the
     fingerprint, so the nightly ``incremental_dedup_against_index``
-    anti-join co-locates without moving the index. Append-only
-    maintenance: INSERT the accepted batch's fingerprints and
-    re-distinct within buckets (set union — idempotent)."""
+    anti-join co-locates without moving the index. Maintenance is an
+    INSERT INTO that table of ``build_fingerprint_index(accepted
+    batch)``, distinct within buckets (set union — idempotent)."""
     return corpus.select(TX.sha_fingerprint(text_col).alias(fp_col)).distinct()
-
-
-def append_to_fingerprint_index(
-    fp_index: DataFrame,
-    accepted_batch: DataFrame,
-    text_col: str = "text",
-    fp_col: str = "fp",
-) -> DataFrame:
-    """Index MAINTENANCE for the doc tier (r14) — the fingerprint twin
-    of ``append_to_span_index``/``append_to_ann_index``: once a probed
-    batch is accepted, union its fingerprints onto the index and
-    re-distinct. Appending is EQUIVALENT to rebuilding over
-    corpus ∪ batch by construction (both are the distinct fingerprint
-    SET — pinned in tests/test_refresh_pipeline.py) and re-accepting
-    the same batch is a no-op (set union is idempotent). In production
-    this is an INSERT INTO the fp-bucketed index table where the
-    distinct collapses within buckets."""
-    delta = build_fingerprint_index(accepted_batch, text_col, fp_col)
-    return fp_index.unionByName(delta).distinct()
 
 
 def incremental_dedup_against_index(
@@ -687,34 +668,13 @@ def build_span_index(
     layout discipline as the IVM state table): the nightly
     ``incremental_dup_spans`` probe then joins batch windows against
     it WITHOUT shuffling the index — only the (small) new batch's
-    windows move. Append-only maintenance: union the accepted batch's
-    windows and re-distinct within buckets."""
+    windows move. Maintenance is an INSERT INTO that table of
+    ``build_span_index(accepted batch)``, distinct within buckets."""
     return (
         token_span_windows(corpus, text_col, id_col, n)
         .select("win")
         .distinct()
     )
-
-
-def append_to_span_index(
-    span_index: DataFrame,
-    accepted_batch: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 8,
-) -> DataFrame:
-    """Index MAINTENANCE for the nightly-ingest loop, the span twin of
-    ``similarity.append_to_ann_index`` (r13 — the docstring promise on
-    ``build_span_index`` made a function): once a probed batch is
-    accepted, union its distinct windows onto the index and
-    re-distinct — append-only, never a rebuild. In production this is
-    an INSERT INTO the win-bucketed index table where the distinct
-    collapses within buckets; appending is EQUIVALENT to rebuilding
-    over corpus ∪ batch by construction (both are the distinct window
-    SET — pinned in tests/test_refresh_pipeline.py), and re-accepting
-    the same batch is a no-op (set union is idempotent)."""
-    delta = build_span_index(accepted_batch, text_col, id_col, n)
-    return span_index.unionByName(delta).distinct()
 
 
 def incremental_dup_spans(
@@ -747,7 +707,7 @@ def incremental_dup_spans(
     inject degenerate windows.
 
     ``span_index`` must be a distinct window set, as
-    ``build_span_index``/``append_to_span_index`` return it: the left
+    ``build_span_index`` returns it and INSERT INTO keeps it: the left
     join then reads the index in place, scan-only. Re-distincting it
     here would be a full hash-agg over the ENTIRE index per probe —
     O(corpus windows) CPU, the largest corpus-proportional term the
@@ -870,7 +830,7 @@ def embedding_near_dup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.95,
-    planes: "int | None" = 8,
+    planes: int = 8,
     probe_radius: int = 1,
 ) -> DataFrame:
     """Near-duplicate vectors by cosine ≥ threshold, candidate-bounded
@@ -883,13 +843,6 @@ def embedding_near_dup_pairs(
     (twin vectors land ≥2 bit flips apart often enough that radius 1
     measurably loses pairs). Scores round to 6 decimals for
     cross-engine determinism.
-
-    ``planes=None`` auto-sizes the bucket space to the corpus like
-    ``knn_join`` (target ~64 vectors/bucket, 4..16 planes): in-bucket
-    candidate count scales with n²/2^planes, so a constant plane count
-    turns corpus growth into quadratic join work. The oracle-checked
-    queries pin ``planes=8`` because their SQL re-derives the same
-    bucket constants.
 
     Per-pair work is one dot product: vector norms are computed once
     per vector (same doubles as computing them per pair — the cosine
@@ -907,11 +860,6 @@ def embedding_near_dup_pairs(
     as SCALE.md's CreateArray finding). The Python eval node is an
     attribute boundary, so probes XOR a plain long column."""
     dim = VEC.infer_dim(df, vec_col)
-    if planes is None:
-        import math
-
-        n = df.count()
-        planes = max(4, min(16, math.ceil(math.log2(max(n, 2) / 64))))
     from .similarity import _bucket_side, _deterministic_planes, _probe_array
 
     hyperplanes = _deterministic_planes(planes, dim)

@@ -137,7 +137,7 @@ def corpus_refresh_report(
 
     # 2. retire first: every probe below runs against the survivors.
     # In production the artifacts below are persisted bucketed tables
-    # maintained at accept time (append_to_* / INSERT INTO), not
+    # maintained at accept time (INSERT INTO build_*(batch)), not
     # derived per refresh — this inline derivation is the local /
     # bootstrap form.
     surviving = old.join(retired, ["doc_id"], "left_anti")

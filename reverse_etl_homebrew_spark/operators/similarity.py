@@ -14,8 +14,8 @@ Operators:
   then scores the survivors with ``topk_brute``.
 - ``knn_join``: k nearest right-vectors per left-vector, as a bucket
   equi-join (``exact=True``: the bounded cross score).
-- ``build_ann_index`` / ``append_to_ann_index`` / ``incremental_knn``:
-  the persisted bucketed index and the per-batch probe against it.
+- ``build_ann_index`` / ``incremental_knn``: the persisted bucketed
+  index and the per-batch probe against it.
 - ``bm25_topk``, ``tfidf_topterms``, ``trigram_lm_score``: the
   lexical side of retrieval.
 
@@ -309,7 +309,7 @@ def knn_join(
     left_id: str = "vec_id",
     right_id: str = "vec_id",
     vec_col: str = "embedding",
-    planes: "int | None" = None,
+    planes: int = 6,
     probe_radius: int = 2,
     tables: int = 1,
     exact: bool = False,
@@ -323,12 +323,6 @@ def knn_join(
     O(pairs-sharing-a-bucket), never |L|×|R|; two 100 TB fact tables
     produce a ShuffledHash/SortMerge join, not a
     BroadcastNestedLoopJoin (asserted in tests).
-
-    ``planes=None`` auto-sizes the bucket space to the right side
-    (target ~64 rows/bucket: max(6, ceil(log2(n/64))), capped at 16) —
-    in-bucket pair count scales with |L|·|R|/2^planes, so a FIXED
-    plane count turns 10× growth on both sides into ~100× work
-    (measured; SCALE.md).
 
     ``tables=L`` uses L INDEPENDENT hash tables (disjoint plane sets,
     bucket keys tagged per table in one equi-join): recall compounds
@@ -347,11 +341,6 @@ def knn_join(
     Approximate recall: a left vector only sees neighbors within its
     probed buckets, so it may return fewer than ``k`` rows — the
     standard ANN trade (multi-probe LSH; PAPERS.md anchors)."""
-    import math
-
-    if planes is None and not exact:
-        n_right = right.count()
-        planes = min(16, max(6, math.ceil(math.log2(max(n_right, 1) / 64 + 1))))
     # norms computed once per vector, not once per candidate pair —
     # bit-identical score (the norm of a vector is the same double
     # before or after the join) — and, r15, computed INSIDE the
@@ -454,9 +443,11 @@ def build_ann_index(
     IVM state table and ``build_span_index``): the nightly
     ``incremental_knn`` probe then joins batch vectors against it
     WITHOUT shuffling the index — only the (small) new batch's probe
-    rows move (asserted in tests/test_physical_layout.py). Append-only
-    maintenance: bucket the accepted batch with the SAME planes and
-    append.
+    rows move (asserted in tests/test_physical_layout.py). Maintenance
+    is an INSERT INTO that table of ``build_ann_index(accepted batch)``
+    with the SAME planes: same planes ⇒ same bucket for every vector,
+    so the appended index probes exactly as a rebuild over
+    corpus ∪ batch would.
 
     NULL vectors carry no geometry and are excluded (the r12
     NULL-embedding degrade contract — a NULL row would otherwise
@@ -510,75 +501,6 @@ def _cap_buckets(ann_index: DataFrame, bucket_cap: int, k: int = 0) -> DataFrame
         .filter(F.col("__bc") <= bucket_cap)
         .drop("__bc")
     )
-
-
-def append_to_ann_index(
-    ann_index: DataFrame,
-    accepted_batch: DataFrame,
-    planes: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bucket_cap: "int | None" = None,
-) -> DataFrame:
-    """Index MAINTENANCE for the nightly-ingest loop: once a probed
-    batch is accepted into the corpus, bucket it with the SAME planes
-    and union it onto the index — append-only, never a rebuild (the
-    ``build_span_index`` discipline lifted to vectors). In production
-    this is an INSERT INTO the bucketed index table: the new rows land
-    in their buckets and co-location with future probes is preserved
-    by the table layout, not recomputed.
-
-    Invariant (pinned in tests/test_incremental_knn.py): appending a
-    disjoint batch is EQUIVALENT to rebuilding the index over
-    corpus ∪ batch — same planes ⇒ same bucket for every vector ⇒
-    identical probe results — and re-accepting the same batch is a
-    no-op: EXACT duplicate index rows collapse via full-row distinct
-    (deterministic by construction — collapsed rows are identical on
-    every column, so there is no survivor to elect; the r12 review
-    caught the earlier (r_id, bucket) key-dedup electing a
-    partition-order-dependent survivor when a re-accepted id carried
-    an UPDATED vector). A re-accepted id with conflicting vector
-    keeps both rows — the conflicting-redelivery boundary, owned
-    upstream like everywhere else (tests/test_conflicting_redelivery).
-
-    Dimension contract: the delta must match the index's
-    dimensionality — validated loudly here (the review's dim-drift
-    foot-gun: mismatched dims would silently bucket with different
-    planes and score truncated cosines). ``planes`` must equal the
-    index's construction planes; in production both are table
-    properties. The local distinct shuffles the index; the production
-    form is INSERT INTO the bucketed table with the accept-once
-    ledger upstream, where this collapse is a safety net, not the
-    layout mechanism.
-
-    ``bucket_cap`` (r14, VERDICT r13 #4): the skew cap is enforced
-    HERE, at maintenance time — the place the incremental_knn
-    docstring always said production enforces it. Pass the same cap
-    the probe path uses and the maintained index keeps ≤cap rows per
-    bucket with the deterministic lowest-r_id election
-    (``_cap_buckets``); the probe join then never needs its own
-    index-side ranking window, so the bucketed layout's
-    no-index-shuffle property survives. The total order makes
-    cap-on-append ≡ cap-on-rebuild exact (pinned in
-    tests/test_incremental_knn.py)."""
-    dim_idx = getattr(ann_index, "_sg_ann_dim", 0) or VEC.infer_dim(
-        ann_index, "r_v"
-    )
-    dim_new = VEC.infer_dim(accepted_batch, vec_col)
-    if dim_idx and dim_new and dim_idx != dim_new:
-        from ..sources.catalog import SchemaContractError
-
-        raise SchemaContractError(
-            f"ann index append: batch dimension {dim_new} != index "
-            f"dimension {dim_idx} — dimension is a property of the "
-            f"index, fix the producer"
-        )
-    delta = build_ann_index(accepted_batch, planes, id_col, vec_col)
-    merged = ann_index.unionByName(delta).distinct()
-    if bucket_cap is not None:
-        merged = _cap_buckets(merged, bucket_cap)
-    merged._sg_ann_dim = dim_idx or dim_new  # propagate the dim tag
-    return merged
 
 
 def incremental_knn(
@@ -652,8 +574,9 @@ def incremental_knn(
     if bucket_cap is not None:
         # the shared deterministic election (_cap_buckets) — in
         # production the cap is already enforced at maintenance time
-        # (append_to_ann_index) and this probe-side ranking is a no-op
-        # on an already-capped index (the cap is idempotent)
+        # (the bucketed table's INSERT INTO) and this probe-side
+        # ranking is a no-op on an already-capped index (the cap is
+        # idempotent)
         ann_index = _cap_buckets(ann_index, bucket_cap, k=k)
     hp = _deterministic_planes(planes, dim)
     l = (

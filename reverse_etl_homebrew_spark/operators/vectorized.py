@@ -370,9 +370,9 @@ def bucket_norm_pandas(planes_flat, planes_per_table: int, tables: int):
     tagged with ``t * 2**planes_per_table``, plus the norm double of
     the codegen ``l2_norm`` fold (``_fold``, IEEE sqrt).
 
-    Bucket bit order matches functions/vectors.random_hyperplane_signs
-    (first plane = MSB), and the SIGNS are bit-identical to the
-    oracle's left-to-right sign fold at matmul speed
+    Bucket bit order is the oracle's (first plane = MSB), and the
+    SIGNS are bit-identical to the oracle's left-to-right sign fold at
+    matmul speed
     (``hybrid_fold_signs``). This is the multi-table scale path: L×p
     flat sign-fold expressions in one projection blow past the JVM's
     generated-method JIT budget and run interpreted (measured 6×
@@ -422,7 +422,7 @@ def bucket_norm_pandas(planes_flat, planes_per_table: int, tables: int):
 def hybrid_fold_signs(m, P):
     """The hybrid bucketer's sign kernel, factored out so the error
     bound is a property-testable invariant without a SparkSession
-    (tests/test_property_scalars.py), the way ``_mg_merge_batch`` pins
+    (tests/test_property_scalars.py), the way ``_mg_merge_pairs`` pins
     the Misra-Gries retention guarantee.
 
     Returns the boolean sign matrix (projection >= 0) for rows ``m``
@@ -449,57 +449,6 @@ def hybrid_fold_signs(m, P):
         # entry risky) must not fall onto a per-entry Python loop
         proj[risky_rows] = _fold(m[risky_rows, None, :], P)
     return proj >= 0
-
-
-def deterministic_centroids(df: DataFrame, n: int, vec_col: str = "embedding", id_col: str = "vec_id"):
-    """Cheap deterministic centroid picks: the vectors whose ids hash
-    lowest (a seeded reservoir stand-in for k-means — the plumbing /
-    test path; use ``train_centroids`` when recall matters). Rows
-    with a NULL vector carry no usable centroid and are skipped (r12,
-    the advisor's query_vector NULL-embedding crash class)."""
-    from ..functions import vectors as _VEC
-
-    rows = (
-        df.select(id_col, vec_col)
-        .filter(_VEC.finite_vector(F.col(vec_col)))
-        .withColumn("__h", F.xxhash64(F.col(id_col)))
-        .orderBy("__h")
-        .limit(n)
-        .collect()
-    )
-    return [[float(x) for x in r[vec_col]] for r in rows]
-
-
-def train_centroids(
-    df: DataFrame,
-    n: int,
-    vec_col: str = "embedding",
-    max_iter: int = 20,
-    seed: int = 7,
-):
-    """Offline-trained IVF centroids via MLlib KMeans — the production
-    geometry path behind the same return shape as
-    ``deterministic_centroids`` (a list of dense float lists, usable
-    directly by ``ivf_assign_pandas`` / ``similarity.topk_ivf``).
-
-    KMeans is a distributed Spark job (k-means|| init, partial
-    aggregation per iteration), so training scales with the corpus;
-    the k×d centroid matrix that comes back is driver-small and ships
-    to scorers as a broadcast constant. Recall at a given n_probe
-    depends on centroid geometry — trained centroids track the data's
-    actual cluster structure where hash-picked ones are arbitrary
-    corpus points (recall comparison pinned in
-    tests/test_vectorized_stateful.py)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    from ..functions import vectors as _VEC
-
-    feat = df.where(_VEC.finite_vector(F.col(vec_col))).select(
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
-    )
-    model = KMeans(k=n, maxIter=max_iter, seed=seed).fit(feat)
-    return [[float(x) for x in c] for c in model.clusterCenters()]
 
 
 def misra_gries_candidates(df: DataFrame, col: str, k: int) -> DataFrame:
@@ -609,14 +558,6 @@ def _mg_merge_pairs(counts: dict, pairs, k: int) -> None:
                 counts[i] = c - thr
             else:
                 del counts[i]
-
-
-def _mg_merge_batch(counts: dict, items: "pd.Series", k: int) -> None:
-    """Pandas-Series entry point over ``_mg_merge_pairs`` — kept as
-    the Hypothesis surface (tests/test_property_scalars.py pins the
-    retention guarantee through it, byte-identical compression path
-    to the Arrow batches ``misra_gries_candidates`` feeds)."""
-    _mg_merge_pairs(counts, items.value_counts().items(), k)
 
 
 def topk_frequent_sketch(

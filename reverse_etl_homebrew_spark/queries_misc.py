@@ -657,9 +657,19 @@ _ZCELL_DIV = 64  # cell = z div 64 → 64 coarse cells for 2-phase ranking
 _ZROWS_PER_FILE = 4096
 
 
-# shared with the write_zordered sink (sources/files.py); kept under
-# its historical name for the fixtures that import it from here
-from .functions.zcurve import z_interleave_sql as _z_interleave_sql  # noqa: E402
+def _z_interleave_sql(gx: str, gy: str, bits: int, intdiv: str) -> str:
+    """Morton/Z-order bit interleave of two ``bits``-wide nonnegative
+    grid coordinates, in pure integer arithmetic (div/mod/add — no
+    engine-specific bitwise operators, and the terms occupy disjoint
+    bit positions so + is |). ``intdiv`` is the engine's integral
+    division (Spark ``div``, DuckDB ``//`` — identical on the
+    nonnegative operands used here), so the same string renders the
+    Spark plan and the DuckDB oracle."""
+    terms = []
+    for i in range(bits):
+        terms.append(f"((({gx}) {intdiv} {1 << i}) % 2) * {1 << (2 * i)}")
+        terms.append(f"((({gy}) {intdiv} {1 << i}) % 2) * {1 << (2 * i + 1)}")
+    return "(" + " + ".join(terms) + ")"
 
 
 @register(

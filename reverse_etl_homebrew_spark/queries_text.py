@@ -202,9 +202,9 @@ from .sqlfrags import (  # noqa: E402
 
 
 def _bucket_sql(vec_expr: str, planes) -> str:
-    """Hyperplane sign-bucket of a vector expression in SQL, mirroring
-    functions/vectors.random_hyperplane_signs bit-for-bit (first plane
-    = MSB). Plane constants are the same deterministic xorshift values
+    """Hyperplane sign-bucket of a vector expression in SQL, bit for
+    bit the bucket the engine's Arrow bucketer emits (first plane =
+    MSB). Plane constants are the same deterministic xorshift values
     the engine uses, inlined as list literals."""
     n = len(planes)
     terms = []

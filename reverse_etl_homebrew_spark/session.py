@@ -92,6 +92,20 @@ _RUNTIME_CONFS = {
 #: Spark's 100-entry default.
 CODEGEN_CACHE_ENTRIES = 2000
 
+#: Static confs every engine session is built with: they take effect
+#: only when a JVM's first session is built, so ``get_spark`` sets them
+#: on the builder and ``cluster_conf`` ships them to spark-submit.
+_STATIC_CONFS = {
+    "spark.sql.parquet.compression.codec": "zstd",
+    # pin() reliably checkpoints on a non-local master; let the
+    # ContextCleaner delete checkpoint files once their RDDs are GC'd
+    # so a long-running job doesn't accumulate them
+    "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
+    # each JVM (driver and every executor) builds its own
+    # compiled-class cache
+    "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
+}
+
 
 #: process-local path of the executor-shipped package zip (see
 #: _ship_package) — built lazily, at most once per interpreter.
@@ -200,11 +214,7 @@ def cluster_conf(
         "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
         # the giant-rows byte bound rides in from _RUNTIME_CONFS
         # (measured: tests/test_giant_rows.py::test_arrow_batches_byte_bounded)
-        "spark.sql.parquet.compression.codec": "zstd",
-        # checkpoint-file GC for pin()'s reliable checkpoints
-        "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
-        # static: each executor JVM builds its own compiled-class cache
-        "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
+        **_STATIC_CONFS,
     }
 
 
@@ -225,14 +235,8 @@ def get_spark(app_name: str = "reverse-etl-homebrew-spark") -> SparkSession:
         .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.parquet.compression.codec", "zstd")
-        # pin() reliably checkpoints on a non-local master; let the
-        # ContextCleaner delete checkpoint files once their RDDs are
-        # GC'd so a long-running job doesn't accumulate them
-        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
-    for k, v in _RUNTIME_CONFS.items():
+    for k, v in {**_STATIC_CONFS, **_RUNTIME_CONFS}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -69,71 +69,12 @@ IDMAP_SCHEMA = T.StructType(
 PAYLOAD_MAX = 90_000  # main.py:398
 ERROR_MAX = 10_000  # main.py:399
 
-#: The reference's MERGE, verbatim semantics (main.py:356-363):
-#: matched → update (hubspot_id, updated_at); not matched → insert.
-IDMAP_MERGE_SQL = """
-MERGE INTO {target} AS t
-USING {source} AS s
-ON t.hubspot_object_type = s.hubspot_object_type
-   AND t.natural_key = s.natural_key
-WHEN MATCHED THEN UPDATE SET
-    t.hubspot_id = s.hubspot_id,
-    t.updated_at = s.updated_at
-WHEN NOT MATCHED THEN INSERT
-    (hubspot_object_type, natural_key, hubspot_id, updated_at)
-    VALUES (s.hubspot_object_type, s.natural_key, s.hubspot_id, s.updated_at)
-"""
-
-
-def native_merge_available(spark: SparkSession) -> bool:
-    """Probe whether the session's catalog can execute ``MERGE INTO``
-    natively. Spark's built-in file-source catalog cannot (MERGE needs
-    a table format with row-level operations — Delta Lake or Iceberg);
-    detection keys off the registered session extensions / catalog
-    implementations, which is how those formats install themselves."""
-    markers = ("delta", "iceberg")
-    for key in ("spark.sql.extensions", "spark.sql.catalog.spark_catalog"):
-        try:
-            val = (spark.conf.get(key, "") or "").lower()
-        except Exception:
-            val = ""
-        if any(m in val for m in markers):
-            return True
-    return False
-
-
-def native_merge_idmap(spark: SparkSession, target_table: str, incoming: DataFrame) -> None:
-    """Run the reference's idmap MERGE (main.py:356-363) natively
-    against a MERGE-capable catalog table. Raises if the session has
-    no such catalog — callers route through the join fallback then."""
-    if not native_merge_available(spark):
-        raise RuntimeError(
-            "native MERGE INTO needs a Delta/Iceberg catalog in this session"
-        )
-    # per-call view name: concurrent merges on one session must not
-    # clobber each other's source view
-    view = f"__idmap_incoming_{uuid.uuid4().hex}"
-    incoming.createOrReplaceTempView(view)
-    try:
-        spark.sql(IDMAP_MERGE_SQL.format(target=target_table, source=view))
-    finally:
-        spark.catalog.dropTempView(view)
-
-
 class ControlTables:
     """Workdir-backed control tables with the reference's semantics."""
 
-    def __init__(
-        self, spark: SparkSession, workdir: str, idmap_table: Optional[str] = None
-    ):
-        """``idmap_table``: name of a MERGE-capable catalog table
-        (Delta/Iceberg) to route idmap upserts through natively. When
-        unset — or when the session's catalog cannot MERGE — the
-        portable parquet join-fallback path is used. Decided once at
-        construction (session build), per VERDICT r1 #6."""
+    def __init__(self, spark: SparkSession, workdir: str):
         self.spark = spark
         self.workdir = workdir
-        self.idmap_table = idmap_table if native_merge_available(spark) else None
         self.paths = {
             "run_ledger": os.path.join(workdir, "run_ledger"),
             "dlq": os.path.join(workdir, "dlq"),
@@ -269,8 +210,10 @@ class ControlTables:
 
     def merge_idmap(self, incoming: DataFrame) -> None:
         """Keyed upsert on (hubspot_object_type, natural_key), last
-        writer wins — the full-outer-join/window fallback for MERGE
-        INTO (SURVEY.md §4.3(c); native routing in ``native_merge``).
+        writer wins — the reference's MERGE INTO (main.py:354-371:
+        matched → update hubspot_id and updated_at; not matched →
+        insert) as a full-outer-join/window rewrite (SURVEY.md
+        §4.3(c)).
 
         Swap protocol (no window where the ID map does not exist on
         disk in SOME committed form): write staging → move final to
@@ -279,15 +222,6 @@ class ControlTables:
         ``_recover_idmap`` on the next startup — losing the map would
         cause wholesale re-creates, the exact failure it exists to
         prevent."""
-        if self.idmap_table is not None:
-            # MERGE-capable catalog: one transactional statement, no
-            # table rewrite, concurrent-writer safe
-            native_merge_idmap(
-                self.spark,
-                self.idmap_table,
-                incoming.select(*[f.name for f in IDMAP_SCHEMA.fields]),
-            )
-            return
         existing = self.idmap()
         merged = upsert_merge(
             existing,

@@ -176,8 +176,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # cross-family type drift at ingress — see CANONICAL_TYPES
     return _enforce_contract(df, name)
 
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Expose every catalog table as a temp view for the SQL API."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

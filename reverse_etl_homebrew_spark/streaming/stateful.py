@@ -10,6 +10,9 @@ explicit GroupState machine to prove the engine supports operators
 Spark has no built-in for (the escape hatch for bespoke reference
 semantics).
 
+``streaming_running_totals`` keeps one running (count, sum) cell per
+user and emits the updated totals each micro-batch.
+
 State per key is O(1) (open-session aggregate only), so state-store
 size is bounded by active keys — the property that keeps custom
 stateful ops viable at 100 TB/day.
@@ -157,10 +160,6 @@ def streaming_sessionize(
     )
 
 
-# ---------------------------------------------------------------------------
-# transformWithState surface (Spark 4's successor stateful API)
-# ---------------------------------------------------------------------------
-
 RUNNING_TOTALS_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
@@ -168,73 +167,6 @@ RUNNING_TOTALS_SCHEMA = T.StructType(
         T.StructField("total_value", T.DoubleType()),
     ]
 )
-
-
-def _make_running_totals_processor(ttl_ms):
-    """Built lazily so importing this module never requires the
-    stateful-processor API (present from Spark 4.0)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotalsProcessor(StatefulProcessor):
-        """Per-user running event count + value sum in a ValueState
-        cell, optionally TTL-expired — the transformWithState twin of
-        the applyInPandasWithState sessionizer above, exercising the
-        API Spark 4 positions as the long-term custom-stateful path
-        (typed state cells + TTL instead of one packed tuple)."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState(
-                "totals", "n BIGINT, total DOUBLE", ttlDurationMs=ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            got = self._totals.get()
-            n, total = got if got is not None else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._totals.update((n, total))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [total],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return RunningTotalsProcessor()
-
-
-def streaming_running_totals(
-    events: DataFrame, ttl_ms: "int | None" = None
-) -> DataFrame:
-    """events (user_id, value) stream → one updated running-total row
-    per user per micro-batch (Update output). State is one fixed-size
-    ValueState cell per active user — O(active keys), and with
-    ``ttl_ms`` set, idle keys expire from the store entirely (the
-    bound that matters when user_id cardinality grows without limit).
-
-    Runtime requirements (Spark enforces/needs both): the RocksDB
-    state store provider, and the ``google.protobuf`` Python package —
-    the transformWithState state server speaks protobuf to the JVM.
-    Standard on real clusters; the correctness test self-skips where
-    the package is absent."""
-    return (
-        events.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_make_running_totals_processor(ttl_ms),
-            outputStructType=RUNNING_TOTALS_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
 
 
 RUNNING_TOTALS_STATE_SCHEMA = T.StructType(
@@ -245,7 +177,7 @@ RUNNING_TOTALS_STATE_SCHEMA = T.StructType(
 )
 
 
-def _running_totals_compat(
+def _running_totals(
     key: Tuple[Any, ...],
     pdfs: Iterator[pd.DataFrame],
     state: GroupState,
@@ -263,22 +195,16 @@ def _running_totals_compat(
     )
 
 
-def streaming_running_totals_compat(events: DataFrame) -> DataFrame:
-    """``streaming_running_totals`` on the applyInPandasWithState /
-    GroupState API: identical semantics (one updated running-total row
-    per user per micro-batch, one fixed-size state cell per active
-    key), no protobuf state server required — so the running-totals
-    claim is EXECUTABLE and tested in environments without
-    ``google.protobuf`` (this container), while the
-    transformWithState version above remains the cluster path for its
-    typed state cells + TTL. State bound: O(active keys) with no
-    expiry — pair with the TTL'd variant when key cardinality grows
-    without limit."""
+def streaming_running_totals(events: DataFrame) -> DataFrame:
+    """events (user_id, value) stream → one updated running-total row
+    per user per micro-batch (Update output), on the
+    applyInPandasWithState / GroupState API. State is one fixed-size
+    cell per active user — O(active keys), with no expiry."""
     return (
         events.select("user_id", "value")
         .groupBy("user_id")
         .applyInPandasWithState(
-            _running_totals_compat,
+            _running_totals,
             outputStructType=RUNNING_TOTALS_SCHEMA,
             stateStructType=RUNNING_TOTALS_STATE_SCHEMA,
             outputMode="update",

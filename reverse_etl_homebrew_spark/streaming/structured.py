@@ -37,6 +37,26 @@ EVENTS_SCHEMA = T.StructType(
 )
 
 
+#: Column that receives the raw text of unparseable JSONL lines.
+CORRUPT_COL = "_corrupt_record"
+
+# PERMISSIVE mode + ``columnNameOfCorruptRecord`` captures each bad
+# line without failing the scan (FAILFAST dies on line 1,
+# DROPMALFORMED loses data silently). The parse is a ``from_json``
+# expression over a text scan, not the JSON reader: the reader refuses
+# a query that projects only the corrupt-record column, which is
+# exactly what the DLQ leg is, and the text scan keeps the raw line.
+_PARSE_OPTS = {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL}
+
+
+def _with_corrupt_field(schema: T.StructType) -> T.StructType:
+    if CORRUPT_COL in schema.fieldNames():
+        return schema
+    return T.StructType(
+        list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType(), True)]
+    )
+
+
 # Any int64 event time above this is nanoseconds: ns for dates after
 # 1974-10 exceed it, while µs would have to encode year ~6700 to reach
 # it. Below it, the value is already microseconds (µs for 1974..6700).
@@ -256,7 +276,9 @@ def stream_ingest_jsonl(
     checkpoint_root: str,
 ) -> None:
     """Continuous JSONL file-drop ingest with corrupt-record DLQ
-    routing — the streaming face of ``sources/files.read_jsonl``.
+    routing: a malformed line is never dropped silently, it becomes a
+    dead-letter row carrying the raw text (the API writer's DLQ
+    pattern, sinks/control.py).
 
     Each availableNow run drains whatever files landed since the last
     checkpointed offset: good rows append to the parquet table, bad
@@ -274,8 +296,6 @@ def stream_ingest_jsonl(
     100 TB/day this is the standing ingest job: new drops are
     discovered per trigger, and DLQ volume is observable as a table
     instead of a log grep."""
-    from ..sources.files import CORRUPT_COL, _PARSE_OPTS, _with_corrupt_field
-
     full = _with_corrupt_field(schema)
     data_cols = [f.name for f in schema.fields]
 

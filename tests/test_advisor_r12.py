@@ -171,18 +171,6 @@ def test_query_vector_null_embedding_degrades(spark, null_seed_dir):
     assert all(v == 0.0 for v in vec)
 
 
-def test_deterministic_centroids_skip_null_vectors(spark, null_seed_dir):
-    from reverse_etl_homebrew_spark.operators.vectorized import (
-        deterministic_centroids,
-    )
-    from reverse_etl_homebrew_spark.sources.catalog import load_table
-
-    emb = load_table(spark, null_seed_dir, "embeddings")
-    cents = deterministic_centroids(emb, 4)
-    assert len(cents) == 4
-    assert all(c is not None for row in cents for c in row)
-
-
 @pytest.mark.parametrize("name", SEED_KEYS)
 def test_null_embedding_seed_parity(spark, name, null_seed_duck, null_seed_dir):
     """No crash, and the two engines agree (seed CTEs filter NULL

@@ -191,20 +191,3 @@ def test_embedding_near_dup_emits_each_pair_once(spark, emb):
     keys = [(r["a_id"], r["b_id"]) for r in pairs]
     assert len(keys) == len(set(keys)), "duplicate candidate pairs emitted"
     assert all(a < b for a, b in keys)
-
-
-def test_embedding_near_dup_auto_planes(spark, emb):
-    """planes=None sizes the bucket space from the corpus (4..16) and
-    still finds the self-duplicate planted pairs."""
-    base = emb.select("vec_id", "embedding")
-    doubled = base.unionByName(
-        base.selectExpr("vec_id + 100000 AS vec_id", "embedding")
-    )
-    pairs = DD.embedding_near_dup_pairs(
-        doubled, threshold=0.999, planes=None, probe_radius=2
-    ).collect()
-    found = {(r["a_id"], r["b_id"]) for r in pairs}
-    expected = {
-        (r["vec_id"], r["vec_id"] + 100000) for r in emb.select("vec_id").collect()
-    }
-    assert expected <= found

@@ -38,6 +38,13 @@ def _vec(seed: float, dim: int = 8):
     return [float(seed + i * 0.1) for i in range(dim)]
 
 
+def _insert(ann_index, accepted_batch, planes=6):
+    """Index maintenance as production runs it: INSERT INTO the
+    bucketed index table of ``build_ann_index(accepted batch)`` with
+    the same planes, exact duplicate rows collapsing."""
+    return ann_index.unionByName(build_ann_index(accepted_batch, planes)).distinct()
+
+
 def test_planted_neighbor_recall(spark):
     """A planted near-duplicate (same direction, tiny perturbation)
     must be its batch twin's #1 neighbor: near-identical vectors share
@@ -74,15 +81,11 @@ def test_null_vectors_excluded_both_sides(spark):
 
 
 def test_append_equals_rebuild(spark):
-    """Index maintenance invariant: appending an accepted batch with
+    """Index maintenance invariant: inserting an accepted batch with
     the SAME planes is equivalent to rebuilding the index over
     corpus ∪ batch — identical probe results for any query batch —
     and re-accepting the same batch twice (at-least-once accept loop)
     changes nothing."""
-    from reverse_etl_homebrew_spark.operators.similarity import (
-        append_to_ann_index,
-    )
-
     corpus = spark.createDataFrame(
         [(200 + i, _vec(-3.0 + 2.7 * i)) for i in range(30)],
         "vec_id int, embedding array<float>",
@@ -95,7 +98,7 @@ def test_append_equals_rebuild(spark):
         [(1, _vec(1.2)), (2, _vec(-2.0))], "vec_id int, embedding array<float>"
     )
     base = build_ann_index(corpus, planes=6)
-    appended = append_to_ann_index(base, accepted, planes=6)
+    appended = _insert(base, accepted)
     rebuilt = build_ann_index(corpus.unionByName(accepted), planes=6)
 
     def probe(idx):
@@ -104,7 +107,7 @@ def test_append_equals_rebuild(spark):
         )
 
     assert probe(appended) == probe(rebuilt)
-    twice = append_to_ann_index(appended, accepted, planes=6)
+    twice = _insert(appended, accepted)
     assert twice.count() == appended.count()
     assert probe(twice) == probe(appended)
     # a re-accepted id with a CONFLICTING vector keeps both rows —
@@ -114,19 +117,16 @@ def test_append_equals_rebuild(spark):
     conflicting = spark.createDataFrame(
         [(500, _vec(9.0))], "vec_id int, embedding array<float>"
     )
-    with_conflict = append_to_ann_index(appended, conflicting, planes=6)
+    with_conflict = _insert(appended, conflicting)
     assert with_conflict.where(F.col("r_id") == 500).count() == 2
 
 
 def test_dimension_drift_is_loud(spark):
     """A batch whose vectors drifted to a different dimensionality is
-    refused with a schema-contract error on BOTH entry points (r12
-    review: planes derived from the batch would silently bucket with
+    refused with a schema-contract error by the probe (r12 review:
+    planes derived from the batch would silently bucket with
     different hyperplanes and fold truncated cosines — wrong
     neighbors, no error)."""
-    from reverse_etl_homebrew_spark.operators.similarity import (
-        append_to_ann_index,
-    )
     from reverse_etl_homebrew_spark.sources.catalog import SchemaContractError
 
     corpus = spark.createDataFrame(
@@ -139,8 +139,6 @@ def test_dimension_drift_is_loud(spark):
     idx = build_ann_index(corpus, planes=6)
     with pytest.raises(SchemaContractError):
         incremental_knn(drifted, idx, k=3, planes=6)
-    with pytest.raises(SchemaContractError):
-        append_to_ann_index(idx, drifted, planes=6)
 
 
 def test_probe_join_reads_bucketed_index_in_place(spark, tmp_path):
@@ -271,35 +269,6 @@ def test_bucket_cap_survivors_total_order_with_null_ids(spark):
     assert {r for r, _ in outs[0]} <= {50, 51, 52, 53}
 
 
-def test_bucket_cap_enforced_at_append_time(spark):
-    """r14 (VERDICT r13 #4): the maintenance path itself enforces the
-    cap — append_to_ann_index(bucket_cap=) keeps ≤cap rows per bucket
-    with the same deterministic lowest-r_id election the probe path
-    uses, so a caller on the documented maintenance path never hands
-    the probe an uncapped index."""
-    from reverse_etl_homebrew_spark.operators.similarity import (
-        append_to_ann_index,
-    )
-
-    base = _vec(1.0)
-    corpus = spark.createDataFrame(
-        [(100 + i, [v * (1 + 0.0001 * i) for v in base]) for i in range(8)],
-        "vec_id int, embedding array<float>",
-    )
-    hot_batch = spark.createDataFrame(
-        [(200 + i, [v * (1 + 0.0001 * (20 + i)) for v in base]) for i in range(8)],
-        "vec_id int, embedding array<float>",
-    )
-    idx = append_to_ann_index(
-        build_ann_index(corpus, planes=6), hot_batch, planes=6, bucket_cap=5
-    )
-    per_bucket = idx.groupBy("bucket").count().collect()
-    assert per_bucket and all(r["count"] <= 5 for r in per_bucket)
-    # survivors are the lowest r_ids of the merged bucket
-    hot_ids = sorted(r["r_id"] for r in idx.collect())
-    assert hot_ids == [100, 101, 102, 103, 104]
-
-
 def test_bucket_cap_append_equals_rebuild_under_cap(spark):
     """The append≡rebuild invariant UNDER the cap: capping an already-
     capped index merged with a delta equals capping a full rebuild
@@ -307,10 +276,7 @@ def test_bucket_cap_append_equals_rebuild_under_cap(spark):
     an earlier cap ranks after every survivor in its bucket, so it
     can never have re-entered. Probe results must agree exactly, and
     capping is idempotent."""
-    from reverse_etl_homebrew_spark.operators.similarity import (
-        _cap_buckets,
-        append_to_ann_index,
-    )
+    from reverse_etl_homebrew_spark.operators.similarity import _cap_buckets
 
     base = _vec(1.0)
     hot = [(100 + i, [v * (1 + 0.0001 * i) for v in base]) for i in range(12)]
@@ -324,11 +290,8 @@ def test_bucket_cap_append_equals_rebuild_under_cap(spark):
         "vec_id int, embedding array<float>",
     )
     cap = 5
-    capped_base = append_to_ann_index(
-        build_ann_index(corpus.limit(0), planes=6), corpus, planes=6,
-        bucket_cap=cap,
-    )
-    appended = append_to_ann_index(capped_base, delta, planes=6, bucket_cap=cap)
+    capped_base = _cap_buckets(build_ann_index(corpus, planes=6), cap)
+    appended = _cap_buckets(_insert(capped_base, delta), cap)
     rebuilt = _cap_buckets(
         build_ann_index(corpus.unionByName(delta), planes=6), cap
     )

@@ -1,10 +1,7 @@
-"""Tests for the multimodal binary-column plumbing and the
-observability helpers (redaction, alerts, secrets)."""
+"""Tests for the multimodal binary-column plumbing and the alert
+routing."""
 
 from __future__ import annotations
-
-import io
-import json
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,8 +9,6 @@ from pyspark.sql import functions as F
 from reverse_etl_homebrew_spark.multimodal import (
     decode_and_featurize,
     fake_media_table,
-    frame_sample_plan,
-    media_metadata,
     MEDIA_SCHEMA,
 )
 from reverse_etl_homebrew_spark import observability as OBS
@@ -22,14 +17,6 @@ from reverse_etl_homebrew_spark import observability as OBS
 @pytest.fixture(scope="module")
 def media(spark):
     return fake_media_table(spark, 120).localCheckpoint(eager=True)
-
-
-def test_media_metadata_prunes_payload(media):
-    meta = media_metadata(media)
-    assert "payload" not in meta.columns
-    assert meta.count() == 120
-    kinds = {r["kind"] for r in meta.select("kind").distinct().collect()}
-    assert kinds == {"image", "audio", "video"}
 
 
 def test_decode_features_shape_and_determinism(spark, media):
@@ -51,16 +38,6 @@ def test_decode_failure_is_row_not_task_failure(spark):
     )
     out = decode_and_featurize(bad).collect()
     assert len(out) == 1 and out[0]["decode_ok"] is False
-
-
-def test_frame_sampling_counts(media):
-    frames = frame_sample_plan(media, every_ms=10_000)
-    agg = frames.groupBy("media_id").count().collect()
-    meta = {r["media_id"]: r["duration_ms"] for r in media_metadata(media).collect()}
-    for r in agg:
-        dur = meta[r["media_id"]]
-        expected = max(dur - 1, 0) // 10_000 + 1
-        assert r["count"] == expected
 
 
 # --- media-tier poison (fixtures/media_poison_probe.py, VERDICT r10
@@ -144,26 +121,6 @@ def test_media_poison_decode_is_deterministic(spark):
     assert a == b
 
 
-def test_redact_columns(spark):
-    df = spark.createDataFrame(
-        [(1, "Jane", "j@x.com", "F", 10.5)],
-        "id long, firstname string, email string, gender string, amount double",
-    )
-    out = redacted = OBS.redact_columns(df).first()
-    assert out["id"] == 1 and out["amount"] == 10.5
-    assert len(out["firstname"]) == 8 and out["firstname"] != "Jane"
-    assert len(out["email"]) == 8 and len(out["gender"]) == 8
-
-
-def test_log_event_redacts_phi():
-    buf = io.StringIO()
-    rec = OBS.log_event("sync_start", stream=buf, job="patients", patient_name="Jane")
-    assert rec["job"] == "patients"
-    assert rec["patient_name"] != "Jane" and len(rec["patient_name"]) == 8
-    line = json.loads(buf.getvalue())
-    assert "Jane" not in json.dumps(line)
-
-
 def test_alerts_threshold(spark):
     dlq = spark.createDataFrame(
         [
@@ -184,19 +141,6 @@ def test_alert_sink_swallows_poster_failures():
     sink = OBS.AlertSink(poster=bad_poster)
     sink.post("x")  # must not raise (main.py:272-274)
     assert sink.sent == ["x"]
-
-
-def test_secret_provider_caches(monkeypatch):
-    calls = []
-
-    def resolver(name):
-        calls.append(name)
-        return f"v-{name}"
-
-    sp = OBS.SecretProvider(resolver)
-    assert sp.get("API_KEY") == "v-API_KEY"
-    assert sp.get("API_KEY") == "v-API_KEY"
-    assert calls == ["API_KEY"]
 
 
 # --- real codecs (VERDICT r1 #7: de-stubbed decode) ------------------------

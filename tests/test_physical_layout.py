@@ -158,75 +158,6 @@ def test_ivm_merge_state_side_is_shuffle_free_when_bucketed(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {tb}")
 
 
-def test_write_zordered_prunes_secondary_dimension(spark, tmp_path):
-    """The write_zordered sink (sources/files.py) must turn the
-    measured zorder-layout pruning win into real files: against a
-    linear layout sorted on the primary key alone, a range band on
-    the SECONDARY key must overlap strictly fewer of the z-ordered
-    files' footer [min, max] intervals — the exact test a pruning
-    scan performs — while reading back the identical rows."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from reverse_etl_homebrew_spark.sources.files import write_zordered
-
-    li = load_table(spark, SF, "lineitem").select(
-        "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"
-    )
-    n_files = 8
-    zpath, lpath = str(tmp_path / "zorder"), str(tmp_path / "linear")
-    n_written = write_zordered(
-        li, zpath, ["l_partkey", "l_suppkey"], n_files=n_files
-    )
-    assert n_written == n_files
-    (
-        li.repartitionByRange(n_files, "l_partkey")
-        .sortWithinPartitions("l_partkey")
-        .write.mode("overwrite")
-        .parquet(lpath)
-    )
-
-    def stats(path, col):
-        out = []
-        for f in sorted(glob.glob(f"{path}/part-*.parquet")):
-            md = pq.ParquetFile(f).metadata
-            idx = md.schema.names.index(col)
-            out.append(
-                (
-                    min(md.row_group(i).column(idx).statistics.min
-                        for i in range(md.num_row_groups)),
-                    max(md.row_group(i).column(idx).statistics.max
-                        for i in range(md.num_row_groups)),
-                )
-            )
-        return out
-
-    def hits(st, lo, hi):
-        return sum(1 for mn, mx in st if not (mx < lo or mn > hi))
-
-    smax = li.agg(F.max("l_suppkey")).collect()[0][0]
-    lo, hi = 1, max(1, smax // 10)  # a ~10% band on the secondary dim
-    z_hits = hits(stats(zpath, "l_suppkey"), lo, hi)
-    l_hits = hits(stats(lpath, "l_suppkey"), lo, hi)
-    assert z_hits < l_hits, (z_hits, l_hits)
-    # linear-by-partkey leaves suppkey spanning the domain everywhere
-    assert l_hits == n_files
-
-    # lossless: the layout rewrites, never edits — identical rowsets
-    back = spark.read.parquet(zpath)
-    assert back.count() == li.count()
-    key = ["l_orderkey", "l_linenumber"]
-    assert back.select(*key).exceptAll(li.select(*key)).count() == 0
-    # and the band read returns the same rows from either layout
-    band = (F.col("l_suppkey") >= lo) & (F.col("l_suppkey") <= hi)
-    assert (
-        back.filter(band).count()
-        == spark.read.parquet(lpath).filter(band).count()
-        == li.filter(band).count()
-    )
-
-
 def test_bucketed_snapshot_diff_has_no_shuffle(spark, tmp_path):
     """snapshot_diff's production claim, pinned: with both snapshots
     bucketed by the diff key, the per-side digest aggregations ride

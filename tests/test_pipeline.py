@@ -216,23 +216,3 @@ def test_read_results_collapses_retry_duplicates(spark, workdir):
     rows = read_results(spark, d).collect()
     assert len(rows) == 1
     assert rows[0]["ok"] is True and rows[0]["hubspot_id"] == "h9"
-
-
-def test_native_merge_probe_and_fallback(spark, workdir):
-    """This container has no Delta/Iceberg catalog: the probe must say
-    so, ControlTables must route through the join fallback, and the
-    native path must refuse loudly."""
-    from reverse_etl_homebrew_spark.sinks.control import (
-        IDMAP_MERGE_SQL,
-        native_merge_available,
-        native_merge_idmap,
-    )
-
-    assert native_merge_available(spark) is False
-    ctl = ControlTables(spark, workdir, idmap_table="noop.idmap")
-    assert ctl.idmap_table is None  # downgraded: catalog cannot MERGE
-    with pytest.raises(RuntimeError, match="MERGE"):
-        native_merge_idmap(spark, "noop.idmap", spark.range(1))
-    # reference MERGE shape preserved (main.py:356-363)
-    assert "WHEN MATCHED THEN UPDATE" in IDMAP_MERGE_SQL
-    assert "WHEN NOT MATCHED THEN INSERT" in IDMAP_MERGE_SQL

@@ -199,22 +199,6 @@ def test_semi_and_anti_join_shapes(spark):
     assert "LeftAnti" in anti
 
 
-def test_media_metadata_prunes_payload_column(spark):
-    """Multimodal rule: metadata queries must not read payload bytes."""
-    import os
-    import tempfile
-
-    from reverse_etl_homebrew_spark.multimodal import fake_media_table, media_metadata
-
-    d = tempfile.mkdtemp()
-    path = os.path.join(d, "media.parquet")
-    fake_media_table(spark, 30).write.mode("overwrite").parquet(path)
-    meta = media_metadata(spark.read.parquet(path))
-    plan = explain(spark, meta)
-    read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
-    assert "payload" not in read_schema
-
-
 def test_runtime_bloom_filter_injects_on_selective_shuffle_join(spark):
     """At 100 TB the application side of a selective fact⋈filtered-dim
     shuffle join exceeds the 10 GiB threshold and Spark injects a

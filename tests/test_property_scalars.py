@@ -280,58 +280,6 @@ def test_epoch_millis_policies_property(spark, values):
             assert abs(r["e"] - exp) <= 3_600_000
 
 
-def _flexible_parse_model(s):
-    """to_epoch_millis string branch (main.py:140-151): ISO-8601 with
-    optional trailing Z, else bare yyyy-MM-dd, else None."""
-    if s is None:
-        return None
-    try:
-        return dt.datetime.fromisoformat(s.replace("Z", "+00:00"))
-    except ValueError:
-        pass
-    try:
-        d = dt.datetime.strptime(s, "%Y-%m-%d")
-        return d
-    except ValueError:
-        return None
-
-
-@SET
-@given(
-    st.lists(
-        st.one_of(
-            st.none(),
-            st.datetimes(
-                min_value=dt.datetime(1980, 1, 1), max_value=dt.datetime(2035, 1, 1)
-            ).map(lambda d: d.isoformat()),
-            st.datetimes(
-                min_value=dt.datetime(1980, 1, 1), max_value=dt.datetime(2035, 1, 1)
-            ).map(lambda d: d.isoformat() + "Z"),
-            st.dates(
-                min_value=dt.date(1980, 1, 1), max_value=dt.date(2035, 1, 1)
-            ).map(str),
-            st.sampled_from(["", "not a date", "2024-13-40", "07/04/2024"]),
-        ),
-        min_size=1,
-        max_size=30,
-    )
-)
-def test_flexible_timestamp_parse_property(spark, values):
-    """String-branch parse cascade: ISO (with/without Z) and bare dates
-    parse; garbage → NULL, never an ANSI error."""
-    schema = T.StructType([T.StructField("v", T.StringType(), True)])
-    df = spark.createDataFrame([(v,) for v in values], schema)
-    out = [
-        r["o"]
-        for r in df.select(SC.parse_flexible_timestamp(F.col("v")).alias("o")).collect()
-    ]
-    for got, v in zip(out, values):
-        exp = _flexible_parse_model(v)
-        if exp is not None and exp.tzinfo is not None:
-            exp = exp.astimezone(dt.timezone.utc).replace(tzinfo=None)
-        assert got == exp, f"parse({v!r}): {got} != {exp}"
-
-
 @SET
 @given(st.lists(st.one_of(st.none(), st.text(max_size=20)), min_size=1, max_size=30))
 def test_email_normalize_property(spark, values):
@@ -366,12 +314,12 @@ def test_mg_summary_retains_every_heavy_item(stream, k, batch):
     the rest.)"""
     import pandas as pd
 
-    from reverse_etl_homebrew_spark.operators.vectorized import _mg_merge_batch
+    from reverse_etl_homebrew_spark.operators.vectorized import _mg_merge_pairs
 
     items = pd.Series([f"i{x}" for x in stream])
     counts: dict = {}
     for lo in range(0, len(items), batch):
-        _mg_merge_batch(counts, items.iloc[lo : lo + batch], k)
+        _mg_merge_pairs(counts, items.iloc[lo : lo + batch].value_counts().items(), k)
     assert len(counts) <= k
     true = items.value_counts()
     thr = len(items) / (k + 1)

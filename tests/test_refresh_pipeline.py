@@ -12,9 +12,12 @@ beyond the driver's oracle row:
   subtractive arm of the merge_rollup_state fold, which the additive
   `incremental-agg-merge` proof never exercised;
 - the ANN append-equivalence invariant extends THROUGH the composite:
-  probing a follow-up batch against append_to_ann_index(survivor
-  index, admitted batch) equals probing against a full rebuild over
-  survivors ∪ admitted.
+  probing a follow-up batch against the survivor index with the
+  admitted batch's ``build_ann_index`` inserted equals probing against
+  a full rebuild over survivors ∪ admitted.
+
+Index maintenance is an INSERT INTO the bucketed table of the accepted
+batch's ``build_*`` rows, distinct within buckets (``_insert``).
 """
 
 from __future__ import annotations
@@ -27,13 +30,18 @@ from reverse_etl_homebrew_spark.functions import text as TX
 from reverse_etl_homebrew_spark.operators.dedup import incremental_dedup
 from reverse_etl_homebrew_spark.operators.refresh import corpus_refresh_report
 from reverse_etl_homebrew_spark.operators.similarity import (
-    append_to_ann_index,
     build_ann_index,
     incremental_knn,
 )
 from reverse_etl_homebrew_spark.sources.catalog import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def _insert(index, delta):
+    """INSERT INTO an index table: the set union of its rows and the
+    accepted batch's index rows."""
+    return index.unionByName(delta).distinct()
 
 
 @pytest.fixture(scope="module")
@@ -133,10 +141,9 @@ def test_retraction_refresh_equals_recompute_over_survivors(spark, docs, vecs):
 
 def test_span_index_append_equals_rebuild(spark, docs):
     """The span-index maintenance twin of the ANN append invariant:
-    appending an admitted batch's windows ≡ rebuilding over the union,
+    inserting an admitted batch's windows ≡ rebuilding over the union,
     and re-appending the same batch is a no-op (set idempotence)."""
     from reverse_etl_homebrew_spark.operators.dedup import (
-        append_to_span_index,
         build_span_index,
         incremental_dup_spans,
     )
@@ -145,12 +152,12 @@ def test_span_index_append_equals_rebuild(spark, docs):
     batch = docs.filter(F.col("doc_id").between(300, 360)).select(
         (F.col("doc_id") + 50000).alias("doc_id"), "text", "lang"
     )
-    appended = append_to_span_index(build_span_index(old), batch)
+    appended = _insert(build_span_index(old), build_span_index(batch))
     rebuilt = build_span_index(old.unionByName(batch))
     a = sorted(r["win"] for r in appended.collect())
     b = sorted(r["win"] for r in rebuilt.collect())
     assert a == b
-    again = append_to_span_index(appended, batch)
+    again = _insert(appended, build_span_index(batch))
     assert again.count() == appended.count()
     # a follow-up batch probed against the appended index sees exactly
     # what the rebuilt index shows
@@ -183,7 +190,7 @@ def test_append_index_equivalence_through_composite(spark, docs, vecs):
     assert admitted.count() == adm_vecs.count()
 
     base_idx = build_ann_index(vecs, planes=6)
-    appended = append_to_ann_index(base_idx, adm_vecs, planes=6)
+    appended = _insert(base_idx, build_ann_index(adm_vecs, planes=6))
     rebuilt = build_ann_index(vecs.unionByName(adm_vecs), planes=6)
 
     batch2 = vecs.filter(F.col("vec_id").between(100, 120)).select(
@@ -326,12 +333,11 @@ def test_probe_form_equals_report(spark, docs, vecs):
 
 
 def test_fingerprint_index_append_equals_rebuild(spark, docs):
-    """The doc-tier maintenance twin: appending an accepted batch's
+    """The doc-tier maintenance twin: inserting an accepted batch's
     fingerprints ≡ rebuilding over the union; re-appending is a
     no-op; and a follow-up batch deduped through the index form equals
     the corpus form exactly."""
     from reverse_etl_homebrew_spark.operators.dedup import (
-        append_to_fingerprint_index,
         build_fingerprint_index,
         incremental_dedup_against_index,
     )
@@ -342,12 +348,12 @@ def test_fingerprint_index_append_equals_rebuild(spark, docs):
         F.concat(F.col("text"), F.lit(" fp-v2")).alias("text"),
         "lang",
     )
-    appended = append_to_fingerprint_index(build_fingerprint_index(old), batch)
+    appended = _insert(build_fingerprint_index(old), build_fingerprint_index(batch))
     rebuilt = build_fingerprint_index(old.unionByName(batch))
     a = sorted(r["fp"] for r in appended.collect())
     b = sorted(r["fp"] for r in rebuilt.collect())
     assert a == b and a
-    again = append_to_fingerprint_index(appended, batch)
+    again = _insert(appended, build_fingerprint_index(batch))
     assert again.count() == appended.count()
 
     batch2 = docs.filter(F.col("doc_id") > 400).select(

@@ -48,13 +48,6 @@ def test_bool_normalize_strings(spark):
     assert out == [c[1] for c in BOOL_CASES]
 
 
-def test_bool_normalize_numeric(spark):
-    out = _run(
-        spark, SC.bool_normalize_numeric, [0, 1, -3, None], T.LongType()
-    )
-    assert out == ["false", "true", "true", None]
-
-
 # format_identifier, main.py:205-221
 IDENT_CASES = [
     ("123.0", "123"),
@@ -130,18 +123,6 @@ def test_next_birthday_regular_and_leap(spark):
         for r in df.select(SC.next_birthday(F.col("v"), today).alias("out")).collect()
     ]
     assert out == [c[1] for c in cases]
-
-
-def test_parse_flexible_timestamp(spark):
-    out = _run(
-        spark,
-        SC.parse_flexible_timestamp,
-        ["2024-06-01T12:30:00", "2024-06-01T12:30:00Z", "2024-06-01", "garbage", None],
-    )
-    assert out[0] == dt.datetime(2024, 6, 1, 12, 30)
-    assert out[1] == dt.datetime(2024, 6, 1, 12, 30)
-    assert out[2] == dt.datetime(2024, 6, 1, 0, 0)
-    assert out[3] is None and out[4] is None
 
 
 def test_truncate_and_json_payload(spark):

@@ -414,12 +414,12 @@ def test_running_totals_final_state_is_arrival_order_invariant(spark, tmp_path):
     """Running totals under disorder: INTERMEDIATE update rows
     legitimately depend on arrival order (they narrate the arrival
     sequence), but the FINAL per-key state must not — sums and counts
-    commute. Drive the compat twin over the same rows in two opposite
+    commute. Drive the running totals over the same rows in two opposite
     file orders and require identical final (n, total) per user."""
     import uuid
 
     from reverse_etl_homebrew_spark.streaming.stateful import (
-        streaming_running_totals_compat,
+        streaming_running_totals,
     )
 
     rows = [
@@ -436,7 +436,7 @@ def test_running_totals_final_state_is_arrival_order_invariant(spark, tmp_path):
         _write_events(spark, d, file_b, 1)
         name = f"rt_disorder_{order_label}_{uuid.uuid4().hex[:8]}"
         q = (
-            streaming_running_totals_compat(
+            streaming_running_totals(
                 read_events_stream(spark, d, max_files_per_trigger=1)
             )
             .writeStream.format("memory")

@@ -255,96 +255,13 @@ def test_stream_interval_join_matches_batch(spark, tmp_path):
     assert streamed == expected
 
 
-def _has_protobuf() -> bool:
-    try:
-        import google.protobuf.descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-import pytest  # noqa: E402
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithState's state server needs google.protobuf "
-    "(absent in this container; standard on real clusters)",
-)
-def test_transform_with_state_running_totals(spark, tmp_path):
-    """transformWithState surface: drained running totals must equal
-    the batch per-user aggregation (count exactly, sum to float
-    tolerance). Uses the RocksDB state store Spark requires for this
-    API."""
+def test_running_totals_compat_matches_batch(spark, tmp_path):
+    """The applyInPandasWithState running totals drain to the same
+    per-user totals as the batch aggregation."""
     import uuid
 
     from reverse_etl_homebrew_spark.streaming.stateful import (
         streaming_running_totals,
-    )
-    from reverse_etl_homebrew_spark.streaming.structured import read_events_stream
-
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        events_dir = str(tmp_path / "events_in")
-        os.makedirs(events_dir)
-        shutil.copy(os.path.join(SF, "events.parquet"), events_dir)
-        name = f"tws_{uuid.uuid4().hex[:8]}"
-        q = (
-            streaming_running_totals(read_events_stream(spark, events_dir))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # update mode: keep each user's LAST emitted running total
-        rows = spark.sql(
-            f"SELECT user_id, n_events, total_value FROM {name}"
-        ).collect()
-        final = {}
-        for r in rows:
-            cur = final.get(r["user_id"])
-            if cur is None or r["n_events"] > cur[0]:
-                final[r["user_id"]] = (r["n_events"], r["total_value"])
-
-        batch = {
-            r["user_id"]: (r["n"], r["total"])
-            for r in load_table(spark, SF, "events")
-            .groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total"))
-            .collect()
-        }
-        assert set(final) == set(batch)
-        for uid, (n, total) in batch.items():
-            assert final[uid][0] == n, f"user {uid} count"
-            assert abs(final[uid][1] - total) < 1e-6, f"user {uid} total"
-    finally:
-        if prev_provider is not None:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
-def test_running_totals_compat_matches_batch(spark, tmp_path):
-    """The applyInPandasWithState running-totals twin (no protobuf
-    state server needed) drains to the same per-user totals as the
-    batch aggregation — the executable evidence for the semantics the
-    transformWithState variant claims."""
-    import uuid
-
-    from reverse_etl_homebrew_spark.streaming.stateful import (
-        streaming_running_totals_compat,
     )
     from reverse_etl_homebrew_spark.streaming.structured import read_events_stream
 
@@ -353,7 +270,7 @@ def test_running_totals_compat_matches_batch(spark, tmp_path):
     shutil.copy(os.path.join(SF, "events.parquet"), events_dir)
     name = f"rt_compat_{uuid.uuid4().hex[:8]}"
     q = (
-        streaming_running_totals_compat(read_events_stream(spark, events_dir))
+        streaming_running_totals(read_events_stream(spark, events_dir))
         .writeStream.format("memory")
         .queryName(name)
         .outputMode("update")

