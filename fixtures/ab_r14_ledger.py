@@ -97,7 +97,7 @@ def r12_incremental_knn_plan(spark, sf_dir):
         .select(
             F.col("vec_id").alias("r_id"),
             F.col("embedding").alias("r_v"),
-            VEC.l2_norm(F.col("embedding"), dim).alias("r_nrm"),
+            F.sqrt(VEC.dot("embedding", "embedding", dim)).alias("r_nrm"),
         )
         .withColumn("bucket", F.element_at(bucketer(F.col("r_v")), 1))
     )
@@ -110,7 +110,7 @@ def r12_incremental_knn_plan(spark, sf_dir):
         .select(
             F.col("vec_id").alias("l_id"),
             F.col("embedding").alias("l_v"),
-            VEC.l2_norm(F.col("embedding"), dim).alias("l_nrm"),
+            F.sqrt(VEC.dot("embedding", "embedding", dim)).alias("l_nrm"),
         )
         .withColumn("__b0", F.element_at(bucketer(F.col("l_v")), 1))
     )

@@ -1,5 +1,6 @@
-"""Vector math over ``array<float>`` embedding columns, computed in
-double precision as FLAT dimension-unrolled expressions.
+"""Vector math over ``array<float>`` embedding columns in the JVM:
+the finite-geometry scopes, the driver-side seed vector and dimension
+probe, and the FLAT dimension-unrolled dot they fold with.
 
 Why flat and not higher-order functions: stacking several
 ``F.aggregate``/``F.zip_with`` lambdas inside one projection was
@@ -12,10 +13,11 @@ Summation order is a strict left fold (t0 + t1 + ...), bit-identical
 to DuckDB's ``list_sum(list_transform(...))`` over the same data —
 which is what makes the similarity operators oracle-checkable.
 
-Scale: these are map-side projections — no shuffle; the embedding
-dimension is fixed per table, so unrolling is bounded (d ≤ a few
-thousand). For very high-d vectors swap in a pandas_udf with numpy
-behind the same signatures.
+Scoring (cosine, norms, buckets, centroid distances) is NOT spelled
+here: it runs in the Arrow kernels of operators/vectorized.py, which
+compute the same left folds with a plan size independent of the
+dimension — a dim-unrolled fold in a hot projection crosses janino's
+64 KB method limit and the stage silently runs interpreted.
 """
 
 from __future__ import annotations
@@ -57,9 +59,11 @@ def finite_vector(col: ColumnOrName) -> Column:
 
     This forall() form is exact but runs the lambda INTERPRETED per
     element — measured +11-47% on the hot similarity keys. Use it on
-    COLD paths only (driver-side seed/centroid collection); hot
-    operators scope with ``finite_geometry`` below, whose SQL twin is
-    ``FINITE_VEC_SQL``.
+    COLD paths only (driver-side seed/centroid collection); the hot
+    vector operators scope with their masking kernels' NULL outputs
+    and the scorers' ``ok`` flags (operators/vectorized.py), and a
+    JVM-only column path with ``finite_geometry`` below. The SQL twin
+    of both is ``FINITE_VEC_SQL``.
 
     Length-0 vectors are OUT of scope (r14, advisor): ``F.forall``
     over an empty array is vacuously true, but an empty embedding
@@ -80,11 +84,10 @@ def finite_vector(col: ColumnOrName) -> Column:
 
 
 def finite_geometry(col: ColumnOrName, dim: int) -> Column:
-    """The HOT-path finite scope: the vector's self-dot over the
-    table's ``dim`` is a finite double. Pure flat codegen — the SAME
-    fold the norms/scores already compute, so Catalyst's
-    subexpression elimination makes it ~free where a norm column
-    exists, and it never leaves whole-stage codegen. Equivalent to
+    """The codegen finite scope, for a column path with no vector
+    kernel (the per-dimension centroid key): the vector's self-dot
+    over the table's ``dim`` is a finite double. Pure flat codegen —
+    it never leaves whole-stage codegen. Equivalent to
     ``finite_vector`` on contract-conforming data (uniform ``dim``,
     the ingress rule): a NULL vector or NULL component NULLs the left
     fold (excluded), NaN/±Inf components make it non-finite
@@ -170,35 +173,3 @@ def dot(a: ColumnOrName, b: ColumnOrName, dim: int) -> Column:
             for i in range(dim)
         ]
     )
-
-
-def dot_literal(a: ColumnOrName, q: Sequence[float]) -> Column:
-    """Dot product against a fixed query vector (constants folded into
-    codegen — no join, no array literal materialization)."""
-    ac = _c(a)
-    return _sum_terms(
-        [
-            F.element_at(ac, F.lit(i + 1)).cast("double") * F.lit(float(q[i]))
-            for i in range(len(q))
-        ]
-    )
-
-
-def l2_norm(a: ColumnOrName, dim: int) -> Column:
-    return F.sqrt(dot(a, a, dim))
-
-
-def cosine_literal(a: ColumnOrName, q: Sequence[float]) -> Column:
-    import math
-
-    qn = math.sqrt(_py_dot(q, q))
-    den = l2_norm(a, len(q)) * F.lit(qn)
-    return F.when(den > 0, dot_literal(a, q) / den)
-
-
-def _py_dot(x: Sequence[float], y: Sequence[float]) -> float:
-    """Driver-side strict left-fold dot (same order as the SQL side)."""
-    acc = 0.0
-    for a, b in zip(x, y):
-        acc += float(a) * float(b)
-    return acc

@@ -130,81 +130,33 @@ def topk_brute(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    pre_scoped: bool = False,
-    norm_col: "str | None" = None,
 ) -> DataFrame:
     """Exact top-k by cosine against a literal query vector.
     Scores are rounded to 6 decimals for cross-run determinism, with
     the id as tie-break.
 
-    ``pre_scoped=True`` (r14 optimization round): the caller
-    guarantees every input row already passed the finite-geometry
-    scope — true for the LSH/IVF candidate paths, whose masking
-    kernels (NULL bucket / NULL cell) excluded corrupt vectors before
-    the probe filter. Skipping the redundant ``finite_geometry``
-    filter here removes a second inlined dim-term fold from the
-    candidate-scoring stage; with it, that stage's generated
-    ``processNext()`` crossed janino's 64 KB method limit and the
-    WHOLE stage (probe ``isin`` over every row + scoring) silently
-    ran interpreted (ERROR CodeGenerator fallback — measured 10.8 s
-    vs 1.3 s at sf0.1 on topk-similarity-lsh). Results are identical:
-    the scope was already applied upstream. This is a CONTRACT, not a
-    hint (r14 advisor): passing it without an upstream masking kernel
-    lets NaN/Inf-component vectors reach scoring, where NaN scores
-    rank differently cross-engine — the r13 bug class.
+    One path for every literal-query top-k (this one, and the
+    candidates ``topk_lsh`` / ``topk_ivf`` keep): the fused kernel
+    ``query_cosine_flags_pandas`` computes the row norm and the query
+    dot as the oracle's left folds in one Arrow pass, with NULL for a
+    zero-norm row (the oracle's CASE), and its ``ok`` flag is the
+    finite-geometry scope (a NaN fold or an Inf overflow — a NaN
+    score would rank differently cross-engine, the r13 class). On a
+    candidate set a masking kernel already scoped upstream, ``ok``
+    excludes nothing more. No dim-unrolled codegen fold enters the
+    plan: a stage holding a few dim-64 folds crosses janino's 64 KB
+    method limit and silently runs interpreted (SCALE.md)."""
+    from .vectorized import query_cosine_flags_pandas
 
-    ``norm_col`` (r15 optimization round, pre_scoped only):
-    the caller already carries a per-row L2 norm computed with the
-    bit-identical left fold (the fused ``bucket_norm_pandas``
-    kernel), so the scoring stage keeps exactly ONE dim-unrolled fold
-    (the query dot) instead of the two ``cosine_literal`` inlines —
-    same ``when(norm × qn > 0)`` NULL semantics, same doubles."""
-    if norm_col is not None and pre_scoped:
-        import math
-
-        qn = F.lit(math.sqrt(VEC._py_dot(query, query)))
-        score = F.when(
-            F.col(norm_col) * qn > 0,
-            VEC.dot_literal(F.col(vec_col), query) / (F.col(norm_col) * qn),
-        )
-        return (
-            df.select(F.col(id_col), F.round(score, 6).alias("score"))
-            .orderBy(F.desc("score"), F.col(id_col))
-            .limit(k)
-        )
-    if not pre_scoped:
-        # Un-scoped cosine spelling: the r9-r14 history of this branch
-        # is codegen width — the original finite_geometry +
-        # cosine_literal form inlined THREE dim-term folds and crossed
-        # janino's 64 KB method limit at dim 64 (the stage ran
-        # interpreted, measured 8.8 s → 3.9 s once fixed); the r14 fix
-        # kept ONE codegen fold (the query dot) next to a
-        # norm kernel + scalar filter. r15 fuses the
-        # remaining fold INTO the kernel (query_cosine_flags_pandas):
-        # same kernel count, one fewer per-element JVM pass, and the
-        # dim-unrolled tree leaves the plan entirely. Scores are
-        # bit-identical (same left folds, same (norm × qn)
-        # denominator, same NULL for zero-norm rows) and the ``ok``
-        # flag reproduces the old `nrm IS NOT NULL AND < inf`
-        # finite-geometry exclusion exactly (NaN fold / Inf overflow —
-        # both legs, the r14 advisor contract).
-        from .vectorized import query_cosine_flags_pandas
-
-        _qc = query_cosine_flags_pandas(query)
-        return (
-            df.where(F.col(vec_col).isNotNull())
-            .select(F.col(id_col), _qc(F.col(vec_col)).alias("__cf"))
-            .where(F.col("__cf").getField("ok"))
-            .select(
-                F.col(id_col),
-                F.round(F.col("__cf").getField("score"), 6).alias("score"),
-            )
-            .orderBy(F.desc("score"), F.col(id_col))
-            .limit(k)
-        )
-    score = VEC.cosine_literal(F.col(vec_col), query)
+    _qc = query_cosine_flags_pandas(query)
     return (
-        df.select(F.col(id_col), F.round(score, 6).alias("score"))
+        df.where(F.col(vec_col).isNotNull())
+        .select(F.col(id_col), _qc(F.col(vec_col)).alias("__cf"))
+        .where(F.col("__cf").getField("ok"))
+        .select(
+            F.col(id_col),
+            F.round(F.col("__cf").getField("score"), 6).alias("score"),
+        )
         .orderBy(F.desc("score"), F.col(id_col))
         .limit(k)
     )
@@ -219,19 +171,18 @@ def topk_lsh(
     planes: int = 6,
 ) -> DataFrame:
     """Approximate top-k: prune to LSH-bucket candidates, then exact
-    cosine on the survivors. Candidate buckets = query bucket plus all
-    1-bit-flip probes.
+    cosine on the survivors (``topk_brute``). Candidate buckets = the
+    query bucket plus its probes to Hamming radius 2.
 
-    The data-side bucket is computed by the Arrow matmul bucketer
-    (operators/vectorized.bucket_norm_pandas), not the flat codegen
-    sign fold: Catalyst pushes the probe filter through the bucket
+    The data-side bucket comes from the shared LSH spine
+    (``_bucket_side``, the Arrow bucketer), not the flat codegen sign
+    fold: Catalyst pushes the probe filter through the bucket
     projection, and an IN-filter carrying two inlined copies of a
-    planes×dim fold (the In check + the pushed isnotnull) overflows
-    janino's 64 KB method limit — the whole stage then silently runs
-    INTERPRETED (observed: ERROR CodeGenerator + fallback). Same
-    lesson, same fix as the multi-table knn path. Bucket values are
-    identical (same planes, same MSB bit order), so the SQL oracle is
-    unchanged."""
+    planes×dim fold overflows janino's 64 KB method limit — the whole
+    stage then silently runs INTERPRETED. Bucket values are identical
+    (same planes, same MSB bit order), so the SQL oracle is unchanged.
+    The masking kernel gives corrupt vectors a NULL bucket, which the
+    probe ``isin`` drops — the finite-geometry scope."""
     dim = len(query)
     hp = _deterministic_planes(planes, dim)
 
@@ -246,28 +197,10 @@ def topk_lsh(
     # neighbor sets stays useful while still scanning only
     # (1 + p + p(p-1)/2) of 2^p buckets
     probe_buckets = [qb ^ m for m in _probe_masks(planes, 2)]
-    from .vectorized import bucket_norm_pandas
-
-    bn = bucket_norm_pandas(hp, planes, tables=1)
-    cand = (
-        # the masking kernel gives corrupt vectors a NULL bucket,
-        # which isin() drops — the finite-geometry scope for free;
-        # pre_scoped tells topk_brute NOT to re-scope (the redundant
-        # second fold pushed the candidate stage past janino's 64 KB
-        # method limit and the probe filter ran interpreted — r14).
-        # r15: the kernel is the FUSED bucket+norm pass, and the norm
-        # rides into scoring (norm_col) so the candidate stage keeps
-        # one dim fold (the query dot) instead of cosine_literal's two
-        # norm inlines — same doubles, same NULL semantics.
-        df.where(F.col(vec_col).isNotNull())
-        .withColumn("__bn", bn(F.col(vec_col)))
-        .withColumn("__bucket", F.element_at(F.col("__bn").getField("bs"), 1))
-        .withColumn("__nrm", F.col("__bn").getField("nrm"))
-        .filter(F.col("__bucket").isin(probe_buckets))
-    )
-    return topk_brute(
-        cand, query, k, id_col, vec_col, pre_scoped=True, norm_col="__nrm"
-    )
+    cand = _bucket_side(
+        df, id_col, vec_col, hp, planes, 1, (id_col, vec_col, "__nrm", "__bucket")
+    ).filter(F.col("__bucket").isin(probe_buckets))
+    return topk_brute(cand, query, k, id_col, vec_col)
 
 
 def topk_ivf(
@@ -279,14 +212,11 @@ def topk_ivf(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF-flat approximate top-k: score only vectors whose cell is
-    among the query's ``n_probe`` nearest centroids (dot-product
-    argmax, numpy first-max order).
-
-    pre_scoped: the masking assign kernel gives corrupt vectors a NULL
-    cell, which isin() drops — re-scoping with a second inlined fold
-    pushed the candidate stage past janino's 64 KB method limit and it
-    ran interpreted (r14 optimization round)."""
+    """IVF-flat approximate top-k: score (``topk_brute``) only vectors
+    whose cell is among the query's ``n_probe`` nearest centroids
+    (dot-product argmax, numpy first-max order). The masking assign
+    kernel gives corrupt vectors a NULL cell, which the cell filter
+    drops."""
     import numpy as np
 
     from .vectorized import ivf_assign_pandas
@@ -299,7 +229,7 @@ def topk_ivf(
         .filter(F.col("ivf_cell").isin(probe_cells))
         .select(id_col, vec_col)
     )
-    return topk_brute(cand, query, k, id_col, vec_col, pre_scoped=True)
+    return topk_brute(cand, query, k, id_col, vec_col)
 
 
 def knn_join(

@@ -144,62 +144,6 @@ def _cells(values, ok) -> "pd.Series":
     return pd.Series([v if k else None for v, k in zip(values, ok)], dtype=object)
 
 
-def query_cosine_pandas(query: Sequence[float]):
-    """Scalar Pandas UDF: cosine of each row vector against ``query``
-    as one BLAS ``m @ q`` per batch. Its scores are NOT
-    fold-reproducible (pairwise/SIMD summation), so its oracle is
-    rows-only by design; a zero-norm row gets no score (``_cosine``)."""
-    import numpy as np
-
-    q = np.asarray(list(query), dtype=np.float64)
-    qn = float(np.sqrt((q * q).sum()))
-
-    @F.pandas_udf(T.DoubleType())
-    def score(vecs: pd.Series) -> pd.Series:
-        m, _ = _vector_matrix(vecs, "cosine_scores", dim=len(q))
-        return _cosine(m @ q, np.sqrt((m * m).sum(axis=1)) * qn)
-
-    return score
-
-
-def cosine_scores_pandas(
-    df: DataFrame,
-    query: Sequence[float],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Cosine similarity of every row vector against ``query`` via a
-    scalar Pandas UDF (Arrow-batched numpy matmul)."""
-    from ..functions import vectors as _VEC
-
-    score = query_cosine_pandas(query)
-    return df.where(_VEC.finite_geometry(F.col(vec_col), len(query))).select(
-        F.col(id_col), score(F.col(vec_col)).alias("score")
-    )
-
-
-def topk_pandas(
-    df: DataFrame,
-    query: Sequence[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact top-k via the vectorized scorer + TakeOrdered.
-
-    Zero-norm vectors score NaN in the numpy scorer; map them to NULL
-    so ranking matches the codegen/SQL path (Spark sorts NaN *above*
-    every number in DESC, while a SQL CASE yields NULL which sorts
-    last — silently promoting degenerate vectors into the top-k)."""
-    scored = cosine_scores_pandas(df, query, id_col, vec_col)
-    clean = F.when(~F.isnan("score"), F.round("score", 6))
-    return (
-        scored.select(id_col, clean.alias("score"))
-        .orderBy(F.desc_nulls_last("score"), F.col(id_col))
-        .limit(k)
-    )
-
-
 def ivf_cell_pandas(centroids: Sequence[Sequence[float]]):
     """Scalar Pandas UDF: the nearest centroid (dot-product argmax, a
     BLAS ``m @ C.T``) of each vector; masked rows (NULL vector,
@@ -277,12 +221,13 @@ def pair_cosine_flags_pandas():
     plus scalar filters: one ArrowEvalPython node instead of three
     (guide §4.1: you control how many times you cross, cross once).
 
-    Bit-identical to the unfused spelling: each norm is the codegen
-    ``l2_norm`` left fold (float32→float64 widening is exact, IEEE
-    sqrt is correctly rounded), the score is ``acc / (l_nrm*r_nrm)``
-    with NULL when the denominator is not > 0, and ``ok`` is the
-    per-side ``nrm IS NOT NULL AND nrm < inf`` filter: a NaN-component
-    fold is NaN, an Inf-component fold overflows to +Inf — both legs
+    Bit-identical to the unfused spelling: each norm is ``sqrt`` of
+    the oracle's self-dot left fold (float32→float64 widening is
+    exact, IEEE sqrt is correctly rounded), the score is
+    ``acc / (l_nrm*r_nrm)`` with NULL when the denominator is not
+    > 0, and ``ok`` is the per-side ``nrm IS NOT NULL AND nrm < inf``
+    filter: a NaN-component fold is NaN, an Inf-component fold
+    overflows to +Inf — both legs
     non-finite, both excluded (the r14 advisor contract), while
     legitimate zero-norm vectors stay (ok=true, score NULL — the
     oracle's CASE)."""
@@ -305,16 +250,15 @@ def pair_cosine_flags_pandas():
 
 
 def query_cosine_flags_pandas(query):
-    """Fused literal-query cosine for the UN-scoped brute branch (r15):
-    one Arrow pass emitting ``struct<score: double, ok: boolean>`` —
-    the dot against the fixed query vector AND the row norm as the
-    same left folds as ``dot_literal`` / ``l2_norm`` (bit-identical
-    doubles), with ``ok`` the finite-geometry scope on the norm (NaN
-    fold → NaN, Inf fold → +Inf, both excluded; finite zero-norm rows
-    stay and score NULL — the oracle's CASE). Replaced a norm kernel
-    plus a 64-term codegen dot in topk_brute's cosine path: same
-    kernel count, one fewer per-element JVM pass, and the
-    dim-unrolled expression tree leaves the plan."""
+    """Fused literal-query cosine, the one scorer of ``topk_brute``
+    (every literal-query top-k key): one Arrow pass emitting
+    ``struct<score: double, ok: boolean>`` — the dot against the
+    fixed query vector AND the row norm as the oracle's left folds
+    (``_fold``, IEEE sqrt; bit-identical doubles), with ``ok`` the
+    finite-geometry scope on the norm (NaN fold → NaN, Inf fold →
+    +Inf, both excluded; finite zero-norm rows stay and score NULL —
+    the oracle's CASE). No dim-unrolled expression tree enters the
+    plan."""
     import numpy as np
 
     q = np.asarray([float(x) for x in query], dtype=np.float64)
@@ -368,7 +312,7 @@ def bucket_norm_pandas(planes_flat, planes_per_table: int, tables: int):
     round): one Arrow pass emitting ``struct<bs: array<long>, nrm:
     double>`` — all ``tables`` hash-table bucket ids of a vector, each
     tagged with ``t * 2**planes_per_table``, plus the norm double of
-    the codegen ``l2_norm`` fold (``_fold``, IEEE sqrt).
+    the oracle's self-dot left fold (``_fold``, IEEE sqrt).
 
     Bucket bit order is the oracle's (first plane = MSB), and the
     SIGNS are bit-identical to the oracle's left-to-right sign fold at

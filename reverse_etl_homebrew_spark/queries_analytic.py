@@ -275,30 +275,6 @@ def q_lag_lead(spark, sf_dir):
     )
 
 
-def _topk_pandas_sql() -> str:
-    from .sqlfrags import _TOPK_SIM_SQL
-
-    return _TOPK_SIM_SQL
-
-
-@register("topk-similarity-pandas", sql=_topk_pandas_sql())
-def q_topk_similarity_pandas(spark, sf_dir):
-    """Arrow-batched numpy top-k (the high-dimensional scale path —
-    plan size independent of vector dimension). Oracle-backed: both
-    scorers round to 6 decimals before ranking, which absorbs the
-    last-bit difference between numpy's pairwise/SIMD summation and
-    the oracle's strict left fold (relative gap ~1e-15, nine orders
-    below the rounding quantum), so the shared brute-force SQL checks
-    this physical path too."""
-    from .functions import vectors as VEC
-    from .operators.vectorized import topk_pandas
-
-    emb = _t(spark, sf_dir, "embeddings")
-    query, found = VEC.query_vector(emb)
-    out = topk_pandas(emb, query, k=10)
-    return out if found else out.where(F.lit(False))
-
-
 def _ivf_sql() -> str:
     from .sqlfrags import _DOT_SQL, FINITE_VEC_SQL
 
@@ -348,14 +324,13 @@ def q_topk_similarity_ivf(spark, sf_dir):
     """IVF-flat approximate top-k: coarse-quantize every vector to its
     nearest centroid (Arrow/numpy argmax — cell ids are fixed vectors
     vec_id < 8 in id order), probe the query's 3 nearest cells,
-    exact-score the survivors with the codegen fold. Oracle-backed:
-    the SQL recomputes assignment (argmax via row_number over dot
-    DESC, cell ASC — matching numpy first-max) and the probe cells,
-    so the IVF pruning itself is verified. Assignment ulp safety:
+    exact-score the survivors with ``topk_brute``'s fused left-fold
+    kernel. Oracle-backed: the SQL recomputes assignment (argmax via
+    row_number over dot DESC, cell ASC — matching numpy first-max)
+    and the probe cells, so the IVF pruning itself is verified, and
+    the scores are the oracle's doubles. Assignment ulp safety:
     measured min top-2 cell-dot gap ≈ 1e-4 on this corpus, nine
-    orders above summation-order noise. The numpy SCORING path stays
-    covered by topk-similarity-pandas (rows-only: pairwise-summation
-    rounding is genuinely not fold-reproducible)."""
+    orders above summation-order noise."""
     from .functions import vectors as VEC
     from .operators.similarity import topk_ivf
 

@@ -216,14 +216,18 @@ def _bucket_sql(vec_expr: str, planes) -> str:
 
 
 @register("topk-similarity", sql=_TOPK_SIM_SQL)
+@register("topk-similarity-pandas", sql=_TOPK_SIM_SQL)
 def q_topk_similarity(spark, sf_dir):
     """Exact top-k cosine similarity against a query vector (vec_id 0)
     — brute-force baseline: map-side scoring in double precision plus
     TakeOrderedAndProject; zero shuffle (EDBT 2020 / ICDE 2021 anchors,
-    PAPERS.md). Scored by ``topk_brute``'s fused kernel, whose ``ok``
-    flag is the finite-geometry scope: a NaN/Inf-component vector
-    would otherwise score NaN, which Spark ranks above every number in
-    a descending sort."""
+    PAPERS.md). Registered as `topk-similarity` and as
+    `topk-similarity-pandas` (the Arrow scale path's name: the scorer
+    IS the Arrow kernel, plan size independent of the dimension).
+    Scored by ``topk_brute``'s fused kernel, whose ``ok`` flag is the
+    finite-geometry scope: a NaN/Inf-component vector would otherwise
+    score NaN, which Spark ranks above every number in a descending
+    sort."""
     emb = _t(spark, sf_dir, "embeddings")
     query, found = VEC.query_vector(emb)
     out = SIM.topk_brute(emb, query, k=10)

@@ -24,11 +24,8 @@ import glob as _glob
 import os
 from typing import Iterator, List, Optional, Sequence
 
-from dataclasses import dataclass
-
 from pyspark.sql.datasource import (
     DataSource,
-    DataSourceArrowWriter,
     DataSourceReader,
     EqualTo,
     Filter,
@@ -40,9 +37,7 @@ from pyspark.sql.datasource import (
     IsNull,
     LessThan,
     LessThanOrEqual,
-    SimpleDataSourceStreamReader,
     StringStartsWith,
-    WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
 
@@ -234,227 +229,6 @@ class DuckDBParquetDataSource(DataSource):
 
     def reader(self, schema: StructType) -> DuckDBParquetReader:
         return DuckDBParquetReader(schema, self.options)
-
-    def simpleStreamReader(self, schema: StructType) -> "DuckDBWatermarkStreamReader":
-        return DuckDBWatermarkStreamReader(schema, self.options)
-
-    def writer(self, schema: StructType, overwrite: bool) -> "DuckDBParquetWriter":
-        return DuckDBParquetWriter(self.options, overwrite)
-
-
-class DuckDBWatermarkStreamReader(SimpleDataSourceStreamReader):
-    """The reference's high-watermark incremental read (main.py:534-549
-    ``WHERE {updated_col} >= @watermark`` + ledger advance) as a NATIVE
-    Spark streaming source: the stream offset IS the watermark.
-
-    Each micro-batch asks the external engine for rows with
-    ``updated_col`` strictly greater than the committed watermark and
-    advances the offset to the batch's max — Spark's checkpoint then
-    plays the role of the reference's run ledger (exactly-once offset
-    tracking, ``readBetweenOffsets`` replay on recovery). Inherits the
-    reference's watermark-read caveat verbatim: a row that lands with
-    an ``updated_col`` at or below an already-committed watermark is
-    not picked up (the reference's answer is a periodic full
-    re-scan; so is this engine's).
-
-    Options: ``path`` (parquet file/glob standing in for the remote
-    table), ``updated_col`` (the watermark column, a timestamp)."""
-
-    def __init__(self, schema: StructType, options):
-        self.schema = schema
-        self.path = options.get("path")
-        self.updated_col = options.get("updated_col")
-        if not self.path:
-            raise ValueError("duckdb_parquet: 'path' option is required")
-        if not self.updated_col:
-            raise ValueError(
-                "duckdb_parquet streaming: 'updated_col' option is required"
-            )
-
-    def initialOffset(self) -> dict:
-        return {"watermark": ""}  # empty = read from the beginning
-
-    def _select(self, con, start_wm: str, end_wm: Optional[str]):
-        cols = ", ".join(_quote_ident(f.name) for f in self.schema.fields)
-        wm_col = _quote_ident(self.updated_col)
-        where = []
-        if start_wm:
-            where.append(f"{wm_col} > TIMESTAMP '{start_wm}'")
-        if end_wm:
-            where.append(f"{wm_col} <= TIMESTAMP '{end_wm}'")
-        sql = f"SELECT {cols} FROM read_parquet({_quote_path(self.path)})"
-        if where:
-            sql += " WHERE " + " AND ".join(where)
-        return con.execute(sql).fetchall()
-
-    @staticmethod
-    def _fmt(ts: dt.datetime) -> str:
-        return ts.strftime("%Y-%m-%d %H:%M:%S.%f")
-
-    def read(self, start: dict):
-        import duckdb
-
-        start_wm = start.get("watermark", "")
-        con = duckdb.connect()
-        try:
-            wm_col = _quote_ident(self.updated_col)
-            pred = f" WHERE {wm_col} > TIMESTAMP '{start_wm}'" if start_wm else ""
-            (max_wm,) = con.execute(
-                f"SELECT max({wm_col}) FROM read_parquet({_quote_path(self.path)})"
-                + pred
-            ).fetchone()
-            if max_wm is None:  # nothing new — offset unchanged
-                return iter([]), start
-            end_wm = self._fmt(max_wm)
-            rows = self._select(con, start_wm, end_wm)
-        finally:
-            con.close()
-        return iter([tuple(r) for r in rows]), {"watermark": end_wm}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        import duckdb
-
-        con = duckdb.connect()
-        try:
-            rows = self._select(
-                con, start.get("watermark", ""), end.get("watermark") or None
-            )
-        finally:
-            con.close()
-        return iter([tuple(r) for r in rows])
-
-
-@dataclass
-class _TaskFileCommit(WriterCommitMessage):
-    staged_path: str
-    rows: int
-
-
-class DuckDBParquetWriter(DataSourceArrowWriter):
-    """External-engine write with the v2 two-phase commit protocol.
-
-    Each task streams its Arrow batches through an in-process DuckDB
-    cursor (``COPY ... TO ... (FORMAT PARQUET)``) into a STAGED file;
-    only the driver-side ``commit`` — which runs exactly once, after
-    every task succeeded — promotes staged files into the target
-    directory (and only then replaces existing data under
-    ``mode("overwrite")``). ``abort`` removes the staging directory,
-    so failed or speculative task attempts never leave partial output
-    visible: the same job-commit discipline FileBatchWrite gives
-    native sinks, here proven over an external engine."""
-
-    def __init__(self, options, overwrite: bool):
-        import uuid
-
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("duckdb_parquet: 'path' option is required")
-        self.overwrite = overwrite
-        self.staging = os.path.join(
-            os.path.dirname(self.path.rstrip("/")) or ".",
-            f".{os.path.basename(self.path.rstrip('/'))}.staging-{uuid.uuid4().hex}",
-        )
-
-    def write(self, iterator) -> _TaskFileCommit:
-        import uuid
-
-        import duckdb
-        import pyarrow as pa
-
-        os.makedirs(self.staging, exist_ok=True)
-        out = os.path.join(self.staging, f"part-{uuid.uuid4().hex}.parquet")
-        # Peek one batch for the schema, then hand DuckDB a streaming
-        # RecordBatchReader over the rest — task memory stays O(batch),
-        # never O(partition) (rows-never-materialize, same posture as
-        # the read path).
-        it = iter(iterator)
-        try:
-            first = next(it)
-        except StopIteration:
-            return _TaskFileCommit(staged_path="", rows=0)
-        rows = 0
-
-        def _stream():
-            nonlocal rows
-            rows += first.num_rows
-            yield first
-            for b in it:
-                rows += b.num_rows
-                yield b
-
-        reader = pa.RecordBatchReader.from_batches(first.schema, _stream())
-        con = duckdb.connect()
-        try:
-            con.register("__spark_write_stream", reader)
-            con.execute(
-                f"COPY (SELECT * FROM __spark_write_stream) TO {_quote_path(out)}"
-                " (FORMAT PARQUET)"
-            )
-        finally:
-            con.close()
-        return _TaskFileCommit(staged_path=out, rows=rows)
-
-    def commit(self, messages) -> None:
-        import shutil
-        import uuid
-
-        os.makedirs(self.path, exist_ok=True)
-        backup = None
-        displaced: List[tuple] = []
-        if self.overwrite:
-            existing = _glob.glob(os.path.join(self.path, "*.parquet"))
-            if existing:
-                # Displace, don't delete: a crash between "old data gone"
-                # and "new data promoted" must not lose both generations
-                # (same .bak swap protocol as control.merge_idmap).
-                backup = os.path.join(self.path, f".bak-{uuid.uuid4().hex}")
-                os.makedirs(backup)
-                for f in existing:
-                    dest = os.path.join(backup, os.path.basename(f))
-                    shutil.move(f, dest)
-                    displaced.append((f, dest))
-        try:
-            for m in messages:
-                if m is not None and m.staged_path:
-                    shutil.move(
-                        m.staged_path,
-                        os.path.join(self.path, os.path.basename(m.staged_path)),
-                    )
-        except BaseException:
-            for orig, dest in displaced:
-                if os.path.exists(dest) and not os.path.exists(orig):
-                    shutil.move(dest, orig)
-            raise
-        if backup is not None:
-            shutil.rmtree(backup, ignore_errors=True)
-        shutil.rmtree(self.staging, ignore_errors=True)
-        self._sweep_stale_staging()
-
-    def _sweep_stale_staging(self) -> None:
-        """Remove staging dirs leaked by crashed jobs for this target.
-
-        Only dirs older than an hour are swept, so a concurrent writer's
-        live staging dir is never yanked out from under it."""
-        import shutil
-        import time
-
-        base = os.path.basename(self.path.rstrip("/"))
-        parent = os.path.dirname(self.path.rstrip("/")) or "."
-        stale = _glob.glob(os.path.join(parent, f".{base}.staging-*"))
-        stale += _glob.glob(os.path.join(self.path, ".bak-*"))
-        for d in stale:
-            if os.path.abspath(d) == os.path.abspath(self.staging):
-                continue
-            try:
-                if time.time() - os.path.getmtime(d) > 3600:
-                    shutil.rmtree(d, ignore_errors=True)
-            except OSError:
-                pass
-
-    def abort(self, messages) -> None:
-        import shutil
-
-        shutil.rmtree(self.staging, ignore_errors=True)
 
 
 def register(spark) -> None:

@@ -19,11 +19,11 @@ syntax error there), so temporal predicates stay Spark-side rather
 than failing remotely. Pushdown remains best-effort-correct by
 construction: anything not compiled is still evaluated by Spark.
 
-Read-only by design: SQLite is a single-writer engine, so N parallel
-Spark write tasks would serialize on the database lock (or corrupt a
-WAL-less file on NFS). Writes belong on the lakehouse side
-(``DuckDBParquetWriter``); this source models the reference's
-warehouse-READ contract (main.py:534-549).
+Read-only by design, like the DuckDB source: SQLite is a
+single-writer engine, so N parallel Spark write tasks would serialize
+on the database lock (or corrupt a WAL-less file on NFS). Both sources
+model the reference's warehouse-READ contract (main.py:534-549); the
+engine's writes go through its sinks (sinks/).
 """
 
 from __future__ import annotations

@@ -27,9 +27,8 @@ FINITE_VEC_SQL = (
     " x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))"
 )
 
-# Shared by topk-similarity (codegen fold scorer) and
-# topk-similarity-pandas (Arrow/numpy scorer): both round scores to 6
-# decimals, so one brute-force SQL oracle checks either physical path.
+# The oracle of topk-similarity and topk-similarity-pandas, two names
+# on one builder (topk_brute's fused left-fold kernel).
 _TOPK_SIM_SQL = f"""
     WITH q AS (
       SELECT embedding AS qv FROM embeddings

@@ -121,58 +121,6 @@ def test_partition_per_file(spark, tmp_path):
     assert df.count() == 100
 
 
-# --- external writer: v2 two-phase commit over an external engine ----------
-
-def test_external_write_roundtrip(spark, tmp_path):
-    from reverse_etl_homebrew_spark.sources.duckdb_source import register
-
-    register(spark)
-    target = str(tmp_path / "out")
-    src = spark.range(1000).select(
-        F.col("id"), (F.col("id") * 2).alias("v"), F.concat(F.lit("s"), F.col("id")).alias("s")
-    )
-    src.repartition(4).write.format("duckdb_parquet").option("path", target).mode("append").save()
-
-    back = spark.read.format("duckdb_parquet").option("path", target + "/*.parquet").load()
-    assert back.count() == 1000
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, src.collect()))
-    # no staging residue
-    import glob as g
-    assert not g.glob(str(tmp_path / ".out.staging-*"))
-
-
-def test_external_write_overwrite_replaces(spark, tmp_path):
-    from reverse_etl_homebrew_spark.sources.duckdb_source import register
-
-    register(spark)
-    target = str(tmp_path / "out")
-    spark.range(10).write.format("duckdb_parquet").option("path", target).mode("append").save()
-    spark.range(5).write.format("duckdb_parquet").option("path", target).mode(
-        "overwrite"
-    ).save()
-    back = spark.read.format("duckdb_parquet").option("path", target + "/*.parquet").load()
-    assert back.count() == 5
-
-
-def test_external_write_abort_leaves_no_partial_output(spark, tmp_path):
-    """A failing task must abort the job with the target untouched and
-    staging cleaned — the commit protocol's whole point."""
-    from reverse_etl_homebrew_spark.sources.duckdb_source import register
-
-    register(spark)
-    target = str(tmp_path / "out")
-    poisoned = spark.range(100).select(
-        F.expr("assert_true(id < 90, 'poisoned row')"), F.col("id")
-    )
-    with pytest.raises(Exception):
-        poisoned.repartition(4).write.format("duckdb_parquet").option(
-            "path", target
-        ).mode("append").save()
-    import glob as g
-    assert not g.glob(target + "/*.parquet"), "no partial files may be visible"
-    assert not g.glob(str(tmp_path / ".out.staging-*")), "staging must be cleaned"
-
-
 # --- column-projection pushdown (VERDICT r2 #2) -----------------------------
 
 def test_columns_option_prunes_remote_select(spark):
@@ -262,22 +210,6 @@ def test_empty_glob_raises_filenotfound(spark):
         ds.schema()
 
 
-def test_overwrite_leaves_no_backup_residue(spark, tmp_path):
-    """Overwrite displaces old files to a .bak dir during promotion
-    (crash-safe window) and cleans it up on success."""
-    from reverse_etl_homebrew_spark.sources.duckdb_source import register
-
-    register(spark)
-    target = str(tmp_path / "out")
-    spark.range(10).write.format("duckdb_parquet").option("path", target).mode("append").save()
-    spark.range(7).write.format("duckdb_parquet").option("path", target).mode("overwrite").save()
-    back = spark.read.format("duckdb_parquet").option("path", target + "/*.parquet").load()
-    assert back.count() == 7
-    import glob as g
-
-    assert not g.glob(target + "/.bak-*"), "backup dir must be cleaned on success"
-
-
 def test_like_metachars_and_nonfinite_stay_spark_side(spark):
     """Prefixes containing LIKE metacharacters and non-finite float
     literals must NOT be pushed (they would change semantics / break
@@ -296,150 +228,3 @@ def test_like_metachars_and_nonfinite_stay_spark_side(spark):
         F.col("c_name").startswith("Customer#0000001")
     )
     assert df.count() == native.count() > 0
-
-
-def test_watermark_stream_reader_incremental(spark, tmp_path):
-    """The streaming face of the external source: offset = high
-    watermark. New files with later updated_col values arrive as new
-    micro-batch rows; rows at or below a committed watermark are not
-    re-read (the reference's incremental-read semantics, natively
-    checkpointed by Spark)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from reverse_etl_homebrew_spark.sources.duckdb_source import register
-
-    register(spark)
-    src = tmp_path / "remote"
-    src.mkdir()
-
-    def write_file(name, ids, base_day):
-        pq.write_table(
-            pa.table(
-                {
-                    "id": pa.array(ids, pa.int64()),
-                    "updated_at": pa.array(
-                        [
-                            dt.datetime(2024, 1, base_day, 12, 0, k)
-                            for k in range(len(ids))
-                        ],
-                        pa.timestamp("us"),
-                    ),
-                }
-            ),
-            str(src / name),
-        )
-
-    write_file("f1.parquet", [1, 2, 3], base_day=1)
-
-    stream = (
-        spark.readStream.format("duckdb_parquet")
-        .option("path", str(src / "*.parquet"))
-        .option("updated_col", "updated_at")
-        .load()
-    )
-    import uuid
-
-    name = f"wmstream_{uuid.uuid4().hex[:8]}"
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="300 milliseconds")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {r["id"] for r in spark.sql(f"SELECT id FROM {name}").collect()}
-        assert got == {1, 2, 3}
-
-        # later watermark → picked up; duplicate of id 2 with an OLD
-        # timestamp → correctly skipped (watermark-read semantics)
-        write_file("f2.parquet", [4, 5], base_day=2)
-        q.processAllAvailable()
-        got = sorted(r["id"] for r in spark.sql(f"SELECT id FROM {name}").collect())
-        assert got == [1, 2, 3, 4, 5]
-    finally:
-        q.stop()
-
-
-def test_watermark_stream_reader_restart_resumes_offset(spark, tmp_path):
-    """Kill-and-restart recovery: a NEW query instance over the SAME
-    checkpointLocation resumes from the committed watermark offset and
-    does not re-emit rows the dead query already delivered — the
-    property that lets Spark's checkpoint replace the reference's
-    hand-rolled run ledger (main.py:330-345 read, 838 advance). Uses
-    the exactly-once parquet file sink (the memory sink refuses
-    checkpoint recovery), so the output dir after restart is also the
-    end-to-end exactly-once witness: no duplicates, no gaps."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from reverse_etl_homebrew_spark.sources.duckdb_source import register
-
-    register(spark)
-    src = tmp_path / "remote"
-    src.mkdir()
-
-    def write_file(name, ids, base_day):
-        pq.write_table(
-            pa.table(
-                {
-                    "id": pa.array(ids, pa.int64()),
-                    "updated_at": pa.array(
-                        [
-                            dt.datetime(2024, 2, base_day, 9, 0, k)
-                            for k in range(len(ids))
-                        ],
-                        pa.timestamp("us"),
-                    ),
-                }
-            ),
-            str(src / name),
-        )
-
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "out")
-
-    def start_query():
-        stream = (
-            spark.readStream.format("duckdb_parquet")
-            .option("path", str(src / "*.parquet"))
-            .option("updated_col", "updated_at")
-            .load()
-        )
-        return (
-            stream.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="300 milliseconds")
-            .start()
-        )
-
-    def sink_ids():
-        return sorted(r["id"] for r in spark.read.parquet(out).collect())
-
-    write_file("f1.parquet", [1, 2, 3], base_day=1)
-    q1 = start_query()
-    try:
-        q1.processAllAvailable()
-        assert sink_ids() == [1, 2, 3]
-    finally:
-        q1.stop()  # simulated crash/shutdown after the commit
-
-    # new data lands while no query is running
-    write_file("f2.parquet", [4, 5], base_day=2)
-
-    # restart: fresh query instance, same checkpoint. Ids 1-3 appearing
-    # twice in the sink would mean the committed offset was not resumed.
-    q2 = start_query()
-    try:
-        q2.processAllAvailable()
-        assert sink_ids() == [1, 2, 3, 4, 5], "restart re-emitted or dropped rows"
-
-        # and the resumed query keeps advancing normally
-        write_file("f3.parquet", [6], base_day=3)
-        q2.processAllAvailable()
-        assert sink_ids() == [1, 2, 3, 4, 5, 6]
-    finally:
-        q2.stop()

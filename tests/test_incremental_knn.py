@@ -342,6 +342,13 @@ def test_masking_kernels_run_once(spark):
         # RDD scan, leaving the pair-cosine + one visible kernel node
         "similarity-join": 2,
         "embedding-near-dup": 2,
+        # every literal-query top-k scores through topk_brute's fused
+        # kernel: alone on the brute keys, after the masking kernel
+        # (bucket / IVF cell) on the approximate ones
+        "topk-similarity": 1,
+        "topk-similarity-pandas": 1,
+        "topk-similarity-lsh": 2,
+        "topk-similarity-ivf": 2,
     }
     for key, want in expected.items():
         df = Q.QUERIES[key](spark, SF)

@@ -334,7 +334,6 @@ def _kernels():
 
     hp = _deterministic_planes(4, 3)
     qn = norm(_Q)
-    cos = VZ.query_cosine_pandas(_Q).func
     ivf = VZ.ivf_cell_pandas(_C).func
     pc = VZ.pair_cosine_pandas().func
     pcf = VZ.pair_cosine_flags_pandas().func
@@ -342,11 +341,6 @@ def _kernels():
     cd = VZ.centroid_dists_pandas(_C).func
     bn = VZ.bucket_norm_pandas(hp, 4, tables=1).func
     return {
-        "cosine_scores": (
-            False,
-            lambda a, b: rows(cos(a)),
-            lambda v: pytest.approx(_lfold(v, _Q) / (norm(v) * qn), rel=1e-12),
-        ),
         "ivf_assign": (
             True,
             lambda a, b: rows(ivf(a)),
@@ -392,7 +386,7 @@ def _kernels():
 
 
 _KERNELS = [
-    "cosine_scores", "ivf_assign", "pair_cosine", "pair_cosine_flags",
+    "ivf_assign", "pair_cosine", "pair_cosine_flags",
     "query_cosine_flags", "centroid_dists", "bucket_norm",
 ]
 # case → (left batch, right batch for the pair kernels, per-row state):

@@ -26,16 +26,6 @@ def query_vec(emb):
     return [float(x) for x in row["embedding"]]
 
 
-def test_pandas_topk_matches_flat_topk(spark, emb, query_vec):
-    """The numpy Pandas-UDF scorer must agree with the codegen flat
-    scorer to 6 decimals (identical ranking)."""
-    flat = [(r["vec_id"], r["score"]) for r in SIM.topk_brute(emb, query_vec, k=10).collect()]
-    pand = [(r["vec_id"], r["score"]) for r in VZ.topk_pandas(emb, query_vec, k=10).collect()]
-    assert [v for v, _ in flat] == [v for v, _ in pand]
-    for (_, a), (_, b) in zip(flat, pand):
-        assert abs(a - b) < 1e-6
-
-
 def _ivf_cells(emb):
     """The cells ``topk-similarity-ivf`` probes: vectors vec_id < 8 in
     id order, NULL vectors skipped, as its oracle picks them."""
@@ -281,11 +271,22 @@ def test_streaming_sessionize_survives_null_group_keys(spark, tmp_path):
     assert any(u is None for (u, _, _) in stream_keys)
 
 
+def dot_literal(a, q):
+    """Dot product against a fixed query vector as the codegen left
+    fold (constants folded into codegen)."""
+    from reverse_etl_homebrew_spark.functions.vectors import _sum_terms
+
+    return _sum_terms(
+        [
+            F.element_at(a, F.lit(i + 1)).cast("double") * F.lit(float(q[i]))
+            for i in range(len(q))
+        ]
+    )
+
+
 def random_hyperplane_signs(a, planes):
     """The codegen sign fold the oracles write: one bit per plane
     (projection >= 0), first plane = MSB, as a long bucket id."""
-    from reverse_etl_homebrew_spark.functions.vectors import dot_literal
-
     acc = F.lit(0).cast("long")
     for p in planes:
         bit = F.when(dot_literal(a, p) >= 0, F.lit(1)).otherwise(F.lit(0))
