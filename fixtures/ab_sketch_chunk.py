@@ -1,14 +1,14 @@
 #!/usr/bin/env python
-"""Interleaved A/B for the r14 ungrouped-sketch chunk buffering:
-`misra_gries_candidates` used to run one C++ value_counts + one
-Python distinct-pair merge per ~10k-row Arrow batch; the grouped twin
-already buffered ~256k rows per pass (its docstring records the ~25×
-Python-loop cut). A = buffered ungrouped sketch (current); B = the
-per-batch pre-r14 spelling verbatim. Measured through the two
-registered consumers, `ngram-topk-sketch` and `heavy-hitters`
-(phase-2 recount identical in both arms — the candidate sets may
-differ per the mergeable-summaries algebra, the exact recount makes
-the result identical either way, which the oracle pins).
+"""Interleaved A/B for the r14 sketch chunk buffering: the global
+Misra-Gries sketch used to run one C++ value_counts + one Python
+distinct-pair merge per ~10k-row Arrow batch. A = the registered
+sketch, `misra_gries_candidates` at `by=()`: one C++ group_by + one
+Python merge per ~256k buffered rows. B = the per-batch pre-r14
+spelling verbatim. Measured through the registered consumer
+`ngram-topk-sketch` (phase-2 recount identical in both arms — the
+candidate sets may differ per the mergeable-summaries algebra, the
+exact recount makes the result identical either way, which the
+oracle pins).
 
 Usage: python fixtures/ab_sketch_chunk.py [sf_dir]
 """

@@ -163,7 +163,7 @@ def builders(spark, sf_dir, pin: bool = False):
     )
     from reverse_etl_homebrew_spark.operators.vectorized import (
         heavy_hitters_exact,
-        topk_frequent_by_group,
+        topk_frequent_sketch,
     )
     from reverse_etl_homebrew_spark.operators.aggregates import dec_sum
 
@@ -191,7 +191,7 @@ def builders(spark, sf_dir, pin: bool = False):
                 F.explode(TX.char_ngrams_from(F.col("ch"), 3)).alias("gram"),
             )
         )
-        return topk_frequent_by_group(grams, "lang", "gram", k=15, sketch_k=255)
+        return topk_frequent_sketch(grams, "gram", k=15, sketch_k=255, by=("lang",))
 
     def trigram():
         return trigram_lm_score(docs)

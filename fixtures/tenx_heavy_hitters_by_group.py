@@ -7,7 +7,7 @@ group's vocabulary — so wall-clock must track DATA volume even when
 every group's DISTINCT-item space grows 10x alongside it.
 
 Corpus construction (deterministic, from the sf events table; the
-grouped twin of fixtures/tenx_heavy_hitters.py):
+grouped counterpart of fixtures/tenx_heavy_hitters.py):
 
 - groups: 5 stable groups g0..g4 (event_id % 5), identical in both
   cells so the GROUP count never changes — only rows and per-group
@@ -92,8 +92,8 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     import reverse_etl_homebrew_spark.queries  # noqa: F401 (registry init)
     from reverse_etl_homebrew_spark.operators.vectorized import (
-        misra_gries_candidates_by_group,
-        topk_frequent_by_group,
+        misra_gries_candidates,
+        topk_frequent_sketch,
     )
     from reverse_etl_homebrew_spark.session import get_spark
     from reverse_etl_homebrew_spark.sources.catalog import load_table
@@ -108,16 +108,16 @@ def main() -> None:
         n_rows = df.count()
         n_pairs = df.distinct().count()
         cands = (
-            misra_gries_candidates_by_group(df, "grp", "item", SKETCH_K)
+            misra_gries_candidates(df, "item", SKETCH_K, by=("grp",))
             .distinct()
             .count()
         )
-        out = topk_frequent_by_group(df, "grp", "item", k=K, sketch_k=SKETCH_K)
+        out = topk_frequent_sketch(df, "item", k=K, sketch_k=SKETCH_K, by=("grp",))
         out_rows = out.count()  # the guard proves the exact regime
         wall = timed(
-            lambda: topk_frequent_by_group(
-                grouped_stream(ev, copies), "grp", "item",
-                k=K, sketch_k=SKETCH_K,
+            lambda: topk_frequent_sketch(
+                grouped_stream(ev, copies), "item",
+                k=K, sketch_k=SKETCH_K, by=("grp",),
             )
         )
         results[copies] = wall

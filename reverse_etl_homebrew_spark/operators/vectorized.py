@@ -395,69 +395,84 @@ def hybrid_fold_signs(m, P):
     return proj >= 0
 
 
-def misra_gries_candidates(df: DataFrame, col: str, k: int) -> DataFrame:
-    """Phase 1 of distributed heavy-hitters: a mergeable Misra-Gries
-    summary per input partition (mapInArrow), emitting at most ``k``
-    candidate items per partition.
+def _keyed_items(df: DataFrame, col: str, by: Sequence[str]) -> DataFrame:
+    """The ``(*by, col)`` rows both sketch phases read: NULL items and
+    NULL group keys are excluded by declared semantics."""
+    keep = F.col(col).isNotNull()
+    for c in by:
+        keep &= F.col(c).isNotNull()
+    return df.select(*by, col).filter(keep)
 
-    The summary is maintained batch-at-a-time with Arrow's C++
-    ``value_counts`` directly on the incoming RecordBatch — no
-    per-row Python and no Arrow→pandas materialization of the item
-    strings (the pandas path measured ~1.6 s at sf0.1 on 1.5M grams,
-    dominated by Series construction; the Arrow path only converts
-    the ≤ distinct-per-batch (item, count) pairs to Python) — and
-    compressed by the mergeable-summaries rule: when more than ``k``
-    items are held, subtract the (k+1)-th largest count from every
-    item and drop the non-positive ones. Standard guarantee
-    (Misra-Gries / PODS'12 mergeable summaries): an item whose true
-    count in the partition exceeds (partition rows)/(k+1) always
-    survives, so the union of per-partition candidates is a SUPERSET
-    of every item with global count > n/k — pigeonhole: such an item
-    must beat the threshold in at least one partition. Phase 2
-    (exact recount of candidates) then makes the final answer exact
-    and deterministic regardless of which extra candidates each
+
+def misra_gries_candidates(
+    df: DataFrame, col: str, k: int, by: Sequence[str] = ()
+) -> DataFrame:
+    """Phase 1 of distributed heavy hitters: one mergeable Misra-Gries
+    summary of capacity ``k`` per (input partition, group) pair
+    (mapInArrow), emitting at most ``k`` candidate items per pair. The
+    group is the tuple of ``by`` values; at ``by=()`` every row has the
+    key ``()``, so the summary is the global one.
+
+    Counting is Arrow's C++ ``group_by([*by, col])`` on the buffered
+    RecordBatches — no per-row Python and no Arrow→pandas
+    materialization of the item strings; Python touches only the
+    DISTINCT (group, item) pairs of each chunk — and each group's
+    counts are merged by the mergeable-summaries rule
+    (``_mg_merge_pairs``): when more than ``k`` items are held,
+    subtract the (k+1)-th largest count from every item and drop the
+    non-positive ones. Standard guarantee (Misra-Gries / PODS'12
+    mergeable summaries): an item whose count in a (partition, group)
+    slice exceeds (slice rows)/(k+1) always survives, so the union of
+    per-partition candidates is a SUPERSET of every item with group
+    count > n_g/k — pigeonhole: such an item must beat the threshold
+    in at least one partition. Phase 2 (the exact masked recount,
+    ``_masked_recount``) then makes the final answer exact and
+    deterministic regardless of which extra candidates each
     partitioning produces.
 
     Scale shape: the shuffle after this operator carries at most
-    (partitions x k) candidate rows, NOT the item vocabulary — the
-    point of the sketch when the vocabulary itself is too large to
-    hash-aggregate cheaply.
+    (partitions x groups x k) candidate rows, NOT any group's
+    vocabulary — the point of the sketch when the vocabulary itself is
+    too large to hash-aggregate cheaply.
 
-    NULL items are excluded (filtered before the sketch, matching
-    ``heavy_hitters_exact``'s declared semantics); the output schema
-    is derived from the input column's type, so non-string item ids
-    (the common bigint case) work without a cast — the yielded array
-    is built with the EXPLICIT Arrow type of that column (inference
-    from Python ints would always produce int64 and fail mapInArrow's
-    declared-schema check for narrower int columns)."""
+    The output ``(*by, col)`` takes its schema from the input columns,
+    so non-string keys (the common bigint case) work without a cast —
+    every yielded array is built with the EXPLICIT Arrow type of its
+    column (inference from Python ints would always produce int64 and
+    fail mapInArrow's declared-schema check for narrower int
+    columns)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
 
-    item_type = df.schema[col].dataType
-    arrow_item = to_arrow_type(item_type)
+    names = [*by, col]
+    types = [df.schema[c].dataType for c in names]
+    arrow_types = [to_arrow_type(t) for t in types]
 
-    # Arrow batches arrive at ~10k rows; merging distinct items per
-    # batch runs the Python pair loop once per batch over that batch's
-    # distinct set. Buffering ~256k rows per C++ value_counts keeps
-    # the loop at distinct-per-CHUNK — the same ~25× Python-loop cut
-    # the grouped twin (misra_gries_candidates_by_group) already
-    # documents; the mergeable-summaries algebra is indifferent to the
-    # chunking (pre-counted chunks merge the same as rows). Applied to
-    # the ungrouped path in the r14 optimization round.
+    # Arrow batches arrive at ~10k rows; counting per batch would run
+    # the Python pair loop once per batch (measured ~1.1M iterations
+    # over 6M grams at sf0.1). Buffering ~256k rows per C++ group_by
+    # keeps the loop at distinct-pairs per CHUNK — a ~25× cut
+    # (fixtures/ab_sketch_chunk.py) — and the mergeable-summaries
+    # algebra is indifferent to the chunking (pre-counted chunks merge
+    # the same as rows).
     chunk_rows = 1 << 18
 
     def summarize(batches):
-        counts: dict = {}
+        sums: dict = {}
 
         def flush(buf):
-            vc = pa.compute.value_counts(
-                pa.chunked_array([b.column(0) for b in buf])
+            counted = (
+                pa.Table.from_batches(buf)
+                .group_by(names)
+                .aggregate([([], "count_all")])
             )
-            _mg_merge_pairs(
-                counts,
-                zip(vc.field("values").to_pylist(), vc.field("counts").to_pylist()),
-                k,
-            )
+            per: dict = {}
+            for *g, it, c in zip(
+                *(counted.column(n).to_pylist() for n in [*names, "count_all"])
+            ):
+                per.setdefault(tuple(g), []).append((it, c))
+            for g, pairs in per.items():
+                _mg_merge_pairs(sums.setdefault(g, {}), pairs, k)
 
         buf, buffered = [], 0
         for batch in batches:
@@ -468,18 +483,19 @@ def misra_gries_candidates(df: DataFrame, col: str, k: int) -> DataFrame:
                 buf, buffered = [], 0
         if buf:
             flush(buf)
+        rows = [(*g, it) for g, cs in sums.items() for it in cs]
         # yield nothing for empty summaries (equal-counts compression
         # can drop every held item): an empty python list would
         # type-infer as null and fight the declared schema
-        if counts:
+        if rows:
             yield pa.RecordBatch.from_arrays(
-                [pa.array(list(counts.keys()), type=arrow_item)], names=[col]
+                [pa.array(list(v), type=t) for v, t in zip(zip(*rows), arrow_types)],
+                names=names,
             )
 
-    return (
-        df.select(col)
-        .filter(F.col(col).isNotNull())
-        .mapInArrow(summarize, schema=T.StructType([T.StructField(col, item_type)]))
+    return _keyed_items(df, col, by).mapInArrow(
+        summarize,
+        schema=T.StructType([T.StructField(c, t) for c, t in zip(names, types)]),
     )
 
 
@@ -489,8 +505,8 @@ def _mg_merge_pairs(counts: dict, pairs, k: int) -> None:
     batch's counts, then if more than ``k`` items are held, subtract
     the (k+1)-th largest count and drop non-positive items). The
     Python loop touches only DISTINCT items per batch, never rows —
-    counting itself happens upstream (Arrow value_counts /
-    pandas value_counts)."""
+    counting itself happens upstream (Arrow group_by / pandas
+    value_counts)."""
     import heapq
 
     for item, c in pairs:
@@ -504,62 +520,80 @@ def _mg_merge_pairs(counts: dict, pairs, k: int) -> None:
                 del counts[i]
 
 
-def topk_frequent_sketch(
-    df: DataFrame, col: str, k: int, sketch_k: int
+def _masked_recount(
+    df: DataFrame, col: str, sketch_k: int, by: Sequence[str] = ()
 ) -> DataFrame:
-    """Top-``k`` most frequent non-null items via the two-phase
-    Misra-Gries sketch + exact recount — the vocabulary-too-big path
-    behind a plain ``GROUP BY item ORDER BY count`` top-k.
+    """Phase 2, the second and last scan of the input: every row's
+    item is mapped to itself if (group, item) is a sketch candidate
+    and to NULL otherwise (left join against the broadcast candidate
+    set), so ONE ``(*by, __k)`` hash aggregation yields each
+    candidate's exact ``cnt`` AND, summed per group over its at most
+    (partitions x sketch_k + 1) rows, the group's exact total n_g —
+    no third scan for the totals."""
+    cands = misra_gries_candidates(df, col, sketch_k, by).distinct()
+    return (
+        _keyed_items(df, col, by)
+        .join(
+            F.broadcast(cands.withColumn("__cand", F.lit(True))),
+            [*by, col],
+            "left",
+        )
+        .select(*by, F.when(F.col("__cand"), F.col(col)).alias("__k"))
+        .groupBy(*by, "__k")
+        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+    )
 
-    Same two scans as ``heavy_hitters_exact``: per-partition mergeable
-    summaries of capacity ``sketch_k`` (candidates only — at most
-    partitions x sketch_k rows ever shuffle, never the vocabulary),
-    then ONE masked recount whose hash aggregation yields the
-    candidates' exact counts AND the exact total n. The top-k is then
-    TakeOrdered over the tiny candidate frame with a (count DESC,
-    item ASC) total order.
 
-    Exactness regime: any non-candidate item has true count
-    <= n/(sketch_k+1) (mergeable-summaries retention bound), so the
-    returned set IS the global top-k whenever the k-th returned count
-    exceeds n/(sketch_k+1). That check is embedded in the plan (CASE +
-    raise_error over the k-row result — lazy, one compare per returned
-    row) and raises when the data leaves the provable regime,
+def topk_frequent_sketch(
+    df: DataFrame, col: str, k: int, sketch_k: int, by: Sequence[str] = ()
+) -> DataFrame:
+    """Top-``k`` most frequent non-null items per group of ``by`` (the
+    whole input at ``by=()``) via the two-phase Misra-Gries sketch +
+    exact recount — the vocabulary-too-big path behind a plain
+    ``GROUP BY item ORDER BY count`` top-k, and per group the
+    per-language vocabulary heads a sharded training pipeline audits
+    per shard. Output ``(*by, col, cnt)``.
+
+    Two scans, as ``heavy_hitters_exact``: per-(partition, group)
+    summaries of capacity ``sketch_k`` (candidates only — never the
+    vocabulary shuffles), then ONE masked recount giving each
+    candidate's exact count and each group's exact total n_g. Ranking
+    and the exactness guard then run per group over the tiny candidate
+    frame with a (count DESC, item ASC) total order — the global top-k
+    therefore comes out in that order.
+
+    Exactness regime per group: any non-candidate has true count
+    <= n_g/(sketch_k+1) (mergeable-summaries retention bound), so the
+    group's returned set IS its top-k whenever its k-th returned count
+    exceeds n_g/(sketch_k+1). That check is embedded in the plan
+    (CASE + raise_error over the result — lazy, one compare per
+    returned row) and raises when ANY group leaves the provable regime,
     including the fewer-than-k-candidates case where a non-candidate
     could belong to the result. Sizing rule: pick sketch_k so the
-    expected k-th count clears n/(sketch_k+1) with margin — counts are
-    integers, so when the guard passes the result is exact and the
+    expected k-th count clears n_g/(sketch_k+1) with margin — counts
+    are integers, so when the guard passes the result is exact and the
     oracle comparison is bit-for-bit."""
-    cands = misra_gries_candidates(df, col, sketch_k).distinct()
-    masked = (
-        df.select(col)
-        .filter(F.col(col).isNotNull())
-        .join(
-            F.broadcast(cands.withColumn("__cand", F.lit(True))), [col], "left"
-        )
-        .select(F.when(F.col("__cand"), F.col(col)).alias("__k"))
-    )
-    grouped = masked.groupBy("__k").agg(
-        F.count(F.lit(1)).cast("long").alias("cnt")
-    )
     from pyspark.sql import Window as W
 
+    grouped = _masked_recount(df, col, sketch_k, by)
     item_type = df.schema[col].dataType
     msg = (
         "topk_frequent_sketch: data outside the provable regime for "
-        f"sketch_k={sketch_k}, k={k} — the k-th count does not clear "
-        "n/(sketch_k+1); enlarge sketch_k"
+        f"sketch_k={sketch_k}, k={k}, by={list(by)} — a group's k-th "
+        "count does not clear its n/(sketch_k+1); enlarge sketch_k"
     )
     # ``grouped`` is tiny (at most partitions x sketch_k candidates
-    # plus the NULL mask bucket), so the ranking/guard windows below
-    # run over one small partition — and the whole guard is ONE
-    # lineage (the input is scanned exactly twice: sketch + recount).
-    # n and the candidate count come from one window pass over the
-    # WHOLE frame (null bucket included — its cnt is part of n);
-    # candidates rank below-null-last so the null bucket never holds
-    # a top-k rank.
-    w1 = W.partitionBy(F.lit(1))
-    wrank = W.partitionBy(F.lit(1)).orderBy(
+    # plus one NULL mask bucket per group), so the ranking/guard
+    # windows below run over small partitions — and the whole guard is
+    # ONE lineage (the input is scanned exactly twice: sketch +
+    # recount). The literal 1 partitions both shapes by one
+    # expression; Catalyst drops the foldable key, so ``by=()`` plans
+    # as one single-partition window. n_g and the candidate count come
+    # from one window pass over the WHOLE group (null bucket included —
+    # its cnt is part of n_g); candidates rank below-null-last so the
+    # null bucket never holds a top-k rank.
+    w1 = W.partitionBy(F.lit(1), *by)
+    wrank = w1.orderBy(
         F.col("__k").isNull().asc(), F.col("cnt").desc(), F.col("__k").asc()
     )
     ranked = (
@@ -579,27 +613,28 @@ def topk_frequent_sketch(
             ).over(w1),
         )
     )
-    # Row retention: the k best candidates — plus, when the candidate
-    # set is EMPTY while the input is not (aggressive compression on
-    # flat data can empty every partition summary — observed,
-    # partition-layout dependent), the NULL-mask bucket row, which
-    # then exists by construction (every input row was masked to it)
-    # and carries the guard that a zero-row result would bypass.
+    # Row retention: each group's k best candidates — plus, when a
+    # group's candidate set is EMPTY (aggressive compression on flat
+    # data can empty every partition summary — observed, partition-
+    # layout dependent), its NULL-mask bucket row, which then exists
+    # by construction (every row of the group was masked to it) and
+    # carries the guard that an empty group result would bypass.
     keep = ranked.filter(
         (F.col("__k").isNotNull() & (F.col("__rank") <= k))
         | (F.col("__k").isNull() & (F.col("__cands") == 0))
     )
-    # Per-row guard: fires when fewer than k candidates exist or the
-    # k-th count does not clear the non-candidate ceiling. CASE is
-    # lazy, so in-regime data pays k compares; the projection is
-    # never reordered below its filter, so the null-bucket sentinel
-    # raises if and only if it was kept.
+    # Per-row guard: fires when a group has fewer than k candidates or
+    # its k-th count does not clear the non-candidate ceiling. CASE is
+    # lazy, so in-regime data pays k compares per group; the
+    # projection is never reordered below its filter, so the
+    # null-bucket sentinel raises if and only if it was kept.
     bad = (
         F.col("__k").isNull()
         | (F.col("__cands") < F.lit(k))
         | (F.col("__kth") * F.lit(sketch_k + 1) <= F.col("__n"))
     )
     return keep.select(
+        *by,
         F.when(bad, F.raise_error(F.lit(msg)).cast(item_type))
         .otherwise(F.col("__k"))
         .alias(col),
@@ -610,226 +645,18 @@ def topk_frequent_sketch(
 def heavy_hitters_exact(df: DataFrame, col: str, k: int) -> DataFrame:
     """Exact heavy hitters (non-null items with count > n/k, n = the
     non-null row count) in exactly TWO scans of the input: the
-    Misra-Gries candidate sketch per partition, then one masked
-    recount — every row's item is mapped to itself if it is a
-    candidate and to NULL otherwise (left join against the broadcast
-    candidate set), so a single hash aggregation yields both the
-    candidates' exact counts AND, as the sum over its at most
-    (partitions x k + 1) rows, the exact total n. No third scan for
-    the total, and the final threshold filter runs on the tiny
-    aggregated frame. Output (item, cnt) is exact and
-    partition-invariant by construction. NULL input items are
-    excluded by declared semantics (filter first to include-as-a-key
-    behavior if needed)."""
-    cands = misra_gries_candidates(df, col, k).distinct()
-    masked = (
-        df.select(col)
-        .filter(F.col(col).isNotNull())
-        .join(
-            F.broadcast(cands.withColumn("__cand", F.lit(True))), [col], "left"
-        )
-        .select(F.when(F.col("__cand"), F.col(col)).alias("__k"))
-    )
-    grouped = masked.groupBy("__k").agg(
-        F.count(F.lit(1)).cast("long").alias("cnt")
-    )
+    Misra-Gries candidate sketch per partition, then the masked
+    recount (``_masked_recount``), whose at most (partitions x k + 1)
+    rows carry the candidates' exact counts AND sum to the exact total
+    n. The final threshold filter runs on that tiny aggregated frame.
+    Output (item, cnt) is exact and partition-invariant by
+    construction. NULL input items are excluded by declared semantics
+    (filter first to include-as-a-key behavior if needed)."""
+    grouped = _masked_recount(df, col, k)
     tot = grouped.agg(F.sum("cnt").alias("__n"))
     return (
         grouped.filter(F.col("__k").isNotNull())
         .crossJoin(F.broadcast(tot))
         .filter(F.col("cnt") > F.col("__n") / float(k))
         .select(F.col("__k").alias(col), "cnt")
-    )
-
-
-def misra_gries_candidates_by_group(
-    df: DataFrame, group_col: str, col: str, k: int
-) -> DataFrame:
-    """Phase 1 of PER-GROUP distributed heavy hitters: one mergeable
-    Misra-Gries summary of capacity ``k`` per (input partition,
-    group) pair, maintained batch-at-a-time with Arrow's C++
-    ``group_by(...).aggregate(count_all)`` on the incoming
-    RecordBatch — the Python loop touches only DISTINCT
-    (group, item) pairs per batch, never rows (the same contract as
-    the ungrouped ``misra_gries_candidates``).
-
-    The retention guarantee is per group by the same pigeonhole as
-    the global case: an item whose count within a group exceeds
-    (that group's rows in the partition)/(k+1) survives that
-    partition's summary, so the union over partitions is a superset
-    of every item with group-global count > n_g/k. Emission is at
-    most (groups seen in the partition) × k candidate pairs — the
-    shuffle carries candidates per group, never any group's
-    vocabulary. NULL items and NULL group keys are excluded by
-    declared semantics."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    g_type = df.schema[group_col].dataType
-    item_type = df.schema[col].dataType
-    arrow_g = to_arrow_type(g_type)
-    arrow_item = to_arrow_type(item_type)
-
-    # Arrow batches arrive at ~10k rows; counting distinct pairs per
-    # batch would run the Python pair loop once per batch (measured
-    # ~1.1M iterations over 6M grams at sf0.1). Buffering ~256k rows
-    # per C++ group_by keeps the Python loop at distinct-pairs ×
-    # (rows/chunk) — a ~25× cut — and the mergeable-summaries algebra
-    # is indifferent to the chunking (pre-counted chunks merge the
-    # same as rows).
-    chunk_rows = 1 << 18
-
-    def summarize(batches):
-        sums: dict = {}
-
-        def flush(buf):
-            counted = (
-                pa.Table.from_batches(buf)
-                .group_by([group_col, col])
-                .aggregate([([], "count_all")])
-            )
-            per: dict = {}
-            for g, it, c in zip(
-                counted.column(group_col).to_pylist(),
-                counted.column(col).to_pylist(),
-                counted.column("count_all").to_pylist(),
-            ):
-                per.setdefault(g, []).append((it, c))
-            for g, pairs in per.items():
-                _mg_merge_pairs(sums.setdefault(g, {}), pairs, k)
-
-        buf, buffered = [], 0
-        for batch in batches:
-            buf.append(batch)
-            buffered += batch.num_rows
-            if buffered >= chunk_rows:
-                flush(buf)
-                buf, buffered = [], 0
-        if buf:
-            flush(buf)
-        gs, its = [], []
-        for g, cs in sums.items():
-            for it in cs:
-                gs.append(g)
-                its.append(it)
-        # empty summaries yield nothing (see misra_gries_candidates);
-        # arrays carry the declared Arrow types explicitly — Python
-        # int inference would widen narrow int columns to int64 and
-        # fail mapInArrow's schema check
-        if its:
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(gs, type=arrow_g),
-                    pa.array(its, type=arrow_item),
-                ],
-                names=[group_col, col],
-            )
-
-    return (
-        df.select(group_col, col)
-        .filter(F.col(col).isNotNull() & F.col(group_col).isNotNull())
-        .mapInArrow(
-            summarize,
-            schema=T.StructType(
-                [
-                    T.StructField(group_col, g_type),
-                    T.StructField(col, item_type),
-                ]
-            ),
-        )
-    )
-
-
-def topk_frequent_by_group(
-    df: DataFrame,
-    group_col: str,
-    col: str,
-    k: int,
-    sketch_k: int,
-) -> DataFrame:
-    """Top-``k`` most frequent non-null items PER GROUP via the
-    two-phase Misra-Gries sketch + exact recount — the grouped twin
-    of ``topk_frequent_sketch`` (per-language vocabulary heads, the
-    shape a sharded training pipeline audits per shard).
-
-    Two scans, same as the ungrouped path: per-(partition, group)
-    summaries of capacity ``sketch_k``, then ONE masked recount —
-    every row maps its item to itself if (group, item) is a
-    candidate and to NULL otherwise, so a single (group, item) hash
-    aggregation yields each candidate's exact count AND, summed per
-    group, the exact per-group total n_g. Ranking and the exactness
-    guard then run per group over the tiny candidate frame (windows
-    partitioned by the group key — bounded state, no global
-    ordering).
-
-    Exactness regime per group: any non-candidate has true count
-    ≤ n_g/(sketch_k+1), so the group's returned set IS its top-k
-    whenever the k-th returned count clears that ceiling. The
-    per-group check is embedded in the plan: it raises on ANY group
-    outside the regime, including the fewer-than-k-candidates and
-    emptied-summaries cases via the per-group NULL bucket sentinel."""
-    from pyspark.sql import Window as W
-
-    cands = misra_gries_candidates_by_group(
-        df, group_col, col, sketch_k
-    ).distinct()
-    masked = (
-        df.select(group_col, col)
-        .filter(F.col(col).isNotNull() & F.col(group_col).isNotNull())
-        .join(
-            F.broadcast(cands.withColumn("__cand", F.lit(True))),
-            [group_col, col],
-            "left",
-        )
-        .select(group_col, F.when(F.col("__cand"), F.col(col)).alias("__k"))
-    )
-    grouped = masked.groupBy(group_col, "__k").agg(
-        F.count(F.lit(1)).cast("long").alias("cnt")
-    )
-    wrank = W.partitionBy(group_col).orderBy(
-        F.col("__k").isNull().asc(), F.col("cnt").desc(), F.col("__k").asc()
-    )
-    item_type = df.schema[col].dataType
-    msg = (
-        "topk_frequent_by_group: a group is outside the provable "
-        f"regime for sketch_k={sketch_k}, k={k} — its k-th count does "
-        "not clear n_g/(sketch_k+1); enlarge sketch_k"
-    )
-    w1 = W.partitionBy(group_col)
-    ranked = (
-        grouped.withColumn("__n", F.sum("cnt").over(w1))
-        .withColumn(
-            "__cands",
-            F.count(F.when(F.col("__k").isNotNull(), F.lit(1))).over(w1),
-        )
-        .withColumn("__rank", F.row_number().over(wrank))
-        .withColumn(
-            "__kth",
-            F.max(
-                F.when(
-                    (F.col("__rank") == k) & F.col("__k").isNotNull(),
-                    F.col("cnt"),
-                )
-            ).over(w1),
-        )
-    )
-    # per-group row retention mirrors topk_frequent_sketch: the k
-    # best candidates, plus the group's NULL-mask bucket when its
-    # candidate set is empty (exists by construction then) so an
-    # empty group result cannot bypass the guard
-    keep = ranked.filter(
-        (F.col("__k").isNotNull() & (F.col("__rank") <= k))
-        | (F.col("__k").isNull() & (F.col("__cands") == 0))
-    )
-    bad = (
-        F.col("__k").isNull()
-        | (F.col("__cands") < F.lit(k))
-        | (F.col("__kth") * F.lit(sketch_k + 1) <= F.col("__n"))
-    )
-    return keep.select(
-        group_col,
-        F.when(bad, F.raise_error(F.lit(msg)).cast(item_type))
-        .otherwise(F.col("__k"))
-        .alias(col),
-        "cnt",
     )

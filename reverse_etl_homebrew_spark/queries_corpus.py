@@ -418,14 +418,23 @@ def _ensure_bucketed(spark, sf_dir):
     key into a scratch warehouse (8 buckets — matched on both sides so
     the join is bucket-co-located). Idempotent per sf_dir: the write is
     skipped when the tables already exist, mirroring a warehouse whose
-    layout is maintained by ingest, not per-query."""
+    layout is maintained by ingest, not per-query.
+
+    The warehouse is private to the Spark application, like the
+    session catalog that records its tables: a directory named by the
+    application id under the driver's SparkFiles root, which Spark
+    deletes when the application's JVM exits. Two engine processes
+    building the key at once never share a write or read path."""
+    from pyspark import SparkFiles
+
     tag = _bucket_tag(sf_dir)
+    root = os.path.join(
+        SparkFiles.getRootDirectory(),
+        f"graft_buckets_{spark.sparkContext.applicationId}",
+    )
     db = "graft_buckets"
     lt, ot = f"{db}.lineitem_b_{tag}", f"{db}.orders_b_{tag}"
-    spark.sql(
-        f"CREATE DATABASE IF NOT EXISTS {db} "
-        f"LOCATION '/tmp/graft_buckets_db'"
-    )
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{root}/db'")
     if not (spark.catalog.tableExists(lt) and spark.catalog.tableExists(ot)):
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_extendedprice", "l_discount"
@@ -434,7 +443,7 @@ def _ensure_bucketed(spark, sf_dir):
             li.write.bucketBy(8, "l_orderkey")
             .sortBy("l_orderkey")
             .mode("overwrite")
-            .option("path", f"/tmp/graft_buckets/{tag}/lineitem")
+            .option("path", f"{root}/{tag}/lineitem")
             .saveAsTable(lt)
         )
         od = load_table(spark, sf_dir, "orders").select(
@@ -444,7 +453,7 @@ def _ensure_bucketed(spark, sf_dir):
             od.write.bucketBy(8, "o_orderkey")
             .sortBy("o_orderkey")
             .mode("overwrite")
-            .option("path", f"/tmp/graft_buckets/{tag}/orders")
+            .option("path", f"{root}/{tag}/orders")
             .saveAsTable(ot)
         )
     return lt, ot
@@ -666,7 +675,7 @@ def q_heavy_hitters(spark, sf_dir):
     output is known by construction and identical in both engines.
 
     Plan (operators/vectorized.heavy_hitters_exact): per-partition
-    mergeable Misra-Gries summaries via mapInPandas (candidates only
+    mergeable Misra-Gries summaries via mapInArrow (candidates only
     — at most partitions x k rows ever shuffle, NOT the vocabulary),
     then an exact recount of candidates (broadcast semi-join + hash
     agg) filtered against the 1-row total. The sketch bounds the
@@ -774,14 +783,14 @@ def q_ngram_topk_sketch(spark, sf_dir):
     """,
 )
 def q_heavy_hitters_by_group(spark, sf_dir):
-    """Per-language top-15 character trigrams via the GROUPED
-    two-phase Misra-Gries sketch + exact recount — the per-shard
-    vocabulary-head audit (which grams dominate each language's
-    slice) a sharded training pipeline runs where the per-group gram
-    space is too large to hash-aggregate wholesale.
+    """Per-language top-15 character trigrams via the two-phase
+    Misra-Gries sketch + exact recount grouped by ``lang`` — the
+    per-shard vocabulary-head audit (which grams dominate each
+    language's slice) a sharded training pipeline runs where the
+    per-group gram space is too large to hash-aggregate wholesale.
 
-    Plan (operators/vectorized.topk_frequent_by_group): one
-    capacity-255 summary per (partition, lang) on the map side
+    Plan (operators/vectorized.topk_frequent_sketch, ``by=("lang",)``):
+    one capacity-255 summary per (partition, lang) on the map side
     (Arrow C++ group_by counting, Python touches only distinct
     pairs), candidates-only shuffle, one masked (lang, gram) recount
     giving exact counts AND per-group totals, then per-group ranking
@@ -792,7 +801,7 @@ def q_heavy_hitters_by_group(spark, sf_dir):
     (SF, lang) cells) — the strict in-plan guard proves each group's
     result exact, making the full-aggregation oracle a bit-for-bit
     check."""
-    from .operators.vectorized import topk_frequent_by_group
+    from .operators.vectorized import topk_frequent_sketch
 
     d = _t(spark, sf_dir, "documents")
     t = F.lower(F.trim(F.col("text")))
@@ -808,7 +817,7 @@ def q_heavy_hitters_by_group(spark, sf_dir):
             "lang", F.explode(TX.char_ngrams_from(F.col("ch"), 3)).alias("gram")
         )
     )
-    return topk_frequent_by_group(grams, "lang", "gram", k=15, sketch_k=255)
+    return topk_frequent_sketch(grams, "gram", k=15, sketch_k=255, by=("lang",))
 
 
 # Exact collocation score: lift = cxy*N / (cx*cy), the monotone

@@ -112,7 +112,7 @@ def test_sketch_k_1023_restores_exact_topk(spark, adv_dir):
 
 def test_grouped_sketch_k_1023_restores_exact_topk(spark, adv_dir):
     from reverse_etl_homebrew_spark.operators.vectorized import (
-        topk_frequent_by_group,
+        topk_frequent_sketch,
     )
 
     lg = _lang_grams(spark, adv_dir)
@@ -126,7 +126,7 @@ def test_grouped_sketch_k_1023_restores_exact_topk(spark, adv_dir):
         .collect()
     )
     got = (
-        topk_frequent_by_group(lg, "lang", "gram", k=15, sketch_k=1023)
+        topk_frequent_sketch(lg, "gram", k=15, sketch_k=1023, by=("lang",))
         .select("lang", "gram", "cnt")
         .collect()
     )

@@ -122,6 +122,7 @@ def test_bucketed_join_is_shuffle_free(spark, sf_dir):
 
 
 def test_bucketed_join_matches_plain_join(spark, sf_dir):
+    from reverse_etl_homebrew_spark.queries_corpus import _ensure_bucketed
     from reverse_etl_homebrew_spark.sources.catalog import load_table
 
     got = {
@@ -144,6 +145,17 @@ def test_bucketed_join_matches_plain_join(spark, sf_dir):
         .collect()
     }
     assert got == want
+    # the bucketed tables are private to this Spark application: a
+    # second engine process building the key at once writes and reads
+    # its own copy, never a shared host-wide path
+    app = spark.sparkContext.applicationId
+    for table in _ensure_bucketed(spark, sf_dir):
+        loc = next(
+            r["data_type"]
+            for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
+            if r["col_name"] == "Location"
+        )
+        assert app in loc and "/tmp/graft_buckets/" not in loc, loc
 
 
 def test_heavy_hitters_exact_and_partition_invariant(spark):
@@ -332,8 +344,8 @@ def test_topk_frequent_by_group_matches_brute_force_under_compression(spark):
     from pyspark.sql import Window as W
 
     from reverse_etl_homebrew_spark.operators.vectorized import (
-        misra_gries_candidates_by_group,
-        topk_frequent_by_group,
+        misra_gries_candidates,
+        topk_frequent_sketch,
     )
 
     # two groups with DIFFERENT Zipf heads (g0 favors low ids, g1
@@ -366,13 +378,13 @@ def test_topk_frequent_by_group_matches_brute_force_under_compression(spark):
         part = df.repartition(parts)
         got = sorted(
             (r["grp"], r["item"], r["cnt"])
-            for r in topk_frequent_by_group(
-                part, "grp", "item", k, sketch_k
+            for r in topk_frequent_sketch(
+                part, "item", k, sketch_k, by=("grp",)
             ).collect()
         )
         assert got == brute, f"parts={parts}"
         n_cands = (
-            misra_gries_candidates_by_group(part, "grp", "item", sketch_k)
+            misra_gries_candidates(part, "item", sketch_k, by=("grp",))
             .distinct()
             .count()
         )
@@ -387,7 +399,7 @@ def test_topk_frequent_by_group_strict_guard_is_per_group(spark):
     import pytest
 
     from reverse_etl_homebrew_spark.operators.vectorized import (
-        topk_frequent_by_group,
+        topk_frequent_sketch,
     )
 
     rows = (
@@ -399,10 +411,10 @@ def test_topk_frequent_by_group_strict_guard_is_per_group(spark):
     df = spark.createDataFrame(rows, "grp string, item string").repartition(8)
 
     with pytest.raises(Exception, match="provable regime"):
-        topk_frequent_by_group(df, "grp", "item", 5, 16).collect()
+        topk_frequent_sketch(df, "item", 5, 16, by=("grp",)).collect()
 
-    alone = topk_frequent_by_group(
-        df.where(F.col("grp") == "skew"), "grp", "item", 5, 16
+    alone = topk_frequent_sketch(
+        df.where(F.col("grp") == "skew"), "item", 5, 16, by=("grp",)
     ).collect()
     skew = sorted((r["item"], r["cnt"]) for r in alone)
     assert skew == [("s_1", 600), ("s_2", 300), ("s_3", 200), ("s_4", 150), ("s_5", 120)]
@@ -414,7 +426,7 @@ def test_topk_frequent_by_group_null_policy(spark):
     group's total (a NULL-key flood must not push a real group out
     of its provable regime)."""
     from reverse_etl_homebrew_spark.operators.vectorized import (
-        topk_frequent_by_group,
+        topk_frequent_sketch,
     )
 
     rows = (
@@ -426,7 +438,7 @@ def test_topk_frequent_by_group_null_policy(spark):
     df = spark.createDataFrame(rows, "grp string, item string").repartition(4)
     got = sorted(
         (r["grp"], r["item"], r["cnt"])
-        for r in topk_frequent_by_group(df, "grp", "item", 2, 8).collect()
+        for r in topk_frequent_sketch(df, "item", 2, 8, by=("grp",)).collect()
     )
     assert got == [("g", "a", 30), ("g", "b", 10)]
 
@@ -435,15 +447,20 @@ def test_misra_gries_sketch_narrow_int_item_columns(spark):
     """The candidate sketch's yielded Arrow arrays must carry the
     DECLARED column type, not Python-int inference (always int64):
     an IntegerType item column previously failed mapInArrow's schema
-    check at runtime. Pins both the ungrouped and grouped phases end
-    to end through their top-k operators."""
+    check at runtime. Pins the sketch ungrouped and grouped end to
+    end through the heavy-hitters and top-k operators — grouped by a
+    string key and by an int key, whose array takes the declared
+    type the same way."""
     from reverse_etl_homebrew_spark.operators.vectorized import (
         heavy_hitters_exact,
-        topk_frequent_by_group,
+        topk_frequent_sketch,
     )
 
-    rows = [(7, "g")] * 60 + [(8, "g")] * 20 + [(100 + i, "g") for i in range(30)]
-    df = spark.createDataFrame(rows, "item int, grp string").repartition(4)
+    rows = (
+        [(7, "g", 3)] * 60 + [(8, "g", 3)] * 20
+        + [(100 + i, "g", 3) for i in range(30)]
+    )
+    df = spark.createDataFrame(rows, "item int, grp string, gid int").repartition(4)
     assert df.schema["item"].dataType.simpleString() == "int"
 
     got = sorted(
@@ -451,7 +468,12 @@ def test_misra_gries_sketch_narrow_int_item_columns(spark):
     )
     assert got == [(7, 60), (8, 20)]
 
-    by_g = topk_frequent_by_group(df, "grp", "item", k=2, sketch_k=16).collect()
+    by_g = topk_frequent_sketch(df, "item", k=2, sketch_k=16, by=("grp",)).collect()
     assert sorted((r["grp"], r["item"], r["cnt"]) for r in by_g) == [
         ("g", 7, 60), ("g", 8, 20)
+    ]
+    by_id = topk_frequent_sketch(df, "item", k=2, sketch_k=16, by=("gid",))
+    assert by_id.schema["gid"].dataType.simpleString() == "int"
+    assert sorted((r["gid"], r["item"], r["cnt"]) for r in by_id.collect()) == [
+        (3, 7, 60), (3, 8, 20)
     ]
