@@ -15,10 +15,9 @@ Cells (sf0.1 embeddings, 10% batch / 90% accepted split, planes=6):
 
 The lever adjudication lands in SCALE.md: per-pair scoring is an
 Arrow matmul, so a hot bucket costs linear-in-candidates wall, and
-the production levers are (a) near-dup collapse BEFORE indexing —
+the production lever is near-dup collapse BEFORE indexing —
 `embedding_near_dup_pairs` exists precisely to dedup boilerplate
-vectors — and (b) the per-bucket candidate cap precedent (df_cap)
-if collapse is not allowed. Measured, not assumed.
+vectors. Measured, not assumed.
 
 r13 extension (VERDICT r12 #5 — the multiplicative cell): the r12
 cells ran at planes=6, where a radius-2 probe covers 22/64 = 34% of
@@ -31,15 +30,10 @@ candidates shrink as 2^-planes while the hot-batch x hot-bucket cell
 stays 0.3M x 0.3N. The `multiplicative` arm plants exactly that —
 planes=10 (the corpus-proportional width here), hot fractions
 30%/50% on BOTH sides, candidate-pair counts printed next to wall —
-then measures the two documented levers on the worst cell:
-  collapse  near-dup collapse BEFORE indexing
-            (embedding_near_dup_pairs >= 0.999 -> connected
-            components -> lowest-id representative) — the right
-            lever when boilerplate vectors are semantic duplicates;
-  cap       incremental_knn(bucket_cap=...) — the df_cap precedent
-            when every vector must stay probeable; deterministic
-            lowest-r_id survivors, hot-bucket recall traded for
-            bounded work (recall vs uncapped printed).
+then measures the documented lever on the worst cell: near-dup
+collapse BEFORE indexing (embedding_near_dup_pairs >= 0.999, at its
+8 planes -> connected components -> lowest-id representative) — the
+right lever when boilerplate vectors are semantic duplicates.
 
 Usage: python fixtures/skew_ann_probe.py [sf_dir] [arm ...]
        # arms: baseline (the r12 cells), multiplicative
@@ -142,20 +136,15 @@ def run_multiplicative(spark, e, dim, tmp) -> None:
         )
         worst = (label, b, idx, path)
 
-    # levers on the worst cell (mp_skew50_both)
-    label, b, idx, path = worst
-    uncapped = incremental_knn(b, idx, k=3, planes=planes)
-    uncapped_rows = {
-        (r["l_id"], r["r_id"]) for r in uncapped.collect()
-    }
-
-    # lever A: near-dup collapse BEFORE indexing — components over
-    # cos >= 0.999 pairs, lowest-id representative survives
+    # the lever on the worst cell (mp_skew50_both): near-dup collapse
+    # BEFORE indexing — components over cos >= 0.999 pairs, lowest-id
+    # representative survives
+    label, b, _, path = worst
     a_df = spark.read.parquet(path).select(
         F.col("r_id").alias("vec_id"), F.col("r_v").alias("embedding")
     )
     pairs = embedding_near_dup_pairs(
-        a_df, threshold=0.999, planes=planes, probe_radius=1
+        a_df, threshold=0.999, probe_radius=1
     ).select("a_id", "b_id")
     comp = connected_components(pairs)
     reps = (
@@ -179,23 +168,6 @@ def run_multiplicative(spark, e, dim, tmp) -> None:
     print(
         f"lever collapse: index {a_df.count()} -> {reps.count()} rows, "
         f"candidate pairs {ccand}, wall {cwall}s"
-    )
-
-    # lever B: per-bucket cap (4x the clean average bucket size)
-    cap = 16
-    capped = incremental_knn(b, idx, k=3, planes=planes, bucket_cap=cap)
-    capped_rows = {(r["l_id"], r["r_id"]) for r in capped.collect()}
-    recall = (
-        len(capped_rows & uncapped_rows) / len(uncapped_rows)
-        if uncapped_rows
-        else 1.0
-    )
-    wall = timed(
-        lambda: incremental_knn(b, idx, k=3, planes=planes, bucket_cap=cap)
-    )
-    print(
-        f"lever cap={cap}: wall {wall}s, pair recall vs uncapped "
-        f"{recall:.3f} (hot-bucket neighbors traded for bounded work)"
     )
 
 

@@ -163,19 +163,12 @@ def main() -> None:
     # two position lanes / total train grams (the map-side kill rate),
     # measured through the OPERATOR'S OWN prefilter stage so fixture
     # and production can never drift apart
-    import inspect
-
-    from reverse_etl_homebrew_spark.operators import dedup as DDmod
-
-    m = inspect.signature(
-        DDmod.contamination_flags_prefiltered
-    ).parameters["m"].default
     for c in (1, 10):
         train, bench = decon_split(c)
         tg = _doc_grams(train, "doc_id", "text", 8)
         bg = _doc_grams(bench, "doc_id", "text", 8).select("g").distinct()
         total = tg.count()
-        surviving = bloom_candidate_grams(tg, bg, m).count()
+        surviving = bloom_candidate_grams(tg, bg).count()
         print(
             f"bloom selectivity {c}x: {surviving}/{total} train grams survive "
             f"({100.0 * surviving / max(total, 1):.2f}%)"

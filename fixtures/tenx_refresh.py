@@ -33,18 +33,19 @@ bucketed on fp, span index on win, ANN index on bucket, rollup state
 parquet (the accept-time maintenance cost a real deployment pays at
 ingest, never per refresh):
 
-- `probe` cell: diff computed in-plan from the two snapshots — keeps
-  the one corpus-proportional term snapshot CDC inherently pays (the
-  narrow md5 digest scan of both snapshots);
-- `cdc` cell: the decision table, the day's DELTA rows, and the
-  accept-time (doc_id, lang, toks) sidecar ALSO persisted (the
-  reference's watermark shape, main.py:537-538 — the delta arrives
-  identified), so the timed work is admission probes + stats merge
-  only and the probe never touches the old corpus at all.
+- `probe` cell: diff computed in-plan from the two snapshots (pinned,
+  as `corpus_refresh_report` pins it) — keeps the one
+  corpus-proportional term snapshot CDC inherently pays (the narrow
+  md5 digest scan of both snapshots);
+- `cdc` cell: the decision table and the day's DELTA rows ALSO
+  persisted (the reference's watermark shape, main.py:537-538 — the
+  delta arrives identified), so the timed work is admission probes,
+  the retired rows' attribution read of the old corpus, and the stats
+  merge.
 
 Done-when (the tenx_incremental_knn 1.20x precedent, lifted to the
-whole composite): the cdc cell reads ~flat at 10x corpus; the probe
-cell's residual growth decomposes as the digest scan.
+whole composite): the probe cell's growth over the cdc cell
+decomposes as the digest scan.
 
 Usage: python fixtures/tenx_refresh.py [sf_dir]
 """
@@ -151,12 +152,11 @@ def main() -> None:
         snapshot_diff,
     )
     from reverse_etl_homebrew_spark.operators.refresh import (
-        accept_time_doc_stats,
         corpus_refresh_probe,
         corpus_refresh_report,
     )
     from reverse_etl_homebrew_spark.operators.similarity import build_ann_index
-    from reverse_etl_homebrew_spark.session import get_spark
+    from reverse_etl_homebrew_spark.session import get_spark, pin
     from reverse_etl_homebrew_spark.sources.catalog import load_table
 
     spark = get_spark("tenx-refresh")
@@ -230,11 +230,9 @@ def main() -> None:
         state.write.parquet(state_p)
         diff_p = os.path.join(tmp, "diff")
         diff.write.parquet(diff_p)
-        # accept-time sidecar + the day's delta as a watermark read
-        # would deliver it (reference main.py:537-538) — both written
-        # at accept/ingest time in production, never per refresh
-        stats_side_p = os.path.join(tmp, "doc_stats")
-        accept_time_doc_stats(old).write.parquet(stats_side_p)
+        # the day's delta as a watermark read would deliver it
+        # (reference main.py:537-538) — written at ingest time in
+        # production, never per refresh
         reprocess = diff.where(
             F.col("status").isin("added", "changed")
         ).select("doc_id")
@@ -244,6 +242,14 @@ def main() -> None:
         # ---- cell 2: probe side, snapshot-diff form (diff in-plan —
         # keeps the corpus-proportional narrow digest scan)
         def probe(use_cdc: bool):
+            in_plan_diff = lambda: pin(
+                snapshot_diff(
+                    old.select("doc_id", "text"),
+                    new.select("doc_id", "text"),
+                    "doc_id",
+                    F.md5("text"),
+                )
+            )
             return corpus_refresh_probe(
                 old,
                 spark.read.parquet(delta_p) if use_cdc else new,
@@ -252,15 +258,12 @@ def main() -> None:
                 spark.table(tables["win"]),
                 spark.table(tables["ann"]),
                 spark.read.parquet(state_p),
-                diff=spark.read.parquet(diff_p) if use_cdc else None,
-                doc_stats=(
-                    spark.read.parquet(stats_side_p) if use_cdc else None
-                ),
+                spark.read.parquet(diff_p) if use_cdc else in_plan_diff(),
             )
 
         wall_probe = timed(lambda: probe(False))
-        # ---- cell 3: probe side, CDC-fed (decision table + delta +
-        # doc-stats sidecar persisted: the probe never touches `old`)
+        # ---- cell 3: probe side, CDC-fed (decision table + delta
+        # persisted)
         wall_cdc = timed(lambda: probe(True))
 
         rep = corpus_refresh_report(old, new, vecs)

@@ -123,11 +123,10 @@ def infer_dim(df: DataFrame, vec_col: str = "embedding") -> int:
 
 
 def query_vector(
-    df: DataFrame, vec_id: int = 0, vec_col: str = "embedding",
-    id_col: str = "vec_id",
+    df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id",
 ) -> "tuple[list, bool]":
-    """The driver-side seed vector for similarity queries →
-    ``(vector, found)``, with the r11 empty-input contract: when the
+    """The driver-side seed vector for similarity queries (the row
+    whose id is 0) → ``(vector, found)``, with the r11 empty-input contract: when the
     seed row is absent (empty table, filtered-out id) the caller
     builds its NORMAL plan around the returned all-zeros stand-in
     (dimension inferred; 1 on a fully empty table) and fences the
@@ -152,7 +151,7 @@ def query_vector(
     carries no geometry and the oracle's seed CTE excludes it)."""
     import math
 
-    row = df.filter(F.col(id_col) == vec_id).select(vec_col).first()
+    row = df.filter(F.col(id_col) == 0).select(vec_col).first()
     if (
         row is not None
         and row[vec_col] is not None

@@ -196,13 +196,11 @@ def _png_features(payload: bytes) -> Tuple[list, int, int]:
 # WAV codec (stdlib: wave)
 # ---------------------------------------------------------------------------
 
-def encode_wav(
-    samples, sample_rate: int = 8000, n_channels: int = 1
-) -> bytes:
-    """int16 PCM WAV writer — test/demo payloads."""
+def encode_wav(samples, sample_rate: int = 8000) -> bytes:
+    """Mono int16 PCM WAV writer — test/demo payloads."""
     buf = io.BytesIO()
     with wave.open(buf, "wb") as w:
-        w.setnchannels(n_channels)
+        w.setnchannels(1)
         w.setsampwidth(2)
         w.setframerate(sample_rate)
         w.writeframes(b"".join(struct.pack("<h", s) for s in samples))
@@ -310,6 +308,7 @@ def mp4_duration_ms(payload: bytes) -> Optional[int]:
 
 #: media timescale for encoded skeletons (90 kHz, the MPEG convention)
 _MP4_MEDIA_TS = 90_000
+_MP4_FPS = 4
 
 
 def _mp4_frame_bytes(content_seed: bytes, idx: int, size: int) -> bytes:
@@ -341,14 +340,14 @@ def _rawvideo_frame_bytes(
 def encode_mp4_skeleton(
     duration_ms: int,
     content_seed: bytes = b"",
-    fps: int = 4,
     codec: str = "avc1",
     width: int = 64,
     height: int = 48,
 ) -> bytes:
     """ftyp + moov (mvhd, full video trak with a REAL sample table:
-    stsd/stts/stsz/stsc/stco) + mdat — a structurally valid mp4 whose
-    per-frame byte ranges are recoverable by any conformant demuxer.
+    stsd/stts/stsz/stsc/stco) + mdat at ``_MP4_FPS`` frames per second
+    — a structurally valid mp4 whose per-frame byte ranges are
+    recoverable by any conformant demuxer.
 
     ``codec="avc1"`` (default): frame contents are deterministic
     pseudo-bitstreams (no pure-stdlib H.264 decoder exists — those
@@ -359,8 +358,8 @@ def encode_mp4_skeleton(
     standalone baseline JPEG (``encode_mjpeg_frame``) that
     ``decode_jpeg_dc`` decodes back to pixels.
     """
-    n_samples = max(1, duration_ms * fps // 1000)
-    delta = _MP4_MEDIA_TS // fps
+    n_samples = max(1, duration_ms * _MP4_FPS // 1000)
+    delta = _MP4_MEDIA_TS // _MP4_FPS
     jpeg_frames: list = []
     if codec == "raw ":
         sizes = [width * height * 3] * n_samples
@@ -601,11 +600,13 @@ def _video_feature_agg(frames: list, k: int) -> list:
     return (feat + [0.0] * k)[:k]
 
 
-def _rawvideo_content_features(
-    payload: bytes, tab: dict, k: int, max_frames: int = 8
-) -> Optional[list]:
+# frames the pixel-decoding video paths sample per payload
+_SAMPLED_FRAMES = 8
+
+
+def _rawvideo_content_features(payload: bytes, tab: dict, k: int) -> Optional[list]:
     """REAL pixel decode for 'raw ' (QuickTime uncompressed RGB24)
-    video: sample up to ``max_frames`` evenly spaced frames, decode the
+    video: sample up to ``_SAMPLED_FRAMES`` evenly spaced frames, decode the
     packed pixels sliced straight out of mdat, and reduce to channel
     means, luma statistics, and inter-frame motion (mean |Δluma| of
     consecutive sampled frames). Returns None when the geometry doesn't
@@ -615,8 +616,8 @@ def _rawvideo_content_features(
     if not (w and h and samples):
         return None
     frame_len = w * h * 3
-    step = max(1, len(samples) // max_frames)
-    picked = samples[::step][:max_frames]
+    step = max(1, len(samples) // _SAMPLED_FRAMES)
+    picked = samples[::step][:_SAMPLED_FRAMES]
     frames = []
     for _idx, _ts, off, size in picked:
         frame = payload[off : off + size]
@@ -951,19 +952,17 @@ def decode_jpeg_dc(payload: bytes) -> Tuple[int, int, bytes]:
     return bw, bh, out.tobytes()
 
 
-def _mjpeg_content_features(
-    payload: bytes, tab: dict, k: int, max_frames: int = 8
-) -> Optional[list]:
+def _mjpeg_content_features(payload: bytes, tab: dict, k: int) -> Optional[list]:
     """REAL pixel decode for Motion-JPEG ('jpeg' fourcc): sample up to
-    ``max_frames`` evenly spaced frames, DC-decode each standalone
+    ``_SAMPLED_FRAMES`` evenly spaced frames, DC-decode each standalone
     JPEG sliced out of mdat, and reduce the 8x-downsampled pixels with
     the same statistics as the rawvideo path. Returns None when frames
     don't decode (caller falls back to the labeled stub)."""
     samples = tab["samples"]
     if not samples:
         return None
-    step = max(1, len(samples) // max_frames)
-    picked = samples[::step][:max_frames]
+    step = max(1, len(samples) // _SAMPLED_FRAMES)
+    picked = samples[::step][:_SAMPLED_FRAMES]
     geom = None
     frames = []
     for _idx, _ts, off, size in picked:
@@ -1128,7 +1127,7 @@ def decode_payload(payload: bytes, mime: Optional[str]):
     raise ValueError(f"no codec for {mime!r}")
 
 
-def decode_and_featurize(df: DataFrame, batch_hint: int = 64) -> DataFrame:
+def decode_and_featurize(df: DataFrame) -> DataFrame:
     """Arrow-batched decode/feature-extract over ``mapInPandas``.
 
     Scale properties: executors stream Arrow batches (payload bytes

@@ -33,16 +33,15 @@ class AlertSink:
                 pass  # alerts must never fail the run (main.py:272-274)
 
 
-def collect_alerts(
-    dlq_rows: DataFrame, sink: AlertSink, threshold: int = 5, limit: int = 100
-) -> int:
+def collect_alerts(dlq_rows: DataFrame, sink: AlertSink, threshold: int = 5) -> int:
     """Route quarantined keys that crossed the attempt threshold
-    (main.py:714-727, 748-773; README.md:78) to the alert sink.
-    The frame side is a filter; only the alert texts are collected."""
+    (main.py:714-727, 748-773; README.md:78) to the alert sink, at
+    most 100 per run. The frame side is a filter; only the alert texts
+    are collected."""
     rows = (
         dlq_rows.filter(F.col("attempt") >= threshold)
         .select("job_type", "natural_key", "attempt", "error")
-        .limit(limit)
+        .limit(100)
         .collect()
     )
     for r in rows:

@@ -62,19 +62,20 @@ def finite_dec_typed(col: Column, typ: str) -> Column:
     )
 
 
-def dec_sum(col: Column, alias: str, scale: int = 6) -> Column:
+def dec_sum(col: Column, alias: str) -> Column:
     """Order-independent exact sum of a double expression: the per-row
-    double is rounded once to decimal(38,scale) (deterministic — no
+    double is rounded once to decimal(38,6) (deterministic — no
     representable double sits exactly on a half-ulp tie at this scale),
     then summed exactly. Output cast back to double. Non-finite input
     raises on both engines (``finite_dec``)."""
-    return F.sum(finite_dec(col, scale)).cast("double").alias(alias)
+    return F.sum(finite_dec(col, 6)).cast("double").alias(alias)
 
 
-def dec_avg(col: Column, alias: str, scale: int = 6) -> Column:
-    """Exact-sum / exact-count average, emitted as double."""
+def dec_avg(col: Column, alias: str) -> Column:
+    """Exact-sum / exact-count average over decimal(38,6), emitted as
+    double."""
     return (
-        F.sum(finite_dec(col, scale)).cast("double")
+        F.sum(finite_dec(col, 6)).cast("double")
         / F.count(col)
     ).alias(alias)
 
@@ -85,26 +86,30 @@ def ambiguity_count(df: DataFrame, key: str) -> DataFrame:
     return df.groupBy(key).agg(F.count(F.lit(1)).alias("match_count"))
 
 
+# quantile label → p, and the phase-1 histogram bins per group
+_QUANTILES = {"p50": 0.5, "p90": 0.9, "p99": 0.99}
+_QUANTILE_BINS = 4096
+
+
 def exact_quantiles_twophase(
     df: DataFrame,
     group_col: str,
     value_col: str,
-    qs: dict | None = None,
-    buckets: int = 4096,
 ) -> DataFrame:
     """Exact DISCRETE per-group quantiles (the value at rank
-    ``ceil(p·n)``) with BOUNDED state — the 100 TB twin of the
+    ``ceil(p·n)``, one column per ``_QUANTILES`` label) with BOUNDED
+    state — the 100 TB twin of the
     `quantiles` key. Spark's built-in ``percentile`` holds every
     group's full value multiset in one reducer's aggregation state;
     this computes the same order statistic in two bounded passes
     (the Misra-Gries candidates→exact-recount pattern lifted to rank
     selection):
 
-    1. per-group (lo, hi, n) + a ``buckets``-bin histogram — both
-       partial-aggregated map-side, shuffled state ≤ buckets rows per
+    1. per-group (lo, hi, n) + a ``_QUANTILE_BINS``-bin histogram —
+       both partial-aggregated map-side, shuffled state ≤ 4096 rows per
        group; a per-group cumulative over the ≤4096-bin vocabulary
        locates each target rank's bin and its prior count.
-    2. only rows falling in a located bin (≈ n/buckets per target)
+    2. only rows falling in a located bin (≈ n/4096 per target)
        re-aggregate by exact value; an in-bin cumulative picks the
        smallest value with prior + cum ≥ rank.
 
@@ -122,7 +127,7 @@ def exact_quantiles_twophase(
     DISTRIBUTION-DEPENDENT, not worst-case. Rows first collapse to
     per-distinct-value counts (map-side partial agg), so the (g, q)
     ranking window holds one row per DISTINCT value of the located
-    bin — ≈ n/buckets under anything resembling uniform spread, but
+    bin — ≈ n/4096 under anything resembling uniform spread, but
     an adversarial group that packs most of its distinct values into
     one histogram bin (e.g. a heavy point mass plus far outliers
     stretching the range) degrades that window back toward the full
@@ -134,7 +139,6 @@ def exact_quantiles_twophase(
     pathology the histogram makes visible anyway (``c`` per bin is
     already computed; monitor it).
     """
-    qs = qs or {"p50": 0.5, "p90": 0.9, "p99": 0.99}
     vals = df.select(
         F.col(group_col).alias("g"), F.col(value_col).cast("double").alias("v")
     ).where(is_finite(F.col("v")))
@@ -153,9 +157,9 @@ def exact_quantiles_twophase(
             F.least(
                 F.floor(
                     (F.col("v") - F.col("lo"))
-                    / ((F.col("hi") - F.col("lo")) / F.lit(float(buckets)))
+                    / ((F.col("hi") - F.col("lo")) / F.lit(float(_QUANTILE_BINS)))
                 ),
-                F.lit(buckets - 1),
+                F.lit(_QUANTILE_BINS - 1),
             )
         )
         .cast("long")
@@ -172,8 +176,8 @@ def exact_quantiles_twophase(
         "n",
         F.explode(
             F.map_from_arrays(
-                F.array(*[F.lit(k) for k in qs]),
-                F.array(*[F.lit(float(p)) for p in qs.values()]),
+                F.array(*[F.lit(k) for k in _QUANTILES]),
+                F.array(*[F.lit(float(p)) for p in _QUANTILES.values()]),
             )
         ).alias("q", "p"),
     ).select("g", "q", F.ceil(F.col("p") * F.col("n")).alias("r"))
@@ -194,8 +198,8 @@ def exact_quantiles_twophase(
         .agg(F.min("v").alias("qv"))
     )
     wide = picked.groupBy("g").agg(
-        *[F.max(F.when(F.col("q") == k, F.col("qv"))).alias(k) for k in qs]
+        *[F.max(F.when(F.col("q") == k, F.col("qv"))).alias(k) for k in _QUANTILES]
     )
     return wide.join(stats.select("g", "n"), ["g"]).select(
-        F.col("g").alias(group_col), *qs.keys(), F.col("n").cast("long").alias("n")
+        F.col("g").alias(group_col), *_QUANTILES.keys(), F.col("n").cast("long").alias("n")
     )

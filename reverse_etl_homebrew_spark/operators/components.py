@@ -24,15 +24,19 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..session import pin
 
+_MAX_ROUNDS = 20
+
 
 def connected_components(
     pairs: DataFrame,
     a_col: str = "a_id",
     b_col: str = "b_id",
-    max_iter: int = 20,
 ) -> DataFrame:
     """(a_id, b_id) undirected edges → (id, component) with component
-    = min node id in the component. Deterministic.
+    = min node id in the component. Deterministic. A component whose
+    labels have not settled after ``_MAX_ROUNDS`` propagation rounds
+    (a path longer than that) raises instead of returning partial
+    labels.
 
     Each round's labels are pinned eagerly: each label round references
     the previous round twice (neighbor join + carry-through), so
@@ -53,7 +57,7 @@ def connected_components(
     labels = edges.select(F.col("src").alias("id")).distinct().withColumn(
         "component", F.col("id")
     )
-    for _ in range(max_iter):
+    for _ in range(_MAX_ROUNDS):
         # each node adopts min(own label, neighbors' labels)
         neighbor_labels = (
             edges.join(labels.withColumnRenamed("id", "dst"), ["dst"])
@@ -82,7 +86,7 @@ def connected_components(
         if changed == 0:
             return labels
     raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds"
+        f"connected_components did not converge in {_MAX_ROUNDS} rounds"
     )
 
 

@@ -86,12 +86,19 @@ def lastwin_dedup(
 # lambda names). Explode → one hash per shingle → groupBy is the flat
 # shape, and also the right one at scale.
 
+# SimHash shape: 64-bit xxhash64 fingerprints over char-4-gram
+# shingles; near-dup pairs are those within Hamming 3, found by banding
+# each fingerprint into 4 blocks (3 flips leave one block intact).
+_SIMHASH_BITS = 64
+_SIMHASH_SHINGLE_N = 4
+_SIMHASH_BLOCKS = 4
+_SIMHASH_MAX_HAMMING = 3
+
+
 def simhash_fingerprints(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    bits: int = 64,
-    shingle_n: int = 4,
 ) -> DataFrame:
     """One row per document with its SimHash fingerprint (per-bit
     majority vote over shingle hashes), as (id, sh).
@@ -107,17 +114,19 @@ def simhash_fingerprints(
     The (id, shingle) relation is DISTINCT, so an id's shingle set is
     the union of its rows: a doc_id delivered twice with different
     text votes each shared shingle once."""
-    assert bits % 2 == 0
     hashed = (
         df.select(
             F.col(id_col).alias("id"),
             TX.char_array(TX.normalized_text(F.col(text_col))).alias("__ch"),
         )
-        .select("id", F.explode(TX.char_ngrams_from(F.col("__ch"), shingle_n)).alias("g"))
+        .select(
+            "id",
+            F.explode(TX.char_ngrams_from(F.col("__ch"), _SIMHASH_SHINGLE_N)).alias("g"),
+        )
         .distinct()
         .select("id", F.xxhash64("g").alias("h"))
     )
-    lanes = bits // 2
+    lanes = _SIMHASH_BITS // 2
     votes = hashed.groupBy("id").agg(
         F.count(F.lit(1)).alias("total"),
         *[
@@ -146,7 +155,7 @@ def simhash_fingerprints(
         ],
     )
     acc = F.lit(0).cast("long")
-    for b in range(bits):
+    for b in range(_SIMHASH_BITS):
         bit = F.when(F.col(f"v{b}") * 2 >= F.col("total"), F.lit(1).cast("long")).otherwise(
             F.lit(0).cast("long")
         )
@@ -154,37 +163,65 @@ def simhash_fingerprints(
     return unpacked.select("id", acc.alias("sh"))
 
 
+def _banded_hamming_pairs(fp: DataFrame, block_bits: int) -> DataFrame:
+    """Every pair of (id, f) fingerprints within Hamming
+    ``_SIMHASH_MAX_HAMMING``, as (a_id, b_id, hamming) with a_id < b_id.
+
+    Recall is exact by construction: a pair within Hamming 3 must agree
+    on at least one of the ``_SIMHASH_BLOCKS`` blocks of ``block_bits``
+    bits (pigeonhole), so banding on those blocks loses nothing and the
+    output equals the brute-force Hamming pair set. Shape: block explode
+    + equi-join on the block key; pairs sharing several blocks dedup
+    before the verify. No all-pairs."""
+    mask = (1 << block_bits) - 1
+    blocked = fp.select(
+        "id",
+        "f",
+        F.explode(
+            F.array(
+                *[
+                    # tag with the block index so different blocks never
+                    # collide in one equi-join key
+                    (
+                        F.shiftrightunsigned("f", b * block_bits).bitwiseAND(
+                            F.lit(mask)
+                        )
+                        + F.lit(b * (mask + 1))
+                    ).cast("long")
+                    for b in range(_SIMHASH_BLOCKS)
+                ]
+            )
+        ).alias("blk"),
+    )
+    a = blocked.select(F.col("id").alias("a_id"), F.col("f").alias("a_f"), "blk")
+    b = blocked.select(F.col("id").alias("b_id"), F.col("f").alias("b_f"), "blk")
+    return (
+        a.join(b, ["blk"])
+        .filter(F.col("a_id") < F.col("b_id"))
+        .dropDuplicates(["a_id", "b_id"])
+        .withColumn("hamming", F.bit_count(F.col("a_f").bitwiseXOR(F.col("b_f"))))
+        .filter(F.col("hamming") <= _SIMHASH_MAX_HAMMING)
+        .select("a_id", "b_id", "hamming")
+    )
+
+
 def simhash_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_hamming: int = 3,
-    prefix_bits: int = 16,
 ) -> DataFrame:
-    """Near-dup candidate pairs by SimHash: block on the top
-    ``prefix_bits`` of the fingerprint (cheap LSH for small Hamming
-    radii), verify Hamming distance inside blocks via bit_count."""
-    sh = simhash_fingerprints(df, id_col, text_col).withColumn(
-        "block", F.shiftrightunsigned("sh", 64 - prefix_bits)
-    )
-    a = sh.select(F.col("id").alias("a_id"), F.col("sh").alias("a_sh"), "block")
-    b = sh.select(F.col("id").alias("b_id"), F.col("sh").alias("b_sh"), "block")
-    return (
-        a.join(b, ["block"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .withColumn("hamming", F.bit_count(F.col("a_sh").bitwiseXOR(F.col("b_sh"))))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("a_id", "b_id", "hamming")
-    )
+    """Near-dup pairs by SimHash: the 64-bit fingerprints of
+    ``simhash_fingerprints``, banded into 4 blocks of 16 bits and
+    verified by Hamming distance (``_banded_hamming_pairs``) — exactly
+    the brute-force pair set within Hamming 3."""
+    fp = simhash_fingerprints(df, id_col, text_col).select("id", F.col("sh").alias("f"))
+    return _banded_hamming_pairs(fp, _SIMHASH_BITS // _SIMHASH_BLOCKS)
 
 
 def simhash_pairs_md5(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    bits: int = 32,
-    max_hamming: int = 3,
-    blocks: int = 4,
 ) -> DataFrame:
     """Cross-engine-portable SimHash: token hashes come from md5 (hex
     prefix parsed as an integer) instead of xxhash64, so the ENTIRE
@@ -193,24 +230,21 @@ def simhash_pairs_md5(
     oracle-checkable end-to-end (the xxhash64 variant above stays the
     perf default; md5 costs more per token).
 
-    Recall is exact by construction: a pair within Hamming
-    ``max_hamming`` < ``blocks`` must agree on at least one of the
-    ``blocks`` bit-blocks (pigeonhole), so block banding loses nothing
-    and the output equals the brute-force Hamming pair set. Pairs
-    sharing several blocks dedup before the verify.
+    32-bit fingerprints, banded into 4 blocks of 8 bits by the shared
+    ``_banded_hamming_pairs`` (exact by pigeonhole, like the xxhash64
+    form).
 
     Shape: one explode over tokens, DISTINCT (id, token) — an id's
     token set is the union of its rows, as in the oracle's ``SELECT
-    DISTINCT doc_id, t`` — one groupBy for votes (``bits`` small sum
-    aggregates — integer, JIT-friendly), block explode + equi-join. No
-    all-pairs."""
-    hexlen = bits // 4
+    DISTINCT doc_id, t`` — one groupBy for votes (32 small sum
+    aggregates — integer, JIT-friendly), then the banded join."""
+    bits = 32
     toks = df.select(
         F.col(id_col).alias("id"),
         F.explode(F.split(TX.normalized_text(F.col(text_col)), " ")).alias("t"),
     ).distinct()
     h = toks.select(
-        "id", F.conv(F.substring(F.md5("t"), 1, hexlen), 16, 10).cast("long").alias("h")
+        "id", F.conv(F.substring(F.md5("t"), 1, bits // 4), 16, 10).cast("long").alias("h")
     )
     votes = h.groupBy("id").agg(
         *[
@@ -230,37 +264,7 @@ def simhash_pairs_md5(
             i,
         )
     fp = votes.select("id", acc.alias("f"))
-    block_bits = bits // blocks
-    mask = (1 << block_bits) - 1
-    blocked = fp.select(
-        "id",
-        "f",
-        F.explode(
-            F.array(
-                *[
-                    # tag with the block index so different blocks never
-                    # collide in one equi-join key
-                    (
-                        F.shiftrightunsigned("f", b * block_bits).bitwiseAND(
-                            F.lit(mask)
-                        )
-                        + F.lit(b * (mask + 1))
-                    ).cast("long")
-                    for b in range(blocks)
-                ]
-            )
-        ).alias("blk"),
-    )
-    a = blocked.select(F.col("id").alias("a_id"), F.col("f").alias("a_f"), "blk")
-    b = blocked.select(F.col("id").alias("b_id"), F.col("f").alias("b_f"), "blk")
-    return (
-        a.join(b, ["blk"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .dropDuplicates(["a_id", "b_id"])
-        .withColumn("hamming", F.bit_count(F.col("a_f").bitwiseXOR(F.col("b_f"))))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("a_id", "b_id", "hamming")
-    )
+    return _banded_hamming_pairs(fp, bits // _SIMHASH_BLOCKS)
 
 
 # ---------------------------------------------------------------------------
@@ -372,12 +376,11 @@ def contamination_flags(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 8,
-    min_grams: int = 1,
 ) -> DataFrame:
     """Benchmark decontamination: flag training documents sharing at
-    least ``min_grams`` distinct word-``n``-grams with ANY benchmark
-    document (the standard n-gram contamination check used before
-    training on web-scale corpora; n≈8-13 in published recipes).
+    least one word-``n``-gram with ANY benchmark document (the standard
+    n-gram contamination check used before training on web-scale
+    corpora; n≈8-13 in published recipes).
 
     Shape: benchmark grams reduce to a DISTINCT gram set (benchmark
     suites are small next to a training corpus, so AQE broadcasts it);
@@ -401,30 +404,26 @@ def contamination_flags(
     re-deliveries were always harmless — bg is a distinct gram set."""
     tg = _doc_grams(train, id_col, text_col, n)
     bg = _doc_grams(benchmark, id_col, text_col, n).select("g").distinct()
-    return _shared_gram_counts(tg, bg, id_col, min_grams)
+    return _shared_gram_counts(tg, bg, id_col)
 
 
-def _shared_gram_counts(
-    tg: DataFrame, bg: DataFrame, id_col: str, min_grams: int
-) -> DataFrame:
+def _shared_gram_counts(tg: DataFrame, bg: DataFrame, id_col: str) -> DataFrame:
     """The exact tail shared by both decontaminate forms: equi-join on
     the gram key, DISTINCT (id, gram) (the r12 re-delivery collapse —
     dedup AFTER the join, where the stream is only the hit set), then
-    the per-doc threshold."""
+    the per-doc count."""
     return (
         tg.join(bg, ["g"])
         .dropDuplicates(["id", "g"])
         .groupBy("id")
         .agg(F.count(F.lit(1)).alias("shared_grams"))
-        .filter(F.col("shared_grams") >= min_grams)
         .select(F.col("id").alias(id_col), "shared_grams")
     )
 
 
-# Hard ceiling on the Bloom lane modulus: 2^24 positions × 8 bytes ≈
-# 128 MiB per broadcast lane, the largest filter that is still clearly
-# cheaper than letting the exact join shuffle (r12 advisor finding).
-_BLOOM_MAX_M = 1 << 24
+# Bloom lane modulus: each of the k=2 lanes broadcasts up to this many
+# distinct 8-byte positions (8 MiB worst case per lane).
+_BLOOM_M = 1 << 20
 
 
 def contamination_flags_prefiltered(
@@ -433,59 +432,41 @@ def contamination_flags_prefiltered(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 8,
-    min_grams: int = 1,
-    m: int = 1 << 20,
 ) -> DataFrame:
     """``contamination_flags`` with a Bloom-style runtime prefilter:
     EXACTLY the same output (the final gram equi-join is exact — hash
     collisions only ever let false candidates through to it), but the
     train gram stream is thinned map-side BEFORE the join by two
-    broadcast semi-joins on ``xxhash64(gram) mod m`` bucket positions
-    (k=2 hash lanes, the classic Bloom layout unrolled into relational
-    algebra Catalyst can plan).
+    broadcast semi-joins on ``xxhash64(gram) mod _BLOOM_M`` bucket
+    positions (k=2 hash lanes, the classic Bloom layout unrolled into
+    relational algebra Catalyst can plan).
 
     Why this is the 100 TB form: the exact join's build side is the
     benchmark's distinct gram STRINGS — tens of bytes each, and past
     the broadcast threshold it becomes a full shuffle of the train
     corpus's gram stream, the dominant cost at scale. The position
-    sets are 8-byte longs hard-capped at ``m`` distinct values
+    sets are 8-byte longs hard-capped at ``_BLOOM_M`` distinct values
     REGARDLESS of benchmark size, so they broadcast unconditionally
     and drop non-candidate grams inside the scan stage; with two
     independent lanes the expected false-candidate rate at load factor
-    ``b/m`` is ``(1-exp(-b/m))**2`` (<1% at b=0.1m), so the exact join
-    afterward sees ~hits only. Same trick Spark's own runtime-filter
-    injection plays, made explicit so it fires on any plan and its
-    selectivity is testable.
+    ``b/m`` is ``(1-exp(-b/m))**2`` (<1% at b=0.1m, m = ``_BLOOM_M``),
+    so the exact join afterward sees ~hits only. Same trick Spark's own
+    runtime-filter injection plays, made explicit so it fires on any
+    plan and its selectivity is testable.
     """
     tg = _doc_grams(train, id_col, text_col, n)
     bg = _doc_grams(benchmark, id_col, text_col, n).select("g").distinct()
-    cand = bloom_candidate_grams(tg, bg, m)
-    return _shared_gram_counts(cand, bg, id_col, min_grams)
+    cand = bloom_candidate_grams(tg, bg)
+    return _shared_gram_counts(cand, bg, id_col)
 
 
-def bloom_candidate_grams(tg: DataFrame, bg: DataFrame, m: int) -> DataFrame:
+def bloom_candidate_grams(tg: DataFrame, bg: DataFrame) -> DataFrame:
     """The prefilter stage of ``contamination_flags_prefiltered``,
     shared with the selectivity fixture so measurement and production
     can never drift apart: thin the train gram stream ``tg`` (id, g)
     through two broadcast left-semi joins on the benchmark gram set
-    ``bg``'s ``xxhash64 mod m`` positions (k=2 lanes).
-
-    ``m`` is bounded (r12 advisor): each lane force-broadcasts up to
-    ``m`` distinct 8-byte longs, so ``m`` IS the broadcast budget —
-    a caller reaching for ``1<<30`` to cut the false-candidate rate
-    would silently ship multi-GB broadcasts and OOM the driver. The
-    cap (2^24 positions ≈ 128 MiB/lane worst case) keeps the lanes
-    inside any sane driver/executor memory; past that, the right
-    lever is the EXACT join (whose build side AQE shuffles instead
-    of broadcasting), not a bigger filter."""
-    if not (0 < m <= _BLOOM_MAX_M):
-        raise ValueError(
-            f"bloom prefilter m={m} out of range (0, {_BLOOM_MAX_M}]: "
-            f"each of the k=2 hash lanes force-broadcasts up to m "
-            f"distinct longs (~8*m bytes), so m is a broadcast-size "
-            f"budget, not a free accuracy knob — use the exact join "
-            f"when the benchmark needs a filter this large"
-        )
+    ``bg``'s ``xxhash64 mod _BLOOM_M`` positions (k=2 lanes)."""
+    m = _BLOOM_M
     pos1 = bg.select(F.pmod(F.xxhash64("g"), F.lit(m)).alias("__p1")).distinct()
     pos2 = bg.select(
         F.pmod(F.xxhash64("g", F.lit(1)), F.lit(m)).alias("__p2")
@@ -732,11 +713,12 @@ def incremental_dup_spans(
 
 
 def _pruned_grams(
-    df: DataFrame, id_col: str, text_col: str, n: int, df_cap: int
+    df: DataFrame, id_col: str, text_col: str, n: int, df_cap: "int | Column"
 ) -> DataFrame:
     """One row per (doc, distinct word-n-gram), with grams whose
-    document frequency exceeds ``df_cap`` pruned (a document-frequency
-    cap) — the gram space of exact Jaccard and capped containment.
+    document frequency exceeds ``df_cap`` (a literal or a scalar
+    column) pruned — the gram space of exact Jaccard and capped
+    containment.
 
     Re-deliveries collapse on the (id, g) relation: under
     at-least-once ingest one id can arrive as several rows — identical
@@ -793,23 +775,21 @@ def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n: int = 3,
     threshold: float = 0.5,
-    df_cap: int = 100,
 ) -> DataFrame:
-    """Exact word-n-gram Jaccard ≥ ``threshold`` for every document
+    """Exact word-3-gram Jaccard ≥ ``threshold`` for every document
     pair: |A∩B| / |A∪B| over ``_gram_overlap_pairs`` (a pair sharing
     no gram has Jaccard 0, so no qualifying pair is missed). Returns
     (a_id, b_id, jaccard) with a_id < b_id.
 
     At corpus scale the posting-list join is bounded by dropping
-    ultra-common n-grams (a document-frequency cap); df_cap keeps hot
-    shingles from quadratic blowup. Jaccard is therefore computed over
-    the PRUNED gram sets — a well-defined measure of its own (both
-    numerator and denominator exclude grams with document frequency
-    > df_cap; pairs sharing only hot grams are not candidates), and
-    the one the SQL oracle computes."""
-    pairs = _gram_overlap_pairs(_pruned_grams(df, id_col, text_col, n, df_cap))
+    ultra-common n-grams (a document-frequency cap of 100); the cap
+    keeps hot shingles from quadratic blowup. Jaccard is therefore
+    computed over the PRUNED gram sets — a well-defined measure of its
+    own (both numerator and denominator exclude grams with document
+    frequency > 100; pairs sharing only hot grams are not candidates),
+    and the one the SQL oracle computes."""
+    pairs = _gram_overlap_pairs(_pruned_grams(df, id_col, text_col, 3, 100))
     return (
         pairs.withColumn(
             "jaccard",
@@ -830,12 +810,11 @@ def embedding_near_dup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.95,
-    planes: int = 8,
     probe_radius: int = 1,
 ) -> DataFrame:
     """Near-duplicate vectors by cosine ≥ threshold, candidate-bounded
     by random-hyperplane LSH buckets (vectors this similar almost
-    always agree on all ``planes`` sign bits; multi-probe raises recall
+    always agree on all 8 sign bits; multi-probe raises recall
     by also joining each vector's Hamming-``probe_radius`` neighbor
     buckets). ``probe_radius=1`` is the scale default (1+p probes);
     ``probe_radius=2`` adds the p(p-1)/2 two-flip buckets — the
@@ -862,6 +841,7 @@ def embedding_near_dup_pairs(
     dim = VEC.infer_dim(df, vec_col)
     from .similarity import _bucket_side, _deterministic_planes, _probe_array
 
+    planes = 8
     hyperplanes = _deterministic_planes(planes, dim)
     # finite-geometry scope (r13 non-finite components class): the
     # masking kernel emits a NULL base bucket for corrupt vectors —

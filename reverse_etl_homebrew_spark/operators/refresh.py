@@ -72,6 +72,13 @@ from .dedup import (
 from .merge import merge_rollup_state, rollup_partial, snapshot_diff
 from .similarity import build_ann_index, incremental_knn
 
+# span window length (tokens), ANN hyperplanes and neighbors per
+# admitted vector — one refresh configuration, shared by the inline
+# artifacts and the probe that must match them
+_SPAN_N = 8
+_PLANES = 6
+_K = 3
+
 
 def _negated(partial: DataFrame, key: str) -> DataFrame:
     """A rollup partial with its group-summable components negated —
@@ -92,9 +99,6 @@ def corpus_refresh_report(
     old: DataFrame,
     new: DataFrame,
     embeddings: DataFrame,
-    span_n: int = 8,
-    planes: int = 6,
-    k: int = 3,
 ) -> DataFrame:
     """Run the full refresh over an (old, new) snapshot pair plus the
     embedding table and report per-lang: what the diff nominated, what
@@ -144,47 +148,17 @@ def corpus_refresh_report(
     fingerprints = build_fingerprint_index(
         surviving.where(F.col("text").isNotNull()), "text", fp_col="__fp"
     )
-    span_index = build_span_index(surviving, "text", "doc_id", span_n)
+    span_index = build_span_index(surviving, "text", "doc_id", _SPAN_N)
     acc_vecs = embeddings.join(
         surviving.select(F.col("doc_id").alias("vec_id")), ["vec_id"], "left_semi"
     )
-    ann_index = build_ann_index(acc_vecs, planes)
+    ann_index = build_ann_index(acc_vecs, _PLANES)
     tok = TX.token_count(F.col("text"))
     state = rollup_partial(
         old.select("lang", tok.alias("toks"), "doc_id"), "lang", "toks", "doc_id"
     )
     return corpus_refresh_probe(
-        old,
-        new,
-        embeddings,
-        fingerprints,
-        span_index,
-        ann_index,
-        state,
-        span_n=span_n,
-        planes=planes,
-        k=k,
-        diff=diff,
-    )
-
-
-def accept_time_doc_stats(
-    corpus: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lang_col: str = "lang",
-) -> DataFrame:
-    """The accept-time ``(doc_id, lang, toks)`` sidecar
-    ``corpus_refresh_probe`` consumes for retraction attribution
-    (r14): token counts are computed at admission anyway, so in
-    production this is three narrow columns appended to the admission
-    staging write — maintained by the same INSERT that admits the doc,
-    one row per accepted doc. Retiring a doc then never re-reads its
-    text."""
-    return corpus.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(lang_col).alias("lang"),
-        TX.token_count(F.col(text_col)).alias("toks"),
+        old, new, embeddings, fingerprints, span_index, ann_index, state, diff
     )
 
 
@@ -196,11 +170,7 @@ def corpus_refresh_probe(
     span_index: DataFrame,
     ann_index: DataFrame,
     state: DataFrame,
-    span_n: int = 8,
-    planes: int = 6,
-    k: int = 3,
-    diff: DataFrame | None = None,
-    doc_stats: DataFrame | None = None,
+    diff: DataFrame,
 ) -> DataFrame:
     """The PROBE-SIDE refresh core (r14, VERDICT r13 #2): the exact
     ``corpus_refresh_report`` algebra with the four accepted-corpus
@@ -219,39 +189,17 @@ def corpus_refresh_probe(
     fingerprint set (single column, any name); ``span_index`` the
     survivors' distinct ``win`` set; ``ann_index`` the survivors'
     ``(r_id, r_v, r_nrm, bucket)`` rows built with the SAME
-    ``planes``; ``state`` the rollup over the FULL old corpus (the
+    ``_PLANES``; ``state`` the rollup over the FULL old corpus (the
     retraction below folds the retired rows out — pre-retirement
     state is exactly what last night's accept-time maintenance left
-    behind). ``diff`` may be a precomputed decision table (the
-    CDC-fed form — the reference's watermark shape, main.py:537-538);
-    when None it is computed from the snapshots here, which adds the
-    one corpus-proportional term snapshot CDC inherently pays (the
-    narrow digest scan). When ``diff`` IS supplied, ``new`` may be
-    just the day's DELTA rows (any superset of the rows the diff
-    nominated — the reference's watermark read, main.py:537-538): the
-    admission semi-join keeps exactly the nominated keys either way.
-
-    ``doc_stats`` (r14, the tenx_refresh decomposition): an optional
-    accept-time sidecar ``(doc_id, lang, toks)`` over the old corpus
-    (``accept_time_doc_stats`` — token counts are computed at
-    admission anyway, persisting them is free). When supplied, the
-    retraction arm (retired rows' lang + token attribution) reads this
-    NARROW table instead of re-scanning — and re-tokenizing — the old
-    corpus' text column; combined with a supplied ``diff`` the probe
-    then never touches ``old`` at all, which is what makes the
-    CDC-fed cell's wall flat at 10× corpus in the fixture."""
+    behind). ``diff`` is the ``snapshot_diff`` decision table (the
+    CDC-fed form — the reference's watermark shape, main.py:537-538),
+    so ``new`` may be just the day's DELTA rows (any superset of the
+    rows the diff nominated — the reference's watermark read): the
+    admission semi-join keeps exactly the nominated keys either way."""
     old = old.select("doc_id", "text", "lang")
     new = new.select("doc_id", "text", "lang")
 
-    if diff is None:
-        diff = pin(
-            snapshot_diff(
-                old.select("doc_id", "text"),
-                new.select("doc_id", "text"),
-                "doc_id",
-                F.md5("text"),
-            )
-        )
     reprocess = diff.where(F.col("status").isin("added", "changed")).select(
         "doc_id"
     )
@@ -275,8 +223,8 @@ def corpus_refresh_probe(
 
     # 4. span-tier signal on the admitted batch, probed against the
     # distinct window set build_span_index returned.
-    flagged = incremental_dup_spans(admitted, span_index, "text", "doc_id", span_n)
-    adm_wins = token_span_windows(admitted, "text", "doc_id", span_n)
+    flagged = incremental_dup_spans(admitted, span_index, "text", "doc_id", _SPAN_N)
+    adm_wins = token_span_windows(admitted, "text", "doc_id", _SPAN_N)
     span_docs = (
         adm_wins.join(flagged.select("win"), ["win"])
         .select("doc_id")
@@ -292,7 +240,7 @@ def corpus_refresh_probe(
     adm_vecs = embeddings.join(
         admitted.select(F.col("doc_id").alias("vec_id")), ["vec_id"], "left_semi"
     )
-    pairs = incremental_knn(adm_vecs, ann_index, k=k, planes=planes)
+    pairs = incremental_knn(adm_vecs, ann_index, k=_K, planes=_PLANES)
     knn_lang = (
         pairs.join(
             admitted.select(F.col("doc_id").alias("l_id"), "lang"), ["l_id"]
@@ -302,18 +250,10 @@ def corpus_refresh_probe(
     )
 
     # 6. stats refresh: state(old) + partial(admitted) − partial(retired).
-    # Retired-row attribution reads the accept-time (doc_id, lang,
-    # toks) sidecar when supplied — narrow columns, no text re-scan /
-    # re-tokenize of the old corpus.
     tok = TX.token_count(F.col("text"))
-    if doc_stats is not None:
-        retired_rows = doc_stats.select("doc_id", "lang", "toks").join(
-            retired, ["doc_id"], "left_semi"
-        )
-    else:
-        retired_rows = old.join(retired, ["doc_id"], "left_semi").select(
-            "doc_id", "lang", tok.alias("toks")
-        )
+    retired_rows = old.join(retired, ["doc_id"], "left_semi").select(
+        "doc_id", "lang", tok.alias("toks")
+    )
     added_part = rollup_partial(
         admitted.select("lang", tok.alias("toks"), "doc_id"),
         "lang", "toks", "doc_id",

@@ -168,11 +168,11 @@ def topk_lsh(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    planes: int = 6,
 ) -> DataFrame:
     """Approximate top-k: prune to LSH-bucket candidates, then exact
     cosine on the survivors (``topk_brute``). Candidate buckets = the
-    query bucket plus its probes to Hamming radius 2.
+    query bucket over 6 hyperplanes plus its probes to Hamming
+    radius 2.
 
     The data-side bucket comes from the shared LSH spine
     (``_bucket_side``, the Arrow bucketer), not the flat codegen sign
@@ -184,6 +184,7 @@ def topk_lsh(
     The masking kernel gives corrupt vectors a NULL bucket, which the
     probe ``isin`` drops — the finite-geometry scope."""
     dim = len(query)
+    planes = 6
     hp = _deterministic_planes(planes, dim)
 
     def bucket_of(vec):
@@ -404,44 +405,13 @@ def build_ann_index(
     return out
 
 
-def _cap_buckets(ann_index: DataFrame, bucket_cap: int, k: int = 0) -> DataFrame:
-    """Keep at most ``bucket_cap`` index rows per bucket with a
-    DETERMINISTIC total-order election: lowest ``r_id`` first
-    (NULLs last), residual ties broken by the vector hash (the
-    content-dedup discipline — r_id alone leaves NULL-id rows and
-    dirty-feed duplicate ids tied on partition order).
-
-    The total order makes the cap IDEMPOTENT and APPEND-STABLE: a row
-    evicted by an earlier cap ranks after every survivor in its
-    bucket, so capping (capped index ∪ delta) equals capping the full
-    rebuild over (corpus ∪ delta) — the append≡rebuild-under-cap
-    invariant pinned in tests/test_incremental_knn.py."""
-    from pyspark.sql import Window as W
-
-    if k and bucket_cap < k:
-        raise ValueError(
-            f"bucket_cap={bucket_cap} < k={k}: a capped bucket could "
-            f"not even fill one probe's top-k"
-        )
-    wb = W.partitionBy("bucket").orderBy(
-        F.col("r_id").asc_nulls_last(), F.xxhash64("r_v")
-    )
-    return (
-        ann_index.withColumn("__bc", F.row_number().over(wb))
-        .filter(F.col("__bc") <= bucket_cap)
-        .drop("__bc")
-    )
-
-
 def incremental_knn(
     new_batch: DataFrame,
     ann_index: DataFrame,
     k: int = 3,
     planes: int = 6,
-    probe_radius: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    bucket_cap: "int | None" = None,
 ) -> DataFrame:
     """Vector-tier incremental twin of ``incremental_dup_spans``: k
     approximate nearest neighbors in the ACCEPTED corpus for every
@@ -450,7 +420,7 @@ def incremental_knn(
 
     Scale shape (the nightly-ingest discipline lifted to embeddings):
     the batch is bucketed with the same planes, exploded over its
-    Hamming-radius-``probe_radius`` probe buckets, and equi-joined on
+    Hamming-radius-2 probe buckets, and equi-joined on
     the bucket key. With the index bucketed on ``bucket`` the join
     co-locates WITHOUT moving the index — per-ingest shuffle is
     O(batch × probes), independent of corpus size; the index side
@@ -468,23 +438,7 @@ def incremental_knn(
     drifted to a different dimension is refused loudly — silently
     bucketing 32-dim vectors with 64-dim planes and folding truncated
     cosines is the wrong-neighbor class the ingress contract exists
-    to keep out.
-
-    ``bucket_cap`` (r13 skew lever, the df_cap precedent lifted to
-    vectors): bound the index rows scored per bucket. A DIRECTIONAL
-    Zipf head (boilerplate embeddings — templated pages, near-empty
-    docs) concentrates in one bucket, and when the BATCH is hot in
-    the same direction the candidate count grows multiplicatively
-    (0.3·M batch × 0.3·N bucket — fixtures/skew_ann_probe.py measures
-    it). The cap keeps the survivors DETERMINISTIC (lowest ``r_id``
-    per bucket — the content-dedup total-order discipline) and trades
-    hot-bucket recall for bounded work; cold buckets are unaffected.
-    In production the cap is enforced at index-MAINTENANCE time (the
-    bucketed table keeps ≤cap rows per bucket on append), so the
-    probe join still never shuffles the index; applying it here
-    ranks the index per bucket — the local measurement form. The
-    better lever when semantics allow it is collapsing near-dup
-    vectors BEFORE indexing (the probe measures both)."""
+    to keep out."""
     from .vectorized import pair_cosine_pandas
 
     dim = getattr(ann_index, "_sg_ann_dim", 0) or VEC.infer_dim(
@@ -501,13 +455,6 @@ def incremental_knn(
             f"dimension {dim} — dimension is a property of the index, "
             f"fix the producer"
         )
-    if bucket_cap is not None:
-        # the shared deterministic election (_cap_buckets) — in
-        # production the cap is already enforced at maintenance time
-        # (the bucketed table's INSERT INTO) and this probe-side
-        # ranking is a no-op on an already-capped index (the cap is
-        # idempotent)
-        ann_index = _cap_buckets(ann_index, bucket_cap, k=k)
     hp = _deterministic_planes(planes, dim)
     l = (
         _bucket_side(
@@ -519,7 +466,7 @@ def incremental_knn(
         .where(F.col("__b0").isNotNull())
         .withColumn(
             "bucket",
-            F.explode(F.array_distinct(_probe_array("__b0", planes, probe_radius))),
+            F.explode(F.array_distinct(_probe_array("__b0", planes, 2))),
         )
         .drop("__b0")
     )
@@ -539,12 +486,10 @@ def bm25_topk(
     k: int = 10,
     id_col: str = "doc_id",
     text_col: str = "text",
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
-    """BM25 keyword retrieval: top-k documents for a bag of query
-    terms — the lexical complement to embedding similarity in a
-    retrieval pipeline.
+    """BM25 keyword retrieval (k1 = 1.2, b = 0.75): top-k documents for
+    a bag of query terms — the lexical complement to embedding
+    similarity in a retrieval pipeline.
 
     Shape: tokenize → per-(doc, term) tf + per-doc length (one
     explode + one groupBy), df per query term from the same term rows,
@@ -560,6 +505,7 @@ def bm25_topk(
     from ..functions import text as TX
 
     terms = [t.lower() for t in query_terms]
+    k1, b = 1.2, 0.75
     # r15: a pre-explode spread_for_fanout was MEASURED here and
     # rejected (0.62× interleaved): the masked regroup's groups are
     # few-per-doc and heavily repeated, so round-robin spreading puts

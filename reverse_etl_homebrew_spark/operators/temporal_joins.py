@@ -24,7 +24,6 @@ def asof_join(
     left_ts: str,
     right_ts: str,
     payload_cols: Sequence[str],
-    inclusive: bool = True,
 ) -> DataFrame:
     """For every left row, attach the payload of the latest right row
     with right_ts <= left_ts (inclusive) for the same key; NULLs when
@@ -73,10 +72,9 @@ def asof_join(
     )
     unioned = l_tagged.unionByName(r_tagged)
     # right rows sort before left rows at equal ts ⇔ inclusive match
-    order = [F.col("__ts"), F.col("__is_right").desc() if inclusive else F.col("__is_right")]
     w = (
         W.partitionBy("__k")
-        .orderBy(*order)
+        .orderBy(F.col("__ts"), F.col("__is_right").desc())
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
     carried = unioned.select(

@@ -235,12 +235,12 @@ def _directed_containment(grams, threshold: float):
     WHERE containment >= 0.8
     """,
 )
-def q_containment_dedup_capped(spark, sf_dir, df_cap: "int | None" = None):
+def q_containment_dedup_capped(spark, sf_dir):
     """`containment-dedup` with the document-frequency cap the uncapped
     key's docstring names as its 100 TB cost center actually applied:
-    grams whose corpus document frequency exceeds ``df_cap`` are
-    dropped BEFORE the postings join, bounding every posting list (and
-    thus pairs-per-gram, the quadratic term) at ``df_cap``. Both the
+    grams whose corpus document frequency exceeds the cap are dropped
+    BEFORE the postings join, bounding every posting list (and thus
+    pairs-per-gram, the quadratic term) at the cap. Both the
     intersection and the set sizes are computed over the SAME capped
     vocabulary, so the score is exact containment of boilerplate-free
     gram sets — the identical algebra runs in the SQL oracle. The
@@ -248,42 +248,20 @@ def q_containment_dedup_capped(spark, sf_dir, df_cap: "int | None" = None):
     was measured to lose ALL recall here: clone-cluster grams have
     df ≈ cluster size, so they are exactly the grams a cap drops.
 
-    Default cap = max(5, floor(0.2% of corpus docs)) — scales with the
-    corpus so clone clusters below the cap stay detectable while the
-    Zipf head (boilerplate) is bounded; pass ``df_cap`` to override
-    with an absolute bound (what a real 100 TB run would pin).
+    Cap = max(5, floor(0.2% of corpus docs)) — scales with the corpus
+    so clone clusters below the cap stay detectable while the Zipf
+    head (boilerplate) is bounded. It is a scalar subquery over the
+    same non-NULL-text universe, as in the oracle, so the cap costs no
+    driver-side count.
 
     Plan: the pruned gram set goes through the same gram-overlap join
     as `containment-dedup` and `ngram-jaccard` (operators/dedup.py),
     which lineage-cuts it once for its three legs."""
     d = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    if df_cap is None:
-        df_cap = max(5, int(0.002 * _corpus_doc_count(spark, sf_dir)))
+    n_docs = d.select(F.count(F.lit(1))).scalar()
+    df_cap = F.greatest(F.lit(5), F.floor(F.lit(0.002) * n_docs).cast("long"))
     pruned = _pruned_grams(d, "doc_id", "text", 3, df_cap)
     return _directed_containment(pruned, threshold=0.8)
-
-
-# default-cap derivation memo: the eager count() otherwise re-scans
-# documents on EVERY invocation (parity drives, invariance tests, and
-# each bench rep — where it silently billed the measured wall time)
-_DOC_COUNT_CACHE: dict = {}
-
-
-def _corpus_doc_count(spark, sf_dir) -> int:
-    import os
-
-    path = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(path)
-    key = (os.path.abspath(path), st.st_mtime_ns, st.st_size)
-    if key not in _DOC_COUNT_CACHE:
-        # the dedup universe excludes NULL-text docs (see the capped
-        # key's oracle: its df threshold counts the same universe)
-        _DOC_COUNT_CACHE[key] = (
-            _t(spark, sf_dir, "documents")
-            .filter(F.col("text").isNotNull())
-            .count()
-        )
-    return _DOC_COUNT_CACHE[key]
 
 
 # ===========================================================================

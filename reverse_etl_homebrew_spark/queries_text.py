@@ -265,9 +265,10 @@ def q_knn_join(spark, sf_dir):
     return SIM.knn_join(left, emb, k=3, exact=True)
 
 
-def _knn_join_tables_sql(tables: int = 3, planes: int = 6) -> str:
+def _knn_join_tables_sql() -> str:
     from .operators.similarity import _deterministic_planes
 
+    tables, planes = 3, 6
     hp_all = _deterministic_planes(planes * tables, 64)
     eqs = []
     for t in range(tables):
@@ -775,7 +776,8 @@ def q_incremental_dedup(spark, sf_dir):
     )
 
 
-def _simhash_md5_sql(bits: int = 32, max_hamming: int = 3) -> str:
+def _simhash_md5_sql() -> str:
+    bits, max_hamming = 32, 3
     votes = ",\n             ".join(
         f"SUM(CASE WHEN (h >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS v{i}"
         for i in range(bits)
@@ -819,19 +821,21 @@ def q_simhash_dedup_md5(spark, sf_dir):
 
 @register("simhash-dedup")
 def q_simhash_dedup(spark, sf_dir):
-    """SimHash near-dup candidate pairs (64-bit fingerprint,
-    prefix-block LSH, Hamming ≤ 3)."""
+    """SimHash near-dup pairs (64-bit xxhash64 fingerprint, 4-block
+    banding, Hamming ≤ 3) — exactly the brute-force pair set within
+    Hamming 3 over ``simhash_fingerprints``. Rows-only: DuckDB has no
+    xxhash64."""
     return DD.simhash_pairs(_corpus(spark, sf_dir))
 
 
-def _planted_embeddings(spark, sf_dir, n=100):
+def _planted_embeddings(spark, sf_dir):
     """embeddings ∪ deterministically perturbed copies of the first
-    ``n`` vectors (ids offset by 1e6). Random vectors contain no
+    100 vectors (ids offset by 1e6). Random vectors contain no
     near-duplicates, so without planting, a near-dup query returns 0
     rows and its rows-only driver check proves nothing; with planting
     the expected pair set is known by construction."""
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    perturbed = emb.filter(F.col("vec_id") < n).select(
+    perturbed = emb.filter(F.col("vec_id") < 100).select(
         (F.col("vec_id") + 1_000_000).alias("vec_id"),
         F.transform(
             "embedding",
@@ -1242,9 +1246,10 @@ def q_corpus_prep_pipeline(spark, sf_dir):
     )
 
 
-def _corpus_refresh_sql(span_n: int = 8, planes: int = 6, k: int = 3) -> str:
+def _corpus_refresh_sql() -> str:
     from .operators.similarity import _deterministic_planes
 
+    span_n, planes, k = 8, 6, 3
     hp = _deterministic_planes(planes, 64)
     b_l = _bucket_sql("e.embedding", hp)
     b_r = _bucket_sql("e.embedding", hp)

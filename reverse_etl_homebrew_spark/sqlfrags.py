@@ -57,7 +57,6 @@ def word_ngram_rows(
     tok_expr: str = "w",
     id_alias: str = "id",
     win_alias: str = "g",
-    carry: str = "",
     short_docs: str = "truncate",
     sep: str = " ",
     row_alias: str = "",
@@ -90,9 +89,6 @@ def word_ngram_rows(
     documents (the r11 NULL-key class, which deliberately keeps
     NULL-id docs in corpus-frequency scope).
 
-    ``carry`` names extra source columns to project through, as
-    ``", col1, col2"``.
-
     ``row_alias``, when non-empty, projects the synthetic per-row key
     itself out under that name, so a caller whose aggregation is
     per-PHYSICAL-ROW (not per-id) can ``GROUP BY`` it. Grouping on the
@@ -120,13 +116,13 @@ def word_ngram_rows(
     row_out = f", __r AS {row_alias}" if row_alias else ""
     row_mid = ", __r" if row_alias else ""
     return f"""
-      SELECT {id_alias}{carry}, {win_alias}{row_out} FROM (
-        SELECT {id_alias}{carry}, i{row_mid}, {win_expr} AS {win_alias}
+      SELECT {id_alias}, {win_alias}{row_out} FROM (
+        SELECT {id_alias}, i{row_mid}, {win_expr} AS {win_alias}
         FROM (
-          SELECT {id_alias}{carry}, __r,
+          SELECT {id_alias}, __r,
                  unnest(__tl) AS t,
                  unnest(generate_series(1, len(__tl))) AS i
-          FROM (SELECT {id_expr} AS {id_alias}{carry}, {tok_expr} AS __tl,
+          FROM (SELECT {id_expr} AS {id_alias}, {tok_expr} AS __tl,
                        row_number() OVER () AS __r
                 FROM {src})
         )

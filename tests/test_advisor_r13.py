@@ -1,4 +1,4 @@
-"""Pins for the three r13 advisor findings (ADVICE.md round 12).
+"""Pins for two of the r13 advisor findings (ADVICE.md round 12).
 
 1. ``snapshot_diff`` digest injectivity: each fingerprint VALUE is
    md5-hashed before the sorted-set comma-join, so caller fingerprints
@@ -10,19 +10,12 @@
    distribution-dependent (docstring) — and the adversarial shape the
    advisor described (a point mass plus range-stretching outliers
    packing the located bin) still returns EXACT answers.
-
-3. ``bloom_candidate_grams`` validates ``m``: each lane
-   force-broadcasts up to ``m`` longs, so an unbounded ``m`` is a
-   silent driver-OOM knob — now refused loudly past 2^24.
 """
 
 from __future__ import annotations
 
-import pytest
-
 from pyspark.sql import functions as F
 
-from reverse_etl_homebrew_spark.operators import dedup as DD
 from reverse_etl_homebrew_spark.operators.aggregates import (
     exact_quantiles_twophase,
 )
@@ -96,26 +89,3 @@ def test_point_mass_plus_outlier_bin_packing_is_exact(spark):
 def test_distribution_caveat_documented():
     doc = exact_quantiles_twophase.__doc__
     assert "DISTRIBUTION-DEPENDENT" in doc
-
-
-# ---------------------------------------------------------------------------
-# 3. bloom m guard
-# ---------------------------------------------------------------------------
-
-def _gram_frames(spark):
-    tg = spark.createDataFrame([(1, "a b c"), (2, "x y z")], "id long, g string")
-    bg = spark.createDataFrame([("a b c",)], "g string")
-    return tg, bg
-
-
-@pytest.mark.parametrize("bad_m", [0, -1, (1 << 24) + 1, 1 << 30])
-def test_bloom_m_out_of_range_refused(spark, bad_m):
-    tg, bg = _gram_frames(spark)
-    with pytest.raises(ValueError, match="broadcast-size budget"):
-        DD.bloom_candidate_grams(tg, bg, bad_m)
-
-
-def test_bloom_m_at_cap_accepted(spark):
-    tg, bg = _gram_frames(spark)
-    out = DD.bloom_candidate_grams(tg, bg, 1 << 24).collect()
-    assert {r["g"] for r in out} >= {"a b c"}

@@ -152,10 +152,12 @@ def test_prefiltered_equals_exact_form(spark):
     assert exact == pre and exact, "prefiltered form diverged from exact"
 
 
-def test_prefiltered_exact_even_when_every_position_collides(spark):
-    """m=1 saturates both Bloom lanes (every gram maps to position 0),
-    the worst collision case: the prefilter passes everything through
-    and the exact join must still produce the exact answer."""
+def test_prefiltered_exact_even_when_every_position_collides(spark, monkeypatch):
+    """A lane modulus of 1 saturates both Bloom lanes (every gram maps
+    to position 0), the worst collision case: the prefilter passes
+    everything through and the exact join must still produce the exact
+    answer."""
+    monkeypatch.setattr(DD, "_BLOOM_M", 1)
     train, bench = _contamination_fixture(spark)
     exact = {
         (r.doc_id, r.shared_grams)
@@ -163,7 +165,7 @@ def test_prefiltered_exact_even_when_every_position_collides(spark):
     }
     pre = {
         (r.doc_id, r.shared_grams)
-        for r in DD.contamination_flags_prefiltered(train, bench, n=8, m=1).collect()
+        for r in DD.contamination_flags_prefiltered(train, bench, n=8).collect()
     }
     assert exact == pre
 

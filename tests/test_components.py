@@ -38,12 +38,12 @@ def test_chain_and_triangle_merge(spark, master, request):
 
 
 def test_non_convergence_raises(spark):
-    """A path graph that cannot converge in max_iter fails loudly
-    instead of returning partial labels."""
-    chain = [(i, i + 1) for i in range(12)]
+    """A path graph longer than the round budget cannot converge and
+    fails loudly instead of returning partial labels."""
+    chain = [(i, i + 1) for i in range(24)]
     pairs = spark.createDataFrame(chain, "a_id long, b_id long")
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, max_iter=2)
+        connected_components(pairs)
 
 
 def test_dedup_survivors_keeps_one_per_cluster(spark):

@@ -207,110 +207,6 @@ def test_probe_join_reads_bucketed_index_in_place(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {tb}")
 
 
-def test_bucket_cap_lever(spark):
-    """r13 skew lever: bucket_cap bounds the index rows scored per
-    bucket with DETERMINISTIC lowest-r_id survivors. A hot direction
-    planted 20x in the accepted corpus lands in one bucket; cap=5
-    must (a) cut that bucket's candidates to exactly the 5 lowest
-    r_ids, (b) leave cold-bucket results untouched, (c) refuse a cap
-    smaller than k."""
-    base = _vec(1.0)
-    hot = [(100 + i, [v * (1 + 0.0001 * i) for v in base]) for i in range(20)]
-    cold = [(300 + i, _vec(-5.0 + 3.1 * i)) for i in range(10)]
-    accepted = spark.createDataFrame(
-        hot + cold, "vec_id int, embedding array<float>"
-    )
-    batch = spark.createDataFrame(
-        [(1, base), (2, _vec(-5.0))], "vec_id int, embedding array<float>"
-    )
-    idx = build_ann_index(accepted, planes=6)
-
-    capped = incremental_knn(batch, idx, k=3, planes=6, bucket_cap=5)
-    got_hot = {r["r_id"] for r in capped.where(F.col("l_id") == 1).collect()}
-    # survivors of the hot bucket are the 5 lowest r_ids -> top-3 of
-    # the capped candidates are a subset of 100..104
-    assert got_hot <= {100, 101, 102, 103, 104}
-    assert len(got_hot) == 3
-
-    uncapped = incremental_knn(batch, idx, k=3, planes=6)
-    cold_capped = sorted(
-        map(tuple, capped.where(F.col("l_id") == 2).collect())
-    )
-    cold_uncapped = sorted(
-        map(tuple, uncapped.where(F.col("l_id") == 2).collect())
-    )
-    assert cold_capped == cold_uncapped
-
-    with pytest.raises(ValueError, match="bucket_cap"):
-        incremental_knn(batch, idx, k=3, planes=6, bucket_cap=2)
-
-
-def test_bucket_cap_survivors_total_order_with_null_ids(spark):
-    """Two NULL-id twins in one bucket under a tight cap: the survivor
-    set must be identical under different input partitionings (the
-    r12 exact-dedup nondeterminism class, preempted for the cap)."""
-    base = _vec(1.0)
-    rows = [(None, [v * (1 + 0.0001 * i) for v in base]) for i in range(6)]
-    rows += [(50 + i, [v * (1 + 0.0001 * (10 + i)) for v in base]) for i in range(6)]
-    batch = spark.createDataFrame(
-        [(1, base)], "vec_id int, embedding array<float>"
-    )
-    outs = []
-    for parts in (1, 7):
-        acc = spark.createDataFrame(
-            rows, "vec_id int, embedding array<float>"
-        ).repartition(parts)
-        idx = build_ann_index(acc, planes=6)
-        out = incremental_knn(batch, idx, k=3, planes=6, bucket_cap=4)
-        outs.append(sorted((r["r_id"], r["score"]) for r in out.collect()))
-    assert outs[0] == outs[1]
-    # identified rows order before NULL-id rows: the cap=4 survivors
-    # are the 4 lowest non-NULL ids, so no NULL-id neighbor appears
-    assert {r for r, _ in outs[0]} <= {50, 51, 52, 53}
-
-
-def test_bucket_cap_append_equals_rebuild_under_cap(spark):
-    """The append≡rebuild invariant UNDER the cap: capping an already-
-    capped index merged with a delta equals capping a full rebuild
-    over corpus ∪ delta — the total order guarantees a row evicted by
-    an earlier cap ranks after every survivor in its bucket, so it
-    can never have re-entered. Probe results must agree exactly, and
-    capping is idempotent."""
-    from reverse_etl_homebrew_spark.operators.similarity import _cap_buckets
-
-    base = _vec(1.0)
-    hot = [(100 + i, [v * (1 + 0.0001 * i) for v in base]) for i in range(12)]
-    cold = [(300 + i, _vec(-5.0 + 3.1 * i)) for i in range(8)]
-    corpus = spark.createDataFrame(
-        hot + cold, "vec_id int, embedding array<float>"
-    )
-    delta = spark.createDataFrame(
-        [(90 + i, [v * (1 + 0.0001 * (40 + i)) for v in base]) for i in range(6)]
-        + [(400, _vec(7.5))],
-        "vec_id int, embedding array<float>",
-    )
-    cap = 5
-    capped_base = _cap_buckets(build_ann_index(corpus, planes=6), cap)
-    appended = _cap_buckets(_insert(capped_base, delta), cap)
-    rebuilt = _cap_buckets(
-        build_ann_index(corpus.unionByName(delta), planes=6), cap
-    )
-    key = lambda df: sorted(
-        (r["r_id"], r["bucket"]) for r in df.select("r_id", "bucket").collect()
-    )
-    assert key(appended) == key(rebuilt)
-    # idempotent: re-capping changes nothing
-    assert key(_cap_buckets(appended, cap)) == key(appended)
-    # and the probe over either index agrees
-    batch = spark.createDataFrame(
-        [(1, base), (2, _vec(7.5))], "vec_id int, embedding array<float>"
-    )
-    probe = lambda idx: sorted(
-        map(tuple, incremental_knn(batch, idx, k=3, planes=6).collect())
-    )
-    assert probe(appended) == probe(rebuilt)
-
-
 def test_masking_kernels_run_once(spark):
     """Regression pin for the r14 kernel-duplication class
     (fixtures/ab_r14_ledger.py attribution): a consumer filter on a

@@ -17,9 +17,9 @@ def _truth(vals, p):
     return s[math.ceil(p * len(s)) - 1]
 
 
-def _run(spark, rows, buckets=4096):
+def _run(spark, rows):
     df = spark.createDataFrame(rows, "g string, v double")
-    out = exact_quantiles_twophase(df, "g", "v", buckets=buckets)
+    out = exact_quantiles_twophase(df, "g", "v")
     return {r["g"]: r for r in out.collect()}
 
 
@@ -41,10 +41,11 @@ def test_matches_sorted_rank_selection_on_awkward_shapes(spark):
 
 
 def test_tiny_bucket_count_still_exact(spark):
-    """buckets=2 forces phase 2 to re-rank huge bins — slower, never
-    wrong (the whole point of exact recount over located bins)."""
-    vals = [float(i % 37) * 1.5 for i in range(500)]
-    got = _run(spark, [("a", v) for v in vals], buckets=2)
+    """A far outlier packs every other value into one of the 4096
+    bins, so phase 2 re-ranks one huge bin — slower, never wrong (the
+    whole point of exact recount over located bins)."""
+    vals = [float(i % 37) * 1.5 for i in range(500)] + [1e7]
+    got = _run(spark, [("a", v) for v in vals])
     for label, p in (("p50", 0.5), ("p90", 0.9), ("p99", 0.99)):
         assert got["a"][label] == _truth(vals, p)
 

@@ -267,13 +267,13 @@ def _survivor_artifacts(old, new, vecs, planes=6, span_n=8):
 
 
 def test_probe_form_equals_report(spark, docs, vecs):
-    """corpus_refresh_probe over supplied survivor artifacts returns
-    corpus_refresh_report's rows EXACTLY — the semantics guarantee
-    that makes the persisted-artifact wall measurement
-    (fixtures/tenx_refresh.py) a measurement of the same operator.
-    Both the snapshot-diff form (diff computed inside) and the
-    CDC-fed form (decision table supplied — the reference's watermark
-    shape, main.py:537-538) are pinned."""
+    """corpus_refresh_probe over supplied survivor artifacts and the
+    snapshot-diff decision table returns corpus_refresh_report's rows
+    EXACTLY — the semantics guarantee that makes the persisted-artifact
+    wall measurement (fixtures/tenx_refresh.py) a measurement of the
+    same operator. Both the full new snapshot and the watermark shape
+    (delta-only ``new`` — the reference's watermark read,
+    main.py:537-538) are pinned."""
     from reverse_etl_homebrew_spark.operators.refresh import (
         corpus_refresh_probe,
     )
@@ -284,31 +284,15 @@ def test_probe_form_equals_report(spark, docs, vecs):
     via_report = sorted(
         map(tuple, corpus_refresh_report(old, new, vecs).collect())
     )
-    via_probe = sorted(
-        map(
-            tuple,
-            corpus_refresh_probe(
-                old, new, vecs, fps, spans, ann, state
-            ).collect(),
-        )
-    )
-    assert via_probe == via_report and via_probe
     via_cdc = sorted(
         map(
             tuple,
             corpus_refresh_probe(
-                old, new, vecs, fps, spans, ann, state, diff=diff
+                old, new, vecs, fps, spans, ann, state, diff
             ).collect(),
         )
     )
-    assert via_cdc == via_report
-    # the full watermark shape: delta-only `new`, plus the accept-time
-    # (doc_id, lang, toks) sidecar for retraction — the probe never
-    # touches `old` (the flat-at-10x cell of fixtures/tenx_refresh.py)
-    from reverse_etl_homebrew_spark.operators.refresh import (
-        accept_time_doc_stats,
-    )
-
+    assert via_cdc == via_report and via_cdc
     reprocess = diff.where(F.col("status").isin("added", "changed")).select(
         "doc_id"
     )
@@ -317,15 +301,7 @@ def test_probe_form_equals_report(spark, docs, vecs):
         map(
             tuple,
             corpus_refresh_probe(
-                old,
-                delta_only,
-                vecs,
-                fps,
-                spans,
-                ann,
-                state,
-                diff=diff,
-                doc_stats=accept_time_doc_stats(old),
+                old, delta_only, vecs, fps, spans, ann, state, diff
             ).collect(),
         )
     )
@@ -455,7 +431,7 @@ def test_probe_reads_bucketed_artifacts_in_place(spark, docs, vecs, tmp_path):
 
     old = docs
     new = _delta_snapshot(docs)
-    fps, spans, ann, state, _ = _survivor_artifacts(old, new, vecs)
+    fps, spans, ann, state, diff = _survivor_artifacts(old, new, vecs)
     suffix = uuid.uuid4().hex[:8]
     tbs = {}
     plains = {}
@@ -496,6 +472,7 @@ def test_probe_reads_bucketed_artifacts_in_place(spark, docs, vecs, tmp_path):
                 span_df,
                 ann_df,
                 spark.read.parquet(state_p),
+                diff,
             )
             out.write.format("noop").mode("overwrite").save()
             return out._jdf.queryExecution().executedPlan().toString()

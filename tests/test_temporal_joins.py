@@ -17,7 +17,7 @@ from hypothesis import HealthCheck, given, settings, strategies as st
 from reverse_etl_homebrew_spark.operators.temporal_joins import asof_join
 
 
-def _model(left, right, inclusive):
+def _model(left, right):
     """left: [(k, ts|None, tag)], right: [(k, ts|None, p|None)] with
     unique (k, ts); returns {tag: asof_p}."""
     out = {}
@@ -27,38 +27,36 @@ def _model(left, right, inclusive):
             for rk, rts, p in right:
                 if rk is None or rk != k or rts is None:
                     continue
-                if (rts <= lts) if inclusive else (rts < lts):
+                if rts <= lts:
                     if best is None or rts > best[0]:
                         best = (rts, p)
         out[tag] = None if best is None else best[1]
     return out
 
 
-def _run(spark, left, right, inclusive):
+def _run(spark, left, right):
     ldf = spark.createDataFrame(left, "k long, ts string, tag string")
     rdf = spark.createDataFrame(right, "k long, ts string, p string")
-    got = asof_join(
-        ldf, rdf, "k", "ts", "ts", ["p"], inclusive=inclusive
-    ).collect()
+    got = asof_join(ldf, rdf, "k", "ts", "ts", ["p"]).collect()
     return {r["tag"]: r["asof_p"] for r in got}
 
 
 def test_null_ts_right_row_never_matches(spark):
     left = [(1, "2020-01-05", "L1")]
     right = [(1, None, "NULL-TS-PAYLOAD")]
-    assert _run(spark, left, right, True) == {"L1": None}
+    assert _run(spark, left, right) == {"L1": None}
 
 
 def test_matched_rows_null_payload_is_returned_not_skipped(spark):
     left = [(2, "2020-01-05", "L2")]
     right = [(2, "2020-01-01", "OLD"), (2, "2020-01-03", None)]
-    assert _run(spark, left, right, True) == {"L2": None}
+    assert _run(spark, left, right) == {"L2": None}
 
 
 def test_null_ts_left_row_gets_null_payload(spark):
     left = [(3, None, "L3")]
     right = [(3, "2020-01-01", "P")]
-    assert _run(spark, left, right, True) == {"L3": None}
+    assert _run(spark, left, right) == {"L3": None}
 
 
 def test_null_key_rows_never_match_each_other(spark):
@@ -66,14 +64,7 @@ def test_null_key_rows_never_match_each_other(spark):
     # would group them together without the right-side key filter.
     left = [(None, "2020-01-05", "LN"), (5, "2020-01-05", "L5")]
     right = [(None, "2020-01-01", "NULL-KEY-PAYLOAD"), (5, "2020-01-01", "P")]
-    assert _run(spark, left, right, True) == {"LN": None, "L5": "P"}
-
-
-def test_inclusive_flag_controls_equal_ts_match(spark):
-    left = [(4, "2020-01-02", "L4")]
-    right = [(4, "2020-01-02", "SAME")]
-    assert _run(spark, left, right, True) == {"L4": "SAME"}
-    assert _run(spark, left, right, False) == {"L4": None}
+    assert _run(spark, left, right) == {"LN": None, "L5": "P"}
 
 
 # keys 0-2 (or NULL), days 1-6 (or NULL), payload small token (or
@@ -102,8 +93,8 @@ RIGHTS = st.lists(
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-@given(LEFTS, RIGHTS, st.booleans())
-def test_asof_matches_model_on_random_streams(spark, lefts, rights, inclusive):
+@given(LEFTS, RIGHTS)
+def test_asof_matches_model_on_random_streams(spark, lefts, rights):
     def day(d):
         return None if d is None else f"2020-01-{d:02d}"
 
@@ -115,6 +106,4 @@ def test_asof_matches_model_on_random_streams(spark, lefts, rights, inclusive):
     if not right:
         right = [(0, "2020-01-01", "seed")]  # createDataFrame needs rows
 
-    assert _run(spark, left, right, inclusive) == _model(
-        left, right, inclusive
-    )
+    assert _run(spark, left, right) == _model(left, right)

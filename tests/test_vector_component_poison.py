@@ -486,12 +486,11 @@ def test_exact_branch_norm_kernel_distinguishes_poison_from_zero(spark):
 
 
 def test_query_vector_degrades_on_nonfinite_seed(spark):
-    df = spark.createDataFrame(
-        [(0, [float("nan"), 1.0]), (1, [1.0, 2.0])],
-        "vec_id int, embedding array<double>",
-    )
-    vec, found = VEC.query_vector(df, vec_id=0)
+    schema = "vec_id int, embedding array<double>"
+    df = spark.createDataFrame([(0, [float("nan"), 1.0]), (1, [1.0, 2.0])], schema)
+    vec, found = VEC.query_vector(df)
     assert not found
     assert all(x == 0.0 for x in vec)
-    vec1, found1 = VEC.query_vector(df, vec_id=1)
+    finite = spark.createDataFrame([(0, [1.0, 2.0])], schema)
+    vec1, found1 = VEC.query_vector(finite)
     assert found1 and math.isfinite(sum(vec1))
